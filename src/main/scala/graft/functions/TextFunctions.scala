@@ -152,7 +152,7 @@ object TextFunctions {
   /** Lowercased whitespace tokens with empties removed. Native one-pass
     * form (r17): bit-identical to
     * `filter(split(lower(text), "\\s+"), t => length(t) > 0)` — the chain
-    * it replaced, kept below as [[tokensDeclarative]] for the spec gate —
+    * it replaced, kept in test scope as the spec's truth side —
     * without the per-row regex/Pattern machinery and the interpreted
     * ArrayFilter HOF (TokensExprSpec pins equality on fixtures + corpus).
     */
@@ -160,12 +160,6 @@ object TextFunctions {
     import org.apache.spark.sql.{GraftSqlBridge => B}
     B.column(graft.functions.expr.GraftTokens(B.expression(text)))
   }
-
-  /** The declarative chain [[tokens]] natively replays — the spec's truth
-    * side; not for hot paths.
-    */
-  private[graft] def tokensDeclarative(text: Column): Column =
-    filter(split(lower(text), "\\s+"), t => length(t) > 0)
 
   /** Alphanumeric terms (`[a-z0-9]+` over lowercased text) as an array —
     * the same tokenizer [[wordCount]] counts, materialized for term-level

@@ -674,7 +674,7 @@ object Ivf {
   /** Serving-knob sibling of [[derivedK]] (r15, VERDICT r14 #4): the
     * measured operating points were prose until now — this makes the
     * default serve path execute them. SCALE.md r14 (regenerated-corpus
-    * numbers, `ProbeRecallDerived`): a ~10⁴-vector index needs nProbe=6
+    * numbers, § "Round-14: derived-k IVF sizing"): a ~10⁴-vector index needs nProbe=6
     * for ≥ 0.9 mean recall@20 (sf1/20k: 0.756 @ 4, 0.922 @ 6 — small
     * corpora REACH across cell boundaries for their top-k); from ~10⁵
     * vectors up, derived-√n-k at nProbe=4 clears 0.9 with growing margin

@@ -8,14 +8,6 @@ import org.apache.spark.sql.functions._
   */
 private[operators] object PairGen {
 
-  /** All (a,b) pairs (a<b by sort order) from a sorted array column, via
-    * HOFs — stays in codegen, no self-join.
-    */
-  def pairArray(ids: Column): Column =
-    flatten(transform(ids, (a, i) =>
-      transform(slice(ids, i + lit(2), size(ids)), b =>
-        struct(a.as("a"), b.as("b")))))
-
   /** Deterministic within-group pairs (columns `a`, `b`) for groups of size
     * in [2, maxGroup].
     *
@@ -71,22 +63,5 @@ private[operators] object PairGen {
     members.join(members.withColumnRenamed("__p", "__q"), keys)
       .where(coalesce(col("__p") < col("__q"), lit(false)))
       .select(col("__p").as("a"), col("__q").as("b"))
-  }
-
-  /** The collect-and-sort spelling [[groupPairs]] replaced (r17) — kept as
-    * the spec's truth side; not for hot paths.
-    */
-  private[graft] def groupPairsCollect(df: DataFrame, keys: Seq[String],
-      payload: Column, maxGroup: Int): DataFrame = {
-    val keyCols = keys.map(col)
-    val smallGroups = df.groupBy(keyCols: _*)
-      .agg((count(lit(1)) + Dedup.pruneGuard(payload)).as("__gn"))
-      .where(col("__gn") >= 2 && col("__gn") <= maxGroup)
-      .select(keyCols: _*)
-    df.join(smallGroups, keys)
-      .groupBy(keyCols: _*)
-      .agg(array_sort(collect_list(payload)).as("ids"))
-      .select(explode(pairArray(col("ids"))).as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b"))
   }
 }

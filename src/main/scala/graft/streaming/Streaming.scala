@@ -648,7 +648,7 @@ object Streaming {
     * `(band, bucket)` PLUS `sortWithinPartitions` and a bounded parquet
     * row-group size — one range shuffle of the (doc_id, band, bucket,
     * batch_id) relation. The three knobs are load-bearing together (r14,
-    * measured in SoakProbeCost / SCALE.md): range partitioning alone gives
+    * measured in SCALE.md § "Round-14: the index-probe skip"): range partitioning alone gives
     * FILE-level disjointness only (rows inside a file arrive unsorted, so
     * every row group's min/max spans the file's whole range — a selective
     * probe still scanned ~40% of the index, growing linearly); the

@@ -13,6 +13,7 @@ class TokensExprSpec extends SparkSpec {
 
   import spark.implicits._
   import TextFunctions._
+  import TokensTruth.tokensDeclarative
 
   private val fixtures = Seq(
     "The Quick Brown Fox",

@@ -746,4 +746,21 @@ class OperatorsSpec extends SparkSpec {
     assert(rows.length == 1000 && rows.head.getLong(2) == 1L &&
       rows.last.getLong(2) == 1000L)
   }
+
+  test("TRIPWIRE monotonically_increasing_id layout: (partitionId << 33) + " +
+    "rowIndex, the encoding globalRowNumber decodes") {
+    // Rank.globalRowNumber reads the partition id as mid >>> 33 and the
+    // row index as the low 33 bits. A Spark upgrade that changes the layout
+    // fails here instead of yielding silently wrong ordinals. spark.range
+    // splits 30 ids evenly, so partition p holds ids 10p..10p+9 in order.
+    val rows = spark.range(0, 30, 1, 3)
+      .select($"id", spark_partition_id().as("pid"),
+        monotonically_increasing_id().as("mid"))
+      .as[(Long, Int, Long)].collect()
+    assert(rows.map(_._2).distinct.sorted.toSeq == Seq(0, 1, 2))
+    rows.foreach { case (id, pid, mid) =>
+      assert(mid == (pid.toLong << 33) + (id - 10L * pid),
+        s"id=$id pid=$pid mid=$mid")
+    }
+  }
 }

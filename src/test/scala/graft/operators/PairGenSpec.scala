@@ -5,10 +5,16 @@ import org.apache.spark.sql.functions._
 
 /** The r17 self-join spelling of [[PairGen.groupPairs]] must emit the SAME
   * pair multiset as the collect-and-sort spelling it replaced
-  * ([[PairGen.groupPairsCollect]]), given the call-site contract (payloads
-  * distinct and non-NULL within a group): same (a, b) rows, a < b, size-1
-  * groups silent, oversized groups dropped whole — for scalar AND struct
-  * payloads.
+  * ([[PairGenTruth.groupPairsCollect]]), given the call-site contract
+  * (payloads distinct and non-NULL within a group): same (a, b) rows,
+  * a < b, size-1 groups silent, oversized groups dropped whole — for scalar
+  * AND struct payloads.
+  *
+  * Contract: `groupPairs` is specified only for payloads that are distinct
+  * within a group; callers guarantee it and nothing enforces it. A
+  * duplicated payload makes the two spellings diverge: the collect spelling
+  * pairs the copies with each other, an `(x, x)` row, and `groupPairs`'
+  * strict `<` never does. The duplicate-payload case pins that divergence.
   */
 class PairGenSpec extends SparkSpec {
 
@@ -19,7 +25,7 @@ class PairGenSpec extends SparkSpec {
       maxGroup: Int): Unit = {
     val got = PairGen.groupPairs(df, keys, payload, maxGroup)
       .collect().map(_.toString).sorted
-    val want = PairGen.groupPairsCollect(df, keys, payload, maxGroup)
+    val want = PairGenTruth.groupPairsCollect(df, keys, payload, maxGroup)
       .collect().map(_.toString).sorted
     assert(got.toSeq == want.toSeq,
       s"self-join pairs diverge from collect pairs:\n got=${got.mkString(",")}" +
@@ -50,6 +56,16 @@ class PairGenSpec extends SparkSpec {
     ).toDF("band", "bucket", "doc_id", "n")
     assertSamePairs(df, Seq("band", "bucket"),
       struct(col("doc_id"), col("n")).as("dn"), maxGroup = 10)
+  }
+
+  test("duplicate payload in a group: only the collect spelling emits (x, x)") {
+    val df = Seq(("g1", 1L), ("g1", 1L), ("g1", 2L)).toDF("k", "id")
+    val got = PairGen.groupPairs(df, Seq("k"), col("id"), 10)
+      .as[(Long, Long)].collect().sorted
+    val want = PairGenTruth.groupPairsCollect(df, Seq("k"), col("id"), 10)
+      .as[(Long, Long)].collect().sorted
+    assert(got.toSeq == Seq((1L, 2L), (1L, 2L)), got.mkString(","))
+    assert(want.toSeq == Seq((1L, 1L), (1L, 2L), (1L, 2L)), want.mkString(","))
   }
 
   test("multi-partition input: equality is partitioning-independent") {
