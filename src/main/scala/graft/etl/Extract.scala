@@ -1,7 +1,6 @@
 package graft.etl
 
 import java.io.{File, FileInputStream}
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path}
 import java.util.zip.ZipInputStream
 import scala.collection.mutable
@@ -33,17 +32,11 @@ final case class RunData(
     meters: DataFrame,
     weather: DataFrame)
 
-/** ZIP-bundle extraction (SURVEY §2.1 S1-S6).
-  *
-  * Two paths:
-  *   - [[extractSimulationData]] / [[extractRuns]]: fidelity path — per-run
-  *     driver-side unzip to a staging dir, then schema-enforced
-  *     `spark.read.csv`. Matches the reference's semantics including layout
-  *     validation and the <50% failure tolerance.
-  *   - [[extractRunsDistributed]]: scale path — `binaryFile` source reads all
-  *     ZIPs on executors, members are decompressed in `flatMap`, lines parsed
-  *     with `from_csv`. No driver bottleneck: 100k run bundles become one
-  *     distributed scan. This is the 100 TB ingest shape.
+/** ZIP-bundle extraction (SURVEY §2.1 S1-S6): [[extractSimulationData]] /
+  * [[extractRuns]] unzip each run on the driver to a staging dir, then read
+  * the four CSVs with schema-enforced `spark.read.csv`. Matches the
+  * reference's semantics including layout validation and the <50% failure
+  * tolerance.
   */
 object Extract {
 
@@ -169,8 +162,6 @@ object Extract {
       // pass here (foreach, NOT count — count prunes every column and parses
       // nothing) makes a corrupt file fail its RUN, which extractRuns' 50%
       // tolerance absorbs — the reference's (eager pandas) failure unit.
-      // Driver-staged fidelity path only; the distributed path has no
-      // per-run tolerance to preserve.
       df.foreach(_ => ())
       df
     }
@@ -214,95 +205,8 @@ object Extract {
     extractSimulationData(spark,
       new File(simulationsDir, s"run_${buildingId}_${scenarioId}.zip").getPath)
 
-  /** Scale-path ingest: every `run_*.zip` is read as a binary blob on
-    * executors, unzipped in a flatMap, and its CSV lines parsed with
-    * `from_csv` against the declared schema. Returns one DataFrame per
-    * member kind, each with a `run_id` column. The driver never touches
-    * file contents — ingest parallelism is the file count.
-    */
-  def extractRunsDistributed(spark: SparkSession,
-      simulationsDir: String): Map[String, DataFrame] =
-    memberTables(spark, membersDistributed(spark, simulationsDir))
-
-  /** [[extractRunsDistributed]] with the decompression pass PERSISTED: the
-    * 5 member tables all derive from one (run_id, member, text) DataFrame,
-    * so without a cache every downstream materialization (9 star tables,
-    * validation, load) re-lists and re-unzips the whole corpus. Returns the
-    * tables plus a release handle the caller MUST invoke once its own
-    * caches/writes are materialized (the Pipeline does) — the persist is
-    * never left pinned behind a lazy plan.
-    */
-  def extractRunsDistributedCached(spark: SparkSession,
-      simulationsDir: String): (Map[String, DataFrame], () => Unit) = {
-    val members = membersDistributed(spark, simulationsDir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (memberTables(spark, members), () => { members.unpersist(); () })
-  }
-
-  private def membersDistributed(spark: SparkSession,
-      simulationsDir: String): DataFrame = {
-    import spark.implicits._
-    val bin = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "run_*.zip")
-      .load(simulationsDir)
-      .select($"path", $"content")
-
-    // (run root, member base name, member text) — with the SAME layout
-    // validation the fidelity path applies (validateLayout): every member
-    // under exactly one root directory. Without it, a root-level member's
-    // filename becomes a garbage run_id and a multi-root ZIP silently
-    // splits one bundle into several runs.
-    bin.as[(String, Array[Byte])].flatMap { case (path, bytes) =>
-      val zin = new ZipInputStream(new java.io.ByteArrayInputStream(bytes))
-      val out = mutable.Buffer[(String, String, String)]()
-      var e = zin.getNextEntry
-      while (e != null) {
-        if (!e.isDirectory) {
-          val parts = e.getName.split("/", 2)
-          if (parts.length < 2)
-            throw new IllegalArgumentException(
-              s"$path: member '${e.getName}' is not under a run directory")
-          out += ((parts(0), parts(1), new String(zin.readAllBytes(), StandardCharsets.UTF_8)))
-        }
-        e = zin.getNextEntry
-      }
-      val roots = out.map(_._1).distinct
-      if (roots.size != 1)
-        throw new IllegalArgumentException(
-          s"$path: expected a single root directory, found ${roots.size}")
-      out
-    }.toDF("run_id", "member", "text")
-  }
-
-  private def memberTables(spark: SparkSession,
-      members: DataFrame): Map[String, DataFrame] = {
-    import spark.implicits._
-    Schemas.requiredCsvMembers.map { case (name, schema) =>
-      val lines = members
-        .where($"member" === name)
-        // arrayBarrier: stops InferFiltersFromGenerate from re-splitting the
-        // whole file text inside a pushed-down per-row filter
-        .select($"run_id",
-          explode(graft.functions.TextFunctions.arrayBarrier(
-            split($"text", "\r?\n"))).as("line"))
-        .where(length(trim($"line")) > 0)
-        .where(!$"line".startsWith("timestamp")) // drop the header row
-      // FAILFAST to match the driver path: PERMISSIVE would silently null a
-      // malformed cell in a column the schema declares non-null
-      val table = lines.select($"run_id",
-        from_csv($"line", schema, Map("mode" -> "FAILFAST")).as("r"))
-        .select(($"run_id" +: schema.fieldNames.map(f => col(s"r.$f"))): _*)
-      name.stripSuffix(".csv") -> table
-    } + ("metadata" -> {
-      val metaSchema = Schemas.metadataJson
-      members.where($"member" === "metadata.json")
-        .select($"run_id", from_json($"text", metaSchema).as("m"))
-        .select(($"run_id" +: metaSchema.fieldNames.map(f => col(s"m.$f"))): _*)
-    })
-  }
-
   /** PERMISSIVE CSV reader with a quarantine lane — the production
-    * complement to the FAILFAST readers above. FAILFAST is right when a
+    * complement to the FAILFAST reader above. FAILFAST is right when a
     * corrupt file should fail its RUN (the <50% run-tolerance contract);
     * at fleet scale a single mangled row must NOT kill a 100 TB job — it
     * routes to quarantine with its raw text intact for triage, and the

@@ -5,6 +5,13 @@ import org.apache.spark.sql.SparkSession
 /** End-to-end runner mirroring the reference's 4-stage pipeline
   * (run_pipeline.py:25-157): extract → transform → validate → load (+ export).
   *
+  * {{{
+  * runMain graft.etl.Pipeline --simulations-dir D --output-dir O [--skip-validation] [--force]
+  * }}}
+  *
+  * Master and shuffle partitions follow `SPARK_GRAFT_CPUS` (default 4), as
+  * in [[graft.Verify]]; `SPARK_MASTER` overrides the master for a cluster.
+  *
   * The reference's interactive y/n gate on validation failure
   * (run_pipeline.py:111-120) is a flag here (`--force`), never stdin —
   * batch Spark jobs must not block on a console.
@@ -18,9 +25,7 @@ object Pipeline {
       simulationsDir: String = "",
       outputDir: String = "",
       skipValidation: Boolean = false,
-      force: Boolean = false,
-      exportJson: Boolean = true,
-      distributed: Boolean = false)
+      force: Boolean = false)
 
   def parseArgs(args: Array[String]): Config = {
     def loop(cfg: Config, rest: List[String]): Config = rest match {
@@ -28,8 +33,6 @@ object Pipeline {
       case "--output-dir" :: v :: t => loop(cfg.copy(outputDir = v), t)
       case "--skip-validation" :: t => loop(cfg.copy(skipValidation = true), t)
       case "--force" :: t => loop(cfg.copy(force = true), t)
-      case "--no-export" :: t => loop(cfg.copy(exportJson = false), t)
-      case "--distributed" :: t => loop(cfg.copy(distributed = true), t)
       case Nil => cfg
       case x :: _ => throw new IllegalArgumentException(s"unknown argument: $x")
     }
@@ -42,21 +45,10 @@ object Pipeline {
   /** Runs the pipeline; returns the process exit code. */
   def run(spark: SparkSession, cfg: Config): Int = {
     // [1/4] extract
-    var releaseMembers: () => Unit = () => ()
-    val built =
-      if (cfg.distributed) {
-        // cached variant: ONE decompression pass feeds all 9 star-table
-        // caches instead of re-unzipping the corpus per table
-        val (members, release) =
-          Extract.extractRunsDistributedCached(spark, cfg.simulationsDir)
-        releaseMembers = release
-        Transform.transformAllDistributed(spark, members)
-      } else {
-        val runs = Extract.extractRuns(spark, cfg.simulationsDir)
-        println(s"[pipeline] extracted ${runs.length} runs")
-        // [2/4] transform
-        Transform.transformAll(spark, runs)
-      }
+    val runs = Extract.extractRuns(spark, cfg.simulationsDir)
+    println(s"[pipeline] extracted ${runs.length} runs")
+    // [2/4] transform
+    val built = Transform.transformAll(spark, runs)
     // validate issues ~20 counting actions and load+export re-consume every
     // table: cache the star schema once instead of re-deriving the whole
     // extract→transform DAG per action (the reference holds it in memory)
@@ -78,31 +70,26 @@ object Pipeline {
       Load.registerAll(spark, schema)
       println(s"[pipeline] loaded ${schema.size} tables to ${cfg.outputDir}")
 
-      if (cfg.exportJson) {
-        val summary = Export.buildSummary(spark, schema)
-        val out = s"${cfg.outputDir}/ida_ice_simulation_summary.json"
-        Export.writeSummaryJson(summary, out)
-        val errs = Export.validateSummaryJson(out)
-        if (errs.nonEmpty) {
-          errs.foreach(e => System.err.println(s"[export] $e"))
-          return 1
-        }
-        println(s"[pipeline] exported summary to $out")
+      val summary = Export.buildSummary(spark, schema)
+      val out = s"${cfg.outputDir}/ida_ice_simulation_summary.json"
+      Export.writeSummaryJson(summary, out)
+      val errs = Export.validateSummaryJson(out)
+      if (errs.nonEmpty) {
+        errs.foreach(e => System.err.println(s"[export] $e"))
+        return 1
       }
+      println(s"[pipeline] exported summary to $out")
       0
-    } finally {
-      schema.values.foreach(_.unpersist())
-      releaseMembers()
-    }
+    } finally schema.values.foreach(_.unpersist())
   }
 
   def main(args: Array[String]): Unit = {
     val cfg = parseArgs(args)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
+      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
       .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

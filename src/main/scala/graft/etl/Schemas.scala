@@ -3,7 +3,7 @@ package graft.etl
 import org.apache.spark.sql.types._
 
 /** Explicit StructTypes for every surface the reference infers (SURVEY §1):
-  * the 4 raw CSVs + metadata.json of a run bundle, and the 9-table star
+  * the 4 raw CSVs of a run bundle, and the 9-table star
   * schema. Declared schemas (not inference) so 100 TB scans never pay a
   * sampling pass and drift is impossible.
   *
@@ -48,15 +48,6 @@ object Schemas {
     StructField("drybulb_C", DoubleType, nullable = false),
     StructField("relhum_pct", DoubleType, nullable = false),
     StructField("ghi_W_m2", DoubleType, nullable = false)))
-
-  val metadataJson: StructType = StructType(Seq(
-    StructField("building_id", StringType, nullable = false),
-    StructField("scenario_id", StringType, nullable = false),
-    StructField("building_name", StringType, nullable = false),
-    StructField("location", StringType, nullable = false),
-    StructField("floor_area_m2", LongType, nullable = false),
-    StructField("description", StringType, nullable = false),
-    StructField("generated_at", StringType, nullable = true)))
 
   /** CSV member name → schema, the required layout of a run ZIP
     * (reference: extract/__init__.py:49-63).

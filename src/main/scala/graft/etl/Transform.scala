@@ -24,7 +24,7 @@ import org.apache.spark.sql.expressions.Window
   */
 object Transform {
 
-  /** Batch path over driver-extracted runs. Fact→dim joins are left joins
+  /** Star schema over the extracted runs. Fact→dim joins are left joins
     * (reference `how='left'`): unmatched fact rows survive with NULL keys —
     * the Load views later apply inner semantics (the intentional asymmetry,
     * SURVEY §4.2).
@@ -32,41 +32,19 @@ object Transform {
   def transformAll(spark: SparkSession, runs: Seq[RunData]): Map[String, DataFrame] = {
     require(runs.nonEmpty, "no runs to transform")
     import spark.implicits._
-    build(spark,
-      // __ord = position in the (sorted-zip) run list, so "first-seen" dedup
-      // below is the reference's file-order semantics, not partition luck
-      meta = runs.map(_.metadata).zipWithIndex.toDF("m", "__ord")
-        .select($"m.*", $"__ord"),
-      // zones carry __ord too: dim_zone's name dedup is first-seen BY RUN
-      // (reference keeps the first run's zone_name for a renamed zone)
-      zonesAll = runs.map(_.zones).zipWithIndex
-        .map { case (df, i) => df.withColumn("__ord", lit(i)) }
-        .reduce(_ unionByName _),
-      hvacAll = runs.map(_.hvac).reduce(_ unionByName _),
-      metersAll = runs.map(_.meters).reduce(_ unionByName _),
-      // weather identical across runs → read once (reference :373-382)
-      weatherOne = runs.head.weather)
-  }
-
-  /** Scale path over [[Extract.extractRunsDistributed]] output — identical
-    * star schema with no driver loop at all; weather dedups by timestamp
-    * since "first run" has no meaning in a distributed listing.
-    */
-  def transformAllDistributed(spark: SparkSession,
-      members: Map[String, DataFrame]): Map[String, DataFrame] =
-    build(spark,
-      // run_id is the deterministic "first-seen" order in a distributed
-      // listing (lexicographic = the driver path's sorted-zip order)
-      meta = members("metadata").withColumn("__ord", col("run_id")).drop("run_id"),
-      zonesAll = members("zones").withColumn("__ord", col("run_id")).drop("run_id"),
-      hvacAll = members("hvac").drop("run_id"),
-      metersAll = members("meters").drop("run_id"),
-      weatherOne = members("weather").drop("run_id").dropDuplicates("timestamp"))
-
-  private def build(spark: SparkSession, meta: DataFrame, zonesAll: DataFrame,
-      hvacAll: DataFrame, metersAll: DataFrame,
-      weatherOne: DataFrame): Map[String, DataFrame] = {
-    import spark.implicits._
+    // __ord = position in the (sorted-zip) run list, so "first-seen" dedup
+    // below is the reference's file-order semantics, not partition luck
+    val meta = runs.map(_.metadata).zipWithIndex.toDF("m", "__ord")
+      .select($"m.*", $"__ord")
+    // zones carry __ord too: dim_zone's name dedup is first-seen BY RUN
+    // (reference keeps the first run's zone_name for a renamed zone)
+    val zonesAll = runs.map(_.zones).zipWithIndex
+      .map { case (df, i) => df.withColumn("__ord", lit(i)) }
+      .reduce(_ unionByName _)
+    val hvacAll = runs.map(_.hvac).reduce(_ unionByName _)
+    val metersAll = runs.map(_.meters).reduce(_ unionByName _)
+    // weather identical across runs → read once (reference :373-382)
+    val weatherOne = runs.head.weather
 
     // ---- dims from metadata (first-seen dedup per key; reference :29-41,
     // :61-71). min_by on the explicit __ord, NOT first(): Spark's first()

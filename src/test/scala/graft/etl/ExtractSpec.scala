@@ -98,19 +98,6 @@ class ExtractSpec extends SparkSpec {
     assert(run.metadata.building_id == "B2" && run.metadata.scenario_id == "ECO")
   }
 
-  test("distributed extract matches driver-side extract row counts") {
-    val dir = SyntheticRuns.tempDir()
-    SyntheticRuns.writeFixtureDir(dir)
-    val members = Extract.extractRunsDistributed(spark, dir.toString)
-    assert(members("zones").count() == 4 * 48 * 3)
-    assert(members("hvac").count() == 4 * 48 * 2)
-    assert(members("meters").count() == 4 * 48)
-    assert(members("metadata").count() == 4)
-    // parsed types survive from_csv
-    assert(members("zones").schema("air_temp_C").dataType ==
-      org.apache.spark.sql.types.DoubleType)
-  }
-
   test("quarantine CSV reader: clean rows parse under the schema, mangled " +
     "rows land verbatim in the quarantine lane, nothing lost or doubled") {
     import org.apache.spark.sql.types._

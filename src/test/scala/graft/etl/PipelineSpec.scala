@@ -13,6 +13,9 @@ class PipelineSpec extends SparkSpec {
       simulationsDir = simDir.toString, outputDir = outDir))
     assert(code == 0)
     assert(new java.io.File(outDir, "fact_meters.parquet").exists())
+    // writeFixtureDir: 4 runs × 48 h × 3 zones; weather 48 h × 2 buildings
+    assert(spark.read.parquet(s"$outDir/fact_zone_conditions.parquet").count() == 4 * 48 * 3)
+    assert(spark.read.parquet(s"$outDir/fact_weather.parquet").count() == 48 * 2)
     assert(new java.io.File(outDir, "ida_ice_simulation_summary.json").exists())
     assert(Export.validateSummaryJson(
       s"$outDir/ida_ice_simulation_summary.json").isEmpty)
@@ -44,21 +47,17 @@ class PipelineSpec extends SparkSpec {
     assert(code == 0)
   }
 
-  test("distributed pipeline path produces the same tables") {
-    val simDir = SyntheticRuns.tempDir()
-    SyntheticRuns.writeFixtureDir(simDir)
-    val outDir = Files.createTempDirectory("graft_pipe_dist_").toString
-    val code = Pipeline.run(spark, Pipeline.Config(
-      simulationsDir = simDir.toString, outputDir = outDir, distributed = true))
-    assert(code == 0)
-    assert(spark.read.parquet(s"$outDir/fact_zone_conditions.parquet").count() == 4 * 48 * 3)
-  }
-
   test("argument parsing") {
     val cfg = Pipeline.parseArgs(Array(
       "--simulations-dir", "/a", "--output-dir", "/b", "--skip-validation"))
     assert(cfg.simulationsDir == "/a" && cfg.outputDir == "/b" && cfg.skipValidation)
     intercept[IllegalArgumentException] { Pipeline.parseArgs(Array("--bogus")) }
+    // one ingest path and export always runs: neither has a switch
+    Seq("--distributed", "--no-export").foreach { flag =>
+      intercept[IllegalArgumentException] {
+        Pipeline.parseArgs(Array("--simulations-dir", "/a", "--output-dir", "/b", flag))
+      }
+    }
     intercept[IllegalArgumentException] { Pipeline.parseArgs(Array("--output-dir", "/b")) }
   }
 }
