@@ -40,9 +40,6 @@ final case class RunData(
   */
 object Extract {
 
-  /** Required members of a run bundle under its single root directory
-    * (reference: extract/__init__.py:49-63).
-    */
   /** Staged run dirs, removed recursively at JVM exit. (deleteOnExit on a
     * non-empty directory silently fails — the staged CSV copies would leak;
     * the CSVs must live until exit because Spark reads them lazily.)
@@ -66,6 +63,9 @@ object Extract {
     ()
   }
 
+  /** Required members of a run bundle under its single root directory
+    * (reference: extract/__init__.py:49-63).
+    */
   private val requiredMembers: Set[String] =
     Schemas.requiredCsvMembers.keySet + "metadata.json"
 

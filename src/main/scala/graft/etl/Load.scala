@@ -1,7 +1,6 @@
 package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 
 /** Load stage (SURVEY §2.1 S7-S10): parquet sink, view registration, the
   * three analytical views, parquet re-load, and the SQL query entry point.
@@ -14,182 +13,10 @@ import org.apache.spark.sql.functions.col
   */
 object Load {
 
-  /** Parquet sink, one directory per table (reference: load/__init__.py:15-33).
-    * At 100 TB the facts would add `.partitionBy("scenario_id")` and
-    * bucketing; partition column choice is left to the caller via `options`.
-    */
+  /** Parquet sink, one directory per table (reference: load/__init__.py:15-33). */
   def loadToParquet(schema: Map[String, DataFrame], outputDir: String): Unit =
     schema.foreach { case (name, df) =>
       df.write.mode("overwrite").parquet(s"$outputDir/$name.parquet")
-    }
-
-  /** ORC sink/source pair — the second columnar at-rest format, for
-    * interchange with Hive-lineage warehouses that mandate ORC. Spark's
-    * ORC support is native and columnar both ways (vectorized reader,
-    * predicate pushdown, column pruning — the same scan-level levers the
-    * parquet tiers rely on; StorageExtSpec pins the pushed filter), so a
-    * table can live in either format without changing a single query.
-    * Kept OUT of the oracle surface: DuckDB reads parquet, not ORC, so
-    * ORC round-trips are spec-gated rather than hash-oracled.
-    */
-  def writeOrc(df: DataFrame, outDir: String): Unit =
-    df.write.mode("overwrite").orc(outDir)
-
-  def readOrc(spark: SparkSession, dir: String): DataFrame =
-    spark.read.orc(dir)
-
-  /** Partitioned parquet sink — the at-rest layout for 100 TB facts
-    * (SURVEY §4.2 "partition pruning ✅ if we partition facts by e.g.
-    * scenario_id"). Tables listed in `partitionCols` are written
-    * `partitionBy(cols)` (facts by `scenario_id`, events by date, …);
-    * everything else falls back to the flat [[loadToParquet]] layout (dims
-    * are small — partitioning them would just make tiny files).
-    *
-    * What this buys at scale, both gated by StorageLayoutSpec:
-    *   - static pruning: a literal predicate on a partition column never
-    *     reads the other partitions' directories (`PartitionFilters` on the
-    *     scan, zero data-file IO outside the match);
-    *   - DYNAMIC partition pruning: a star join `fact.part_col = dim.key`
-    *     with a selective dim filter prunes the fact scan at RUNTIME from
-    *     the dim join keys (`dynamicpruningexpression` in the fact scan's
-    *     PartitionFilters, reusing the dim's broadcast) — the single
-    *     biggest scan-reduction lever for partitioned stars.
-    *
-    * Partition-column choice is the caller's: low cardinality (≲10⁴
-    * directories), stable, and on the star's join/filter axis — exactly
-    * `scenario_id` / calendar date here. High-cardinality keys belong in
-    * [[writeBucketed]] instead (bucketing subdivides files, not dirs).
-    *
-    * `sortCols` adds the third at-rest pruning tier below directories
-    * (partition pruning) and files (bucketing): ROW GROUPS. Tables listed
-    * there are clustered on write — one repartition on the partition axis
-    * (also collapses the per-task × per-partition small-file explosion to
-    * one file per directory) then `sortWithinPartitions(partitionCols ++
-    * sortCols)` — so parquet's per-row-group min/max statistics become
-    * disjoint runs on the sort axis and a pushed-down selective predicate
-    * skips whole row groups instead of scanning every one to filter
-    * row-by-row (StorageLayoutSpec gates the scan's numOutputRows drop).
-    * A high-cardinality filter key that is neither partition- nor
-    * bucket-worthy (timestamps, document ids) belongs here.
-    *
-    * `writerOptions` passes parquet writer knobs through (row-group size
-    * via `parquet.block.size`, etc.) — at 100 TB the block size is tuned
-    * against `spark.sql.files.maxPartitionBytes` so one scan split holds a
-    * handful of row groups.
-    */
-  def loadToParquetPartitioned(schema: Map[String, DataFrame], outputDir: String,
-      partitionCols: Map[String, Seq[String]],
-      sortCols: Map[String, Seq[String]] = Map.empty,
-      writerOptions: Map[String, String] = Map.empty): Unit =
-    schema.foreach { case (name, df) =>
-      val parts = partitionCols.getOrElse(name, Nil)
-      val sorts = sortCols.getOrElse(name, Nil)
-      val clustered =
-        if (sorts.isEmpty) df
-        else {
-          // partitioned: co-locate each directory's rows so it gets one
-          // sorted file. Unpartitioned: RANGE-partition on the sort axis so
-          // FILE-level min/max ranges are disjoint too — hash partitioning
-          // (or none) would leave every file spanning the full axis, and a
-          // pushed filter would skip row groups inside each file yet still
-          // probe every file.
-          val co =
-            if (parts.isEmpty) df.repartitionByRange(sorts.map(col): _*)
-            else df.repartition(parts.map(col): _*)
-          co.sortWithinPartitions((parts ++ sorts).map(col): _*)
-        }
-      val w = clustered.write.mode("overwrite").options(writerOptions)
-      if (parts.nonEmpty) w.partitionBy(parts: _*).parquet(s"$outputDir/$name.parquet")
-      else w.parquet(s"$outputDir/$name.parquet")
-    }
-
-  /** Morton (Z-order) clustering value over `cols` — the multi-axis
-    * extension of the single-axis `sortCols` tier. A linear sort makes
-    * row-group min/max stats disjoint on its LEADING column only; a filter
-    * on any other clustered axis still probes every row group. Interleaving
-    * the bits of all axes' bucket indices gives every row group a small
-    * hyper-rectangle of the combined key space, so its per-column min/max
-    * ranges are narrow on EVERY interleaved axis and a selective pushed
-    * filter on any one of them skips most row groups (gated against the
-    * linear layout in StorageLayoutSpec).
-    *
-    * Mechanics: each axis is mapped to a `2^bits`-bucket index with
-    * `width_bucket` over its global [min, max] (one tiny agg — 2·|cols|
-    * scalars on the driver), then bucket bits are interleaved LSB-first
-    * (bit j of axis i lands at position j·|cols| + i). Everything after the
-    * one agg is a codegen'd per-row expression — no shuffle beyond the
-    * range-partition the caller does on the result.
-    *
-    * Equal-width buckets assume roughly uniform axes (true of the fixture
-    * keys and most surrogate-key axes). A heavily skewed axis degenerates
-    * (most rows in one bucket → one fat z-cell); pre-map such an axis
-    * through a quantile transform before handing it here.
-    */
-  def zorderColumn(df: DataFrame, cols: Seq[String], bits: Int = 8): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions._
-    val k = cols.size
-    require(k >= 1, "z-order needs at least one column")
-    require(bits >= 1 && bits * k <= 62, s"bits*cols=${bits * k} exceeds long range")
-    val aggs = cols.flatMap(c =>
-      Seq(min(col(c).cast("double")), max(col(c).cast("double"))))
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    // Long literal: the guard admits bits up to 62 (k = 1), where Int
-    // `1 << bits` wraps — bits = 32 would silently put EVERY row in
-    // bucket 0 (constant z-value, zero clustering)
-    val n = 1L << bits
-    val bucketed = cols.zipWithIndex.map { case (c, i) =>
-      val (lo, hi) =
-        (if (row.isNullAt(2 * i)) 0d else row.getDouble(2 * i),
-          if (row.isNullAt(2 * i + 1)) 0d else row.getDouble(2 * i + 1))
-      if (hi <= lo) lit(0L) // constant (or all-null) axis carries no bits
-      else {
-        val b = width_bucket(col(c).cast("double"), lit(lo), lit(hi), lit(n)) - 1
-        // width_bucket: < lo → 0, ≥ hi → n+1; clamp into [0, n-1], nulls low
-        coalesce(least(greatest(b, lit(0L)), lit(n - 1L)), lit(0L))
-      }
-    }
-    val terms = for {
-      i <- bucketed.indices
-      j <- 0 until bits
-    } yield shiftleft(shiftrightunsigned(bucketed(i), j).bitwiseAND(lit(1L)), j * k + i)
-    terms.reduce(_ bitwiseOR _)
-  }
-
-  /** Z-ordered parquet sink: range-partition + cluster each table on the
-    * Morton value of `zorderCols`, so pushed filters on ANY of the
-    * interleaved axes skip row groups (and whole files — the range
-    * partition makes file-level z-ranges disjoint too). The multi-axis
-    * sibling of [[loadToParquetPartitioned]]'s `sortCols` tier; use that
-    * one when only a single filter axis matters (a linear sort is strictly
-    * tighter on one axis than any interleave).
-    */
-  def loadToParquetZOrdered(schema: Map[String, DataFrame], outputDir: String,
-      zorderCols: Map[String, Seq[String]],
-      partitionCols: Map[String, Seq[String]] = Map.empty,
-      bits: Int = 8,
-      writerOptions: Map[String, String] = Map.empty): Unit =
-    schema.foreach { case (name, df) =>
-      val zc = zorderCols.getOrElse(name, Nil)
-      val parts = partitionCols.getOrElse(name, Nil)
-      if (zc.isEmpty)
-        loadToParquetPartitioned(Map(name -> df), outputDir,
-          Map(name -> parts), writerOptions = writerOptions)
-      else {
-        val z = df.withColumn("__zval", zorderColumn(df, zc, bits))
-        // directory-partitioned tables co-locate per directory (one sorted
-        // file each); flat tables range-partition on the z-value so file
-        // min/max ranges are disjoint as well
-        val co =
-          if (parts.isEmpty) z.repartitionByRange(col("__zval"))
-          else z.repartition(parts.map(col): _*)
-        val clustered = co
-          .sortWithinPartitions(parts.map(col) :+ col("__zval"): _*)
-          .drop("__zval")
-        val w = clustered.write.mode("overwrite").options(writerOptions)
-        if (parts.nonEmpty)
-          w.partitionBy(parts: _*).parquet(s"$outputDir/$name.parquet")
-        else w.parquet(s"$outputDir/$name.parquet")
-      }
     }
 
   /** Registers all star tables as temp views + the 3 analytical views
@@ -229,33 +56,6 @@ object Load {
     * Catalyst parses/optimizes; views expand at analysis time.
     */
   def query(spark: SparkSession, sql: String): DataFrame = spark.sql(sql)
-
-  /** Bucketed managed-table sink — the co-located-join layout SCALE.md
-    * promises for fact-fact edges: two tables bucketed (and sorted) on
-    * their join key with equal bucket counts join with NO shuffle exchange
-    * (asserted by StorageLayoutSpec). This is the 100 TB answer to the
-    * star queries' one remaining shuffle join.
-    */
-  def writeBucketed(df: DataFrame, table: String, bucketCols: Seq[String],
-      nBuckets: Int, sortCols: Seq[String] = Nil): Unit = {
-    require(tableNameRe.matches(table), s"invalid table name: $table")
-    require(bucketCols.nonEmpty && nBuckets > 0, "need bucket columns and buckets")
-    val spark = df.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    // an in-memory catalog forgets tables across sessions but leaves their
-    // warehouse directories; clear any orphan so CTAS doesn't refuse
-    // the metastore lowercases table names (Locale.ROOT — default-locale
-    // lowercasing diverges on e.g. Turkish dotless i)
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"),
-      table.toLowerCase(java.util.Locale.ROOT))
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
-    val w = df.write.mode("overwrite").format("parquet")
-      .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
-    val ws = if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w
-    ws.saveAsTable(table)
-  }
 
   /** vw_zone_with_weather (reference: load/__init__.py:75-103): zone
     * conditions + calendar + building + outdoor weather, inner joins, with

@@ -712,7 +712,7 @@ object Maintenance {
     * Shape at 100 TB: each side reduces to (key, 16-byte fingerprint)
     * AT THE SCAN — column pruning keeps payloads out of the exchange —
     * then ONE sort-merge full-outer join on the key. If both snapshots are
-    * bucketed by the key ([[graft.etl.Load]]'s bucketed sink), the
+    * bucketed by the key (Spark `bucketBy` tables), the
     * exchange disappears entirely.
     */
   def snapshotDiff(prev: DataFrame, next: DataFrame, keyCols: Seq[String],

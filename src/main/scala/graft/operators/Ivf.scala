@@ -699,17 +699,6 @@ object Ivf {
       derivedNProbe(counts.sum, cents.length), k)
   }
 
-  /** [[probeClusteredQuantized]] with the sidecar-derived nProbe (and the
-    * RecallSpec-gated rerank = 3k default).
-    */
-  def probeClusteredQuantizedSized(spark: SparkSession, path: String,
-      idCol: String, vecCol: String, qCol: String, query: Seq[Float],
-      k: Int): DataFrame = {
-    val (cents, counts) = readSidecar(spark, path)
-    probeClusteredQuantized(spark, path, idCol, vecCol, qCol, query,
-      derivedNProbe(counts.sum, cents.length), k, rerank = 3 * k)
-  }
-
   /** IVF top-k: cosine-rank only the `nProbe` clusters nearest the query.
     * Recall < 1 by construction (like every IVF); nProbe/k is the knob.
     * The final orderBy+limit plans as TakeOrderedAndProject (per-partition

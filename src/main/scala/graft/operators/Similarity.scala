@@ -32,15 +32,6 @@ object Similarity {
       .orderBy(col("cosine_sim").desc, col(idCol))
       .limit(k)
 
-  /** Bucket the corpus by sign-LSH; returns (id, bucket). At scale this is
-    * the build side of an index: write out partitioned by bucket and probes
-    * become partition-pruned scans.
-    */
-  def lshIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      dims: Int, nPlanes: Int): DataFrame =
-    corpus.select(col(idCol),
-      lshBucket(col(vecCol), dims, nPlanes).as("bucket"))
-
   /** LSH-bucketed ANN top-k: probe only the query's bucket(s), rank within.
     * Recall < 1 by construction; `nPlanes` trades recall for bucket size and
     * `nTables` OR-amplifies (a vector qualifies if it shares the query's

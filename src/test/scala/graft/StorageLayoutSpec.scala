@@ -1,16 +1,16 @@
 package graft
 
-import graft.etl.Load
 import graft.operators.Similarity
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
 /** At-rest layout claims from SCALE.md, proven at plan level:
-  *   - two tables bucketed on their join key co-locate → the join plans
-  *     with NO shuffle exchange;
-  *   - an LSH index written partitionBy(bucket) probes via partition
-  *     pruning → the scan reads one bucket directory, not the corpus.
+  *   - a selective dim predicate pushes a runtime bloom filter into the
+  *     fact side of a shuffle join;
+  *   - an LSH index written partitionBy(bucket) and an IVF index written
+  *     partitionBy(cluster) probe via partition pruning → the scan reads
+  *     the probed directories, not the corpus.
   */
 class StorageLayoutSpec extends SparkSpec {
 
@@ -19,201 +19,6 @@ class StorageLayoutSpec extends SparkSpec {
   private def finalPlan(p: SparkPlan): SparkPlan = p match {
     case a: AdaptiveSparkPlanExec => a.executedPlan
     case other => other
-  }
-
-  test("bucketed fact-fact join plans with no shuffle exchange") {
-    val lineitem = Tables.load(spark, sf, "lineitem")
-      .select("l_orderkey", "l_linenumber", "l_quantity")
-    val orders = Tables.load(spark, sf, "orders")
-      .select("o_orderkey", "o_orderstatus", "o_totalprice")
-    Load.writeBucketed(lineitem, "b_lineitem", Seq("l_orderkey"), 4, Seq("l_orderkey"))
-    Load.writeBucketed(orders, "b_orders", Seq("o_orderkey"), 4, Seq("o_orderkey"))
-
-    // at real scale neither fact side broadcasts — recreate that context so
-    // the planner actually exercises the co-located bucketed path
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val joined =
-      try {
-        val j = spark.table("b_lineitem")
-          .join(spark.table("b_orders"), col("l_orderkey") === col("o_orderkey"))
-        j.collect()
-        val plan = finalPlan(j.queryExecution.executedPlan).toString
-        assert(!plan.contains("Exchange"), s"bucketed join still shuffles:\n$plan")
-        assert(plan.contains("SelectedBucketsCount"), plan)
-        j
-      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-
-    // and it returns the same rows as the unbucketed join
-    val plain = Tables.load(spark, sf, "lineitem")
-      .join(Tables.load(spark, sf, "orders"), col("l_orderkey") === col("o_orderkey"))
-      .select("l_orderkey", "l_linenumber", "l_quantity",
-        "o_orderkey", "o_orderstatus", "o_totalprice")
-    assert(joined.select(plain.columns.map(col): _*).exceptAll(plain).isEmpty)
-    assert(plain.exceptAll(joined.select(plain.columns.map(col): _*)).isEmpty)
-  }
-
-  test("partitioned fact: static pruning on the partition column, DYNAMIC " +
-    "partition pruning through a filtered-dim star join") {
-    // facts partitioned on the star's filter axis (SURVEY §4.2) — the
-    // testdata analogue of fact_* partitionBy(scenario_id) / events by date
-    val orders = Tables.load(spark, sf, "orders")
-      .withColumn("o_month", month(col("o_orderdate")))
-    Load.loadToParquetPartitioned(
-      Map("orders_bymonth" -> orders), "target/dpp_test",
-      Map("orders_bymonth" -> Seq("o_month")))
-    val fact = spark.read.parquet("target/dpp_test/orders_bymonth.parquet")
-
-    // static pruning: a literal partition predicate reaches PartitionFilters
-    val staticQ = fact.where(col("o_month") === 3).select("o_orderkey", "o_month")
-    val staticPlan = finalPlan(staticQ.queryExecution.executedPlan).toString
-    assert(staticPlan.contains("PartitionFilters") && staticPlan.contains("o_month"),
-      s"literal partition predicate not pruned:\n$staticPlan")
-    assert(staticQ.count() === orders.where(col("o_month") === 3).count())
-
-    // dynamic pruning: join on the partition column against a SMALL dim with
-    // a selective predicate — the fact scan must carry a
-    // dynamicpruningexpression (runtime partition list from the dim's
-    // broadcast), not read all 12 month directories
-    val dim = spark.range(1, 13).select(
-      col("id").cast("int").as("month"),
-      (((col("id") - 1) / 3) + 1).cast("int").as("quarter"))
-    val dpp = fact.join(broadcast(dim), fact("o_month") === dim("month"))
-      .where(col("quarter") === 1)
-      .select("o_orderkey", "o_totalprice", "o_month")
-    dpp.collect()
-    val dppPlan = finalPlan(dpp.queryExecution.executedPlan).toString
-    assert(dppPlan.contains("dynamicpruningexpression"),
-      s"star join over partitioned fact not dynamically pruned:\n$dppPlan")
-
-    // and pruning changed nothing semantically
-    val expected = orders.where(col("o_month").isin(1, 2, 3))
-      .select("o_orderkey", "o_totalprice", "o_month")
-    assert(dpp.exceptAll(expected).isEmpty && expected.exceptAll(dpp).isEmpty)
-  }
-
-  test("sort-on-write row-group skipping: a selective pushed filter reads " +
-    "far fewer rows from the clustered layout than the unsorted one") {
-    // the third at-rest pruning tier (dirs → files → ROW GROUPS): writing
-    // sorted on the filter axis makes parquet row-group min/max stats
-    // disjoint, so the pushed-down predicate skips row groups at the reader
-    // instead of filtering row-by-row. Small parquet.block.size forces many
-    // row groups out of test-scale data — at 100 TB the default 128 MB
-    // blocks give the same shape for free.
-    val li = Tables.load(spark, "/root/testdata/sf0.01", "lineitem")
-      .select("l_orderkey", "l_partkey", "l_quantity", "l_extendedprice")
-    val dir = java.nio.file.Files.createTempDirectory("graft_rowgroup_").toString
-    val rowGroupKnobs = Map(
-      "parquet.block.size" -> "65536",
-      "parquet.page.size" -> "8192")
-    Load.loadToParquetPartitioned(
-      Map("li_sorted" -> li), dir, Map.empty,
-      sortCols = Map("li_sorted" -> Seq("l_partkey")),
-      writerOptions = rowGroupKnobs)
-    Load.loadToParquetPartitioned(
-      Map("li_unsorted" -> li), dir, Map.empty,
-      writerOptions = rowGroupKnobs)
-
-    def scanRows(q: org.apache.spark.sql.DataFrame): Long = {
-      q.collect()
-      finalPlan(q.queryExecution.executedPlan).collect {
-        case s: org.apache.spark.sql.execution.FileSourceScanExec =>
-          s.metrics("numOutputRows").value
-      }.sum
-    }
-    val probeKey = li.agg(min(col("l_partkey"))).head().getLong(0)
-    val pred = col("l_partkey") === probeKey
-    val sortedRows = scanRows(
-      spark.read.parquet(s"$dir/li_sorted.parquet").where(pred))
-    val unsortedRows = scanRows(
-      spark.read.parquet(s"$dir/li_unsorted.parquet").where(pred))
-    assert(sortedRows * 4 <= unsortedRows,
-      s"sorted layout read $sortedRows rows vs $unsortedRows unsorted — " +
-        "row-group stats did not skip")
-
-    // and the layout change is invisible to query results
-    val a = spark.read.parquet(s"$dir/li_sorted.parquet").where(pred)
-    val b = spark.read.parquet(s"$dir/li_unsorted.parquet").where(pred)
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
-  }
-
-  test("z-order clustering: pushed filters on EITHER interleaved axis skip " +
-    "row groups, where a linear sort only helps its leading axis") {
-    // the multi-axis row-group tier: interleaving (l_partkey, l_suppkey)
-    // bucket bits gives every row group a small rectangle of the combined
-    // key space, so BOTH columns' min/max stats are narrow. The linear
-    // layout sorted on l_partkey is the adversary: tighter than z-order on
-    // its leading axis, useless on l_suppkey.
-    val li = Tables.load(spark, "/root/testdata/sf0.01", "lineitem")
-      .select("l_orderkey", "l_partkey", "l_suppkey", "l_quantity")
-    val dir = java.nio.file.Files.createTempDirectory("graft_zorder_").toString
-    val knobs = Map(
-      "parquet.block.size" -> "65536",
-      "parquet.page.size" -> "8192")
-    Load.loadToParquetPartitioned(
-      Map("li_plain" -> li), dir, Map.empty, writerOptions = knobs)
-    Load.loadToParquetPartitioned(
-      Map("li_linear" -> li), dir, Map.empty,
-      sortCols = Map("li_linear" -> Seq("l_partkey")), writerOptions = knobs)
-    Load.loadToParquetZOrdered(
-      Map("li_z" -> li), dir, Map("li_z" -> Seq("l_partkey", "l_suppkey")),
-      writerOptions = knobs)
-
-    def scanRows(q: org.apache.spark.sql.DataFrame): Long = {
-      q.collect()
-      finalPlan(q.queryExecution.executedPlan).collect {
-        case s: org.apache.spark.sql.execution.FileSourceScanExec =>
-          s.metrics("numOutputRows").value
-      }.sum
-    }
-    def rows(table: String, pred: org.apache.spark.sql.Column): Long =
-      scanRows(spark.read.parquet(s"$dir/$table.parquet").where(pred))
-
-    // ~1/64-of-axis range predicates, anchored at each axis' min
-    val lows = li.agg(min(col("l_partkey")), max(col("l_partkey")),
-      min(col("l_suppkey")), max(col("l_suppkey"))).head()
-    val pkPred = col("l_partkey")
-      .between(lows.getLong(0), lows.getLong(0) + (lows.getLong(1) - lows.getLong(0)) / 64)
-    val skPred = col("l_suppkey")
-      .between(lows.getLong(2), lows.getLong(2) + (lows.getLong(3) - lows.getLong(2)) / 64)
-
-    // z-order beats the unsorted layout on BOTH axes…
-    assert(rows("li_z", pkPred) * 2 <= rows("li_plain", pkPred),
-      "z layout did not skip on the first interleaved axis")
-    assert(rows("li_z", skPred) * 2 <= rows("li_plain", skPred),
-      "z layout did not skip on the second interleaved axis")
-    // …and beats the linear layout on the axis the linear sort can't help
-    assert(rows("li_z", skPred) * 2 <= rows("li_linear", skPred),
-      "z layout no better than a linear l_partkey sort on l_suppkey")
-
-    // the layout change is invisible to query results
-    val a = spark.read.parquet(s"$dir/li_z.parquet").where(pkPred)
-    val b = spark.read.parquet(s"$dir/li_plain.parquet").where(pkPred)
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
-  }
-
-  test("zorderColumn interleaves bucket bits exactly (corners + checker pattern)") {
-    // bits=2 over x,y ∈ {0..3} with width_bucket(v, 0, 3, 4) reducing to
-    // the identity bucket map ⇒ z is the textbook 4×4 Morton curve:
-    // x bits at even positions, y bits at odd.
-    import spark.implicits._
-    val pts = for { x <- 0 to 3; y <- 0 to 3 } yield (x, y)
-    val df = pts.toDF("x", "y")
-    val z = df.withColumn("z", Load.zorderColumn(df, Seq("x", "y"), bits = 2))
-      .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
-    def morton(x: Int, y: Int): Long =
-      (0 until 2).map(j => (((x >> j) & 1) << (2 * j)) | (((y >> j) & 1) << (2 * j + 1)))
-        .map(_.toLong).reduce(_ | _)
-    for { x <- 0 to 3; y <- 0 to 3 }
-      assert(z((x, y)) === morton(x, y), s"z($x,$y)")
-    assert(z((0, 0)) === 0L && z((3, 3)) === 15L && z((3, 0)) === 5L && z((0, 3)) === 10L)
-
-    // wide single-axis form: bits past Int-shift range must still bucket
-    // (an Int `1 << 32` wraps to 1 → constant z for every row)
-    val wide = Seq(0, 1000).toDF("x")
-    val wz = wide.withColumn("z", Load.zorderColumn(wide, Seq("x"), bits = 32))
-      .select("z").distinct().count()
-    assert(wz === 2L, "bits = 32 must still separate distinct values")
   }
 
   test("runtime bloom filter from a selective dim predicate prunes the fact " +

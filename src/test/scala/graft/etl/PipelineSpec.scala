@@ -9,16 +9,21 @@ class PipelineSpec extends SparkSpec {
     val simDir = SyntheticRuns.tempDir()
     SyntheticRuns.writeFixtureDir(simDir)
     val outDir = Files.createTempDirectory("graft_pipe_").toString
-    val code = Pipeline.run(spark, Pipeline.Config(
-      simulationsDir = simDir.toString, outputDir = outDir))
-    assert(code == 0)
-    assert(new java.io.File(outDir, "fact_meters.parquet").exists())
-    // writeFixtureDir: 4 runs × 48 h × 3 zones; weather 48 h × 2 buildings
-    assert(spark.read.parquet(s"$outDir/fact_zone_conditions.parquet").count() == 4 * 48 * 3)
-    assert(spark.read.parquet(s"$outDir/fact_weather.parquet").count() == 48 * 2)
-    assert(new java.io.File(outDir, "ida_ice_simulation_summary.json").exists())
-    assert(Export.validateSummaryJson(
-      s"$outDir/ida_ice_simulation_summary.json").isEmpty)
+    // a second run into the same outDir must replace the first run's files,
+    // not add to them (a daily job re-runs into one output directory)
+    for (pass <- 1 to 2) {
+      val code = Pipeline.run(spark, Pipeline.Config(
+        simulationsDir = simDir.toString, outputDir = outDir))
+      assert(code == 0, s"run $pass")
+      assert(new java.io.File(outDir, "fact_meters.parquet").exists())
+      // writeFixtureDir: 4 runs × 48 h × 3 zones; weather 48 h × 2 buildings
+      assert(spark.read.parquet(s"$outDir/fact_zone_conditions.parquet").count() == 4 * 48 * 3,
+        s"run $pass")
+      assert(spark.read.parquet(s"$outDir/fact_weather.parquet").count() == 48 * 2, s"run $pass")
+      assert(new java.io.File(outDir, "ida_ice_simulation_summary.json").exists())
+      assert(Export.validateSummaryJson(
+        s"$outDir/ida_ice_simulation_summary.json").isEmpty, s"run $pass")
+    }
   }
 
   test("validation failure aborts with exit code 2 unless forced") {

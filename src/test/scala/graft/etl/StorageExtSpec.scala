@@ -1,11 +1,9 @@
 package graft.etl
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
-/** Gates for the r9 storage extensions: the ORC tier (round-trip +
-  * scan-level pushdown) and schema-evolution parquet reads (new columns
-  * surface as NULLs across generations; type conflicts fail loudly).
+/** Gate for the r9 schema-evolution parquet reads (new columns surface as
+  * NULLs across generations; type conflicts fail loudly).
   */
 class StorageExtSpec extends SparkSpec {
 
@@ -14,26 +12,6 @@ class StorageExtSpec extends SparkSpec {
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("graft_storage_ext")
       .toFile.getAbsolutePath
-
-  test("ORC round-trips and pushes predicates to the scan") {
-    val dir = tmp() + "/t_orc"
-    val df = Seq((1L, "alpha", 10.0), (2L, "beta", 20.0), (3L, "gamma", 30.0))
-      .toDF("id", "name", "v")
-    Load.writeOrc(df, dir)
-    val back = Load.readOrc(spark, dir)
-    // file reads are always nullable; names + types are the contract
-    assert(back.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
-      df.schema.fields.map(f => (f.name, f.dataType)).toSeq)
-    assert(back.orderBy("id").collect().toSeq ==
-      df.orderBy("id").collect().toSeq)
-
-    // predicate + projection reach the ORC scan like the parquet tiers
-    val q = back.where($"id" > 1).select($"name")
-    val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters") && plan.contains("GreaterThan"),
-      s"expected pushed filter in ORC scan:\n$plan")
-    assert(q.collect().map(_.getString(0)).sorted.toSeq == Seq("beta", "gamma"))
-  }
 
   test("readEvolved (multi-path) unions generations; plain read can drop the " +
     "new column; type conflicts fail loudly") {
