@@ -237,14 +237,6 @@ object Maintenance {
     } finally up.unpersist(blocking = false)
   }
 
-  /** Upsert COMPLETE (month, event_type) rollup rows into the at-rest store —
-    * the monthly-rollup instantiation of [[upsert]], kept as the sink half
-    * of streaming materialized-view maintenance
-    * ([[graft.streaming.Streaming.maintainMonthlyRollup]]).
-    */
-  def upsertRollupRows(updates: DataFrame, outDir: String): Seq[String] =
-    upsert(updates, Seq("month", "event_type"), "month", outDir)
-
   // -------------------------------------------------------------------
   // Manifest-committed store: closes [[upsert]]'s documented commit-window
   // caveat. Layout:
@@ -418,10 +410,9 @@ object Maintenance {
     * content, and a partition whose keys all die drops out of the manifest
     * entirely. Same crash-atomicity (a crash before the manifest rename
     * leaves the prior version intact) and the same replay idempotence
-    * (latest-wins is stable under re-application — the at-least-once
-    * contract [[graft.streaming.Streaming.materializeCdcStream]] relies
-    * on). A fresh store (no manifest yet) treats the batch as the initial
-    * snapshot load.
+    * (latest-wins is stable under re-application, so a re-run of the same
+    * change batch is harmless). A fresh store (no manifest yet) treats the
+    * batch as the initial snapshot load.
     *
     * @return the touched partition values (as strings), in natural order
     */
@@ -557,7 +548,7 @@ object Maintenance {
     // IVF stores pair each manifest version with a `centroids_vNNNNNNNN`
     // sidecar dir ([[graft.operators.Ivf]]'s fence); superseded versions
     // and crashed-attempt temps are orphans exactly like old manifests
-    // (r16, ADVICE r15 — they previously accumulated unboundedly). Flat
+    // (r16, ADVICE r15 — they previously accumulated unboundedly). Other
     // stores have no such dirs — the match is simply empty there. A
     // version ABOVE latest is a crashed attempt's staged sidecar (vacuum
     // runs under the same single-maintainer contract as mutations, so no
@@ -575,65 +566,11 @@ object Maintenance {
   }
 
   /** Latest committed manifest version of a manifest store (0 = no store
-    * yet) — the bootstrap probe for flat-manifest consumers like the
-    * streaming LSH index ([[graft.streaming.Streaming.applyNearDedupBatch]]).
+    * yet) — the bootstrap probe for a manifest store's consumers.
     */
   def manifestVersion(spark: SparkSession, storeDir: String): Long = {
     val (fs, _) = fsFor(spark, storeDir)
     latestManifestVersion(fs, new org.apache.hadoop.fs.Path(s"$storeDir/_manifest"))
-  }
-
-  /** Live data-file count per the latest committed manifest — the honest
-    * "how fragmented is this store" metric (files on disk may include
-    * uncommitted or orphaned ones).
-    */
-  def manifestFileCount(spark: SparkSession, storeDir: String): Int =
-    liveFiles(spark, storeDir).size
-
-  /** APPEND-shaped manifest commit for a FLAT (unpartitioned) store: stage
-    * `rows` as new data files, then publish ONE manifest listing the old
-    * live files plus the staged ones. Crash before the manifest rename ⇒
-    * readers keep the previous version intact (staged files are invisible
-    * orphans, reclaimed by [[vacuumManifested]]); there is never a moment
-    * where the store is missing or torn — the failure mode the raw
-    * append-to-dir layout cannot avoid during maintenance swaps.
-    *
-    * Concurrency scope (same single-maintainer contract as the whole
-    * manifest store, stated precisely): the atomic version claim makes a
-    * racing COMMIT loud, but staged files are identified by an on-disk
-    * diff — two writers STAGING at once could absorb each other's
-    * (possibly half-written) files into one manifest. One writer per store
-    * at a time; the streaming gate satisfies this by construction
-    * (foreachBatch bodies are serial, compaction runs between batches).
-    */
-  def appendManifested(rows: DataFrame, storeDir: String): Unit =
-    commitFlat(rows, storeDir, replace = false)
-
-  /** Full-content REPLACEMENT commit for a flat manifest store — the
-    * compaction/OPTIMIZE primitive: stage `rows` (typically the store's own
-    * content re-read and repartitioned) as new files, then publish a
-    * manifest listing ONLY them. A reader resolving the manifest sees the
-    * complete old content or the complete new content, never an absent or
-    * half-swapped store — this closes the two-rename swap window a
-    * plain-directory compaction has. Old files become orphans;
-    * [[vacuumManifested]] reclaims them.
-    */
-  def replaceManifested(rows: DataFrame, storeDir: String,
-      writeOptions: Map[String, String] = Map.empty): Unit =
-    commitFlat(rows, storeDir, replace = true, writeOptions)
-
-  private def commitFlat(rows: DataFrame, storeDir: String,
-      replace: Boolean, writeOptions: Map[String, String] = Map.empty): Unit = {
-    val spark = rows.sparkSession
-    val (fs, _) = fsFor(spark, storeDir)
-    val mdir = new org.apache.hadoop.fs.Path(s"$storeDir/_manifest")
-    val version = latestManifestVersion(fs, mdir)
-    val live = liveFiles(spark, storeDir).map(_.stripPrefix(s"$storeDir/data/"))
-    val before = dataFilesOnDisk(spark, storeDir)
-    rows.write.options(writeOptions).mode("append").parquet(s"$storeDir/data")
-    val staged = (dataFilesOnDisk(spark, storeDir) -- before).toSeq.sorted
-    val next = (if (replace) staged else (live ++ staged).sorted)
-    publishManifest(fs, mdir, version, next, storeDir)
   }
 
   /** Shared commit point: write the next manifest aside, then ONE atomic

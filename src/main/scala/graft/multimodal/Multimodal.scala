@@ -145,38 +145,6 @@ object Multimodal {
       }
   }
 
-  /** REAL image resize over payload bytes: decode (BMP/PNG/JPEG via the
-    * JDK's readers) → bilinear resample → PNG re-encode, one batched
-    * map-only pass. Payloads no reader claims pass through as NULL with
-    * `resized=false` (NULL-not-garbage, the engine-wide convention).
-    */
-  def resizePayloads(df: DataFrame, idCol: String, binCol: String,
-      targetW: Int, targetH: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(binCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, b) =>
-        Codecs.resizeToPng(b, targetW, targetH) match {
-          case Some(png) => (id, png, true)
-          case None => (id, null: Array[Byte], false)
-        }
-      })
-      .toDF("media_id", "payload", "resized")
-      .withColumn("width", when(col("resized"), targetW))
-      .withColumn("height", when(col("resized"), targetH))
-  }
-
-  /** Metadata-level resize marker (kept for meta-only pipelines that carry
-    * no payload column; [[resizePayloads]] is the real pixel path).
-    */
-  def resizeImages(meta: Dataset[MediaMeta], targetW: Int, targetH: Int): DataFrame = {
-    import meta.sparkSession.implicits._
-    meta.toDF().withColumn("width", lit(targetW))
-      .withColumn("height", lit(targetH))
-      .withColumn("resized", lit(true))
-  }
-
   /** Demo pipeline over the documents table: text bytes stand in for media
     * payloads (no real media in the testdata), exercising the full
     * binary-column path: cast → type tag → batched meta extract. Text bytes

@@ -365,9 +365,8 @@ object CoreQueries {
       }),
 
     // ------------------------------------------------------------------
-    // W-ext — tumbling-window aggregation on event time: the batch twin of
-    // the streaming path (streaming/Streaming.windowedTypeAgg) so the same
-    // logical shape is oracle-checked. window().start of a 1-hour tumbling
+    // W-ext — tumbling-window aggregation on event time, the hourly meter
+    // rollup's shape over events. window().start of a 1-hour tumbling
     // window == date_trunc('hour'); compared as epoch µs per the events-ns
     // convention. Sums of events.value aggregate IEEE-portable picounit
     // integers (Exact.pico12, r12) — order-free bit-identical at any
@@ -630,14 +629,13 @@ object CoreQueries {
       }),
 
     // ------------------------------------------------------------------
-    // §2.10 ext — batch twin of the Kafka-shaped ingest parse layer
+    // §2.10 ext — the Kafka-shaped event-frame parse layer
     // (Streaming.parseEventStream): a (key, value-bytes, ts) frame through
     // from_json with corrupt records COUNTED (not thrown). Every 7th frame
     // is deterministically poisoned ('!' prefix → invalid JSON) so the
     // corrupt path is exercised, not vacuous; oracle detects the same
-    // frames via json_valid. Proves the parse semantics the streaming
-    // front door runs (same function, MemoryStream-tested in
-    // StreamingSpec) under the driver's DuckDB hash gate.
+    // frames via json_valid. Proves the parse semantics (StreamingSpec
+    // tests the function directly) under the DuckDB hash oracle.
     QueryDef(
       "q_event_parse",
       Some("""WITH frames AS (

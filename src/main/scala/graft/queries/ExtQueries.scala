@@ -857,14 +857,13 @@ object ExtQueries {
       Rank.globalRowNumber(docsTimes(s, dir, 4)
         .select(col("doc_id"), length(col("text")).as("n_chars")),
         Seq("n_chars", "doc_id"))),
-    // the streaming near-dup gate's verification knob, timed at both ends
+    // the one-batch near-dup gate's verification knob, timed at both ends
     // (VERDICT r8 #7): gate=1 is the classic any-collision LSH drop (a
-    // keeper-join per bucket), 6-of-8 verifies candidates by distinct-band
+    // keeper per bucket), 6-of-8 verifies candidates by distinct-band
     // agreement (≈ MinHash-estimated Jaccard ≳ 0.9) at the cost of a
-    // per-pair band count — both run the LITERAL streaming-gate code
-    // (Streaming.gateBands + batchCollisions via nearDupGateBatch) on the
-    // same dup-salted corpus, so the knob's price is a recorded per-round
-    // artifact like the ×4 twins
+    // per-pair band count — both run Streaming.nearDupGateBatch (gateBands
+    // + batchCollisions) on the same dup-salted corpus, so the knob's
+    // price is a recorded per-round artifact like the ×4 twins
     "q_stream_gate1" -> ((s, dir) =>
       graft.streaming.Streaming.nearDupGateBatch(
         gateFixture(s, dir), "doc_id", "text", minBandsGate = 1)),

@@ -59,7 +59,7 @@ class StorageLayoutSpec extends SparkSpec {
           .where(col("c_mktsegment") === "BUILDING"),
           col("o_custkey") === col("c_custkey"))
         .select("o_orderkey", "o_custkey", "o_totalprice", "c_custkey", "c_mktsegment")
-      val got = j.select(expected.columns.map(col): _*)
+      val got = j.select(expected.columns.toIndexedSeq.map(col): _*)
       assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty)
     } finally prev.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)

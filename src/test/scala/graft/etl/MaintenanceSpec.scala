@@ -234,27 +234,6 @@ class MaintenanceSpec extends SparkSpec {
     assert(rows(Maintenance.readManifested(spark, store)) == expected)
   }
 
-  test("flat manifest store: append accumulates, replace swaps wholesale, " +
-    "vacuum reclaims orphans without touching live content") {
-    import spark.implicits._
-    val store = Files.createTempDirectory("graft_flat_store_").toString
-    def content(): Set[Int] =
-      Maintenance.readManifested(spark, store).collect().map(_.getInt(0)).toSet
-    Maintenance.appendManifested(Seq(1, 2).toDF("x").coalesce(1), store)
-    Maintenance.appendManifested(Seq(3).toDF("x").coalesce(1), store)
-    assert(content() == Set(1, 2, 3))
-    val filesBefore = Maintenance.manifestFileCount(spark, store)
-    assert(filesBefore >= 2) // two appends → at least two live files
-    // replacement commits ONLY the new content; old files become invisible
-    // orphans immediately (manifest semantics), reclaimed by vacuum
-    Maintenance.replaceManifested(Seq(9, 10).toDF("x").coalesce(1), store)
-    assert(content() == Set(9, 10))
-    val reclaimed = Maintenance.vacuumManifested(spark, store)
-    assert(reclaimed >= filesBefore,
-      s"vacuum reclaimed $reclaimed, expected >= $filesBefore orphans")
-    assert(content() == Set(9, 10)) // live content untouched by vacuum
-  }
-
   test("manifest version slot can be claimed exactly once on the local FS " +
     "(concurrent-writer guard; POSIX rename would silently overwrite)") {
     val dir = Files.createTempDirectory("graft_claim_").toString

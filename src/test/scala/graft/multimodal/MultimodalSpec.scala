@@ -42,11 +42,4 @@ class MultimodalSpec extends SparkSpec {
     val plan = frames.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"unexpected shuffle in decode plan:\n$plan")
   }
-
-  test("resize stub keeps rows and marks the target size") {
-    val meta = Multimodal.documentsAsMedia(spark, docs.limit(5))
-    val resized = Multimodal.resizeImages(meta, 224, 224)
-    assert(resized.count() == 5)
-    assert(resized.where(col("width") =!= 224 || col("height") =!= 224).count() == 0)
-  }
 }

@@ -1,817 +1,66 @@
 package graft.streaming
 
-import java.nio.file.Files
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 class StreamingSpec extends SparkSpec {
 
-  private def stageEvents(): String = {
-    // stage a batch of testdata events as a stream source directory
-    val dir = Files.createTempDirectory("graft_stream_").toString
-    graft.Tables.load(spark, "/root/testdata/sf0.001", "events")
-      .write.mode("overwrite").parquet(s"$dir/drop1")
-    s"$dir/drop1"
-  }
-
-  test("windowed per-type aggregation over a file stream matches batch") {
-    val dir = stageEvents()
-    val stream = Streaming.readEventStream(spark, dir)
-    assert(stream.isStreaming)
-    // Complete mode so the finite source's last (not-yet-watermark-closed)
-    // windows are visible to the assertions
-    val q = Streaming.runToMemory(
-      Streaming.windowedTypeAgg(stream, "1 hour", "2 hours"), "win_agg",
-      org.apache.spark.sql.streaming.OutputMode.Complete())
-    q.awaitTermination(120000); q.stop()
-
-    val got = spark.table("win_agg")
-    assert(got.count() > 0)
-    // cross-check one cell against the equivalent batch aggregation
-    val batch = spark.read.parquet(dir)
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"))
-    val batchTotal = batch.agg(sum("n_events")).head().getLong(0)
-    val streamTotal = got.agg(sum("n_events")).head().getLong(0)
-    assert(streamTotal == batchTotal)
-    // all events accounted for
-    assert(streamTotal == spark.read.parquet(dir).count())
-  }
-
-  test("hopping-window aggregation over a file stream equals q_window_hopping batch truth") {
-    val dir = stageEvents()
-    val stream = Streaming.readEventStream(spark, dir)
-    // Complete mode: the finite source's not-yet-watermark-closed windows
-    // must be visible, or the comparison loses the timeline's tail
-    val q = Streaming.runToMemory(
-      Streaming.hoppingTypeAgg(stream, "1 hour", "30 minutes", "2 hours"), "hop_agg",
-      org.apache.spark.sql.streaming.OutputMode.Complete())
-    q.awaitTermination(120000); q.stop()
-    val got = spark.table("hop_agg")
-
-    // batch truth: the exact q_window_hopping shape over the same fixture
-    val batch = spark.read.parquet(dir)
-      .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
-      .agg(count(lit(1)).as("b_n"), sum(col("value")).as("b_sum"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("b_n"), col("b_sum"))
-
-    // full-result equivalence, cell by cell: identical (window, type) key
-    // sets, identical counts, sums within FP-accumulation-order tolerance
-    assert(got.count() == batch.count(), "stream and batch window sets differ")
-    val joined = got.join(batch, Seq("window_start", "event_type"), "full_outer")
-    val bad = joined.where(col("n_events").isNull || col("b_n").isNull ||
-      col("n_events") =!= col("b_n") ||
-      abs(col("sum_value") - col("b_sum")) > 1e-6)
-    assert(bad.count() == 0, "a streamed hopping window differs from batch truth")
-    // each event in exactly 2 overlapping windows
-    assert(got.agg(sum("n_events")).head().getLong(0) ==
-      2L * spark.read.parquet(dir).count())
-  }
-
-  test("streaming dedup drops in-stream duplicates, watermark bounds state") {
+  test("near-dup gate keeps exactly the docs minhashPairs keeps at the same " +
+    "n_bands threshold, at minBandsGate 1 and 6") {
     import spark.implicits._
-    // stage events UNIONED with a duplicated slice — the stream must emit
-    // each event_id exactly once
-    val dir = Files.createTempDirectory("graft_stream_dup_").toString
-    val base = graft.Tables.load(spark, "/root/testdata/sf0.001", "events")
-    base.unionAll(base.limit(200)).repartition(4)
-      .write.mode("overwrite").parquet(s"$dir/drop1")
-
-    val q = Streaming.runToMemory(
-      Streaming.dedupStream(Streaming.readEventStream(spark, s"$dir/drop1")),
-      "dedup_stream")
-    q.awaitTermination(120000); q.stop()
-
-    val got = spark.table("dedup_stream")
-    assert(got.count() == base.count(), "each event_id must survive exactly once")
-    assert(got.select("event_id").distinct().count() == got.count())
-  }
-
-  test("stream-stream interval join equals the batch banded join") {
-    import spark.implicits._
-    val dir = stageEvents()
-    // two live feeds from the same drop: clicks correlated to purchases
-    // landing within 30 minutes after the click, per user
-    val clicks = Streaming.readEventStream(spark, dir).where($"event_type" === "click")
-    val purchases = Streaming.readEventStream(spark, dir).where($"event_type" === "purchase")
-    val q = Streaming.runToMemory(
-      Streaming.intervalJoinStreams(clicks, purchases, "30 minutes", "2 hours"),
-      "ss_join")
-    q.awaitTermination(120000); q.stop()
-    val got = spark.table("ss_join")
-
-    // batch truth: the identical banded join over the parquet
-    val all = spark.read.parquet(dir)
-    val bl = all.where($"event_type" === "click")
-      .select($"user_id", $"event_id".as("left_id"), $"ts".as("left_ts"))
-    val br = all.where($"event_type" === "purchase")
-      .select($"user_id".as("r_user"), $"event_id".as("right_id"), $"ts".as("right_ts"))
-    val batch = bl.join(br, $"user_id" === $"r_user" &&
-      $"right_ts" >= $"left_ts" &&
-      $"right_ts" <= $"left_ts" + expr("INTERVAL 30 minutes"))
-    assert(got.count() > 0, "fixture must produce click→purchase pairs")
-    assert(got.count() == batch.count(), "stream join pair count differs from batch")
-    val missing = batch.join(got,
-      batch("left_id") === got("left_id") && batch("right_id") === got("right_id"),
-      "left_anti")
-    assert(missing.count() == 0, "a batch pair is missing from the stream join")
-  }
-
-  test("stream-static enrichment joins every event, no rows lost") {
-    import spark.implicits._
-    val dir = stageEvents()
-    // static dim derived from the same data: every user gets a tier
-    val dim = spark.read.parquet(dir)
-      .select($"user_id").distinct()
-      .withColumn("tier", when($"user_id" % 2 === 0, "even").otherwise("odd"))
-    val q = Streaming.runToMemory(
-      Streaming.enrichStream(
-        Streaming.readEventStream(spark, dir), dim, Seq("user_id")),
-      "enriched")
-    q.awaitTermination(120000); q.stop()
-    val got = spark.table("enriched")
-    assert(got.count() == spark.read.parquet(dir).count())
-    assert(got.where($"tier".isNull).count() == 0, "every event must enrich")
-  }
-
-  test("native session_window stream emits exactly the watermark-closed " +
-    "batch sessions") {
-    import spark.implicits._
-    val dir = stageEvents()
-    val q = Streaming.runToMemory(
-      Streaming.sessionWindowAgg(
-        Streaming.readEventStream(spark, dir), "30 minutes", "0 seconds"),
-      "native_sessions")  // append mode: only watermark-closed sessions emit
-    q.awaitTermination(120000); q.stop()
-    val got = spark.table("native_sessions")
-
-    // batch truth via the oracled q_session_window shape; with delay 0 the
-    // final watermark is the max event time TRUNCATED TO MILLIS (the
-    // event-time stats track ms, so a µs-precision bound here would
-    // over-expect sessions ending inside the stream's final millisecond),
-    // and exactly the sessions ending at or before it must emit — open
-    // tails must NOT
-    val batch = spark.read.parquet(dir)
-      .groupBy($"user_id", session_window($"ts", "30 minutes"))
-      .agg(count(lit(1)).as("b_n"))
-      .select($"user_id",
-        unix_micros($"session_window.start").as("start_us"),
-        unix_micros($"session_window.end").as("end_us"), $"b_n")
-    val maxTs = spark.read.parquet(dir)
-      .agg(max(unix_micros($"ts"))).head().getLong(0)
-    val expected = batch.where($"end_us" <= (maxTs / 1000L) * 1000L)
-    val bad = got.join(expected, Seq("user_id", "start_us", "end_us"), "full_outer")
-      .where($"n_events".isNull || $"b_n".isNull || $"n_events" =!= $"b_n")
-    assert(bad.count() == 0,
-      "streamed native sessions differ from the watermark-closed batch set")
-    assert(got.count() > 0 && got.count() < batch.count(),
-      "expected some closed and some still-open sessions in the fixture")
-  }
-
-  test("streaming sessionization stitches sessions across micro-batches") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft_stream_sess_").toString
-    val all = graft.Tables.load(spark, "/root/testdata/sf0.001", "events")
-    // split mid-timeline so many sessions straddle the batch boundary
-    val cut = all.selectExpr("percentile(unix_micros(ts), 0.5)").head().getDouble(0).toLong
-    // the file-stream source lists the watched dir FLAT — stage each drop
-    // as a single file directly inside it
-    def stageFlat(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft_drop_").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      Files.move(part.toPath, java.nio.file.Paths.get(dir, name))
-    }
-    stageFlat(all.where(unix_micros($"ts") < cut), "drop1.parquet")
-    stageFlat(all.where(unix_micros($"ts") >= cut), "drop2.parquet")
-
-    val stream = spark.readStream.schema(Streaming.eventSchema)
-      .option("maxFilesPerTrigger", "1")  // force >= 2 micro-batches
-      .parquet(dir)
-      .select($"user_id", $"ts", $"value").as[Streaming.SessionInput]
-    val q = Streaming.sessionizeStream(stream)
-      .writeStream.outputMode("append").format("memory").queryName("sessions")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000); q.stop()
-    val got = spark.table("sessions")
-
-    // batch ground truth: same gap logic over the whole timeline; the
-    // stream can never close each user's LAST session (no later batch), so
-    // expected = all batch sessions minus one per user
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"user_id").orderBy($"ts_us")
-    val batchSessions = all
-      .select($"user_id", unix_micros($"ts").as("ts_us"))
-      .withColumn("new_sess",
-        when($"ts_us" - lag($"ts_us", 1).over(w) > 1800000000L, 1L).otherwise(0L))
-      .withColumn("sess", sum($"new_sess").over(
-        w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)))
-      .groupBy($"user_id", $"sess")
-      .agg(min($"ts_us").as("start_us"), max($"ts_us").as("end_us"),
-        count(lit(1)).as("n_events"))
-    val nUsers = all.select($"user_id").distinct().count()
-    assert(got.count() == batchSessions.count() - nUsers,
-      "closed stream sessions must equal batch sessions minus the open tail per user")
-    // every closed stream session must match a batch session exactly —
-    // stitching errors would split or merge one and break this containment
-    val mismatches = got.join(batchSessions,
-        got("user_id") === batchSessions("user_id") &&
-          got("start_us") === batchSessions("start_us") &&
-          got("end_us") === batchSessions("end_us") &&
-          got("n_events") === batchSessions("n_events"), "left_anti")
-    assert(mismatches.count() == 0, "a streamed session differs from batch truth")
-  }
-
-  test("sessionizer state survives a checkpointed restart (recovery, not reprocessing)") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft_stream_cp_").toString
-    val out = Files.createTempDirectory("graft_stream_cp_out_").toString
-    val cp = Files.createTempDirectory("graft_stream_cp_ckpt_").toString
-    val all = graft.Tables.load(spark, "/root/testdata/sf0.001", "events")
-    val cut = all.selectExpr("percentile(unix_micros(ts), 0.5)").head().getDouble(0).toLong
-    def stageFlat(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft_drop_").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      Files.move(part.toPath, java.nio.file.Paths.get(dir, name))
-    }
-    def run(): Unit = {
-      val stream = spark.readStream.schema(Streaming.eventSchema).parquet(dir)
-        .select($"user_id", $"ts", $"value").as[Streaming.SessionInput]
-      val q = Streaming.sessionizeStream(stream)
-        .writeStream.outputMode("append")
-        .format("parquet").option("path", out)
-        .option("checkpointLocation", cp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination(120000); q.stop()
-    }
-    stageFlat(all.where(unix_micros($"ts") < cut), "drop1.parquet")
-    run()                                                 // first life: drop1 only
-    stageFlat(all.where(unix_micros($"ts") >= cut), "drop2.parquet")
-    run()                                                 // second life: recovers state,
-                                                          // must process ONLY drop2
-    val got = spark.read.parquet(out)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"user_id").orderBy($"ts_us")
-    val batchSessions = all
-      .select($"user_id", unix_micros($"ts").as("ts_us"))
-      .withColumn("new_sess",
-        when($"ts_us" - lag($"ts_us", 1).over(w) > 1800000000L, 1L).otherwise(0L))
-      .withColumn("sess", sum($"new_sess").over(
-        w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)))
-      .groupBy($"user_id", $"sess")
-      .agg(min($"ts_us").as("start_us"), max($"ts_us").as("end_us"),
-        count(lit(1)).as("n_events"))
-    val nUsers = all.select($"user_id").distinct().count()
-    // exactly the contiguous-run result: no duplicated drop1 sessions (a
-    // restart that reprocessed drop1 would double-emit), no lost stitching
-    // (state recovered from the checkpoint carries drop1's open tails)
-    assert(got.count() == batchSessions.count() - nUsers,
-      "restarted run must emit exactly the contiguous-run session set")
-    val mismatches = got.join(batchSessions,
-        got("user_id") === batchSessions("user_id") &&
-          got("start_us") === batchSessions("start_us") &&
-          got("end_us") === batchSessions("end_us") &&
-          got("n_events") === batchSessions("n_events"), "left_anti")
-    assert(mismatches.count() == 0, "a post-restart session differs from batch truth")
-  }
-
-  test("streaming CDC materialization converges to batch applyCdc truth " +
-    "across a restart, and keys deleted mid-stream stay deleted") {
-    import spark.implicits._
-    val src = Files.createTempDirectory("graft_cdc_src_").toString
-    val store = Files.createTempDirectory("graft_cdc_mat_").toString
-    val cp = Files.createTempDirectory("graft_cdc_cp_").toString
-    val d1 = Seq(
-      (1L, 1, "a", "I", 10L), (2L, 1, "b", "I", 11L), (3L, 2, "c", "I", 12L))
-      .toDF("k", "p", "v", "op", "seq")
-    val d2 = Seq(
-      (1L, 1, "a2", "U", 20L),  // update survives
-      (2L, 1, "x", "D", 21L),   // delete wins over the batch-1 insert
-      (4L, 3, "d", "I", 22L))   // brand-new partition appears
-      .toDF("k", "p", "v", "op", "seq")
-    def stage(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft_cdc_drop_").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      Files.move(part.toPath, java.nio.file.Paths.get(src, name))
-    }
-    def run(): Unit = {
-      val stream = spark.readStream.schema(d1.schema).parquet(src)
-      val q = Streaming.materializeCdcStream(stream, Seq("k", "p"),
-        "op", "seq", "p", store, cp)
-      q.awaitTermination(120000); q.stop()
-    }
-    stage(d1, "b1.parquet")
-    run()                       // first life: applies batch 1 only
-    stage(d2, "b2.parquet")
-    run()                       // second life: checkpoint offsets → ONLY b2
-
-    val got = graft.etl.Maintenance.readManifested(spark, store)
-      .select("k", "p", "v").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
-    // batch truth over the whole feed (seq is monotone across drops, so
-    // sequential per-batch application must equal one-shot application)
-    val truth = graft.etl.Maintenance.applyCdc(
-      d1.drop("op", "seq").limit(0), d1.unionByName(d2), Seq("k", "p"),
-      "op", "seq")
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
-    assert(got === truth)
-    assert(got === Set((1L, 1, "a2"), (3L, 2, "c"), (4L, 3, "d")))
-  }
-
-  test("manifested store serves consistent old-or-new reads WHILE a CDC " +
-    "stream commits (live-append reader atomicity)") {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.Trigger
-    val src = Files.createTempDirectory("graft_cdc_live_src_").toString
-    val store = Files.createTempDirectory("graft_cdc_live_mat_").toString
-    val cp = Files.createTempDirectory("graft_cdc_live_cp_").toString
-    val nBatches = 4
-    // batch b rewrites ALL four keys (one per partition) to v = b, so any
-    // committed version is "all rows carry the same v" — a reader that ever
-    // sees two v values in one read caught a torn commit
-    def batch(b: Int) = (1 to 4).map(p => (p.toLong, p, b, "U", b.toLong))
-      .toDF("k", "p", "v", "op", "seq")
-    def stage(b: Int): Unit = {
-      val tmp = Files.createTempDirectory("graft_cdc_live_drop_").toString
-      batch(b).coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      Files.move(part.toPath, java.nio.file.Paths.get(src, s"b$b.parquet"))
-    }
-
-    @volatile var stopReader = false
-    @volatile var latestSeen = -1
-    val violations = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val reader = new Thread(() => {
-      while (!stopReader) {
-        try {
-          val vs = graft.etl.Maintenance.readManifested(spark, store)
-            .select("v").collect().map(_.getInt(0)).toSeq
-          if (vs.nonEmpty) {
-            if (vs.distinct.size != 1)
-              violations.add(s"torn read: ${vs.sorted.mkString(",")}")
-            else if (vs.size != 4)
-              violations.add(s"partial read: ${vs.size} rows of v=${vs.head}")
-            else {
-              if (vs.head < latestSeen)
-                violations.add(s"version went BACKWARD: ${vs.head} after $latestSeen")
-              latestSeen = math.max(latestSeen, vs.head)
-            }
-          }
-        } catch {
-          // before the first commit there is no manifest yet — not a tear
-          case _: IllegalArgumentException =>
-          case e: Throwable => violations.add(s"read threw: ${e.getMessage}")
-        }
-      }
-    })
-
-    val stream = spark.readStream.schema(batch(1).schema).parquet(src)
-    val q = Streaming.materializeCdcStream(stream, Seq("k", "p"),
-      "op", "seq", "p", store, cp,
-      trigger = Trigger.ProcessingTime("50 milliseconds"))
-    reader.start()
-    try {
-      (1 to nBatches).foreach { b =>
-        stage(b)
-        // gate the next drop on the READER having observed this version:
-        // guarantees the reader thread races every single commit
-        val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-        while (latestSeen < b && System.nanoTime() < deadline) Thread.sleep(20)
-        assert(latestSeen >= b, s"reader never observed v=$b")
-      }
-    } finally {
-      q.stop()
-      stopReader = true
-      reader.join(30000)
-    }
-    assert(violations.isEmpty, violations.toArray.mkString("; "))
-    assert(latestSeen == nBatches)
-    // final state is exactly batch truth
-    val fin = graft.etl.Maintenance.readManifested(spark, store)
-      .select("k", "v").collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    assert(fin == (1 to 4).map(k => (k.toLong, nBatches)).toSet)
-  }
-
-  test("streaming near-dup gate drops intra-batch and cross-batch " +
-    "collisions, and a full replay admits nothing twice") {
-    import spark.implicits._
-    val src = Files.createTempDirectory("graft_neardup_src_").toString
-    val idx = Files.createTempDirectory("graft_neardup_idx_").toString
-    val out = Files.createTempDirectory("graft_neardup_out_").toString
-    val cp = Files.createTempDirectory("graft_neardup_cp_").toString
-    val dog = "the quick brown fox jumps over the lazy dog"
-    def stage(rows: Seq[(Long, String)], name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft_neardup_drop_").toString
-      rows.toDF("doc_id", "text").coalesce(1)
-        .write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      Files.move(part.toPath, java.nio.file.Paths.get(src, name))
-    }
-    def run(checkpoint: String): Unit = {
-      val stream = spark.readStream
-        .schema(Seq((1L, "x")).toDF("doc_id", "text").schema).parquet(src)
-      val q = Streaming.dedupNearStream(stream, "doc_id", "text",
-        idx, out, checkpoint, shingleN = 3, nPerms = 16, nBands = 8)
-      q.awaitTermination(120000); q.stop()
-    }
-    def admitted(): Set[Long] =
-      spark.read.parquet(out).select("doc_id").collect()
-        .map(_.getLong(0)).toSet
-
-    // batch 1: doc 2 is an exact dup of doc 1 (guaranteed all-band
-    // collision); doc 3 is distinct content
-    stage(Seq(1L -> dog, 2L -> dog,
-      3L -> "completely different content about spark engines"), "b1.parquet")
-    run(cp)
-    assert(admitted() == Set(1L, 3L))
-
-    // batch 2: doc 4 duplicates batch 1's doc 1 ACROSS batches (caught by
-    // the at-rest index, not by anything in this batch); doc 5 is new
-    stage(Seq(4L -> dog,
-      5L -> "el gato que duerme en la casa de la abuela"), "b2.parquet")
-    run(cp)
-    assert(admitted() == Set(1L, 3L, 5L))
-
-    // a FRESH checkpoint against the populated index/output is the
-    // dangerous operational mistake (r8): batch ids restart at 0, so the
-    // self-collision exemption would hide ALL historical batch-0 index
-    // rows (re-admitting their duplicates) and the ingest_batch=0 dynamic
-    // overwrite would DELETE previously-admitted output. The gate fails
-    // LOUDLY before writing anything instead of silently corrupting.
-    val e = intercept[Exception] {
-      run(Files.createTempDirectory("graft_neardup_cp2_").toString)
-    }
-    def chain(t: Throwable): Seq[String] =
-      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
-        .map(x => Option(x.getMessage).getOrElse("")).toSeq
-    assert(chain(e).exists(_.contains("reset against a populated index")),
-      s"expected the checkpoint-reset guard, got: ${chain(e).mkString(" | ")}")
-    assert(admitted() == Set(1L, 3L, 5L)) // nothing deleted, nothing re-admitted
-  }
-
-  test("near-dup index compaction preserves content, cuts file count, and " +
-    "the gate keeps working against the compacted index") {
-    import spark.implicits._
-    val idx = Files.createTempDirectory("graft_compact_idx_").toString
-    val out = Files.createTempDirectory("graft_compact_out_").toString
-    // simulate many tiny per-batch appends: 6 batches of docs with DISJOINT
-    // token sets, so every batch is admitted and appends its own index file
-    // (r16: the old shared-boilerplate texts were near-dups of each other —
-    // batches 2..5 were gate-DROPPED and appended nothing, which only
-    // produced >2 files because the pre-native signature pipeline happened
-    // to write 2 files per append; the fixture now makes the file
-    // accumulation it claims to simulate)
-    (0 until 6).foreach { b =>
-      val docs = Seq((b * 10L + 1,
-        (0 until 10).map(i => s"tok${b}w$i").mkString(" "))).toDF("doc_id", "text")
-      Streaming.applyNearDedupBatch(docs, "doc_id", "text", idx, out, 3, 16, 8,
-        batchId = b)
-    }
-    def idxRows(): Set[(Long, Int, Long)] =
-      graft.etl.Maintenance.readManifested(spark, idx)
-        .select("doc_id", "band", "bucket").collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    val rowsBefore = idxRows()
-    val (nb, na) = Streaming.compactNearDupIndex(spark, idx, targetPartitions = 2)
-    assert(nb > na, s"expected fewer files, got $nb -> $na")
-    assert(na <= 2)
-    assert(idxRows() == rowsBefore) // logical content untouched
-    // the compacted layout is (band, bucket)-sorted WITHIN each file —
-    // the property that makes row-group min/max stats tight disjoint
-    // sub-ranges, which is what lets a selective probe's pushed predicate
-    // skip row groups (r14; the flat-vs-clustered curves live in SCALE.md)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(input_file_name())
-      .orderBy(monotonically_increasing_id())
-    val unsorted = graft.etl.Maintenance.readManifested(spark, idx)
-      .withColumn("pb", lag($"band", 1).over(w))
-      .withColumn("pk", lag($"bucket", 1).over(w))
-      .where($"pb".isNotNull &&
-        ($"pb" > $"band" || ($"pb" === $"band" && $"pk" > $"bucket")))
-    assert(unsorted.isEmpty,
-      "compacted index files are not (band, bucket)-sorted within files")
-    // a LATER batch carrying batch-0's content still collides with the
-    // compacted index (new batch id — only a same-id replay is exempt)
-    val replay = Seq((100L,
-      (0 until 10).map(i => s"tok0w$i").mkString(" "))).toDF("doc_id", "text")
-    val outRows = spark.read.parquet(out).count()
-    Streaming.applyNearDedupBatch(replay, "doc_id", "text", idx, out, 3, 16, 8,
-      batchId = 6)
-    assert(spark.read.parquet(out).count() == outRows) // dropped, not re-admitted
-  }
-
-  test("near-dup gate survives a crashed compaction (staged-but-uncommitted " +
-    "files), a crash between index commit and output write, and fails loudly " +
-    "when the index vanishes under a non-empty output") {
-    import spark.implicits._
-    val idx = Files.createTempDirectory("graft_crash_idx_").toString
-    val out = Files.createTempDirectory("graft_crash_out_").toString
-    val doc0 = "the quick brown fox jumps over the lazy dog again and again"
-    Streaming.applyNearDedupBatch(Seq((1L, doc0)).toDF("doc_id", "text"),
-      "doc_id", "text", idx, out, 3, 16, 8, batchId = 0)
-
-    // CRASHED COMPACTION: staged data files exist on disk but no manifest
-    // references them — exactly the state a kill mid-replaceManifested
-    // leaves. The gate must keep reading the committed manifest (old index
-    // intact ⇒ a duplicate still drops), and the next compaction must
-    // converge, reclaiming the orphans.
-    Seq((999L, 0, 12345L, 99L)).toDF("doc_id", "band", "bucket", "batch_id")
-      .coalesce(1).write.mode("append").parquet(s"$idx/data")
-    Streaming.applyNearDedupBatch(Seq((2L, doc0)).toDF("doc_id", "text"),
-      "doc_id", "text", idx, out, 3, 16, 8, batchId = 1)
-    assert(spark.read.parquet(out).select("doc_id").collect()
-      .map(_.getLong(0)).toSet == Set(1L)) // dup dropped despite orphans
-    val (_, after) = Streaming.compactNearDupIndex(spark, idx)
-    assert(after >= 1)
-    // the orphan row never entered the committed content
-    assert(graft.etl.Maintenance.readManifested(spark, idx)
-      .where($"doc_id" === 999L).isEmpty)
-
-    // CRASH BETWEEN INDEX COMMIT AND OUTPUT WRITE (the r7 lost-survivor
-    // window): batch 2's docs are indexed but never output; the foreachBatch
-    // replay (same batch id) must still OUTPUT them — the self-collision
-    // exemption makes the replay recompute the same survivor set.
-    val newDoc = "entirely fresh content about manifest committed index stores"
-    val b2 = Seq((3L, newDoc)).toDF("doc_id", "text")
-    // simulate the crash: do only the index half of the batch by hand
-    graft.etl.Maintenance.appendManifested(
-      graft.operators.Dedup.minhashBandBuckets(
-        b2.select($"doc_id", graft.functions.TextFunctions.tokens($"text").as("toks")),
-        3, 16, 8).withColumn("batch_id", lit(2L)),
-      idx)
-    // replay of batch 2 (at-least-once): survivors must land in the output
-    Streaming.applyNearDedupBatch(b2, "doc_id", "text", idx, out, 3, 16, 8,
-      batchId = 2)
-    assert(spark.read.parquet(out).select("doc_id").collect()
-      .map(_.getLong(0)).toSet == Set(1L, 3L))
-    // and a SECOND replay of the same batch changes nothing (idempotent)
-    Streaming.applyNearDedupBatch(b2, "doc_id", "text", idx, out, 3, 16, 8,
-      batchId = 2)
-    assert(spark.read.parquet(out).select("doc_id").collect()
-      .map(_.getLong(0)).toList.sorted == List(1L, 3L))
-
-    // INDEX VANISHED: a gate pointed at an index-less dir with a non-empty
-    // output must fail loudly, not bootstrap-and-admit-duplicates
-    val gone = Files.createTempDirectory("graft_gone_idx_").toString
-    val e = intercept[IllegalArgumentException] {
-      Streaming.applyNearDedupBatch(Seq((9L, doc0)).toDF("doc_id", "text"),
-        "doc_id", "text", gone, out, 3, 16, 8, batchId = 3)
-    }
-    assert(e.getMessage.contains("index vanished"))
-  }
-
-  test("near-dup gate verified mode (minBandsGate) keeps exactly the docs " +
-    "minhashPairsIncremental keeps at the same threshold, and hashes " +
-    "string ids instead of nulling them") {
-    import spark.implicits._
-    val idx = Files.createTempDirectory("graft_verif_idx_").toString
-    val out = Files.createTempDirectory("graft_verif_out_").toString
+    // the documents salted with exact copies (collide on every band) and
+    // one-token-appended near-copies (high but sub-1 Jaccard — the rows the
+    // verification knob adjudicates)
     val fixture = graft.Tables.load(spark, "/root/testdata/sf0.001", "documents")
       .select($"doc_id", $"text")
-    val indexed = fixture.where($"doc_id" % 5 =!= 0)
-    val incoming = fixture.where($"doc_id" % 5 === 0)
-    val gate = 6
-    Streaming.applyNearDedupBatch(indexed, "doc_id", "text", idx, out,
-      3, 32, 8, batchId = 0, minBandsGate = gate)
-    val admitted0 = spark.read.parquet(out).select("doc_id").collect()
-      .map(_.getLong(0)).toSet
-    Streaming.applyNearDedupBatch(incoming, "doc_id", "text", idx, out,
-      3, 32, 8, batchId = 1, minBandsGate = gate)
-    val admitted = spark.read.parquet(out).select("doc_id").collect()
-      .map(_.getLong(0)).toSet -- admitted0
-
-    // batch truth from the incremental pair relation at the SAME n_bands
-    // threshold, where the "old" side is what batch 0 actually admitted
-    // (the gate dedups batch 0 internally before indexing it):
-    //   - a new-old pair drops the NEW doc regardless of id order (an index
-    //     hit has no id comparison),
-    //   - a new-new pair drops the larger id (the within-batch rule)
-    val admittedOld = indexed.where($"doc_id".isin(admitted0.toSeq: _*))
-    val newIds = incoming.select("doc_id").collect().map(_.getLong(0)).toSet
-    val incPairs = graft.operators.Dedup.minhashPairsIncremental(
-      admittedOld, incoming, "doc_id", "text", 3, 32, 8,
-      maxBucket = Int.MaxValue)
-      .where($"n_bands" >= gate)
-      .select("doc_a", "doc_b").collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    val truthDrops = incPairs.flatMap { case (a, b) =>
-      (newIds(a), newIds(b)) match {
-        case (true, false) => Seq(a) // index hit: the new doc drops
-        case (false, true) => Seq(b)
-        case (true, true) => Seq(b) // within-batch: larger id drops
-        case _ => Nil // old-old pairs never occur by construction
-      }
-    }.toSet
-    assert(admitted == newIds -- truthDrops,
-      s"verified gate kept ${admitted.size}, truth keeps ${(newIds -- truthDrops).size}")
-
-    // string ids: hashed (xxhash64), never silently NULLed — an exact dup
-    // pair under string ids still collapses to one admitted doc
-    val sIdx = Files.createTempDirectory("graft_sid_idx_").toString
-    val sOut = Files.createTempDirectory("graft_sid_out_").toString
-    Streaming.applyNearDedupBatch(
-      Seq(("doc-a", "the quick brown fox jumps over the lazy dog"),
-        ("doc-b", "the quick brown fox jumps over the lazy dog"),
-        ("doc-c", "unrelated content entirely about something else")
-      ).toDF("doc_id", "text"),
-      "doc_id", "text", sIdx, sOut, 3, 16, 8, batchId = 0)
-    val sAdmitted = spark.read.parquet(sOut).select("doc_id").collect()
-      .map(_.getString(0)).toSet
-    assert(sAdmitted.size == 2 && sAdmitted.contains("doc-c"))
-    // NULL id fails loudly instead of passing the gate unconditionally
-    val err = intercept[Exception] {
-      Streaming.applyNearDedupBatch(
-        Seq((null.asInstanceOf[String], "whatever content this is"))
-          .toDF("doc_id", "text"),
-        "doc_id", "text", sIdx, sOut, 3, 16, 8, batchId = 1)
-    }
-    assert(err.getMessage != null)
-  }
-
-  test("cleanDocStream keeps exactly the batch composition's kept set: " +
-    "quality/lang/null gates then verified near-dedup, across two batches") {
-    import spark.implicits._
-    val src = Files.createTempDirectory("graft_cleanstream_src_").toString
-    val idx = Files.createTempDirectory("graft_cleanstream_idx_").toString
-    val out = Files.createTempDirectory("graft_cleanstream_out_").toString
-    val cp = Files.createTempDirectory("graft_cleanstream_cp_").toString
-    val base = graft.Tables.load(spark, "/root/testdata/sf0.001", "documents")
-      .select($"doc_id", $"text")
-    // gate-exercising extras (the q_corpus_funnel_exact slices): exact
-    // copies (+1e6 → near-dup 8/8 bands vs their originals), pure-Spanish
-    // marker rows (+2e6 → lang gate), NULL texts (+3e6 → null gate);
-    // minQuality=0.55 splits the real quality distribution
-    val extras = base.where($"doc_id" % 5 === 0)
-      .select(($"doc_id" + 1000000L).as("doc_id"), $"text")
-      .unionByName(base.where($"doc_id" % 7 === 0)
+    val salted = fixture
+      .unionByName(fixture.where($"doc_id" % 5 === 0)
+        .select(($"doc_id" + 1000000L).as("doc_id"), $"text"))
+      .unionByName(fixture.where($"doc_id" % 7 === 0)
         .select(($"doc_id" + 2000000L).as("doc_id"),
-          repeat(lit("a in la de que los el "), 10).as("text")))
-      .unionByName(base.where($"doc_id" % 11 === 0)
-        .select(($"doc_id" + 3000000L).as("doc_id"),
-          lit(null).cast("string").as("text")))
-    def stage(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft_cleanstream_drop_").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      Files.move(part.toPath, java.nio.file.Paths.get(src, name))
+          concat($"text", lit(" zyx")).as("text")))
+      .cache()
+    val allIds = salted.select("doc_id").collect().map(_.getLong(0)).toSet
+    val pairs = graft.operators.Dedup.minhashPairs(salted, "doc_id", "text",
+      3, 32, 8, maxBucket = Int.MaxValue)
+      .select("doc_a", "doc_b", "n_bands").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getAs[Number](2).longValue))
+    val keptAt = Seq(1, 6).map { gate =>
+      // within one batch the larger id of every colliding pair drops
+      val truthDrops = pairs.collect {
+        case (a, b, nb) if nb >= gate => math.max(a, b)
+      }.toSet
+      val kept = Streaming.nearDupGateBatch(salted, "doc_id", "text",
+        3, 32, 8, minBandsGate = gate)
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+      assert(kept == allIds -- truthDrops,
+        s"minBandsGate=$gate kept ${kept.size}, truth keeps " +
+          s"${(allIds -- truthDrops).size} of ${allIds.size}")
+      kept.size
     }
-    stage(base, "b1.parquet")
-    stage(extras, "b2.parquet")
-    // maxFilesPerTrigger=1 → the two staged files process as two
-    // micro-batches under AvailableNow, so the cross-batch index path (not
-    // just within-batch pairing) is on the line
-    val stream = spark.readStream
-      .schema(base.schema).option("maxFilesPerTrigger", 1).parquet(src)
-    val q = Streaming.cleanDocStream(stream, "doc_id", "text", idx, out, cp,
-      minQuality = 0.55, keepLangs = Set("en"), shingleN = 3, nPerms = 32,
-      nBands = 8, minBandsGate = 6)
-    q.awaitTermination(120000); q.stop()
-    val admitted = spark.read.parquet(out).select("doc_id").collect()
-      .map(_.getLong(0)).toSet
-
-    // STAGED batch-composition truth, batch by batch — regen-robust: this
-    // is exactly the gate's semantics even for near-dup CHAINS split across
-    // batches (where a whole-corpus doc_b rule would diverge; see the
-    // cleanDocStream scaladoc)
-    def filteredOf(df: org.apache.spark.sql.DataFrame) =
-      df.where($"text".isNotNull &&
-        graft.functions.TextFunctions.qualityScore($"text") >= 0.55 &&
-        graft.functions.TextFunctions.predictedLang($"text") === "en")
-    def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
-      df.select("doc_id").collect().map(_.getLong(0)).toSet
-    val f1 = filteredOf(base); val f2 = filteredOf(extras)
-    // batch 1: within-batch pair drops (larger id of every >= 6-band pair)
-    val drops1 = graft.operators.Dedup.minhashPairsFromTokens(
-        f1.select($"doc_id",
-          graft.functions.TextFunctions.tokens($"text").as("toks")),
-        3, 32, 8, maxBucket = Int.MaxValue)
-      .where($"n_bands" >= 6)
-      .select("doc_b").collect().map(_.getLong(0)).toSet
-    val kept1 = ids(f1) -- drops1
-    // batch 2: incremental pairs vs what batch 1 ADMITTED (an index hit
-    // drops the new doc regardless of id order) + within-batch doc_b
-    val f2Ids = ids(f2)
-    val incPairs = graft.operators.Dedup.minhashPairsIncremental(
-        f1.where($"doc_id".isin(kept1.toSeq: _*)), f2,
-        "doc_id", "text", 3, 32, 8, maxBucket = Int.MaxValue)
-      .where($"n_bands" >= 6)
-      .select("doc_a", "doc_b").collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    val drops2 = incPairs.flatMap { case (a, b) =>
-      (f2Ids(a), f2Ids(b)) match {
-        case (true, false) => Seq(a)
-        case (false, true) => Seq(b)
-        case (true, true) => Seq(b)
-        case _ => Nil
-      }
-    }.toSet
-    val expected = kept1 ++ (f2Ids -- drops2)
-    assert(admitted == expected,
-      s"stream kept ${admitted.size}, staged composition keeps ${expected.size}")
-    // the gates actually fired: extras contributed drops of every kind
-    assert((ids(f1) ++ f2Ids).size < base.count() + extras.count())
-    assert(drops2.nonEmpty, "no near-dup drops — fixture lost its copies")
+    salted.unpersist()
+    // non-vacuous: both gates drop, and verification keeps near-copies
+    // that the any-collision gate drops
+    assert(keptAt(0) < keptAt(1) && keptAt(1) < allIds.size, s"kept $keptAt")
   }
 
-  test("near-dup gate dedups SHORT docs (below the shingle horizon) across " +
-    "batches via the exact-hash fallback band, in raw and verified mode") {
+  test("near-dup gate dedups SHORT docs (below the shingle horizon) in one " +
+    "batch via the exact-hash fallback band, in raw and verified mode") {
     import spark.implicits._
+    // 2-token docs have zero 3-gram shingles: only the band -1 exact-hash
+    // rows can collide them
+    val batch = Seq((1L, "hello world"), (2L, "HELLO   world"), (3L, "bye now"),
+      (4L, "hello world"), (5L, "new short")).toDF("doc_id", "text")
     for (gate <- Seq(1, 6)) {
-      val idx = Files.createTempDirectory(s"graft_short_idx_$gate").toString
-      val out = Files.createTempDirectory(s"graft_short_out_$gate").toString
-      // batch 0: a 2-token doc (zero 3-gram shingles) + within-batch copy
-      Streaming.applyNearDedupBatch(
-        Seq((1L, "hello world"), (2L, "HELLO   world"), (3L, "bye now"))
-          .toDF("doc_id", "text"),
-        "doc_id", "text", idx, out, 3, 16, 8, batchId = 0, minBandsGate = gate)
-      // batch 1: cross-batch short copy + a fresh short doc
-      Streaming.applyNearDedupBatch(
-        Seq((4L, "hello world"), (5L, "new short"))
-          .toDF("doc_id", "text"),
-        "doc_id", "text", idx, out, 3, 16, 8, batchId = 1, minBandsGate = gate)
-      val admitted = spark.read.parquet(out).select("doc_id").collect()
-        .map(_.getLong(0)).toSet
-      assert(admitted == Set(1L, 3L, 5L),
-        s"minBandsGate=$gate admitted $admitted")
+      val kept = Streaming.nearDupGateBatch(batch, "doc_id", "text",
+        minBandsGate = gate).select("doc_id").collect().map(_.getLong(0)).toSet
+      assert(kept == Set(1L, 3L, 5L), s"minBandsGate=$gate kept $kept")
     }
-  }
-
-  test("streaming rollup maintenance converges to batch truth, touches only " +
-    "changed month partitions") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft_mv_src_").toString
-    val out = Files.createTempDirectory("graft_mv_out_").toString + "/rollup"
-    val cp = Files.createTempDirectory("graft_mv_cp_").toString
-    // two months: the real fixture month plus a +1-month shifted copy;
-    // drop1 = all of month 1 + half of month 2, drop2 = month 2's other half
-    val m1 = graft.Tables.load(spark, "/root/testdata/sf0.001", "events")
-    val m2 = m1.withColumn("ts", expr("timestampadd(MONTH, 1, ts)"))
-      .withColumn("event_id", $"event_id" + 1000000L)
-    val all = m1.unionByName(m2)
-    // the file-stream source lists the watched dir FLAT — stage each drop
-    // as a single file directly inside it (the sessionizer-test pattern)
-    def stageFlat(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft_mv_drop_").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      Files.move(part.toPath, java.nio.file.Paths.get(dir, name))
-    }
-    stageFlat(m1.unionByName(m2.where(hash($"event_id") % 2 === 0)), "drop1.parquet")
-
-    def run(): Unit = {
-      val stream = spark.readStream.schema(Streaming.eventSchema).parquet(dir)
-      val q = Streaming.maintainMonthlyRollup(stream, out, cp)
-      q.awaitTermination(120000); q.stop()
-    }
-    def partFiles(): Map[String, Set[String]] =
-      new java.io.File(out).listFiles().filter(_.getName.startsWith("month="))
-        .map(d => d.getName -> d.listFiles()
-          .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet).toMap
-
-    run()                                    // first life: month1 + half month2
-    val before = partFiles()
-    assert(before.size == 2, s"first life must build both months: $before")
-    stageFlat(m2.where(hash($"event_id") % 2 =!= 0), "drop2.parquet")
-    run()                                    // second life: recovers running
-                                             // state, ingests ONLY drop2
-    // the store converges to the batch rollup of everything ingested —
-    // FULL outer join so a missing key and an extra key can't cancel out
-    // (an inner join + count equality would pass on symmetric divergence)
-    val got = spark.read.parquet(out)
-      .select($"month", $"event_type",
-        $"n_events".as("g_n"), $"sum_value".as("g_sum"))
-    val truth = graft.etl.Maintenance.monthlyRollup(
-      all.select($"ts", $"event_type", $"value"))
-    val bad = got.join(truth, Seq("month", "event_type"), "full_outer")
-      .where($"g_n".isNull || $"n_events".isNull ||
-        $"g_n" =!= $"n_events" || abs($"g_sum" - $"sum_value") > 1e-6)
-    assert(bad.count() == 0, "maintained store diverged from batch rollup truth")
-    // drop2 touched only month 2 — month 1's files must be the first-life
-    // files untouched
-    val after = partFiles()
-    val m1dir = before.keySet.find(_ != s"month=" +
-      m2.select(date_format($"ts", "yyyy-MM")).head().getString(0)).get
-    assert(after(m1dir) == before(m1dir),
-      s"untouched month partition $m1dir was rewritten on the second life")
   }
 
   test("Kafka-shaped parse layer: corrupt frames counted not thrown, " +
-      "stream output identical to batch from_json") {
+      "raw payload kept for every corrupt frame") {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     def bytes(s: String): Array[Byte] =
@@ -828,92 +77,26 @@ class StreamingSpec extends SparkSpec {
       ("c", bytes("""{"event_id":"not-a-number","ts":"2024-01-01T10:00:00Z"}"""), ts("2024-01-01 10:25:00")),
       ("c", bytes(null), ts("2024-01-01 10:40:00")))
 
-    val mem = MemoryStream[(String, Array[Byte], java.sql.Timestamp)]
-    mem.addData(frames: _*)
-    val streamFrames = mem.toDF().toDF("key", "value", "ts")
-    assert(streamFrames.isStreaming)
-
-    val q = Streaming.runToMemory(
-      Streaming.parseEventStream(streamFrames), "parsed_frames")
-    q.awaitTermination(120000); q.stop()
-    val got = spark.table("parsed_frames")
+    val got = Streaming.parseEventStream(frames.toDF("key", "value", "ts"))
 
     // nothing thrown, every frame accounted for exactly once
     assert(got.count() == 8)
     assert(got.where($"is_corrupt").count() == 4)
     // the clean side carries the typed fields
-    val clean = Streaming.cleanEvents(got)
+    val clean = got.where(!col("is_corrupt"))
     assert(clean.count() == 4)
     assert(clean.agg(sum("event_id")).head().getLong(0) == 10L)
     assert(clean.where($"event_type" === "buy" && $"value" === 9.0 &&
       $"user_id" === 7L).count() == 1)
     assert(clean.where($"ts" === ts("2024-01-01 10:00:00")).count() == 1)
     // the dead-letter side preserves the raw payload for replay-after-fix
-    val dead = Streaming.deadLetters(got)
+    val dead = got.where(col("is_corrupt"))
     assert(dead.count() == 4)
     assert(dead.where($"raw_value" === "this is not json").count() == 1)
     assert(dead.where($"raw_value".contains("not-a-number")).count() == 1)
     assert(dead.where($"raw_value".isNull).count() == 1) // tombstone
     // clean rows carry NO raw payload (the wide column is corrupt-only)
-    assert(got.where(!$"is_corrupt" && $"raw_value".isNotNull).count() == 0)
-
-    // batch twin over the SAME frames: the streamed result must be
-    // row-identical to batch from_json (modulo row order)
-    val batch = Streaming.parseEventStream(
-      frames.toDF("key", "value", "ts"))
-    assert(batch.exceptAll(got).count() == 0 &&
-      got.exceptAll(batch).count() == 0,
-      "streamed parse diverged from batch from_json")
-
-    // corrupt accounting: windowed stats count the poison without stopping
-    val stats = Streaming.parseStats(batch, "1 hour")
-      .orderBy("window_start").collect()
-    assert(stats.map(_.getLong(2)).sum == 8L)
-    assert(stats.map(_.getLong(3)).sum == 4L)
-    // all four corrupt frames landed in the 10:00 window
-    assert(stats.head.getLong(3) == 4L)
-  }
-
-  test("front door composes: parse → clean → windowed aggregation over one " +
-      "stream, poison frames dropped without disturbing the aggregates") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-    // the full ingest path a deployment runs: transport frames in, typed
-    // windowed aggregates out — with a poison frame in the middle of the
-    // feed that must reach the dead-letter side only
-    def payload(id: Long, ts: String, typ: String, value: Double): String =
-      s"""{"event_id":$id,"ts":"$ts","user_id":1,"event_type":"$typ","value":$value,"props":"{}"}"""
-    val frames: Seq[(String, Array[Byte], java.sql.Timestamp)] = Seq(
-      ("k", payload(1, "2024-01-01T10:05:00Z", "click", 1.0).getBytes("UTF-8"),
-        java.sql.Timestamp.valueOf("2024-01-01 10:05:01")),
-      ("k", "POISON{not json".getBytes("UTF-8"),
-        java.sql.Timestamp.valueOf("2024-01-01 10:06:00")),
-      ("k", payload(2, "2024-01-01T10:20:00Z", "click", 2.0).getBytes("UTF-8"),
-        java.sql.Timestamp.valueOf("2024-01-01 10:20:01")),
-      ("k", payload(3, "2024-01-01T11:10:00Z", "view", 5.0).getBytes("UTF-8"),
-        java.sql.Timestamp.valueOf("2024-01-01 11:10:01")))
-    val mem = MemoryStream[(String, Array[Byte], java.sql.Timestamp)]
-    mem.addData(frames: _*)
-
-    val parsed = Streaming.parseEventStream(
-      mem.toDF().toDF("key", "value", "ts"))
-    val agg = Streaming.windowedTypeAgg(
-      Streaming.cleanEvents(parsed).drop("kafka_key", "ingest_ts"))
-    val q = Streaming.runToMemory(agg, "front_door",
-      org.apache.spark.sql.streaming.OutputMode.Complete())
-    q.awaitTermination(120000); q.stop()
-
-    val got = spark.table("front_door")
-      .select($"window_start", $"event_type", $"n_events", $"sum_value")
-      .collect()
-      .map(r => (r.getTimestamp(0).toString, r.getString(1), r.getLong(2),
-        r.getDouble(3))).toSet
-    // clean events aggregate exactly; the poison frame contributes nothing
-    assert(got == Set(
-      ("2024-01-01 10:00:00.0", "click", 2L, 3.0),
-      ("2024-01-01 11:00:00.0", "view", 1L, 5.0)), s"got $got")
+    assert(clean.where($"raw_value".isNotNull).count() == 0)
   }
 
   test("dead-letter replay-after-fix: quarantined frames re-parse into the " +
@@ -933,10 +116,12 @@ class StreamingSpec extends SparkSpec {
       .toDF("key", "value", "ts")
 
     val parsed = Streaming.parseEventStream(frames)
-    assert(Streaming.cleanEvents(parsed).count() == 0)
+    assert(parsed.where(!col("is_corrupt")).count() == 0)
     val quarantine = java.nio.file.Files
       .createTempDirectory("graft_dlq_").toString + "/dlq"
-    Streaming.deadLetters(parsed).write.parquet(quarantine)
+    parsed.where(col("is_corrupt"))
+      .select($"kafka_key", $"ingest_ts", $"raw_value")
+      .write.parquet(quarantine)
 
     // replay: strip the junk header from the preserved raw payload and
     // re-run the SAME parse layer over the repaired frames
@@ -945,196 +130,10 @@ class StreamingSpec extends SparkSpec {
       regexp_replace($"raw_value", "^junk\\]", "").as("value"),
       $"ingest_ts".as("ts"))
     val reparsed = Streaming.parseEventStream(repaired)
-    val clean = Streaming.cleanEvents(reparsed)
-    assert(Streaming.deadLetters(reparsed).count() == 0)
+    val clean = reparsed.where(!col("is_corrupt"))
+    assert(reparsed.where(col("is_corrupt")).count() == 0)
     assert(clean.count() == 4)
     assert(clean.agg(sum("event_id")).head().getLong(0) == 10L)
     assert(clean.where($"event_type" === "click" && $"user_id" === 7L).count() == 4)
-  }
-
-  test("stateful running totals per user via mapGroupsWithState") {
-    import spark.implicits._
-    val dir = stageEvents()
-    val stream = Streaming.readEventStream(spark, dir)
-      .select($"user_id", $"ts", $"value").as[Streaming.SessionInput]
-    val q = Streaming.runningUserTotals(stream)
-      .writeStream.outputMode("update").format("memory")
-      .queryName("user_totals")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000); q.stop()
-    val got = spark.table("user_totals")
-    assert(got.count() > 0)
-    // state accumulated: per-user counts must match batch groupBy
-    val batch = spark.read.parquet(dir).groupBy("user_id")
-      .agg(count(lit(1)).as("n"), sum("value").as("t"))
-    val joined = got.join(batch, Seq("user_id"))
-      .where(col("n_events") =!= col("n") ||
-        abs(col("total_value") - col("t")) > 1e-9)
-    assert(joined.count() == 0)
-  }
-
-  test("streaming heavy hitters: state hard-bounded at capacity, counts " +
-    "one-sided, every above-threshold item present, batches accumulate") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-    // shard 0: 3 heavy items + a long unique tail; true frequencies known
-    val heavy = Seq("h1" -> 50L, "h2" -> 30L, "h3" -> 20L)
-    val tail1 = (0 until 40).map(i => Streaming.HhInput(0, s"t$i", 1L))
-    val batch1 = heavy.flatMap { case (it, c) =>
-      Seq.fill(c.toInt / 2)(Streaming.HhInput(0, it, 1L)) } ++ tail1 ++
-      Seq(Streaming.HhInput(1, "other_shard", 5L))
-    val batch2 = heavy.flatMap { case (it, c) =>
-      Seq.fill(c.toInt - c.toInt / 2)(Streaming.HhInput(0, it, 1L)) } ++
-      (40 until 80).map(i => Streaming.HhInput(0, s"t$i", 1L))
-
-    val capacity = 10
-    val mem = MemoryStream[Streaming.HhInput]
-    mem.addData(batch1: _*)
-    mem.addData(batch2: _*)
-    val q = Streaming.runToMemory(
-      Streaming.heavyHittersStream(mem.toDS(), capacity).toDF(), "hh",
-      org.apache.spark.sql.streaming.OutputMode.Update())
-    q.awaitTermination(120000); q.stop()
-
-    val out = spark.table("hh").collect()
-      .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getLong(3),
-        r.getLong(4))).toSeq
-    // latest emission per (shard, item) = the live summary rows; the final
-    // shard-0 summary is the rows carrying the final shard_total
-    val n0 = (batch1 ++ batch2).filter(_.shard == 0).map(_.w).sum
-    val finalS0 = out.filter(r => r._1 == 0 && r._5 == n0)
-    assert(finalS0.nonEmpty && finalS0.size <= capacity,
-      s"summary must be bounded at $capacity: ${finalS0.size}")
-    val trueFreq = ((0 until 80).map(i => s"t$i" -> 1L) ++ heavy).toMap
-    finalS0.foreach { case (_, item, count, err, _) =>
-      val t = trueFreq(item)
-      assert(count >= t, s"$item: count $count underestimates true $t")
-      assert(count - err <= t, s"$item: count-err ${count - err} exceeds $t")
-    }
-    // Space-Saving guarantee: true_freq > n/capacity => in the summary
-    val threshold = n0.toDouble / capacity
-    heavy.filter(_._2 > threshold).foreach { case (it, c) =>
-      assert(finalS0.exists(_._2 == it),
-        s"heavy item $it (freq $c > $threshold) missing from summary")
-    }
-    // counts accumulated across the two batches (not reset per batch)
-    assert(finalS0.find(_._2 == "h1").get._3 >= 50L)
-    // the other shard kept its own independent summary
-    assert(out.exists(r => r._1 == 1 && r._2 == "other_shard" && r._3 == 5L))
-  }
-
-  test("streaming anomaly flags: extreme flagged after warmup, normals " +
-    "and pre-warmup spikes not, per-key isolation, state folds batches") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-    // type A: 40 baseline values around 10 (sd ~ alternating ±1), then a
-    // wild 100 and two normals in a later batch. Type B: a pre-warmup
-    // spike that must NOT flag (only 5 priors).
-    val base = (0 until 40).map(i =>
-      Streaming.AnomalyInput("A", i.toLong, 10.0 + (if (i % 2 == 0) 1.0 else -1.0)))
-    val batch2 = Seq(
-      Streaming.AnomalyInput("A", 100L, 100.0),
-      Streaming.AnomalyInput("A", 101L, 10.5),
-      Streaming.AnomalyInput("B", 200L, 1000.0))
-    val bSmall = (0 until 5).map(i =>
-      Streaming.AnomalyInput("B", 210L + i, 1.0 + i * 0.1))
-
-    val mem = MemoryStream[Streaming.AnomalyInput]
-    mem.addData(base ++ bSmall: _*)
-    mem.addData(batch2: _*)
-    val q = Streaming.runToMemory(
-      Streaming.anomalyStream(mem.toDS(), minN = 30L, zThreshold = 3.0).toDF(),
-      "anom", org.apache.spark.sql.streaming.OutputMode.Update())
-    q.awaitTermination(120000); q.stop()
-
-    val flags = spark.table("anom").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(3), r.getLong(4)))
-      .toSeq
-    // the wild value flags, scored against 41 PRIOR A-values (the spike
-    // itself excluded from its own baseline), with a huge z
-    val hit = flags.filter(f => f._1 == "A" && f._2 == 100L)
-    assert(hit.size == 1, flags.toString)
-    // 40 or 41 priors depending on whether the batch-mate normal value
-    // folded in first (iterator order within a batch is not guaranteed)
-    assert(hit.head._3 > 3.0 && (hit.head._4 == 40L || hit.head._4 == 41L),
-      hit.toString)
-    // the adjacent normal value does not flag, and no baseline row flags
-    assert(!flags.exists(f => f._1 == "A" && f._2 != 100L), flags.toString)
-    // B's spike arrived with only 5 priors — below minN, silent by design
-    assert(!flags.exists(_._1 == "B"), flags.toString)
-  }
-
-  test("streaming PSI drift monitor equals the batch PSI on the same " +
-    "slice, and a shifted mix trips the alert") {
-    val dir = stageEvents()
-    val batch = spark.read.parquet(dir)
-    // freeze the reference off the even event_ids — the q_drift_psi
-    // parity-slice convention for "the previous release"
-    val ref = Streaming.freezeDriftRef(
-      batch.where(col("event_id") % 2 === 0), "value")
-    assert(ref.cuts.length == 9 && ref.nBins == 10 && ref.refTotal > 0)
-
-    val stream = Streaming.readEventStream(spark, dir)
-    // Complete mode: the finite fixture's last windows are still open
-    val q = Streaming.runToMemory(
-      Streaming.driftStream(stream, ref, "value", "ts", "10 days", "2 hours"),
-      "drift", org.apache.spark.sql.streaming.OutputMode.Complete())
-    q.awaitTermination(120000); q.stop()
-    val got = spark.table("drift").collect()
-      .map(r => (r.getTimestamp(0), (r.getLong(2), r.getDouble(3), r.getBoolean(4))))
-      .toMap
-    assert(got.nonEmpty)
-
-    // batch truth: same frozen cuts, same windows, same smoothing — the
-    // PSI each window would get from the batch q_drift_psi formula
-    val binOf = (v: Double) => ref.cuts.count(v >= _)
-    val rows = batch.select(window(col("ts"), "10 days")("start"), col("value"))
-      .collect().map(r => (r.getTimestamp(0), binOf(r.getDouble(1))))
-    val expected = rows.groupBy(_._1).map { case (w, vs) =>
-      val n = (0 until 10).map(b => vs.count(_._2 == b).toLong)
-      val tot = n.sum
-      val psi = (0 until 10).map { i =>
-        val pr = (ref.refCounts(i) + 0.5) / (ref.refTotal + 5.0)
-        val pc = (n(i) + 0.5) / (tot + 5.0)
-        (pc - pr) * math.log(pc / pr)
-      }.sum
-      w -> (tot, psi)
-    }
-    assert(got.keySet == expected.keySet)
-    expected.foreach { case (w, (tot, psi)) =>
-      val (gn, gp, alert) = got(w)
-      assert(gn == tot, s"window $w count $gn != $tot")
-      assert(math.abs(gp - psi) < 1e-9, s"window $w psi $gp != $psi")
-      assert(alert == (gp > 0.25), s"window $w alert disagrees with psi=$gp")
-      // the stream IS half reference by construction — populated windows
-      // must read stable (sparse tail windows legitimately inflate PSI:
-      // 10-bin smoothing on a handful of events is not a drift signal)
-      if (tot >= 100)
-        assert(!alert && gp < 0.25, s"window $w ($tot events) false alarm psi=$gp")
-    }
-    assert(expected.exists(_._2._1 >= 100), "fixture must have populated windows")
-
-    // drifted ingest: feed only the TOP-decile values — the mix has
-    // collapsed into one reference bin, PSI must blow through 0.25
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_drift_").toString
-    batch.where(col("value").cast("double") >= ref.cuts.last)
-      .write.mode("overwrite").parquet(s"$dir2/drop1")
-    val q2 = Streaming.runToMemory(
-      Streaming.driftStream(
-        Streaming.readEventStream(spark, s"$dir2/drop1"), ref,
-        "value", "ts", "10 days", "2 hours"),
-      "drift2", org.apache.spark.sql.streaming.OutputMode.Complete())
-    q2.awaitTermination(120000); q2.stop()
-    val drifted = spark.table("drift2").collect()
-    assert(drifted.nonEmpty)
-    drifted.foreach { r =>
-      assert(r.getDouble(3) > 0.25 && r.getBoolean(4),
-        s"drifted window ${r.getTimestamp(0)} psi=${r.getDouble(3)} must alert")
-    }
   }
 }
