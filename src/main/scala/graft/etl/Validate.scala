@@ -62,7 +62,7 @@ object Validate {
           val nullErrors = if (checkable.isEmpty) Seq.empty else {
             val counts = df.agg(
               count(lit(1)).as("__n"),
-              checkable.map(c => count(when(col(c).isNull, 1)).as(c)): _*).head()
+              checkable.toIndexedSeq.map(c => count(when(col(c).isNull, 1)).as(c)): _*).head()
             checkable.zipWithIndex.collect {
               case (c, i) if counts.getLong(i + 1) > 0 =>
                 s"$name.$c: ${counts.getLong(i + 1)} null values"

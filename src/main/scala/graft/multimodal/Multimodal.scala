@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: image/audio/video as opaque `binary` columns
@@ -143,18 +143,5 @@ object Multimodal {
           MediaFrame(id, i, slice)
         }
       }
-  }
-
-  /** Demo pipeline over the documents table: text bytes stand in for media
-    * payloads (no real media in the testdata), exercising the full
-    * binary-column path: cast → type tag → batched meta extract. Text bytes
-    * sniff as "unknown" → deterministic stub dims by design.
-    */
-  def documentsAsMedia(spark: SparkSession, docs: DataFrame): Dataset[MediaMeta] = {
-    val media = docs.select(
-      col("doc_id").as("media_id"),
-      concat(col("source"), lit(".png")).as("uri"),
-      col("text").cast("binary").as("payload"))
-    extractMeta(withMediaType(media, "uri"), "media_id", "media_type", "payload")
   }
 }

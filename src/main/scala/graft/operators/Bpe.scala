@@ -91,91 +91,10 @@ object Bpe {
     * oracled declared queries), where staying in Catalyst expressions keeps
     * the whole encode inside one analyzed plan. A PRODUCTION merge table
     * (30k–100k merges) would build a 100k-deep expression tree that the
-    * analyzer itself chokes on — that regime uses [[encodeLarge]], whose
-    * JVM fold is bit-equivalent by construction.
+    * analyzer itself chokes on.
     */
   def applyMerges(syms: Column, merges: Seq[(String, String)]): Column =
     merges.foldLeft(syms) { case (c, (a, b)) => mergePair(c, a, b) }
-
-  /** The SAME greedy left-to-right disjoint fold as [[mergePair]], executed
-    * in plain JVM code over a symbol array — semantics identical by
-    * construction (one pass per merge in table order, a fresh merge result
-    * never re-merges with its left neighbor within the same pass), cost
-    * O(merges × len) per word with scalar constants instead of a
-    * per-merge Catalyst `aggregate` HOF. This is what makes production-
-    * sized merge tables tractable: expression-tree depth is ZERO regardless
-    * of table size. Early-exits once the word is a single symbol.
-    */
-  private[operators] def applyMergesSeq(syms0: Seq[String],
-      merges: Seq[(String, String)]): Seq[String] = {
-    // Array, not Seq: the pass below random-accesses cur(i)/cur(i+1), and a
-    // List there would make each merge pass O(len²) — in the function whose
-    // whole reason to exist is production-scale constants. Passes compact
-    // in place: `m` is the live prefix length after each merge pass.
-    var cur = syms0.toArray
-    var m = cur.length
-    val it = merges.iterator
-    while (it.hasNext && m > 1) {
-      val (a, b) = it.next()
-      var i = 0
-      var w = 0
-      while (i < m) {
-        if (i + 1 < m && cur(i) == a && cur(i + 1) == b) {
-          cur(w) = a + b; i += 2
-        } else { cur(w) = cur(i); i += 1 }
-        w += 1
-      }
-      m = w
-    }
-    cur.take(m).toSeq
-  }
-
-  /** [[encode]] for PRODUCTION-SIZED merge tables: same one-corpus-shuffle
-    * shape (terms explode once, vocab/occurrence/join consumers share the
-    * word-keyed exchange, a billion-occurrence word encodes once), but the
-    * merge fold runs as [[applyMergesSeq]] inside one mapPartitions pass
-    * over the VOCAB relation — the sanctioned mapPartitions case: the
-    * expression form's tree depth grows with the merge table and a 50k-merge
-    * vocabulary would not even analyze, while the vocab relation this runs
-    * on is bounded by distinct words, never by the corpus. BpeSpec gates
-    * bit-equality with [[encode]] on both the fixed table and a trained one.
-    */
-  def encodeLarge(docs: DataFrame, idCol: String, textCol: String,
-      merges: Seq[(String, String)]): DataFrame = {
-    import graft.functions.TextFunctions.{arrayBarrier, termsAlnum}
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val mergesB = spark.sparkContext.broadcast(merges.toArray)
-    val terms = docs
-      .select(col(idCol).as("doc_id"),
-        explode(arrayBarrier(termsAlnum(col(textCol)))).as("word"))
-      .where(col("doc_id").isNotNull)
-      .repartition(col("word"))
-    val occurrences = terms.groupBy(col("doc_id"), col("word"))
-      .agg(count(lit(1)).as("cnt"))
-    // pruneGuard via the tuple: the guard term rides into the mapPartitions
-    // result so the agg branch reads doc_id like the occurrence branch and
-    // the word exchange stays shared (see encode)
-    val vocab = terms.groupBy(col("word"))
-      .agg(Dedup.pruneGuard(struct(col("doc_id"))).as("__g"))
-      .as[(String, Long)]
-      .mapPartitions { it =>
-        val m = mergesB.value.toSeq
-        it.map { case (w, g) =>
-          (w, applyMergesSeq(w.map(_.toString), m).size + g)
-        }
-      }
-      .toDF("word", "n_subtoks")
-    val perDoc = occurrences.join(vocab, "word")
-      .groupBy(col("doc_id"))
-      .agg(sum(col("cnt")).as("n_words"),
-        sum(col("cnt") * col("n_subtoks").cast("long")).as("n_tokens"))
-    docs.select(col(idCol).as("doc_id"))
-      .join(perDoc, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_words"), lit(0L)).as("n_words"),
-        coalesce(col("n_tokens"), lit(0L)).as("n_tokens"))
-  }
 
   /** Trains `numMerges` BPE merges over the corpus. Deterministic: the
     * winning pair each round is max by (weighted count, then (left, right)
@@ -218,37 +137,6 @@ object Bpe {
     }
     words.unpersist()
     merges.result()
-  }
-
-  /** The distinct single characters of the corpus word table — the BASE
-    * alphabet a vocab-bounded trainer starts from ([[trainVocab]]) and the
-    * in-vocabulary set [[encodeFallback]] checks before byte-expanding.
-    * One distinct agg over the vocabulary relation; driver-collected
-    * because an alphabet is dozens of symbols by construction (the shared
-    * `[a-z0-9]+` training tokenizer bounds it at 36).
-    */
-  def alphabet(docs: DataFrame, textCol: String): Seq[String] =
-    wordFreq(docs, textCol)
-      .select(explode(splitChars(col("word"))).as("ch"))
-      .distinct().orderBy(col("ch"))
-      .collect().map(_.getString(0)).toSeq
-
-  /** Vocab-size-bounded training — how real tokenizers are specified (a
-    * target vocabulary size, not a merge count): the final vocabulary is
-    * the corpus' base alphabet plus one new symbol per merge, so exactly
-    * `vocabSize − |alphabet|` merges are trained (fewer if the corpus
-    * exhausts below `minPairFreq` first — the vocab bound is an upper
-    * bound, never exceeded; BpeSpec gates `|alphabet| + |merges| <=
-    * vocabSize`).
-    *
-    * @return (base alphabet, merge table in application order)
-    */
-  def trainVocab(docs: DataFrame, textCol: String, vocabSize: Int,
-      minPairFreq: Long = 2L): (Seq[String], Seq[(String, String)]) = {
-    val base = alphabet(docs, textCol)
-    require(vocabSize >= base.size,
-      s"vocabSize ($vocabSize) below the corpus alphabet (${base.size})")
-    (base, train(docs, textCol, vocabSize - base.size, minPairFreq))
   }
 
   /** UTF-8 byte tokens of one character: `<0xNN>` per byte, the GPT-2-style

@@ -468,64 +468,6 @@ object Corpus {
       bit_xor(TextFunctions.fingerprintPortable(col(textCol)))
         .as("normalized_checksum"))
 
-  /** Per-language quality-quantile gate, scale form — keep each language's
-    * top `keepFraction` by quality WITHOUT ranking the corpus: one
-    * partial-aggregated pass computes a per-language approx-percentile
-    * threshold (error `relErr`, a KB-sized sketch per language to the
-    * driver), and a second map-only pass filters against the BROADCAST
-    * threshold table. Two corpus scans, zero corpus shuffles — vs the
-    * exact percent_rank form (q_quality_quantile), which certifies these
-    * semantics under the DuckDB oracle but must sort every language's
-    * rows. The approx threshold admits boundary docs within `relErr` rank
-    * error — exactly the knob production gates run with.
-    *
-    * Ties AT the threshold are kept (>=): quality scores are coarse blends
-    * with heavy ties, and dropping a whole tie class on a sketch boundary
-    * would swing the kept fraction far beyond relErr.
-    */
-  def qualityQuantileGate(docs: DataFrame, langCol: String, textCol: String,
-      keepFraction: Double, relErr: Double = 0.01): DataFrame = {
-    require(keepFraction > 0.0 && keepFraction <= 1.0,
-      s"keepFraction must be in (0,1], got $keepFraction")
-    // relErr = 0 would pass accuracy Int.MaxValue to the sketch (retain
-    // ~every sample per language — the exact opposite of the KB-sized-
-    // sketch contract); negative would silently degrade to accuracy 2
-    require(relErr > 0.0 && relErr <= 0.5,
-      s"relErr must be in (0, 0.5], got $relErr")
-    val scored = docs.withColumn("__qs",
-      TextFunctions.qualityScore(col(textCol)))
-    val thresholds = scored
-      .groupBy(col(langCol))
-      .agg(percentile_approx(col("__qs"), lit(1.0 - keepFraction),
-        lit(math.max(2, (1.0 / relErr).toInt))).as("__q_min"))
-      .withColumnRenamed(langCol, "__lang_t")
-    // null-safe join: NULL-lang docs (upstream lang-id failure) are a real
-    // group with their own threshold row from the groupBy — a plain equi-
-    // join would never match them and the >= predicate would then silently
-    // drop every one of them regardless of quality
-    scored
-      .join(broadcast(thresholds),
-        col(langCol) <=> col("__lang_t"), "left")
-      .where(col("__qs") >= col("__q_min"))
-      .drop("__qs", "__q_min", "__lang_t")
-  }
-
-  /** Deterministic mixture sampling — the knob that turns a cleaned crawl
-    * into a WEIGHTED training mixture: each source is down-sampled to its
-    * target keep rate, seedlessly. A row's uniform is the first 8 md5 hex
-    * digits of `source:id`, compared against the rate's hex threshold
-    * IN STRING SPACE (same-length lowercase hex compares identically to
-    * the numbers it spells), so the keep set is bit-reproducible on any
-    * cluster, partitioning, or engine — unlike `sampleBy`, whose
-    * per-partition seeds reshuffle the sample under every repartition.
-    * Sources absent from `rates` keep everything. Map-only: no shuffle, no
-    * state; the filter rides the scan inside codegen.
-    *
-    * Down-sampling only (rates in [0,1]) — up-weighting a source mid-
-    * pipeline would re-trigger the dedup stages on its own copies; the
-    * materialized up-sampling form is [[weightedRepeat]], which belongs
-    * AFTER dedup as the final pre-shard step.
-    */
   /** Exact token-budget selection — data curation under a budget: per
     * source, keep documents in (quality DESC, id) order while the running
     * INCLUSIVE token total stays within that source's budget. Token counts
@@ -537,9 +479,7 @@ object Corpus {
     * source; each source's rows sort inside one partition — fine up to
     * millions of docs per source, and what `q_budget_select` runs under
     * the DuckDB differential). At 100 TB a single source can be billions
-    * of rows in ONE window partition: use [[budgetGate]], the histogram
-    * form with zero corpus shuffles, gated against this exact form in
-    * CorpusSpec.
+    * of rows in ONE window partition.
     */
   def budgetSelect(docs: DataFrame, idCol: String, sourceCol: String,
       tokensCol: String, qualityCol: String,
@@ -561,73 +501,6 @@ object Corpus {
       .drop("__cum")
   }
 
-  /** Scale form of [[budgetSelect]]: a quality HISTOGRAM per source stands
-    * in for the per-source sort. Pass 1 aggregates each source's quality
-    * range; pass 2 aggregates token mass per (source, quality-bin) — a
-    * `|sources| × nBins` relation, driver-bounded; the driver walks each
-    * source's bins from the top and keeps the highest-quality bins whose
-    * cumulative token mass fits the budget; pass 3 filters map-only against
-    * the broadcast thresholds. Three corpus scans, ZERO corpus shuffles, no
-    * per-source sort anywhere.
-    *
-    * Contract vs the exact form: NEVER exceeds a budget (the boundary bin
-    * that would overflow is excluded wholesale — fail-closed), may
-    * under-fill by at most that one bin's token mass (shrinks as nBins
-    * grows; with every doc in its own bin the kept set equals
-    * [[budgetSelect]]'s exactly — CorpusSpec gates both properties). Docs
-    * with NULL quality in a budgeted source fail closed; a budgeted source
-    * whose quality range is degenerate (all equal → one bin) keeps either
-    * everything (fits) or nothing (doesn't) — the histogram cannot split a
-    * single bin.
-    */
-  def budgetGate(docs: DataFrame, sourceCol: String, tokensCol: String,
-      qualityCol: String, budgets: Map[String, Long],
-      nBins: Int = 1024): DataFrame = {
-    require(nBins >= 2, s"nBins must be >= 2, got $nBins")
-    require(budgets.values.forall(_ >= 0), s"budgets must be >= 0: $budgets")
-    val srcs = budgets.keys.toSeq.sorted
-    // isin never matches NULL → a NULL source must be rescued explicitly
-    // (unlisted semantics), not silently dropped by the negation
-    val unlisted = docs.where(coalesce(!col(sourceCol).isin(srcs: _*), lit(true)))
-    val listed = docs.where(col(sourceCol).isin(srcs: _*))
-
-    val stats = listed.groupBy(col(sourceCol))
-      .agg(min(col(qualityCol)).as("__qlo"), max(col(qualityCol)).as("__qhi"))
-    def binOf(q: Column): Column =
-      when(col("__qhi") <= col("__qlo"), lit(0))
-        .otherwise(least(lit(nBins - 1), greatest(lit(0),
-          floor((q - col("__qlo")) / (col("__qhi") - col("__qlo")) * nBins)
-            .cast("int"))))
-    val binned = listed.join(broadcast(stats), sourceCol)
-      .withColumn("__bin", binOf(col(qualityCol)))
-    // (source, bin) token histogram — partial-aggregated, KB-sized
-    val hist = binned.groupBy(col(sourceCol), col("__bin"))
-      .agg(sum(col(tokensCol).cast("long")).as("__toks"))
-      .collect()
-      .map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
-    // per source: lowest bin index whose top-down cumulative fits. nBins
-    // (no bin qualifies) → keep nothing for that source
-    val thresholds: Map[String, Int] = srcs.map { s =>
-      val b = budgets(s)
-      var cum = 0L
-      var t = nBins
-      var stopped = false
-      ((nBins - 1) to 0 by -1).foreach { bin =>
-        val m = hist.getOrElse((s, bin), 0L)
-        if (!stopped && cum + m <= b) { cum += m; t = bin }
-        else stopped = true
-      }
-      s -> t
-    }.toMap
-    val tCol = srcs.foldLeft(lit(null).cast("int")) { (acc, s) =>
-      when(col(sourceCol) === s, lit(thresholds(s))).otherwise(acc)
-    }
-    val kept = binned
-      .where(col("__bin") >= tCol)
-      .drop("__bin", "__qlo", "__qhi")
-    unlisted.unionByName(kept)
-  }
-
   /** The seedless per-row uniform shared by [[mixtureSample]] and
     * [[weightedRepeat]]: first 8 md5 hex digits of `source:id`. ONE
     * definition, because both operators' DuckDB oracles replay it verbatim
@@ -647,6 +520,22 @@ object Corpus {
   private def thresholdHex(r: Double): String =
     f"${math.min((r * 4294967296.0).toLong, 0xFFFFFFFFL)}%08x"
 
+  /** Deterministic mixture sampling — the knob that turns a cleaned crawl
+    * into a WEIGHTED training mixture: each source is down-sampled to its
+    * target keep rate, seedlessly. A row's uniform is the first 8 md5 hex
+    * digits of `source:id`, compared against the rate's hex threshold
+    * IN STRING SPACE (same-length lowercase hex compares identically to
+    * the numbers it spells), so the keep set is bit-reproducible on any
+    * cluster, partitioning, or engine — unlike `sampleBy`, whose
+    * per-partition seeds reshuffle the sample under every repartition.
+    * Sources absent from `rates` keep everything. Map-only: no shuffle, no
+    * state; the filter rides the scan inside codegen.
+    *
+    * Down-sampling only (rates in [0,1]) — up-weighting a source mid-
+    * pipeline would re-trigger the dedup stages on its own copies; the
+    * materialized up-sampling form is [[weightedRepeat]], which belongs
+    * AFTER dedup as the final pre-shard step.
+    */
   def mixtureSample(docs: DataFrame, idCol: String, sourceCol: String,
       rates: Map[String, Double]): DataFrame = {
     require(rates.values.forall(r => r >= 0.0 && r <= 1.0),
@@ -666,33 +555,6 @@ object Corpus {
     // a NULL source matches no rate entry → unlisted → kept, like any
     // other source absent from the map
     docs.where(coalesce(keep, lit(true)))
-  }
-
-  /** Temperature weights for [[weightedRepeat]]: given per-source document
-    * counts and a temperature `alpha` ∈ (0,1], the repeat factor per source
-    * that reshapes the mixture toward `p_s^alpha` (α = 1 keeps the natural
-    * distribution; α → 0 flattens toward uniform — the standard multilingual
-    * rebalancing knob) while PRESERVING total corpus size in expectation:
-    * `r_s = (p_s^α / Σ_t p_t^α) / p_s`, so `Σ r_s·n_s = N`.
-    *
-    * Driver-side pure math over the per-source count map (sources number in
-    * the dozens — the counts agg that feeds this is a broadcast-sized
-    * relation). Kept OUT of the distributed plan on purpose: the factors
-    * become exact literals in both the Spark plan and any differential
-    * oracle, so no cross-engine `pow` rounding can flip a row's copy count.
-    */
-  def temperatureWeights(counts: Map[String, Long],
-      alpha: Double): Map[String, Double] = {
-    require(alpha > 0.0 && alpha <= 1.0, s"alpha must be in (0,1], got $alpha")
-    require(counts.nonEmpty && counts.values.forall(_ > 0),
-      s"counts must be positive, got $counts")
-    val n = counts.values.sum.toDouble
-    // fixed fold order (sorted keys) so the result is reproducible across
-    // JVMs and map implementations — Σ of doubles is order-sensitive
-    val shares = counts.toSeq.sortBy(_._1)
-      .map { case (s, c) => s -> math.pow(c / n, alpha) }
-    val z = shares.foldLeft(0.0) { case (acc, (_, w)) => acc + w }
-    shares.map { case (s, w) => s -> (w / z) / (counts(s) / n) }.toMap
   }
 
   /** Deterministic weighted repetition — the materialized form of mixture

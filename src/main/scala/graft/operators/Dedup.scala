@@ -180,25 +180,14 @@ object Dedup {
     lshHits.unionByName(shortHits).distinct()
   }
 
-  /** MinHash signature column: for each of `nPerms` hash permutations take
-    * the min over the document's `shingleN`-word shingles. Implemented with
-    * xxhash64(shingle, seed) + array_min inside codegen — no UDF, no UDAF.
-    */
-  def minhashSignature(text: Column, shingleN: Int, nPerms: Int): Column = {
-    val sh = shingles(text, shingleN)
-    array((0 until nPerms).map { seed =>
-      array_min(transform(sh, s => xxhash64(s, lit(seed))))
-    }: _*)
-  }
-
   /** MinHash+LSH near-duplicate candidate pairs.
     *
     * Signatures are computed in the scale-friendly flat shape: explode
     * shingles once, hash `nPerms` flat columns, take `min` per doc — the
     * mins combine map-side (partial aggregation), so the shuffle carries one
-    * row per (doc × perm), not the shingle sets. (The Column-expression
-    * [[minhashSignature]] form duplicates the whole tokenize→shingle tree
-    * per permutation — measured 75× slower at sf0.1.)
+    * row per (doc × perm), not the shingle sets. (A Column-expression
+    * signature duplicates the whole tokenize→shingle tree per permutation
+    * — measured 75× slower at sf0.1.)
     *
     * signature → `nBands` bands of `nPerms/nBands` rows → hash each band →
     * explode to (band, bucket) → self-join within buckets → distinct pairs

@@ -55,7 +55,7 @@ object Ivf {
       struct((dot(vec, vecLit(c.toSeq)) - lit(halfNormSq)).as("score"),
         lit(-i).as("neg_id"))
     }
-    val arg = (-array_max(array(scored: _*)).getField("neg_id")).cast("int")
+    val arg = (-array_max(array(scored.toIndexedSeq: _*)).getField("neg_id")).cast("int")
     // dot is NULL exactly when the vector is malformed (for every centroid
     // alike, so checking the first suffices)
     when(dot(vec, vecLit(centroids.head.toSeq)).isNotNull, arg)
@@ -182,7 +182,7 @@ object Ivf {
     corpus.withColumn("cluster", assignExpr(col(vecCol), model.centroids))
 
   /** Materialize the IVF index at rest — the train-once/probe-many split a
-    * serving path needs (mirrors [[Similarity.writeIndex]] for LSH):
+    * serving path needs:
     * `path`/data holds the corpus `partitionBy("cluster")` so a probe is a
     * partition-pruned scan of ~nProbe/k of the data, and `path`/centroids
     * holds the k×dims centroid matrix so probing never re-trains.
@@ -382,7 +382,7 @@ object Ivf {
     // and the stats aggregation don't each re-read/re-assign the source
     val assigned = assign(newDocs, vecCol, model)
       .where(col("cluster").isNotNull)
-      .select(newDocs.columns.map(col) :+ col("cluster"): _*)
+      .select(newDocs.columns.toIndexedSeq.map(col) :+ col("cluster"): _*)
       .persist()
     try {
       // on a FENCED store the appended files stay invisible until the
@@ -478,7 +478,7 @@ object Ivf {
             (0 until dims).map(j =>
               avg(try_element_at(col(vecCol), lit(j + 1))).as(s"m$j"))
           val stats = readData(spark, path)
-            .where(col("cluster").isin(touched.map(Integer.valueOf): _*))
+            .where(col("cluster").isin(touched.toIndexedSeq.map(Integer.valueOf): _*))
             .groupBy(col("cluster")).agg(aggs.head, aggs.tail: _*)
             .collect()
           val (cents, counts) = readSidecar(spark, path)
@@ -568,7 +568,7 @@ object Ivf {
       // manifest file list (the plain `data` read above is only used for
       // the touched-set probe, which finishes before any write)
       val kept = readData(spark, path)
-        .where(col("cluster").isin(touched.map(Integer.valueOf): _*))
+        .where(col("cluster").isin(touched.toIndexedSeq.map(Integer.valueOf): _*))
         .join(ids, Seq(idCol), "left_anti")
         .persist()
       try {

@@ -71,7 +71,7 @@ object Rank {
             .rowsBetween(Window.unboundedPreceding, -1)),
         lit(0L)).as("__grn_off"))
     withPid.join(broadcast(offsets), Seq("__grn_pid"))
-      .select(df.columns.map(col) :+
+      .select(df.columns.toIndexedSeq.map(col) :+
         (col("__grn_off") + col("__grn_mid").bitwiseAND(lit((1L << 33) - 1))
           + lit(1L)).as(rnCol): _*)
   }

@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** Skew-mitigation utilities for hot keys that overwhelm a single shuffle
   * partition. AQE's skew-join split (on by default) handles most cases at
-  * runtime; these are for the shapes AQE cannot rewrite — skewed
-  * AGGREGATIONS, and joins where the planner can't observe the skew (e.g.
-  * freshly exploded candidate keys with no stats).
+  * runtime; these are for the joins AQE cannot rewrite, where the planner
+  * can't observe the skew (e.g. freshly exploded candidate keys with no
+  * stats).
   *
   * Both transforms are output-equivalent to their unsalted forms (asserted
   * by SkewSpec), so callers can flip them on per-key-distribution without
@@ -91,27 +91,5 @@ object Skew {
     val smallHot = small.join(broadcast(hotKeys), keys, "left_semi")
     bigHot.join(broadcast(smallHot), keys, joinType)
       .unionByName(bigCold.join(small, keys, joinType))
-  }
-
-  /** Two-phase skewed aggregation: partial-aggregate on (keys, salt), then
-    * final-aggregate on keys — a hot group's rows combine across `nSalts`
-    * reducers before the (tiny) per-group merge. Only sound for algebraic
-    * aggregates; this covers the engine's common sum/count/min/max shape.
-    * (Spark's own partial aggregation combines map-side per PARTITION; this
-    * adds a reduce-side split for when one group exceeds a single reducer.)
-    */
-  def saltedSumCount(df: DataFrame, keys: Seq[String], valueCol: String,
-      nSalts: Int): DataFrame = {
-    require(nSalts > 0, "nSalts must be positive")
-    val keyCols = keys.map(col)
-    df.withColumn("__salt", rowSalt(nSalts))
-      .groupBy((keyCols :+ col("__salt")): _*)
-      .agg(sum(col(valueCol)).as("__psum"), count(lit(1)).as("__pn"),
-        min(col(valueCol)).as("__pmin"), max(col(valueCol)).as("__pmax"))
-      .groupBy(keyCols: _*)
-      .agg(sum(col("__psum")).as(s"sum_$valueCol"),
-        sum(col("__pn")).as("n_rows"),
-        min(col("__pmin")).as(s"min_$valueCol"),
-        max(col("__pmax")).as(s"max_$valueCol"))
   }
 }

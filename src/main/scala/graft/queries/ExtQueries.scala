@@ -834,7 +834,7 @@ object ExtQueries {
       e.select(col("vec_id"), col("label"),
           Ivf.nearestCentroidExpr(col("embedding"), cents).as("__idx"))
         .select(col("vec_id"), col("label"),
-          try_element_at(array(labels.map(lit(_)): _*), col("__idx") + 1)
+          try_element_at(array(labels.toIndexedSeq.map(lit(_)): _*), col("__idx") + 1)
             .as("assigned_label"))
     }),
     "q_sim_clusters_x1" -> ((s, dir) => simClustersScale(embTimes(s, dir, 1), 1)),
@@ -1429,10 +1429,9 @@ object ExtQueries {
     // Temperature re-weighting, materialized (Corpus.weightedRepeat): the
     // multilingual-rebalancing sibling of q_mixture_sample — English
     // down-sampled (r = 0.6), low-resource langs repeated (de 2.5, es 1.75,
-    // fr exactly 3), zh unlisted → 1 copy. Factors are literals (the
-    // counts→factors math is Corpus.temperatureWeights, driver-side and
-    // CorpusSpec-gated — keeping pow() out of the distributed plan is what
-    // makes this row-exactly oracle-able). Stochastic extra copy decided by
+    // fr exactly 3), zh unlisted → 1 copy. Factors are literals (keeping
+    // pow() out of the distributed plan is what makes this row-exactly
+    // oracle-able). Stochastic extra copy decided by
     // the same md5-hex-compare uniform as q_mixture_sample: 0.6 → < 0x9999
     // 9999, 0.5 → < 0x80000000, 0.75 → < 0xc0000000 of 2^32. Map-only +
     // inline sequence explode; full row-level oracle incl. copy indices.
@@ -1466,9 +1465,7 @@ object ExtQueries {
     // and unlisted sources (pass through). Window = ROWS UNBOUNDED
     // PRECEDING..CURRENT ROW over the total (quality DESC, doc_id) order —
     // identical rank arithmetic + integer cumsum in both engines; quality
-    // emitted too, IEEE-exact (q_text_quality precedent). The 100 TB
-    // histogram form (Corpus.budgetGate, zero corpus shuffles) is
-    // CorpusSpec-gated against this exact kept set.
+    // emitted too, IEEE-exact (q_text_quality precedent).
     QueryDef(
       "q_budget_select",
       Some(s"""WITH t AS (
@@ -3111,10 +3108,7 @@ object ExtQueries {
     // Mahalanobis input). CERTIFICATION form: both engines explode to
     // (vec_id, dim, x), self-join on vec_id with dim_j >= dim_i, and
     // aggregate (x_i − μ_i)(x_j − μ_j)/(n−1) with means and covariances
-    // snapped to 1e-6 (sum orders differ across engines). The production
-    // path is Similarity.covarianceMatrix — ONE mapPartitions pass over a
-    // dims·(dims+3)/2-double accumulator + treeReduce, no explosion, no
-    // shuffle — spec-gated to 1e-6 agreement against this form.
+    // snapped to 1e-6 (sum orders differ across engines).
     QueryDef(
       "q_embed_cov",
       Some("""WITH x AS (

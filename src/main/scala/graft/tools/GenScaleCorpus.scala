@@ -97,7 +97,7 @@ object GenScaleCorpus {
     // or unusual text would silently emit colliding ids / shingles and
     // invalidate every growth ratio downstream — fail fast here instead.
     def assertMaxId(name: String, idCol: String, shift: Long): Unit = {
-      val row = Tables.load(spark, baseDir, name).agg(max(col(idCol))).head
+      val row = Tables.load(spark, baseDir, name).agg(max(col(idCol))).head()
       // an EMPTY base table yields a NULL max — trivially shift-disjoint,
       // not an NPE (ADVICE r14)
       if (!row.isNullAt(0)) {
@@ -122,7 +122,7 @@ object GenScaleCorpus {
     // separates the two cases with a wide margin on both sides.
     val fracRow = Tables.load(spark, baseDir, "documents")
       .select(explode(split(col("text"), "\\s+")).as("tok"))
-      .agg(avg(when(col("tok").rlike("_c\\d+$"), 1.0).otherwise(0.0))).head
+      .agg(avg(when(col("tok").rlike("_c\\d+$"), 1.0).otherwise(0.0))).head()
     val suffixedFrac = if (fracRow.isNullAt(0)) 0.0 else fracRow.getDouble(0)
     require(suffixedFrac < 0.5,
       f"base documents.text carries _c<k>-suffixed tokens on $suffixedFrac%.2f " +

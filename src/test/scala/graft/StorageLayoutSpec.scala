@@ -67,26 +67,6 @@ class StorageLayoutSpec extends SparkSpec {
     }
   }
 
-  test("LSH index probe is a partition-pruned scan with identical results") {
-    val emb = Tables.load(spark, sf, "embeddings")
-    val path = "target/lsh_index_test"
-    Similarity.writeIndex(emb, "vec_id", "embedding", dims = 64, nPlanes = 4, path)
-    val q = Similarity.vectorOf(spark, emb, "vec_id", "embedding", 0L)
-
-    val probe = Similarity.probeIndex(spark, path, "vec_id", "embedding",
-      q, dims = 64, nPlanes = 4, k = 10)
-    val scan = probe.queryExecution.executedPlan.toString
-    assert(scan.contains("PartitionFilters") && scan.contains("bucket"),
-      s"probe not partition-pruned:\n$scan")
-
-    // same ranking as the in-memory LSH top-k over the full corpus
-    val direct = Similarity.lshTopK(emb, "vec_id", "embedding", q,
-      dims = 64, nPlanes = 4, k = 10)
-      .select("vec_id").collect().map(_.getLong(0)).toSeq
-    val pruned = probe.select("vec_id").collect().map(_.getLong(0)).toSeq
-    assert(pruned === direct)
-  }
-
   test("IVF clustered index probe is a partition-pruned scan matching " +
     "the in-memory topK") {
     import graft.operators.Ivf

@@ -282,7 +282,7 @@ class DailyJobSpec extends SparkSpec {
       .unionByName(day2Zones)
     val got = Maintenance.readManifested(spark, zonesStore)
       .withColumn("day", col("day").cast("string"))
-      .select(expected.columns.map(col): _*)
+      .select(expected.columns.toIndexedSeq.map(col): _*)
     assert(got.count() === expected.count())
     assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty,
       "warehouse diverged from the single-shot batch truth")

@@ -369,14 +369,14 @@ class PrepJobSpec extends SparkSpec {
     // gate B: prep store ≡ from-scratch chunk+pack (seq_ids included —
     // pack groups are group-local, so shard rebuild IS from-scratch)
     sameRows(Maintenance.readManifested(spark, prepStore)
-        .select(prepTruth.columns.map(col): _*),
+        .select(prepTruth.columns.toIndexedSeq.map(col): _*),
       prepTruth, "prep store")
 
     // gate C: index ≡ from-scratch bands of the v2 kept set (retraction
     // included)
     val idxTruth = bandRows(kept2Truth.drop("pgrp"))
     sameRows(Maintenance.readManifested(spark, indexDir)
-        .select(idxTruth.columns.map(col): _*),
+        .select(idxTruth.columns.toIndexedSeq.map(col): _*),
       idxTruth, "band index")
 
     // gate D: shards day 2 never touched are byte-identical through all
@@ -421,7 +421,7 @@ class PrepJobSpec extends SparkSpec {
       kept2Truth.select("doc_id", "text", "pgrp"),
       "doc store after extra replay")
     sameRows(Maintenance.readManifested(spark, prepStore)
-        .select(prepTruth.columns.map(col): _*),
+        .select(prepTruth.columns.toIndexedSeq.map(col): _*),
       prepTruth, "prep store after extra replay")
     sameRows(graft.operators.Ivf.readData(spark, ivfDir)
         .select("vec_id", "embedding"),

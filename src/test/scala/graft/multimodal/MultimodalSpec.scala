@@ -8,14 +8,24 @@ class MultimodalSpec extends SparkSpec {
   private lazy val docs = graft.Tables.load(spark, "/root/testdata/sf0.001", "documents")
 
   test("binary-column pipeline: cast -> type tag -> batched meta extract") {
-    val meta = Multimodal.documentsAsMedia(spark, docs)
+    // text bytes stand in for media payloads: they sniff as no known
+    // container, so the dims come from the deterministic stub
+    def pipeline() = {
+      val media = docs.select(
+        col("doc_id").as("media_id"),
+        concat(col("source"), lit(".png")).as("uri"),
+        col("text").cast("binary").as("payload"))
+      Multimodal.extractMeta(Multimodal.withMediaType(media, "uri"),
+        "media_id", "media_type", "payload")
+    }
+    val meta = pipeline()
     assert(meta.count() == docs.count())
     val r = meta.head()
     assert(r.media_type == "image") // .png hint
     assert(r.n_bytes > 0)
     assert(r.width >= 64 && r.height >= 64)
     // deterministic stub: same input → same fake dims
-    val again = Multimodal.documentsAsMedia(spark, docs)
+    val again = pipeline()
     assert(meta.orderBy("media_id").collect().toSeq ==
       again.orderBy("media_id").collect().toSeq)
   }

@@ -145,42 +145,6 @@ class BpeSpec extends SparkSpec {
     assert(syms === Seq("x"))
   }
 
-  test("encodeLarge (JVM fold for production-sized merge tables) is " +
-    "bit-equal to the expression-fold encode") {
-    import spark.implicits._
-    val docs = graft.Tables.load(spark, "/root/testdata/sf0.001", "documents")
-      .select($"doc_id", $"text")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    // the fixed shipped table (chained merges included)
-    val fixed = Seq(("t", "h"), ("th", "e"), ("i", "n"), ("a", "n"),
-      ("an", "d"), ("e", "r"), ("o", "n"), ("r", "e"))
-    assert(rows(Bpe.encodeLarge(docs, "doc_id", "text", fixed)) ==
-      rows(Bpe.encode(docs, "doc_id", "text", fixed)))
-    // a TRAINED table big enough that the expression fold is already deep
-    val trained = Bpe.train(docs, "text", numMerges = 40)
-    assert(trained.size > 20, s"corpus trained only ${trained.size} merges")
-    assert(rows(Bpe.encodeLarge(docs, "doc_id", "text", trained)) ==
-      rows(Bpe.encode(docs, "doc_id", "text", trained)))
-  }
-
-  test("trainVocab bounds |alphabet| + |merges| by the target vocab size " +
-    "and its merges are the plain trainer's prefix") {
-    import spark.implicits._
-    val df = Seq.fill(6)("the theme then and band sand hand").toDF("text")
-    val (base, merges) = Bpe.trainVocab(df, "text", vocabSize = 15)
-    assert(base.nonEmpty && base == base.sorted && base.distinct == base)
-    assert(base.size + merges.size <= 15,
-      s"vocab overflow: ${base.size} + ${merges.size} > 15")
-    // same corpus, same rules: vocab-bounded training IS merge-bounded
-    // training at numMerges = vocabSize - |alphabet|
-    assert(merges == Bpe.train(df, "text", numMerges = 15 - base.size))
-    // below-alphabet target is a loud error, not a truncated alphabet
-    intercept[IllegalArgumentException] {
-      Bpe.trainVocab(df, "text", vocabSize = base.size - 1)
-    }
-  }
-
   test("byte-level fallback: encoding is total (no OOV), in-alphabet text " +
     "encodes like the plain form, and out-of-alphabet chars count their " +
     "UTF-8 bytes") {

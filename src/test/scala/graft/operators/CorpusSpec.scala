@@ -266,35 +266,6 @@ class CorpusSpec extends SparkSpec {
     assert(a == b, "mixture keep set changed under repartitioning")
   }
 
-  test("approx quality-quantile gate tracks the exact per-language rank " +
-    "gate within its declared error") {
-    import spark.implicits._
-    val docs = graft.Tables.load(spark, "/root/testdata/sf0.01", "documents")
-    val n = docs.count()
-    val kept = Corpus.qualityQuantileGate(docs, "lang", "text",
-      keepFraction = 0.5, relErr = 0.01)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-
-    // exact truth: percent_rank <= 0.5 per language (the oracled
-    // q_quality_quantile shape)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"lang")
-      .orderBy(graft.functions.TextFunctions.qualityScore($"text").desc, $"doc_id")
-    val exact = docs
-      .withColumn("pr", percent_rank().over(w)).where($"pr" <= 0.5)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-
-    // every exact-kept doc above the tie boundary must survive; the approx
-    // gate may only add boundary-tie docs, never drop clear keepers.
-    // Symmetric-difference bound: ties at the threshold + relErr rank slop
-    val disagree = (kept diff exact).size + (exact diff kept).size
-    assert(disagree <= 0.15 * n,
-      s"approx gate diverges from exact rank gate: $disagree of $n differ")
-    // and it kept roughly the asked fraction
-    assert(math.abs(kept.size - 0.5 * n) <= 0.15 * n,
-      s"kept ${kept.size} of $n for keepFraction=0.5")
-  }
-
   test("mixture sampling edge cases: near-1.0 rate keeps ~all (hex clamp), " +
     "NULL ids fail closed in rated sources, NULL source passes as unlisted") {
     import spark.implicits._
@@ -319,16 +290,15 @@ class CorpusSpec extends SparkSpec {
       s"unlisted/null-source rows must pass untouched: $got")
   }
 
-  test("budget select keeps the exact quality-ranked prefix per source; " +
-    "budget gate never exceeds a budget and matches exact when bins resolve") {
+  test("budget select keeps the exact quality-ranked prefix per source " +
+    "and a zero budget empties the source") {
     import spark.implicits._
     val rows = Seq(
       // source A, budget 70: cum 40, 70, 100, 110 → keep ids 1, 2 only
       (1L, Option("A"), 40, 0.9), (2L, Option("A"), 30, 0.8),
       (3L, Option("A"), 30, 0.7), (4L, Option("A"), 10, 0.6),
-      // source C, budget 100, all-equal quality (one bin, mass 150):
-      // exact form keeps the id-ordered prefix; histogram form can't split
-      // the bin → keeps nothing (fail-closed, documented)
+      // source C, budget 100, all-equal quality (mass 150): the id order
+      // breaks the tie, so the kept prefix is ids 7, 8
       (7L, Option("C"), 50, 0.5), (8L, Option("C"), 50, 0.5),
       (9L, Option("C"), 50, 0.5),
       (5L, Option("B"), 10, 0.5),              // unlisted source → kept
@@ -339,65 +309,10 @@ class CorpusSpec extends SparkSpec {
     val sel = Corpus.budgetSelect(rows, "id", "src", "toks", "q", budgets)
       .collect().map(_.getLong(0)).toSet
     assert(sel === Set(1L, 2L, 7L, 8L, 5L, 6L)) // C: 50+50 fits, third doesn't
-    val gate = Corpus.budgetGate(rows, "src", "toks", "q", budgets)
-    val gateIds = gate.collect().map(_.getLong(0)).toSet
-    // A's qualities land in distinct bins → exact agreement; C collapses
-    // to one un-splittable bin → dropped wholesale, never overfilled
-    assert(gateIds === Set(1L, 2L, 5L, 6L))
-    // the hard invariant: no budgeted source exceeds its budget
-    val bylSrc = gate.where($"src".isNotNull).groupBy("src").sum("toks")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    budgets.foreach { case (s, b) =>
-      assert(bylSrc.getOrElse(s, 0L) <= b, s"source $s over budget")
-    }
-    // zero budget empties the source in both forms
+    // zero budget empties the source
     val z = Map("A" -> 0L)
     assert(!Corpus.budgetSelect(rows, "id", "src", "toks", "q", z)
       .collect().map(_.getLong(0)).toSet.exists(Set(1L, 2L, 3L, 4L)))
-    assert(!Corpus.budgetGate(rows, "src", "toks", "q", z)
-      .collect().map(_.getLong(0)).toSet.exists(Set(1L, 2L, 3L, 4L)))
-  }
-
-  test("quality-quantile gate: NULL-lang docs form their own group instead " +
-    "of being silently dropped, and relErr is validated") {
-    import spark.implicits._
-    val good = "the cat and the dog is of a house in the town and it is " +
-      "nice to see the garden of the house in the morning light"
-    val rows = (0L until 20L).map(i =>
-      (i, Option.when(i < 10)("en"), if (i % 2 == 0) good else "1234 5678"))
-      .toDF("doc_id", "lang", "text")
-    // keepFraction 0.3 puts the 0.7-quantile threshold strictly inside the
-    // good-quality tie class (5 good / 5 zero-quality per group), away from
-    // the approx sketch's boundary ambiguity at 0.5
-    val kept = Corpus.qualityQuantileGate(rows, "lang", "text",
-      keepFraction = 0.3, relErr = 0.1)
-      .collect().map(r => (r.getLong(0), Option(r.getString(1)))).toSet
-    // the 5 high-quality NULL-lang docs must survive their own group's gate
-    val keptNull = kept.filter(_._2.isEmpty).map(_._1)
-    assert(keptNull.nonEmpty, "every NULL-lang doc was dropped")
-    assert(keptNull.forall(_ % 2 == 0), "a low-quality NULL-lang doc passed")
-    intercept[IllegalArgumentException] {
-      Corpus.qualityQuantileGate(rows, "lang", "text",
-        keepFraction = 0.5, relErr = 0.0)
-    }
-  }
-
-  test("temperature weights: size-preserving, monotone toward uniform, " +
-    "identity at alpha = 1") {
-    val counts = Map("a" -> 900L, "b" -> 90L, "c" -> 10L)
-    val r = Corpus.temperatureWeights(counts, alpha = 0.5)
-    // expected output size preserved: sum r_s * n_s == N
-    val total = counts.map { case (s, n) => r(s) * n }.sum
-    assert(math.abs(total - 1000.0) < 1e-9, s"size drifted: $total")
-    // rarer sources get larger repeat factors, dominant source shrinks
-    assert(r("c") > r("b") && r("b") > r("a"))
-    assert(r("a") < 1.0 && r("c") > 1.0)
-    // alpha = 1 is the natural distribution: every factor ~1
-    val id = Corpus.temperatureWeights(counts, alpha = 1.0)
-    id.values.foreach(v => assert(math.abs(v - 1.0) < 1e-12))
-    intercept[IllegalArgumentException] {
-      Corpus.temperatureWeights(counts, alpha = 0.0)
-    }
   }
 
   test("weighted repeat: exact integer factors, stochastic fraction is " +
