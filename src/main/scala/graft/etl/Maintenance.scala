@@ -90,16 +90,11 @@ object Maintenance {
         graft.functions.Exact.sum12(col("value")).as("sum_value"))
   }
 
-  /** Full (re)build of the at-rest monthly rollup. */
-  def writeMonthlyRollup(events: DataFrame, outDir: String): Unit =
-    monthlyRollup(events).write.mode("overwrite").partitionBy("month").parquet(outDir)
-
   /** Incremental rollup refresh — the daily-maintenance pattern a 100 TB
     * warehouse actually runs: late/new facts touch a handful of months, so
-    * recompute ONLY those partitions and swap them in with DYNAMIC partition
-    * overwrite (static overwrite mode would delete every untouched month on
-    * the way in; full rebuild would re-aggregate the whole history for a
-    * day's delta).
+    * recompute ONLY those partitions and commit them through the manifest
+    * (a full rebuild would re-aggregate the whole history for a day's
+    * delta). On an empty store the first call IS the full build.
     *
     * Caller contract: `monthsSlice` is the COMPLETE current fact data for
     * every month it contains (partition replacement is all-or-nothing per
@@ -109,52 +104,20 @@ object Maintenance {
     *
     * @return the month partition values that were rewritten
     */
-  def refreshMonthlyRollup(monthsSlice: DataFrame, outDir: String): Seq[String] = {
+  def refreshMonthlyRollup(monthsSlice: DataFrame, storeDir: String): Seq[String] = {
     // the rollup is one row per (month, event_type) — tiny — but its INPUT
     // is the delta scan+shuffle; persist so the touched-months collect and
     // the write share one aggregation instead of re-running it
     val rollup = monthlyRollup(monthsSlice).persist()
     try {
       val touched = rollup.select("month").distinct()
-        .collect().map(_.getString(0)).toSeq.sorted
-      writeDynamic(rollup, "month", outDir)
-      touched
+        .collect().map(_.get(0)).toSeq
+      if (touched.isEmpty) Nil
+      else stageAndCommitPartitions(monthsSlice.sparkSession, rollup, "month",
+        storeDir, touched)
     } finally rollup.unpersist(blocking = false)
   }
 
-  /** General MERGE-shaped keyed upsert into a partitioned parquet store:
-    * rows whose `keyCols` appear in `updates` are replaced, other keys in
-    * the same partitions are carried over, and partitions absent from
-    * `updates` keep their exact files (dynamic partition overwrite). The
-    * production maintenance pattern over any partition axis — month, date,
-    * scenario — with the same caller contract everywhere: `updates` rows
-    * are COMPLETE current values for their keys (not deltas), so
-    * re-applying the same batch writes the same bytes and the upsert is
-    * IDEMPOTENT for replays that arrive AFTER a successful commit — which
-    * is what makes foreachBatch's at-least-once redelivery safe on a
-    * plain-parquet store. The commit itself is NOT crash-atomic on plain
-    * parquet: dynamic overwrite clears each touched partition before the
-    * staged files move in, so a crash inside that window can lose carried
-    * rows for keys absent from the replayed batch (the merge source dies
-    * with the driver). Production durability around the commit window
-    * needs an ACID table format or a write-to-temp-then-swap layout on
-    * top; this operator's contract is clean-replay idempotence, not
-    * mid-commit crash recovery.
-    *
-    * `partitionCol` must be one of `keyCols` (enforced) so a key's
-    * replacement lands in the same partition it is carried from; a caller
-    * whose partition axis is merely functionally determined by the key
-    * (e.g. month derived from a date key) derives it into the key set
-    * first.
-    *
-    * The merged slice is eagerly `localCheckpoint`ed BEFORE the dynamic
-    * overwrite: the merge reads the very partitions the write replaces, so
-    * a lazily-evaluated plan would scan files the overwrite just deleted
-    * (checkpoint-not-cache: a cache under memory pressure would silently
-    * recompute from the deleted files; a lost checkpoint fails loudly).
-    *
-    * @return the touched partition values (as strings), sorted
-    */
   /** Partition-pruning predicate over the touched partition values. NOT a
     * bare `isin`: NULL partition values are legal (they land in
     * __HIVE_DEFAULT_PARTITION__) and `isin` never matches NULL — a bare
@@ -181,65 +144,10 @@ object Maintenance {
     slice.join(upKeys, cond, "left_anti")
   }
 
-  def upsert(updates: DataFrame, keyCols: Seq[String], partitionCol: String,
-      outDir: String): Seq[String] = {
-    require(keyCols.nonEmpty, "keyCols must be non-empty")
-    // a partition axis outside the key silently duplicates moved keys: the
-    // old row of a key whose partition value changed sits in a partition
-    // that is neither read (isin on touched) nor overwritten (dynamic
-    // mode), so it survives alongside the replacement. Direct membership is
-    // the only contract this store can check cheaply — a caller with a
-    // partition column merely FUNCTIONALLY determined by the key must
-    // derive it into the key set instead.
-    require(keyCols.contains(partitionCol),
-      s"partitionCol '$partitionCol' must be one of keyCols " +
-        s"${keyCols.mkString("[", ", ", "]")} — otherwise a key that moves " +
-        "partitions leaves its old row behind as a silent duplicate")
-    val spark = updates.sparkSession
-    val up = updates.persist()
-    try {
-      // raw values for the pruning filter (isin on the column's real type);
-      // strings only for the caller-facing report
-      val touched = up.select(partitionCol).distinct()
-        .collect().map(_.get(0)).toSeq
-      if (touched.isEmpty) Nil
-      else {
-        // only a store with NO committed data (first write, or a crashed
-        // first write that left just _temporary behind) may read as empty;
-        // any other read failure must propagate — a swallowed transient
-        // error here would rewrite the touched partitions with ONLY the
-        // updated keys, silently deleting every carried row. fs.exists
-        // alone is the wrong probe: a dir with zero committed footers
-        // exists but throws UNABLE_TO_INFER_SCHEMA forever, a permanent
-        // crash loop.
-        val outPath = new org.apache.hadoop.fs.Path(outDir)
-        val fs = outPath.getFileSystem(spark.sessionState.newHadoopConf())
-        val existing =
-          if (!fs.exists(outPath)) None
-          else scala.util.Try(spark.read.parquet(outDir)) match {
-            case scala.util.Success(df) =>
-              Some(df.where(touchedFilter(partitionCol, touched)))
-            case scala.util.Failure(e: org.apache.spark.sql.AnalysisException)
-                if e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") => None
-            case scala.util.Failure(e) => throw e
-          }
-        val carried = existing.fold(up.limit(0))(antiJoinKeys(_, up, keyCols))
-        val merged = carried.unionByName(up).localCheckpoint(true)
-        writeDynamic(merged, partitionCol, outDir)
-        // report in the axis' NATURAL order, not lexicographic on the
-        // stringified form (which would order numeric partitions 10 < 2);
-        // nulls — the __HIVE_DEFAULT_PARTITION__ rows — sort first
-        val (nulls, vals) = touched.partition(_ == null)
-        (nulls ++ vals.sortWith((a, b) =>
-          a.asInstanceOf[Comparable[Any]].compareTo(b) < 0))
-          .map(String.valueOf)
-      }
-    } finally up.unpersist(blocking = false)
-  }
-
   // -------------------------------------------------------------------
-  // Manifest-committed store: closes [[upsert]]'s documented commit-window
-  // caveat. Layout:
+  // Manifest-committed store: the one commit protocol for every mutable
+  // at-rest store (keyed facts, snapshots, rollups, the IVF index).
+  // Layout:
   //
   //   store/data/<partCol>=<val>/part-*.parquet   (append-only data files)
   //   store/_manifest/v00000001.txt               (one live-file path per line)
@@ -249,16 +157,14 @@ object Maintenance {
   // only ever APPEND data files (never delete or rewrite), so a reader that
   // resolved manifest version N keeps reading version N's files undisturbed
   // while a writer stages version N+1 — mid-upsert it sees the complete old
-  // content, after the rename the complete new content, never a mix (the
-  // plain-parquet dynamic overwrite, by contrast, clears a touched
-  // partition before its replacement lands). Unreferenced files accumulate
-  // until [[vacuumManifested]]. Single-maintainer contract: one writer at a
-  // time (the version-rename refuses to overwrite, so a concurrent writer
-  // fails loudly rather than corrupting); rename atomicity holds on
-  // HDFS-like filesystems — an S3 deployment swaps this for a conditional
-  // PUT. This is the write-to-temp-then-swap layout the [[upsert]] scaladoc
-  // points to, kept dependency-free; a production deployment with an ACID
-  // table format available uses that instead.
+  // content, after the rename the complete new content, never a mix.
+  // Unreferenced files accumulate until [[vacuumManifested]].
+  // Single-maintainer contract: one writer at a time (the version-rename
+  // refuses to overwrite, so a concurrent writer fails loudly rather than
+  // corrupting); rename atomicity holds on HDFS-like filesystems — an S3
+  // deployment swaps this for a conditional PUT. This is the file-list-log
+  // design of Delta Lake kept dependency-free; a production deployment
+  // with an ACID table format available uses that instead.
   // -------------------------------------------------------------------
 
   private[graft] def fsFor(spark: SparkSession, dir: String) = {
@@ -277,7 +183,9 @@ object Maintenance {
       .collect { case manifestRe(v) => v.toLong }
       .foldLeft(0L)(math.max)
 
-  /** Live data files (absolute paths) per the latest committed manifest. */
+  /** Live data files (as `$storeDir/data/…` paths) per the latest committed
+    * manifest.
+    */
   private[graft] def liveFiles(spark: SparkSession, storeDir: String): Seq[String] = {
     val (fs, _) = fsFor(spark, storeDir)
     val mdir = new org.apache.hadoop.fs.Path(s"$storeDir/_manifest")
@@ -299,7 +207,9 @@ object Maintenance {
     val dataPath = new org.apache.hadoop.fs.Path(s"$storeDir/data")
     if (!fs.exists(dataPath)) Set.empty
     else {
-      val base = dataPath.toUri.getPath
+      // qualified: listed paths are absolute, so a relative storeDir's
+      // prefix would strip nothing and liveFiles would nest it twice
+      val base = fs.makeQualified(dataPath).toUri.getPath
       val out = Set.newBuilder[String]
       val it = fs.listFiles(dataPath, true)
       while (it.hasNext) {
@@ -323,13 +233,27 @@ object Maintenance {
     spark.read.option("basePath", s"$storeDir/data").parquet(files: _*)
   }
 
-  /** [[upsert]] semantics (complete-values keyed MERGE, partition-pruned
-    * carry) with a crash-atomic commit: stage the touched partitions'
-    * replacement files as appends, then publish them with one manifest
-    * rename. A crash anywhere before the rename leaves the previous version
-    * fully intact (the orphaned staged files are invisible and reclaimed by
-    * [[vacuumManifested]]); replaying the same batch after a successful
-    * commit rewrites the same logical content (new files, same rows).
+  /** General MERGE-shaped keyed upsert into a manifest-committed store:
+    * rows whose `keyCols` appear in `updates` are replaced, other keys in
+    * the same partitions are carried over, and partitions absent from
+    * `updates` keep their exact files. The production maintenance pattern
+    * over any partition axis — month, date, scenario — with the same caller
+    * contract everywhere: `updates` rows are COMPLETE current values for
+    * their keys (not deltas), so re-applying the same batch commits the
+    * same rows and the upsert is IDEMPOTENT under at-least-once replay.
+    *
+    * `partitionCol` must be one of `keyCols` (enforced): a key whose
+    * partition value changed would otherwise leave its old row in a
+    * partition that is neither read nor replaced, a silent duplicate. A
+    * caller whose partition axis is merely functionally determined by the
+    * key (e.g. month derived from a date key) derives it into the key set
+    * first.
+    *
+    * The commit is crash-atomic: the touched partitions' replacement files
+    * are staged as appends and published with one manifest rename. A crash
+    * anywhere before the rename leaves the previous version fully intact
+    * (the orphaned staged files are invisible and reclaimed by
+    * [[vacuumManifested]]).
     *
     * @return the touched partition values (as strings), in natural order
     */
@@ -347,9 +271,6 @@ object Maintenance {
         .collect().map(_.get(0)).toSeq
       if (touched.isEmpty) Nil
       else {
-        val (fs, _) = fsFor(spark, storeDir)
-        val mdir = new org.apache.hadoop.fs.Path(s"$storeDir/_manifest")
-        val version = latestManifestVersion(fs, mdir)
         val live = liveFiles(spark, storeDir)
         val carried =
           if (live.isEmpty) up.limit(0)
@@ -443,7 +364,9 @@ object Maintenance {
     } finally ch.unpersist(blocking = false)
   }
 
-  /** Shared commit tail of [[upsertManifested]] / [[applyCdcManifested]]:
+  /** Shared commit tail of every manifest mutation ([[upsertManifested]],
+    * [[applyCdcManifested]], [[rebuildPartitionsManifested]],
+    * [[refreshMonthlyRollup]]):
     * stage `content` (the full replacement rows of exactly the `touched`
     * partitions) as APPEND-only files — the files the current manifest
     * references are never touched — then publish ONE new manifest where
@@ -473,6 +396,9 @@ object Maintenance {
     val next = (kept ++ staged).sorted
 
     publishManifest(fs, mdir, version, next, storeDir)
+    // report in the axis' NATURAL order, not lexicographic on the
+    // stringified form (which would order numeric partitions 10 < 2);
+    // nulls — the __HIVE_DEFAULT_PARTITION__ rows — sort first
     val (nulls, vals) = touched.partition(_ == null)
     (nulls ++ vals.sortWith((a, b) =>
       a.asInstanceOf[Comparable[Any]].compareTo(b) < 0))
@@ -546,7 +472,7 @@ object Maintenance {
       }
     }
     // IVF stores pair each manifest version with a `centroids_vNNNNNNNN`
-    // sidecar dir ([[graft.operators.Ivf]]'s fence); superseded versions
+    // sidecar dir ([[graft.operators.Ivf]]'s layout); superseded versions
     // and crashed-attempt temps are orphans exactly like old manifests
     // (r16, ADVICE r15 — they previously accumulated unboundedly). Other
     // stores have no such dirs — the match is simply empty there. A
@@ -594,41 +520,6 @@ object Maintenance {
     }
   }
 
-  /** Dynamic partition overwrite of a partitioned parquet dir: only the
-    * partitions present in `df` are replaced (static overwrite mode would
-    * delete every other partition on the way in). The mode is set as a
-    * per-WRITER option, never by toggling the session conf: a set/restore
-    * around the write races every concurrent writer in the session — the
-    * restore landing mid-flight would flip another upsert to static mode,
-    * which deletes every partition that writer doesn't carry.
-    */
-  /** Slowly-changing-dimension Type-2 merge: fold an update batch into a
-    * versioned dimension, preserving full attribute history. `current`
-    * carries the dimension with its version columns (`validFromCol`,
-    * `validToCol`, `isCurrentCol`); `updates` carries the same key +
-    * attribute columns plus `effTsCol`, the observation time.
-    *
-    * Semantics (all deterministic, all window-expressible — the batch twin
-    * `q_scd2` sits under the full DuckDB oracle):
-    *   - CLOSED history rows (valid_to set) pass through with only the
-    *     is_current flag normalized to false;
-    *   - open rows and updates stack per key, ordered by
-    *     (ts, attrs) — the attr tie-break makes equal-timestamp batches
-    *     reproducible instead of shuffle-dependent;
-    *   - an update whose attributes null-safely equal its predecessor's is
-    *     a NO-OP (dropped — re-observing an unchanged row must not cut a
-    *     version; equality is transitive, so comparing against the
-    *     immediate physical predecessor compresses whole unchanged runs);
-    *   - each surviving version closes at the next one's start:
-    *     `valid_to = lead(valid_from)`, open-ended ⇒ current;
-    *   - unknown keys in `updates` insert their first version.
-    *
-    * Scale shape: ONE shuffle, keyed on the dimension key (two window
-    * passes over the same partitioning — Catalyst plans one Exchange); the
-    * closed-row leg is a pass-through union. Dimensions are the small side
-    * of a star by construction, so the key window is never the job's
-    * bottleneck; history length per key only grows the partition linearly.
-    */
   /** Keyed diff between two corpus snapshots: per key, is the row `added`,
     * `removed`, `changed`, or `unchanged` from `prev` to `next`?
     *
@@ -670,6 +561,33 @@ object Maintenance {
           .otherwise("unchanged").as("status"): _*)
   }
 
+  /** Slowly-changing-dimension Type-2 merge: fold an update batch into a
+    * versioned dimension, preserving full attribute history. `current`
+    * carries the dimension with its version columns (`validFromCol`,
+    * `validToCol`, `isCurrentCol`); `updates` carries the same key +
+    * attribute columns plus `effTsCol`, the observation time.
+    *
+    * Semantics (all deterministic, all window-expressible — the batch twin
+    * `q_scd2` sits under the full DuckDB oracle):
+    *   - CLOSED history rows (valid_to set) pass through with only the
+    *     is_current flag normalized to false;
+    *   - open rows and updates stack per key, ordered by
+    *     (ts, attrs) — the attr tie-break makes equal-timestamp batches
+    *     reproducible instead of shuffle-dependent;
+    *   - an update whose attributes null-safely equal its predecessor's is
+    *     a NO-OP (dropped — re-observing an unchanged row must not cut a
+    *     version; equality is transitive, so comparing against the
+    *     immediate physical predecessor compresses whole unchanged runs);
+    *   - each surviving version closes at the next one's start:
+    *     `valid_to = lead(valid_from)`, open-ended ⇒ current;
+    *   - unknown keys in `updates` insert their first version.
+    *
+    * Scale shape: ONE shuffle, keyed on the dimension key (two window
+    * passes over the same partitioning — Catalyst plans one Exchange); the
+    * closed-row leg is a pass-through union. Dimensions are the small side
+    * of a star by construction, so the key window is never the job's
+    * bottleneck; history length per key only grows the partition linearly.
+    */
   def scdMerge(current: DataFrame, updates: DataFrame, keyCols: Seq[String],
       attrCols: Seq[String], effTsCol: String,
       validFromCol: String = "valid_from", validToCol: String = "valid_to",
@@ -713,7 +631,7 @@ object Maintenance {
     * deliberately synonymous — change feeds routinely misreport one as the
     * other around retries, and latest-complete-row-wins makes replay
     * idempotent (re-applying the same batch is a no-op, same contract as
-    * [[upsert]]). Anything that is not a literal `"D"` — including a NULL
+    * [[upsertManifested]]). Anything that is not a literal `"D"` — including a NULL
     * or unrecognized op — applies as an upsert: a malformed feed row must
     * never silently DELETE data.
     *
@@ -744,10 +662,4 @@ object Maintenance {
       .select((keyCols ++ attrCols).map(col): _*)
     untouched.unionByName(applied)
   }
-
-  private def writeDynamic(df: DataFrame, partitionCol: String,
-      outDir: String): Unit =
-    df.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCol).parquet(outDir)
 }

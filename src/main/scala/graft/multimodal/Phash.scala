@@ -5,16 +5,12 @@ import java.awt.image.BufferedImage
 /** Perceptual image hashes over decoded pixels — the dedup keys for a media
   * corpus, where byte-identical hashing ([[graft.operators.Dedup]]'s text
   * paths, the PCM hash) misses re-encoded / resized / slightly-edited
-  * copies of one image:
+  * copies of one image. '''aHash''' (average hash) area-averages the
+  * image to an 8×8 grayscale grid and sets bit i when cell i is brighter
+  * than the grid mean — robust to re-encoding and uniform brightness
+  * scaling.
   *
-  *   - '''aHash''' (average hash): area-average the image to an 8×8
-  *     grayscale grid, set bit i when cell i is brighter than the grid
-  *     mean — robust to re-encoding and uniform brightness scaling;
-  *   - '''dHash''' (difference hash): 9×8 grid, set bit when a cell is
-  *     brighter than its left neighbour — robust additionally to global
-  *     brightness SHIFTS (the comparison is relative, the mean never enters).
-  *
-  * Both are 64-bit, so near-duplicate search is Hamming distance over
+  * The hash is 64-bit, so near-duplicate search is Hamming distance over
   * longs and reuses the SimHash machinery verbatim: band the hash into
   * 4×16-bit chunks, bucket-join on any equal chunk (pigeonhole: distance
   * ≤ d flips at most d chunks, so pairs within radius 3 ALWAYS share a
@@ -79,31 +75,11 @@ object Phash {
     h
   }
 
-  /** 64-bit difference hash: 9×8 grid, bit (y·8 + x) set iff cell (x+1, y)
-    * is strictly brighter than cell (x, y).
-    */
-  def dHash(img: BufferedImage): Long = {
-    val g = grayGrid(img, 9, 8)
-    var h = 0L; var y = 0
-    while (y < 8) {
-      var x = 0
-      while (x < 8) {
-        if (g(y * 9 + x + 1) > g(y * 9 + x)) h |= 1L << (y * 8 + x)
-        x += 1
-      }
-      y += 1
-    }
-    h
-  }
-
-  /** Decode-then-hash entries for payload bytes; None when no JVM reader
+  /** Decode-then-hash entry for payload bytes; None when no JVM reader
     * claims the container (the [[Multimodal]] NULL-not-garbage convention).
     */
   def aHashBytes(bytes: Array[Byte]): Option[Long] =
     Codecs.decodeImage(bytes).map(aHash)
-
-  def dHashBytes(bytes: Array[Byte]): Option[Long] =
-    Codecs.decodeImage(bytes).map(dHash)
 
   /** 64-bit band-energy audio fingerprint — the aHash idea applied to PCM
     * (the chromaprint/echoprint family reduced to its loudness-envelope

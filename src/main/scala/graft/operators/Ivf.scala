@@ -182,12 +182,13 @@ object Ivf {
     corpus.withColumn("cluster", assignExpr(col(vecCol), model.centroids))
 
   /** Materialize the IVF index at rest — the train-once/probe-many split a
-    * serving path needs:
-    * `path`/data holds the corpus `partitionBy("cluster")` so a probe is a
-    * partition-pruned scan of ~nProbe/k of the data, and `path`/centroids
-    * holds the k×dims centroid matrix so probing never re-trains.
-    * Malformed vectors (NULL cluster) are excluded — they can never be
-    * probed (nearestClusters returns real ids) and a `cluster=__HIVE_DEFAULT
+    * serving path needs: `path`/data holds the corpus
+    * `partitionBy("cluster")` so a probe is a partition-pruned scan of
+    * ~nProbe/k of the data, and the version-paired centroid sidecar holds
+    * the k×dims centroid matrix so probing never re-trains. The build is
+    * published as manifest version 1 (see the section below). Malformed
+    * vectors (NULL cluster) are excluded — they can never be probed
+    * (nearestClusters returns real ids) and a `cluster=__HIVE_DEFAULT`
     * partition would poison partition pruning.
     */
   def writeClustered(corpus: DataFrame, idCol: String, vecCol: String,
@@ -196,75 +197,70 @@ object Ivf {
       .where(col("cluster").isNotNull)
       .write.mode("overwrite").partitionBy("cluster").parquet(s"$path/data")
     val spark = corpus.sparkSession
+    // The overwrite deleted every file an earlier manifest listed: drop it
+    // and every sidecar, then publish the new build as v1. A kill before
+    // the publish leaves NO committed version, so readers fail loudly
+    // instead of serving half a corpus; a full rebuild is not crash-atomic
+    // — rerunning writeClustered is its recovery, as with any
+    // mode("overwrite") write.
+    val (fs, root) = Maintenance.fsFor(spark, path)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$path/_manifest"), true)
+    fs.listStatus(root).foreach { st =>
+      if (st.getPath.getName.startsWith("centroids")) fs.delete(st.getPath, true)
+    }
+    val files = Maintenance.dataFilesOnDisk(spark, path).toSeq.sorted
+    require(files.nonEmpty, s"no IVF data written at $path/data")
     // member counts for the sidecar ([[refresh]]'s incremental-mean weights):
     // read back ONLY the partition column — a footer-metadata count, zero
     // data columns scanned
     val counts = new Array[Long](model.k)
-    spark.read.parquet(s"$path/data")
+    spark.read.option("basePath", s"$path/data")
+      .parquet(files.map(f => s"$path/data/$f"): _*)
       .groupBy(col("cluster")).count().collect()
       .foreach(r => counts(r.getInt(0)) = r.getLong(1))
-    writeCentroids(spark, model.centroids, counts, path)
-    // A full rebuild RESETS any retraction fence ([[removeKeyed]]) — the
-    // data overwrite above already deleted the fenced files, so a stale
-    // manifest would point at nothing; drop it and the versioned sidecars
-    // LAST so a crash mid-rebuild fails loudly (fenced readers see missing
-    // files) instead of silently serving half a corpus. A full rebuild is
-    // not crash-atomic — rerunning writeClustered is its recovery, as with
-    // any mode("overwrite") write.
-    val (fs, _) = Maintenance.fsFor(spark, path)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/_manifest"), true)
-    val root = new org.apache.hadoop.fs.Path(path)
-    if (fs.exists(root)) fs.listStatus(root).foreach { st =>
-      if (st.getPath.getName.startsWith("centroids_v"))
-        fs.delete(st.getPath, true)
-    }
+    commitVersion(spark, path, model.centroids, counts, files, Set.empty)
   }
 
-  // ---- retraction fence (r15, VERDICT r14 #1) --------------------------
+  // ---- manifest-committed layout (r15, VERDICT r14 #1) -----------------
   //
-  // A plain [[writeClustered]] layout can only ever GROW (refresh appends);
-  // retraction needs to REWRITE the touched cluster partitions, and a
-  // rewrite on a bare directory has an unavoidable crash window (partition
-  // deleted, replacement not yet visible). [[removeKeyed]] therefore
-  // upgrades the store, on first retraction, to the same manifest fence
-  // [[Maintenance]]'s stores use: `$path/_manifest/vNNNNNNNN.txt` lists the
-  // live data files, readers resolve through it, and every mutation commits
-  // with ONE atomic manifest rename. The centroid sidecar is VERSION-PAIRED
-  // (`centroids_vNNNNNNNN`, written BEFORE the manifest rename), so data
-  // view and sidecar always advance together: a kill anywhere inside a
-  // mutation leaves the previous version fully consistent — both halves —
-  // and a replay-from-the-top recomputes identical content with no heal
-  // logic. A store that never retracts keeps the plain layout unchanged.
-
-  /** Latest fence version of an index store; 0 = plain (unfenced) layout. */
-  private def fenceVersion(spark: SparkSession, path: String): Long =
-    Maintenance.manifestVersion(spark, path)
+  // An index store uses the same manifest [[Maintenance]]'s stores use:
+  // `$path/_manifest/vNNNNNNNN.txt` lists the live data files, readers
+  // resolve through it, and every mutation — build, refresh, retraction —
+  // commits with ONE atomic manifest rename. Retraction REWRITES the
+  // touched cluster partitions, and a rewrite on a bare directory has an
+  // unavoidable crash window; staged files that no manifest lists have
+  // none. The centroid sidecar is VERSION-PAIRED (`centroids_vNNNNNNNN`,
+  // written BEFORE the manifest rename), so data view and sidecar always
+  // advance together: a kill anywhere inside a mutation leaves the
+  // previous version fully consistent — both halves — and a
+  // replay-from-the-top recomputes identical content with no heal logic.
 
   private def sidecarPath(path: String, version: Long): String =
-    if (version == 0L) s"$path/centroids"
-    else f"$path/centroids_v$version%08d"
+    f"$path/centroids_v$version%08d"
 
-  /** Read the index corpus — manifest-fenced when the store has been
-    * through a retraction, plain directory listing otherwise. Every probe
+  /** Sidecar of the latest committed version. */
+  private def currentSidecar(spark: SparkSession, path: String): String = {
+    val v = Maintenance.manifestVersion(spark, path)
+    require(v > 0L, s"no IVF index committed at $path — build it with writeClustered")
+    sidecarPath(path, v)
+  }
+
+  /** Read the index corpus as of its latest committed manifest. Every probe
     * and maintenance read resolves through this, so staged-but-uncommitted
     * files (a crashed mutation's orphans) are invisible by construction.
     */
   def readData(spark: SparkSession, path: String): DataFrame = {
-    val v = fenceVersion(spark, path)
-    if (v == 0L) spark.read.parquet(s"$path/data")
-    else {
-      val files = Maintenance.liveFiles(spark, path)
-      require(files.nonEmpty,
-        s"IVF index at $path is fenced (v$v) but lists no live files — " +
-          "every vector was retracted; rebuild with writeClustered")
-      spark.read.option("basePath", s"$path/data").parquet(files: _*)
-    }
+    val files = Maintenance.liveFiles(spark, path)
+    require(files.nonEmpty,
+      s"IVF index at $path lists no live files — not built, or every " +
+        "vector was retracted; rebuild with writeClustered")
+    spark.read.option("basePath", s"$path/data").parquet(files: _*)
   }
 
   /** Current sidecar as (centroids, member counts), version-resolved. */
   private def readSidecar(spark: SparkSession,
       path: String): (Array[Array[Float]], Array[Long]) = {
-    val sp = sidecarPath(path, fenceVersion(spark, path))
+    val sp = currentSidecar(spark, path)
     val side = spark.read.parquet(sp)
       .select(col("cluster"), col("centroid"), col("n_members")).collect()
     require(side.nonEmpty, s"no centroids at $sp")
@@ -278,9 +274,9 @@ object Ivf {
     (cents, counts)
   }
 
-  /** Commit a mutation against a FENCED store as the next version: write
-    * the version-paired sidecar first, then publish the manifest whose
-    * rename makes sidecar + data view visible atomically together. `staged`
+  /** Commit a mutation as the store's next version: write the
+    * version-paired sidecar first, then publish the manifest whose rename
+    * makes sidecar + data view visible atomically together. `staged`
     * are newly-written data files (relative paths) to add; partitions named
     * in `dropDirs` drop their previous files (their replacement content, if
     * any, is in `staged`).
@@ -297,7 +293,7 @@ object Ivf {
     * orphan-check-to-rename instant can still interleave; the
     * single-maintainer contract is what actually excludes that.
     */
-  private def commitFenced(spark: SparkSession, path: String,
+  private def commitVersion(spark: SparkSession, path: String,
       cents: Array[Array[Float]], counts: Array[Long],
       staged: Seq[String], dropDirs: Set[String]): Unit = {
     val (fs, _) = Maintenance.fsFor(spark, path)
@@ -324,13 +320,8 @@ object Ivf {
 
   /** Centroid sidecar: one tiny file of (cluster, centroid, n_members) —
     * n_members carries the weights [[refresh]] needs to fold new vectors
-    * into a centroid as an exact incremental mean. `version` > 0 writes the
-    * fence-paired sidecar ([[removeKeyed]] stores); 0 the plain one.
+    * into a centroid as an exact incremental mean.
     */
-  private def writeCentroids(spark: SparkSession, cents: Array[Array[Float]],
-      counts: Array[Long], path: String, version: Long = 0L): Unit =
-    writeCentroidsTo(spark, cents, counts, sidecarPath(path, version))
-
   private def writeCentroidsTo(spark: SparkSession, cents: Array[Array[Float]],
       counts: Array[Long], dir: String): Unit = {
     import spark.implicits._
@@ -355,25 +346,22 @@ object Ivf {
     *   2. recompute ONLY the touched centroids as the exact incremental mean
     *      `(n_old·c + Σ new members) / (n_old + n_new)` from one aggregation
     *      over the new rows (per-cluster count + per-dim sums — O(k×dims)
-    *      to the driver, like train), and rewrite the tiny sidecar.
+    *      to the driver, like train), and commit the tiny sidecar with them.
     *
-    * Probes immediately see the appended vectors. Centroid drift is bounded
-    * by construction (each refresh moves a centroid toward the true mean of
-    * its members), but old rows keep their original partition assignment —
-    * after MANY refreshes on a drifting corpus the assignment/centroid gap
-    * grows and recall decays toward the rebuild threshold; RecallSpec gates
-    * recall@20 after a 20% append, and a full [[train]]+[[writeClustered]]
-    * remains the reset. Crash between the append and the sidecar write
-    * leaves a probeable index (new rows visible, centroids one step stale) —
-    * re-running the refresh with the same docs would double-append, so
-    * callers retry at the pipeline level with a fresh copy of the failed
-    * batch, as with any at-least-once parquet append.
+    * The appended files stay invisible until the one manifest rename that
+    * also publishes the new sidecar, so a kill before it leaves the
+    * previous version intact; [[refreshKeyed]] is the replay-safe form to
+    * rerun. Centroid drift is bounded by construction (each refresh moves a
+    * centroid toward the true mean of its members), but old rows keep
+    * their original partition assignment — after MANY refreshes on a
+    * drifting corpus the assignment/centroid gap grows and recall decays
+    * toward the rebuild threshold; RecallSpec gates recall@20 after a 20%
+    * append, and a full [[train]]+[[writeClustered]] remains the reset.
     *
     * Returns the updated model.
     */
   def refresh(spark: SparkSession, path: String, vecCol: String,
       newDocs: DataFrame): Model = {
-    val fenceV = fenceVersion(spark, path)
     val (cents, counts) = readSidecar(spark, path)
     val model = Model(cents)
     val dims = cents.head.length
@@ -385,12 +373,7 @@ object Ivf {
       .select(newDocs.columns.toIndexedSeq.map(col) :+ col("cluster"): _*)
       .persist()
     try {
-      // on a FENCED store the appended files stay invisible until the
-      // commitFenced publish below — which upgrades refresh's documented
-      // at-least-once append to an atomic commit (a crash before the
-      // publish leaves the previous version intact and replayable)
-      val before =
-        if (fenceV > 0) Maintenance.dataFilesOnDisk(spark, path) else Set.empty[String]
+      val before = Maintenance.dataFilesOnDisk(spark, path)
       assigned.write.mode("append").partitionBy("cluster").parquet(s"$path/data")
       val aggs = count(lit(1)).as("n_new") +:
         (0 until dims).map(j =>
@@ -407,106 +390,44 @@ object Ivf {
         }
         counts(c) = tot
       }
-      if (fenceV > 0) {
-        val staged = (Maintenance.dataFilesOnDisk(spark, path) -- before)
-          .toSeq.sorted
-        commitFenced(spark, path, cents, counts, staged, Set.empty)
-      } else writeCentroids(spark, cents, counts, path)
+      val staged = (Maintenance.dataFilesOnDisk(spark, path) -- before)
+        .toSeq.sorted
+      commitVersion(spark, path, cents, counts, staged, Set.empty)
       Model(cents)
     } finally assigned.unpersist()
   }
 
   /** Replay-safe [[refresh]] (r11, the OPERATIONS.md step-6 idempotency
-    * gap): plain `refresh` is an at-least-once parquet append — re-running
-    * a crashed day's batch double-appends every vector. This variant keys
-    * the batch on `idCol`:
+    * gap): plain `refresh` appends the whole batch, so re-running a
+    * committed day's batch would double-append every vector. This variant
+    * keys the batch on `idCol` and anti-joins it against the ids ALREADY
+    * IN the committed index (an id-column-only scan — column pruning keeps
+    * vectors out of it); surviving rows take the normal append +
+    * incremental-mean path, and a batch with nothing fresh is a no-op.
     *
-    *   1. anti-join the batch against the ids ALREADY IN the index (an
-    *      id-column-only scan — column pruning keeps vectors out of it);
-    *      surviving rows take the normal append + incremental-mean path;
-    *   2. if any batch rows were dropped as already-present, the previous
-    *      run may have died INSIDE the crash window (rows appended, sidecar
-    *      not yet updated) — so the sidecar entries for the dropped rows'
-    *      clusters are RECOMPUTED exactly from the at-rest data
-    *      (partition-pruned to those clusters), healing a stale sidecar
-    *      instead of silently carrying it.
-    *
-    * Rerunning the same batch any number of times converges to exactly one
-    * copy of each vector and exact per-cluster counts/means for every
-    * touched cluster — the AT-REST fixed point. Note the heal recompute is
-    * the exact member mean, which can differ (bounded, one-time) from the
-    * single-successful-run sidecar value: plain refresh's incremental mean
-    * is anchored on the TRAINED centroid, which is generally not the member
-    * mean, so a replay that fires the heal branch moves the sidecar from
-    * the incremental estimate to the exact one and stays there (idempotent
-    * from the second run). Cost over plain refresh: one id-only index scan
-    * per refresh, plus a per-touched-cluster mean recompute ONLY on a
-    * replay that actually healed something.
+    * A killed refresh leaves only staged files that no manifest lists, so
+    * the rerun sees the whole batch as fresh and commits it once. Rerunning
+    * the same batch any number of times converges to exactly one copy of
+    * each vector and the single-run sidecar. Cost over plain refresh: one
+    * id-only index scan per refresh.
     */
   def refreshKeyed(spark: SparkSession, path: String, idCol: String,
       vecCol: String, newDocs: DataFrame): Model = {
-    val existingIds = readData(spark, path).select(col(idCol))
-    // eager localCheckpoint, not persist: the anti-join READS the very
-    // layout the refresh is about to APPEND to — any lazy recomputation
-    // after the append would see its own output and dedup everything
-    // (the Maintenance.upsert merge-hazard rule); checkpoint-not-cache so
-    // memory pressure fails loudly instead of silently recomputing
-    val fresh = newDocs.join(existingIds, Seq(idCol), "left_anti")
+    // eager localCheckpoint: the emptiness probe and the refresh share one
+    // anti-join instead of each re-running it
+    val fresh = newDocs
+      .join(readData(spark, path).select(col(idCol)), Seq(idCol), "left_anti")
       .localCheckpoint(true)
-    locally {
-      val nFresh = fresh.count()
-      val nBatch = newDocs.count()
-      val model =
-        if (nFresh > 0) refresh(spark, path, vecCol, fresh)
-        else loadModel(spark, path)
-      if (nFresh == nBatch) model
-      else {
-        // some batch rows were already present: heal the sidecar for their
-        // clusters from the at-rest data (exact per-cluster count + mean).
-        // The touched clusters come from the DATA's own partition column —
-        // re-assigning against current centroids could disagree with the
-        // assignment the crashed run actually wrote (centroids have moved)
-        val replayedIds = newDocs.select(col(idCol))
-          .join(fresh.select(col(idCol)), Seq(idCol), "left_anti")
-        val touched = readData(spark, path)
-          .join(replayedIds, Seq(idCol))
-          .select(col("cluster")).distinct().collect().map(_.getInt(0))
-        if (touched.isEmpty) model
-        else {
-          val dims = model.centroids.head.length
-          val aggs = count(lit(1)).as("n") +:
-            (0 until dims).map(j =>
-              avg(try_element_at(col(vecCol), lit(j + 1))).as(s"m$j"))
-          val stats = readData(spark, path)
-            .where(col("cluster").isin(touched.toIndexedSeq.map(Integer.valueOf): _*))
-            .groupBy(col("cluster")).agg(aggs.head, aggs.tail: _*)
-            .collect()
-          val (cents, counts) = readSidecar(spark, path)
-          stats.foreach { r =>
-            val c = r.getInt(0)
-            counts(c) = r.getLong(1)
-            cents(c) = Array.tabulate(dims)(j =>
-              if (r.isNullAt(j + 2)) 0.0f else r.getDouble(j + 2).toFloat)
-          }
-          // fenced store: the heal is a sidecar-only version bump (same
-          // live file set); plain store: the in-place sidecar overwrite
-          if (fenceVersion(spark, path) > 0)
-            commitFenced(spark, path, cents, counts, Nil, Set.empty)
-          else writeCentroids(spark, cents, counts, path)
-          Model(cents)
-        }
-      }
-    }
+    if (fresh.isEmpty) loadModel(spark, path)
+    else refresh(spark, path, vecCol, fresh)
   }
 
   /** RETRACT vectors from a written index by id (r15, VERDICT r14 #1 — the
     * takedown/GDPR leg [[graft.etl.Maintenance.snapshotDiff]] removals
     * need: docs left the doc store and the near-dup band index, but the
-    * ANN index kept serving their vectors forever). Appends can share a
-    * directory; retraction cannot — it must REWRITE the touched cluster
-    * partitions — so the first removal upgrades the store to the manifest
-    * fence (see the fence section above) and every subsequent mutation
-    * commits atomically:
+    * ANN index kept serving their vectors forever). Retraction REWRITES
+    * the touched cluster partitions and commits them as the next manifest
+    * version (see the layout section above):
     *
     *   1. the touched clusters come from an (id, cluster)-only scan of the
     *      LIVE view joined to the removal ids — column-pruned, the vectors
@@ -514,8 +435,7 @@ object Ivf {
     *   2. each touched cluster's SURVIVING rows are staged as new files
     *      (append-only — the live files are never modified), and their
     *      exact member count + mean are recomputed from that same staged
-    *      relation (one aggregation, O(k×dims) to the driver) — the same
-    *      at-rest fixed point [[refreshKeyed]]'s heal converges to. A
+    *      relation (one aggregation, O(k×dims) to the driver). A
     *      cluster emptied by the removal keeps its old centroid at
     *      n_members = 0 (the [[train]] empty-cluster convention), so probe
     *      routing stays total;
@@ -535,10 +455,9 @@ object Ivf {
     */
   def removeKeyed(spark: SparkSession, path: String, idCol: String,
       vecCol: String, removals: DataFrame): Model = {
-    // the touched set comes from the CURRENT view (plain or fenced — both
-    // resolve the same live files) BEFORE any layout mutation, so a batch
-    // with zero matching ids is a pure no-op: it must not upgrade a plain
-    // store to the fenced layout as a side effect (r16, ADVICE r15)
+    // the touched set comes from an (id, cluster)-only probe BEFORE any
+    // write, so a batch with zero matching ids is a pure no-op that
+    // commits no new version (r16, ADVICE r15)
     val data = readData(spark, path)
     val ids = removals.select(col(idCol)).distinct()
     val touched = data.select(col(idCol), col("cluster"))
@@ -546,28 +465,11 @@ object Ivf {
       .select(col("cluster")).distinct().collect().map(_.getInt(0)).sorted
     if (touched.isEmpty) loadModel(spark, path) // replay fixed point: no-op
     else {
-      if (fenceVersion(spark, path) == 0L) {
-        // ---- fence bootstrap (first EFFECTIVE retraction of a plain
-        // store): v1 is the store exactly as it stands — current files,
-        // current sidecar. The sidecar copy goes FIRST: a kill between the
-        // two writes leaves a plain store (v1 unpublished) and the replay
-        // overwrites the copy. `data` read above still resolves the same
-        // files after the bootstrap — v1 lists exactly the plain listing.
-        val files = Maintenance.dataFilesOnDisk(spark, path).toSeq.sorted
-        require(files.nonEmpty, s"no IVF data at $path/data")
-        val (cents, counts) = readSidecar(spark, path)
-        writeCentroids(spark, cents, counts, path, 1L)
-        val (fs, _) = Maintenance.fsFor(spark, path)
-        Maintenance.publishManifest(fs,
-          new org.apache.hadoop.fs.Path(s"$path/_manifest"), 0L, files, path)
-      }
       val (cents, counts) = readSidecar(spark, path)
       val dims = cents.head.length
-      // re-resolve through the fence: the surviving rows APPEND into the
-      // same directory they scan, so the scan must carry the explicit
-      // manifest file list (the plain `data` read above is only used for
-      // the touched-set probe, which finishes before any write)
-      val kept = readData(spark, path)
+      // `data` carries the explicit manifest file list, so the surviving
+      // rows appended below never leak back into their own scan
+      val kept = data
         .where(col("cluster").isin(touched.toIndexedSeq.map(Integer.valueOf): _*))
         .join(ids, Seq(idCol), "left_anti")
         .persist()
@@ -589,7 +491,7 @@ object Ivf {
           cents(c) = Array.tabulate(dims)(j =>
             if (r.isNullAt(j + 2)) cents(c)(j) else r.getDouble(j + 2).toFloat)
         }
-        commitFenced(spark, path, cents, counts, staged,
+        commitVersion(spark, path, cents, counts, staged,
           touched.map(c => Maintenance.partitionDirName("cluster", c)).toSet)
         Model(cents)
       } finally kept.unpersist()
@@ -600,7 +502,7 @@ object Ivf {
     * (tiny driver-side read: k rows of dims floats).
     */
   def loadModel(spark: SparkSession, path: String): Model = {
-    val sp = sidecarPath(path, fenceVersion(spark, path))
+    val sp = currentSidecar(spark, path)
     val rows = spark.read.parquet(sp)
       .orderBy(col("cluster")).select(col("centroid")).collect()
     require(rows.nonEmpty, s"no centroids at $sp")

@@ -3651,7 +3651,7 @@ object ExtQueries {
              |FROM embeddings""".stripMargin),
       (s, dir) => {
         val path = IvfIndex.ensure(s, dir)
-        val hist = s.read.parquet(s"$path/data")
+        val hist = Ivf.readData(s, path)
           .groupBy(col("cluster")).agg(count(lit(1)).as("n"))
         hist.agg(
           sum(col("n")).as("n_vectors"),
@@ -5906,8 +5906,10 @@ object ExtQueries {
     def ensure(s: SparkSession, dir: String): String = synchronized {
       val src = new java.io.File(dir, "embeddings.parquet")
       // :q8 — the layout also carries per-vector int8 quantized columns
-      // (scale, q8) since r9, the 4×-smaller scan the quantized probe reads
-      val key = s"${src.getAbsolutePath}:${src.length}:${src.lastModified}:k$K:i2:q8"
+      // (scale, q8) since r9, the 4×-smaller scan the quantized probe reads;
+      // :m1 — the layout is manifest-committed from its first write, so a
+      // plain-directory index an older build left behind is never reused
+      val key = s"${src.getAbsolutePath}:${src.length}:${src.lastModified}:k$K:i2:q8:m1"
       val path = new java.io.File(
         sys.props.getOrElse("java.io.tmpdir", "/tmp"),
         "graft_ivf_" + java.lang.Long.toHexString(

@@ -38,6 +38,8 @@ import org.apache.spark.sql.functions._
   * Without the arg, facts are symlinked at base scale.
   *
   * Usage: runMain graft.tools.GenScaleCorpus <baseDir> <outDir> <m> [mFacts]
+  * Master and shuffle partitions follow `SPARK_GRAFT_CPUS` (default 4), as
+  * in [[graft.Verify]].
   */
 object GenScaleCorpus {
 
@@ -80,9 +82,10 @@ object GenScaleCorpus {
     val outDir = args(1)
     val m = args(2).toInt
     val mFacts = if (args.length > 3) args(3).toInt else 1
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -24,11 +24,10 @@ import org.apache.spark.sql.functions._
   *     added/changed/removed counts.
   *
   * Steps exercised: 1 ingest (extractRuns on real zips), 2 observe, 3
-  * validate (star schema on the day's slice), 4 upsert (manifested zones +
-  * plain meters) and rollup refresh, 5 incremental dedup, 7 publish
-  * (writeJsonl), 8 gates (snapshotDiff). Step 6 (IVF refresh) is the
-  * explicitly weekly/monthly job and step 9 (compaction) off-critical-path
-  * — both individually spec'd elsewhere.
+  * validate (star schema on the day's slice), 4 upsert (manifested zones
+  * and meters) and rollup refresh, 5 incremental dedup, 6 IVF refresh
+  * (refreshKeyed), 7 publish (writeJsonl), 8 gates (snapshotDiff). Step 9
+  * (compaction) is off-critical-path and spec'd elsewhere.
   */
 class DailyJobSpec extends SparkSpec {
 
@@ -100,26 +99,16 @@ class DailyJobSpec extends SparkSpec {
         (pmod(xxhash64(col("text"), lit(j)), lit(1000)).cast("double")
           / 500.0 - 1.0).cast("float")): _*).as("embedding"))
 
-  /** Copy a flat dir's regular files aside / back — the RecallSpec sidecar
-    * crash-window trick: restoring the centroid sidecar to its
-    * pre-refresh bytes after a refresh IS the on-disk state of a job
-    * killed between the data append and the sidecar commit.
+  /** Un-publish a store's latest manifest version and its centroid sidecar
+    * — the RecallSpec crash trick: after a refresh commits, this IS the
+    * on-disk state of a job killed after staging its data files but before
+    * the atomic manifest rename.
     */
-  private def copyFlat(src: String, dst: Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    val walk = Files.walk(Paths.get(src))
-    try walk.iterator().asScala
-      .filter(Files.isRegularFile(_))
-      .foreach(p => Files.copy(p, dst.resolve(p.getFileName.toString),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING))
-    finally walk.close()
-  }
-  private def clearFlat(dir: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    val walk = Files.walk(Paths.get(dir))
-    try walk.iterator().asScala
-      .filter(Files.isRegularFile(_)).foreach(Files.delete(_))
-    finally walk.close()
+  private def unpublishLatest(store: String): Unit = {
+    val v = Maintenance.manifestVersion(spark, store)
+    val (fs, _) = Maintenance.fsFor(spark, store)
+    fs.delete(new org.apache.hadoop.fs.Path(f"$store/_manifest/v$v%08d.txt"), false)
+    fs.delete(new org.apache.hadoop.fs.Path(f"$store/centroids_v$v%08d"), true)
   }
 
   private def md5s(dir: Path): Map[String, String] = {
@@ -166,7 +155,7 @@ class DailyJobSpec extends SparkSpec {
         assert(report.isValid,
           s"window $window failed validation: ${report.render}")
       }
-    // step 4a: upsert the stores (manifested zones, plain meters). The
+    // step 4a: upsert the stores (zones and meters). The
     // upsert IS the action the observation rides on (zero extra passes) —
     // obs.get below would block until an action runs on the instrumented
     // frame, so it must come after.
@@ -176,7 +165,8 @@ class DailyJobSpec extends SparkSpec {
     assert(metrics("rows").asInstanceOf[Long] > 0 &&
       metrics("null_temp").asInstanceOf[Long] == 0L)
     val touchedMonths =
-      Maintenance.upsert(withMonth(metersRaw), meterKeys, "month", metersStore)
+      Maintenance.upsertManifested(withMonth(metersRaw), meterKeys, "month",
+        metersStore)
     // step 5: dedup maintenance on the day's slice
     indexedDocs.foreach { idx =>
       val newDocs = asDocs(zonesRaw)
@@ -191,30 +181,22 @@ class DailyJobSpec extends SparkSpec {
     // (already-present ids anti-joined away: a re-delivered correction or
     // a replayed day never double-appends). Runs BEFORE the sim's kill
     // point so ONE kill covers both crash windows: on the crash attempt
-    // the sidecar is rolled back to its pre-refresh bytes right after the
-    // refresh — the exact on-disk state of a job killed between the data
-    // append and the sidecar commit (the RecallSpec trick).
+    // the refresh's version is un-published right after it commits — the
+    // exact on-disk state of a job killed between staging the day's
+    // vectors and the manifest rename.
     indexDir.foreach { idx =>
-      val saved =
-        if (crashBeforeRollup) {
-          val s = Files.createTempDirectory("graft_daily_sidecar_")
-          copyFlat(s"$idx/centroids", s); Some(s)
-        } else None
       graft.operators.Ivf.refreshKeyed(spark, idx, "vec_id", "embedding",
         embed(asDocs(zonesRaw)))
-      saved.foreach { s =>
-        clearFlat(s"$idx/centroids"); copyFlat(s.toString,
-          Paths.get(s"$idx/centroids"))
-      }
+      if (crashBeforeRollup) unpublishLatest(idx)
     }
     if (crashBeforeRollup) return zonesDay // ---- CRASH (kill -9 stand-in)
     // step 4b: rollup refresh — COMPLETE current data for touched months,
     // read back from the store (the refresh contract), never the delta
-    val monthsSlice = melt(spark.read.parquet(metersStore)
+    val monthsSlice = melt(Maintenance.readManifested(spark, metersStore)
       .where(col("month").isin(touchedMonths: _*)))
     Maintenance.refreshMonthlyRollup(monthsSlice, rollupDir)
     // step 7: publish the day's artifacts
-    Export.writeJsonl(spark.read.parquet(rollupDir), publishDir)
+    Export.writeJsonl(Maintenance.readManifested(spark, rollupDir), publishDir)
     zonesDay
   }
 
@@ -243,29 +225,34 @@ class DailyJobSpec extends SparkSpec {
     // the daily cadence is refreshKeyed)
     val idxDir = s"$root/ivf_index"
     val day1Emb = embed(asDocs(day1Zones))
-    graft.operators.Ivf.writeClustered(day1Emb, "vec_id", "embedding",
-      graft.operators.Ivf.train(day1Emb, "vec_id", "embedding", k = 3,
-        iters = 2), idxDir)
+    val model = graft.operators.Ivf.train(day1Emb, "vec_id", "embedding",
+      k = 3, iters = 2)
+    graft.operators.Ivf.writeClustered(day1Emb, "vec_id", "embedding", model,
+      idxDir)
     val nDay1Docs = day1Emb.count() // 3 buildings x 3 zones
 
     // ---- day 2, attempt 1: killed right after the warehouse commit —
-    // which for the index leg means AFTER the step-6 data append and
-    // BEFORE its sidecar commit (the sim rolls the sidecar back)
+    // which for the index leg means AFTER the step-6 vectors are staged
+    // and BEFORE their manifest commit (the sim un-publishes it)
     val indexed = asDocs(day1Zones)
     dailyJob(day2Dir, zonesStore, metersStore, rollupDir, publish2,
       indexedDocs = Some(indexed), crashBeforeRollup = true,
       indexDir = Some(idxDir))
     // the kill window: store already advanced, rollup still shows day 1
-    assert(spark.read.parquet(rollupDir).select("month").distinct()
-      .as[String].collect().toSet === Set("2024-01"),
+    assert(Maintenance.readManifested(spark, rollupDir).select("month")
+      .distinct().as[String].collect().toSet === Set("2024-01"),
       "rollup must still be the day-1 state inside the crash window")
     // ... and the index is in ITS crash window: day-2's new vectors are
-    // at rest, the sidecar still counts day 1 only
-    def idxCount(): Long = spark.read.parquet(s"$idxDir/data").count()
-    def sidecarTotal(): Long = spark.read.parquet(s"$idxDir/centroids")
+    // staged on disk but invisible, and the sidecar still counts day 1
+    def idxCount(): Long = graft.operators.Ivf.readData(spark, idxDir).count()
+    def sidecarOf(idx: String) = spark.read.parquet(
+      f"$idx/centroids_v${Maintenance.manifestVersion(spark, idx)}%08d")
+    def sidecarTotal(): Long = sidecarOf(idxDir)
       .agg(sum("n_members")).head().getLong(0)
-    assert(idxCount() === nDay1Docs + 2 * 3,
-      "crash window: B4/B5 vectors must already be appended")
+    assert(spark.read.parquet(s"$idxDir/data").count() === nDay1Docs + 2 * 3,
+      "crash window: B4/B5 vectors must already be staged on disk")
+    assert(idxCount() === nDay1Docs,
+      "crash window: staged vectors must be invisible to readers")
     assert(sidecarTotal() === nDay1Docs,
       "crash window: the sidecar must still be the day-1 state")
 
@@ -294,9 +281,10 @@ class DailyJobSpec extends SparkSpec {
 
     // gate C: incremental rollup equals a from-scratch rebuild over the
     // final meters store (counts exact; double sums to 1e-9 relative)
-    val rebuilt = Maintenance.monthlyRollup(melt(spark.read.parquet(metersStore)))
+    val rebuilt = Maintenance.monthlyRollup(
+      melt(Maintenance.readManifested(spark, metersStore)))
       .withColumnRenamed("n_events", "n2").withColumnRenamed("sum_value", "s2")
-    val joined = spark.read.parquet(rollupDir)
+    val joined = Maintenance.readManifested(spark, rollupDir)
       .join(rebuilt, Seq("month", "event_type"), "full_outer").collect()
     assert(joined.nonEmpty)
     joined.foreach { r =>
@@ -318,35 +306,37 @@ class DailyJobSpec extends SparkSpec {
     assert(diff.getOrElse("changed", 0L) === 24L * 3)
     assert(diff.getOrElse("removed", 0L) === 0L)
 
-    // gate E (step 6): the index healed inside the same kill-and-rerun the
-    // warehouse survived — exactly one copy of every vector (the B1
+    // gate E (step 6): the index converged inside the same kill-and-rerun
+    // the warehouse survived — exactly one copy of every vector (the B1
     // correction's doc_ids were already indexed and must NOT re-append),
     // sidecar counts equal to the at-rest truth per cluster, and the
-    // sidecar means at the heal fixed point (exact member means — the
-    // refreshKeyed scaladoc contract), so a FURTHER replay is a no-op
+    // sidecar equal to a crash-free single-shot run's (same model, same
+    // day-2 batch, one refreshKeyed)
     val nFinal = idxCount()
     assert(nFinal === nDay1Docs + 2 * 3,
       "rerun double-appended or dropped index vectors")
     assert(sidecarTotal() === nFinal, "rerun left the sidecar stale")
-    val atRest = spark.read.parquet(s"$idxDir/data")
-      .groupBy(col("cluster"))
-      .agg(count(lit(1)).as("true_n"),
-        array((0 until 8).map(j =>
-          avg(element_at(col("embedding"), j + 1))): _*).as("true_mean"))
-    val side = spark.read.parquet(s"$idxDir/centroids")
-      .join(atRest, Seq("cluster"), "full_outer").collect()
-    side.foreach { r =>
-      assert(!r.isNullAt(1) == !r.isNullAt(3),
-        s"sidecar/at-rest cluster set mismatch: $r")
-      if (!r.isNullAt(3)) {
-        assert(r.getLong(r.fieldIndex("n_members")) ===
-          r.getLong(r.fieldIndex("true_n")), s"stale sidecar count: $r")
-        val got = r.getSeq[Float](r.fieldIndex("centroid"))
-        val want = r.getSeq[Double](r.fieldIndex("true_mean"))
-        got.zip(want).foreach { case (g, w) =>
-          assert(math.abs(g - w) <= 1e-5,
-            s"sidecar centroid not at the member-mean fixed point: $g vs $w")
-        }
+    val atRest = graft.operators.Ivf.readData(spark, idxDir)
+      .groupBy(col("cluster")).agg(count(lit(1)).as("true_n"))
+    sidecarOf(idxDir).join(atRest, Seq("cluster"), "full_outer").collect()
+      .foreach { r =>
+        val n = r.getLong(r.fieldIndex("n_members"))
+        val trueN = r.fieldIndex("true_n")
+        assert(if (r.isNullAt(trueN)) n == 0L else n == r.getLong(trueN),
+          s"stale sidecar count: $r")
+      }
+    val oneShot = s"$root/ivf_one_shot"
+    graft.operators.Ivf.writeClustered(day1Emb, "vec_id", "embedding", model,
+      oneShot)
+    graft.operators.Ivf.refreshKeyed(spark, oneShot, "vec_id", "embedding",
+      embed(asDocs(day2Zones)))
+    def cents(idx: String): Map[Int, Seq[Float]] = sidecarOf(idx).collect()
+      .map(r => r.getInt(0) -> r.getSeq[Float](r.fieldIndex("centroid"))).toMap
+    val want = cents(oneShot)
+    cents(idxDir).foreach { case (c, got) =>
+      got.zip(want(c)).foreach { case (g, w) =>
+        assert(math.abs(g - w) <= 1e-5,
+          s"cluster $c centroid differs from the single-shot run: $g vs $w")
       }
     }
     // replay convergence: a third refresh of the same batch changes nothing
@@ -354,17 +344,17 @@ class DailyJobSpec extends SparkSpec {
       embed(asDocs(day2Zones)))
     assert(idxCount() === nFinal && sidecarTotal() === nFinal,
       "an extra replay moved the index off its fixed point")
-    // the healed index still serves: a day-2 vector's self-probe hits
+    // the converged index still serves: a day-2 vector's self-probe hits
     val qRow = embed(asDocs(day2Zones)).orderBy("vec_id").head()
     val hits = graft.operators.Ivf.probeClustered(spark, idxDir, "vec_id",
       "embedding", qRow.getSeq[Float](1), nProbe = 2, k = 3)
       .select("vec_id").as[Long].collect().toSet
     assert(hits.contains(qRow.getLong(0)),
-      "post-heal probe lost the queried day-2 vector")
+      "post-rerun probe lost the queried day-2 vector")
 
     // step-7 artifact really published and re-readable
     assert(spark.read.json(publish2).count() ===
-      spark.read.parquet(rollupDir).count())
+      Maintenance.readManifested(spark, rollupDir).count())
     day1Snapshot.unpersist(blocking = false)
   }
 }

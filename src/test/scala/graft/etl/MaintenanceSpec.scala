@@ -102,37 +102,36 @@ class MaintenanceSpec extends SparkSpec {
       (2, "a", 20L), (2, "b", 21L),
       (3, "a", 30L)).toDF("scenario", "metric", "v")
     // first write: empty-store path
-    assert(Maintenance.upsert(day1, Seq("scenario", "metric"), "scenario", out)
-      == Seq("1", "2", "3"))
+    assert(Maintenance.upsertManifested(day1, Seq("scenario", "metric"),
+      "scenario", out) == Seq("1", "2", "3"))
 
-    def partFiles(): Map[String, Set[(String, Long)]] =
-      new java.io.File(out).listFiles().filter(_.getName.startsWith("scenario="))
-        .map(d => d.getName ->
-          d.listFiles().filter(_.getName.endsWith(".parquet"))
-            .map(f => (f.getName, f.lastModified())).toSet).toMap
+    def partFiles(): Map[String, Set[String]] =
+      Maintenance.liveFiles(spark, out).toSet
+        .groupBy((f: String) => f.stripPrefix(s"$out/data/").takeWhile(_ != '/'))
     val before = partFiles()
 
     // day 2: replace (2, a), add (2, c); (2, b) must carry, 1 and 3 untouched
     val day2 = Seq((2, "a", 200L), (2, "c", 22L)).toDF("scenario", "metric", "v")
-    assert(Maintenance.upsert(day2, Seq("scenario", "metric"), "scenario", out)
-      == Seq("2"))
+    assert(Maintenance.upsertManifested(day2, Seq("scenario", "metric"),
+      "scenario", out) == Seq("2"))
 
     val expected = Set(
       (1, "a", 10L), (1, "b", 11L),
       (2, "a", 200L), (2, "b", 21L), (2, "c", 22L),
       (3, "a", 30L))
     def readAll(): Set[(Int, String, Long)] =
-      spark.read.parquet(out).select("scenario", "metric", "v")
+      Maintenance.readManifested(spark, out).select("scenario", "metric", "v")
         .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSet
     assert(readAll() == expected)
 
+    // the manifest still lists exactly the day-1 files of partitions 1 and 3
     val after = partFiles()
     Seq("scenario=1", "scenario=3").foreach { d =>
       assert(after(d) == before(d), s"untouched partition $d was rewritten")
     }
 
     // at-least-once replay of the same complete-values batch: same contents
-    Maintenance.upsert(day2, Seq("scenario", "metric"), "scenario", out)
+    Maintenance.upsertManifested(day2, Seq("scenario", "metric"), "scenario", out)
     assert(readAll() == expected)
   }
 
@@ -143,12 +142,12 @@ class MaintenanceSpec extends SparkSpec {
     val rows = Seq((2, "a", 1L), (10, "a", 2L)).toDF("scenario", "metric", "v")
     // partitionCol ∉ keyCols: a moved key's old row would survive unseen
     val e = intercept[IllegalArgumentException] {
-      Maintenance.upsert(rows, Seq("metric"), "scenario", out)
+      Maintenance.upsertManifested(rows, Seq("metric"), "scenario", out)
     }
     assert(e.getMessage.contains("must be one of keyCols"))
     // numeric axis: 2 < 10 in the axis' order, not "10" < "2" lexicographic
-    assert(Maintenance.upsert(rows, Seq("scenario", "metric"), "scenario", out)
-      == Seq("2", "10"))
+    assert(Maintenance.upsertManifested(rows, Seq("scenario", "metric"),
+      "scenario", out) == Seq("2", "10"))
   }
 
   test("manifest-committed upsert: a reader mid-upsert sees the old or the " +
@@ -169,8 +168,7 @@ class MaintenanceSpec extends SparkSpec {
 
     // MID-UPSERT WINDOW: stage day 2's replacement files exactly as the
     // writer would (appended data files, manifest NOT yet swapped). A
-    // fenced reader must still see v1 in full — on the plain-parquet
-    // dynamic-overwrite path this same window loses carried rows.
+    // reader must still see v1 in full.
     Seq((2, "a", 200L), (2, "c", 22L), (2, "b", 21L))
       .toDF("scenario", "metric", "v")
       .write.mode("append").partitionBy("scenario").parquet(s"$store/data")
@@ -211,27 +209,41 @@ class MaintenanceSpec extends SparkSpec {
     // carry filter never matches NULL (the partition would be replaced
     // without being read), and a plain equality anti-join never matches a
     // NULL key (the old row would be carried alongside its replacement as
-    // a duplicate). Both upsert variants must get both right.
+    // a duplicate). The upsert must get both right.
     val day1 = Seq(
       (Some(1), "a", 5L),
       (None, "a", 1L), (None, "b", 2L)).toDF("scenario", "metric", "v")
     val day2 = Seq((Option.empty[Int], "a", 10L)).toDF("scenario", "metric", "v")
     val expected = Set((None, "a", 10L), (None, "b", 2L), (Some(1), "a", 5L))
-
-    val outPlain = Files.createTempDirectory("graft_upsert_null_").toString
-    assert(Maintenance.upsert(day1, Seq("scenario", "metric"), "scenario",
-      outPlain) == Seq("null", "1"))
-    Maintenance.upsert(day2, Seq("scenario", "metric"), "scenario", outPlain)
     def rows(df: org.apache.spark.sql.DataFrame): Set[(Option[Int], String, Long)] =
       df.select("scenario", "metric", "v").collect()
         .map(r => (if (r.isNullAt(0)) None else Some(r.getInt(0)),
           r.getString(1), r.getLong(2))).toSet
-    assert(rows(spark.read.parquet(outPlain)) == expected)
 
     val store = Files.createTempDirectory("graft_manifest_null_").toString
-    Maintenance.upsertManifested(day1, Seq("scenario", "metric"), "scenario", store)
+    assert(Maintenance.upsertManifested(day1, Seq("scenario", "metric"),
+      "scenario", store) == Seq("null", "1"))
     Maintenance.upsertManifested(day2, Seq("scenario", "metric"), "scenario", store)
     assert(rows(Maintenance.readManifested(spark, store)) == expected)
+  }
+
+  test("a manifest store under a RELATIVE directory commits a readable " +
+    "manifest (listed paths are absolute; the prefix must be qualified)") {
+    import spark.implicits._
+    val store = s"target/graft_manifest_rel_${java.util.UUID.randomUUID()}"
+    try {
+      Maintenance.upsertManifested(Seq((1, "a", 1L), (2, "a", 2L))
+        .toDF("p", "k", "v"), Seq("p", "k"), "p", store)
+      // the second upsert carries through the first version's live files
+      Maintenance.upsertManifested(Seq((1, "b", 3L)).toDF("p", "k", "v"),
+        Seq("p", "k"), "p", store)
+      val got = Maintenance.readManifested(spark, store).select("p", "k", "v")
+        .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSet
+      assert(got === Set((1, "a", 1L), (1, "b", 3L), (2, "a", 2L)))
+    } finally {
+      val (fs, p) = Maintenance.fsFor(spark, store)
+      fs.delete(p, true)
+    }
   }
 
   test("manifest version slot can be claimed exactly once on the local FS " +
@@ -266,15 +278,14 @@ class MaintenanceSpec extends SparkSpec {
     val all = m1.unionByName(m2)
     val out = Files.createTempDirectory("graft_rollup_").toString
 
-    // day 1: month 1 complete, month 2 only half-arrived
-    Maintenance.writeMonthlyRollup(
+    // day 1: month 1 complete, month 2 only half-arrived — the first
+    // refresh of the empty store is the full build
+    Maintenance.refreshMonthlyRollup(
       m1.unionByName(m2.where(hash($"ts") % 2 === 0)), out)
 
-    def partFiles(): Map[String, Set[(String, Long)]] =
-      new java.io.File(out).listFiles().filter(_.getName.startsWith("month="))
-        .map(d => d.getName ->
-          d.listFiles().filter(_.getName.endsWith(".parquet"))
-            .map(f => (f.getName, f.lastModified())).toSet).toMap
+    def partFiles(): Map[String, Set[String]] =
+      Maintenance.liveFiles(spark, out).toSet
+        .groupBy((f: String) => f.stripPrefix(s"$out/data/").takeWhile(_ != '/'))
     val before = partFiles()
     assert(before.size == 2, s"fixture must build 2 month partitions: $before")
 
@@ -286,7 +297,7 @@ class MaintenanceSpec extends SparkSpec {
     assert(rewritten.toSet == touchedMonths)
 
     // result equals a from-scratch full rebuild…
-    val got = spark.read.parquet(out)
+    val got = Maintenance.readManifested(spark, out)
       .select($"month", $"event_type", $"n_events", $"sum_value")
     val full = Maintenance.monthlyRollup(all)
     assert(got.count() == full.count())
@@ -295,8 +306,8 @@ class MaintenanceSpec extends SparkSpec {
         abs(got("sum_value") - full("sum_value")) > 1e-6)
     assert(diff.count() == 0, "refreshed rollup differs from a full rebuild")
 
-    // …and every untouched month's files are bit-for-bit the day-1 files
-    // (dynamic overwrite replaced only the touched partitions)
+    // …and the manifest still lists every untouched month's day-1 files
+    // (the refresh replaced only the touched partitions)
     val after = partFiles()
     val untouched = before.keySet.filterNot(d =>
       touchedMonths.contains(d.stripPrefix("month=")))

@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * probe, sidecar ≡ at-rest truth (counts AND member-mean centroids), a
   * kill INSIDE the removal window leaving the previous version fully
   * consistent and replaying to the single-shot truth, untouched cluster
-  * files byte-identical across the whole lifecycle, and the fenced store
-  * still serving partition-pruned probes and atomic refreshes.
+  * files byte-identical across the whole lifecycle, and the store still
+  * serving partition-pruned probes and atomic refreshes.
   */
 class IvfRetractSpec extends SparkSpec {
 
@@ -33,8 +33,8 @@ class IvfRetractSpec extends SparkSpec {
 
   /** Sidecar ≡ at-rest truth: per-cluster counts match the live data
     * exactly, and every non-empty cluster's centroid sits at its member
-    * mean (the at-rest fixed point [[Ivf.refreshKeyed]]'s heal and
-    * [[Ivf.removeKeyed]] both converge to). `touchedOnly` limits the
+    * mean (the at-rest fixed point [[Ivf.removeKeyed]] converges to).
+    * `touchedOnly` limits the
     * member-mean check to those clusters (untouched clusters legitimately
     * keep their trained/incremental centroids).
     */
@@ -51,8 +51,7 @@ class IvfRetractSpec extends SparkSpec {
     // version (a crashed attempt's next-version sidecar sits on disk but
     // must stay invisible, like its staged data files)
     val v = Maintenance.manifestVersion(spark, path)
-    val sp = if (v == 0L) s"$path/centroids" else f"$path/centroids_v$v%08d"
-    val sidecar = spark.read.parquet(sp)
+    val sidecar = spark.read.parquet(f"$path/centroids_v$v%08d")
       .collect().map(r => r.getInt(0) ->
         (r.getLong(r.fieldIndex("n_members")),
           r.getSeq[Float](r.fieldIndex("centroid")))).toMap
@@ -121,7 +120,7 @@ class IvfRetractSpec extends SparkSpec {
     assert(untouchedFilesBefore === untouchedAfter,
       "retraction touched files of clusters it had no business in")
 
-    // unknown ids: a no-op that does NOT advance the fence
+    // unknown ids: a no-op that does NOT advance the manifest
     import spark.implicits._
     val vBefore = Maintenance.manifestVersion(spark, path)
     Ivf.removeKeyed(spark, path, "vec_id", "embedding",
@@ -187,19 +186,21 @@ class IvfRetractSpec extends SparkSpec {
       === live, "vacuum changed the live view")
   }
 
-  test("a removal batch with ZERO matching ids against a PLAIN store is a " +
-    "pure no-op: no fence bootstrap, layout byte-identical (r16, ADVICE r15)") {
+  test("a removal batch with ZERO matching ids is a pure no-op: no new " +
+    "version, no staged sidecar, data view unchanged (r16, ADVICE r15)") {
     import spark.implicits._
     val path = Files.createTempDirectory("graft_ivf_rm_noop_").toString
     val model = Ivf.train(emb, "vec_id", "embedding", k = 8, iters = 2)
     Ivf.writeClustered(emb, "vec_id", "embedding", model, path)
+    assert(Maintenance.manifestVersion(spark, path) === 1L,
+      "writeClustered must publish v1")
     val before = liveFileNames(path)
     Ivf.removeKeyed(spark, path, "vec_id", "embedding",
       Seq(999999999L, 888888888L).toDF("vec_id"))
-    assert(!Files.exists(Paths.get(s"$path/_manifest")),
-      "no-op removal bootstrapped the fence on a plain store")
-    assert(!Files.exists(Paths.get(f"$path/centroids_v${1L}%08d")),
-      "no-op removal staged a versioned sidecar on a plain store")
+    assert(Maintenance.manifestVersion(spark, path) === 1L,
+      "no-op removal committed a new version")
+    assert(!Files.exists(Paths.get(f"$path/centroids_v${2L}%08d")),
+      "no-op removal staged a next-version sidecar")
     assert(liveFileNames(path) === before, "no-op removal changed the data view")
     assert(Ivf.readData(spark, path).count() === emb.count())
   }
@@ -210,14 +211,13 @@ class IvfRetractSpec extends SparkSpec {
     val path = Files.createTempDirectory("graft_ivf_rm_vac_").toString
     val model = Ivf.train(emb, "vec_id", "embedding", k = 8, iters = 2)
     Ivf.writeClustered(emb, "vec_id", "embedding", model, path)
-    // three fenced mutations: bootstrap(v1)+removal(v2), removal(v3),
-    // refresh heal-free append path not needed — removals alone version
+    // three versions: the build (v1), removal (v2), removal (v3)
     Ivf.removeKeyed(spark, path, "vec_id", "embedding",
       emb.where(col("vec_id") % 13 === 0).select("vec_id"))
     Ivf.removeKeyed(spark, path, "vec_id", "embedding",
       emb.where(col("vec_id") % 13 === 1).select("vec_id"))
     val v = Maintenance.manifestVersion(spark, path)
-    assert(v >= 3L, s"expected >=3 fenced versions, got $v")
+    assert(v === 3L, s"expected 3 versions, got $v")
     def versionedSidecars(): Set[String] = {
       val d = new java.io.File(path)
       d.listFiles().map(_.getName).filter(_.matches("centroids_v\\d{8}")).toSet
@@ -259,7 +259,7 @@ class IvfRetractSpec extends SparkSpec {
     assert(fullProbe(path, q, k = 20, width = 8).size === 20)
     assertSidecarTruth(path, dims = 8, touchedOnly = Some(Set(someCluster)))
 
-    // the fenced store still refreshes atomically: re-adding vectors under
+    // the store still refreshes atomically: re-adding vectors under
     // new ids lands them in the live view with exact sidecar counts
     val back = emb.where(col("vec_id") % 11 === 0)
       .withColumn("vec_id", col("vec_id") + 5000000L)
@@ -267,21 +267,24 @@ class IvfRetractSpec extends SparkSpec {
     val n = Ivf.readData(spark, path).count()
     assert(n === emb.count() - nRemoved + back.count())
     assertSidecarTruth(path, dims = 8, touchedOnly = Some(Set.empty))
-    // a fenced refresh replay still converges (no double-append)
+    // a refresh replay still converges (no double-append)
     Ivf.refreshKeyed(spark, path, "vec_id", "embedding", back)
-    assert(Ivf.readData(spark, path).count() === n, "fenced replay double-appended")
+    assert(Ivf.readData(spark, path).count() === n, "refresh replay double-appended")
 
-    // partition pruning survives the fence: the probe's scan carries a
+    // partition pruning survives the manifest: the probe's scan carries a
     // cluster PartitionFilter (the 100 TB story of the layout)
     val plan = Ivf.probeClustered(spark, path, "vec_id", "embedding", q,
       nProbe = 2, k = 5).queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [cluster"),
-      s"fenced probe lost partition pruning:\n$plan")
+      s"manifest-resolved probe lost partition pruning:\n$plan")
 
-    // a full rebuild RESETS the fence back to the plain layout
+    // a full rebuild starts over at version 1, with only its own sidecar
     Ivf.writeClustered(emb, "vec_id", "embedding", model, path)
-    assert(!Files.exists(Paths.get(s"$path/_manifest")),
-      "writeClustered left a stale fence")
+    assert(Maintenance.manifestVersion(spark, path) === 1L,
+      "writeClustered did not start over at v1")
+    assert(new java.io.File(path).listFiles().map(_.getName)
+      .filter(_.startsWith("centroids")).toSet === Set(f"centroids_v${1L}%08d"),
+      "writeClustered left stale sidecars")
     assert(Ivf.readData(spark, path).count() === emb.count())
     assert(fullProbe(path, q, k = 20, width = 8).size === 20)
   }

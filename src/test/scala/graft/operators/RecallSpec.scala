@@ -256,7 +256,8 @@ class RecallSpec extends SparkSpec {
     assert(after.size > before.size, "refresh appended no files")
 
     // the sidecar's member counts fold to the full corpus
-    val total = spark.read.parquet(s"$path/centroids")
+    val total = spark.read.parquet(
+      f"$path/centroids_v${graft.etl.Maintenance.manifestVersion(spark, path)}%08d")
       .agg(sum("n_members")).head().getLong(0)
     assert(total == emb.count(), s"sidecar counts $total != corpus ${emb.count()}")
 
@@ -296,17 +297,19 @@ class RecallSpec extends SparkSpec {
       s"recall@20 after a second refresh = $recall2 (expected >= 0.5)")
   }
 
-  test("refreshKeyed: replaying a batch converges (no double-append) and a " +
-    "crash between the append and the sidecar write HEALS on rerun") {
-    import java.nio.file.{Files, Path}
-    import scala.jdk.CollectionConverters._
+  test("refreshKeyed: replaying a batch converges (no double-append); a " +
+    "kill before the commit leaves staged rows invisible, and the rerun " +
+    "adds them once") {
+    import java.nio.file.{Files, Paths}
+    import graft.etl.Maintenance
     val path = Files.createTempDirectory("graft_ivf_keyed_").toString
     val base = emb.where(col("vec_id") % 5 =!= 0)
     val late = emb.where(col("vec_id") % 5 === 0)
     val model = Ivf.train(base, "vec_id", "embedding", k = 8, iters = 2)
     Ivf.writeClustered(base, "vec_id", "embedding", model, path)
-    def dataCount(): Long = spark.read.parquet(s"$path/data").count()
-    def sidecarTotal(): Long = spark.read.parquet(s"$path/centroids")
+    def dataCount(): Long = Ivf.readData(spark, path).count()
+    def sidecarTotal(): Long = spark.read.parquet(
+      f"$path/centroids_v${Maintenance.manifestVersion(spark, path)}%08d")
       .agg(sum("n_members")).head().getLong(0)
 
     // normal keyed refresh behaves like refresh
@@ -314,56 +317,44 @@ class RecallSpec extends SparkSpec {
     val n1 = dataCount()
     assert(n1 === emb.count() && sidecarTotal() === n1)
     // FULL replay of the same batch (the runbook's rerun-after-crash):
-    // zero rows appended, sidecar totals still exactly the corpus
+    // zero rows appended, no new version, sidecar totals still the corpus
+    val v1 = Maintenance.manifestVersion(spark, path)
     Ivf.refreshKeyed(spark, path, "vec_id", "embedding", late)
     assert(dataCount() === n1, "replay double-appended")
+    assert(Maintenance.manifestVersion(spark, path) === v1,
+      "a replay with nothing fresh committed a version")
     assert(sidecarTotal() === n1, "replay corrupted the sidecar totals")
 
-    // simulate the crash WINDOW: run a refresh (rows appended + sidecar
-    // advanced), then restore the sidecar to its pre-refresh bytes — the
-    // exact on-disk state of a job killed between step 1 and step 2
+    // simulate a kill BEFORE the commit: run a refresh, then un-publish
+    // its version (manifest and paired sidecar) — the exact on-disk state
+    // of a job killed after staging its files, before the manifest rename
     val more = emb.where(col("vec_id") % 10 === 3)
       .withColumn("vec_id", col("vec_id") + 1000000L)
-    def snapshotDir(src: String): Path = {
-      val dst = Files.createTempDirectory("graft_ivf_side_")
-      val walk = Files.walk(java.nio.file.Paths.get(src))
-      try walk.iterator().asScala
-        .filter(Files.isRegularFile(_)).foreach { p =>
-          Files.copy(p, dst.resolve(p.getFileName.toString))
-        }
-      finally walk.close()
-      dst
-    }
-    val saved = snapshotDir(s"$path/centroids")
     Ivf.refresh(spark, path, "embedding", more)
-    // roll the sidecar back (stale counts/centroids, appended rows live)
-    locally {
-      val walk = Files.walk(java.nio.file.Paths.get(s"$path/centroids"))
-      try walk.iterator().asScala
-        .filter(Files.isRegularFile(_)).foreach(Files.delete)
-      finally walk.close()
-    }
-    locally {
-      val walk = Files.walk(saved)
-      try walk.iterator().asScala.filter(Files.isRegularFile(_))
-        .foreach(p => Files.copy(p,
-          java.nio.file.Paths.get(s"$path/centroids").resolve(p.getFileName.toString)))
-      finally walk.close()
-    }
-    assert(sidecarTotal() < dataCount(), "crash-window fixture not stale")
+    val v2 = Maintenance.manifestVersion(spark, path)
+    assert(v2 === v1 + 1)
+    Files.delete(Paths.get(f"$path/_manifest/v$v2%08d.txt"))
+    val (fs, _) = Maintenance.fsFor(spark, path)
+    fs.delete(new org.apache.hadoop.fs.Path(f"$path/centroids_v$v2%08d"), true)
+    // the staged rows are on disk, but no reader sees them
+    assert(spark.read.parquet(s"$path/data").count() === n1 + more.count(),
+      "crash fixture staged nothing")
+    assert(dataCount() === n1, "uncommitted rows visible to readers")
+    assert(sidecarTotal() === n1, "uncommitted sidecar visible to readers")
 
-    // the rerun must dedup every row AND heal the stale sidecar
+    // the rerun sees the whole batch as fresh and commits it exactly once
     Ivf.refreshKeyed(spark, path, "vec_id", "embedding", more)
     val nAll = dataCount()
-    assert(nAll === emb.count() + more.count(), "heal path appended rows")
-    assert(sidecarTotal() === nAll,
-      "heal path left the sidecar counts stale")
+    assert(nAll === emb.count() + more.count(), "rerun lost or doubled rows")
+    assert(sidecarTotal() === nAll, "rerun left the sidecar counts stale")
+    Ivf.refreshKeyed(spark, path, "vec_id", "embedding", more)
+    assert(dataCount() === nAll, "second rerun double-appended")
     // index still serves: the probe sees the late vector and holds recall
     val got = ids(Ivf.probeClustered(spark, path, "vec_id", "embedding", q,
       nProbe = 2, k = 20))
     val grownTruth = ids(Similarity.bruteForceTopK(
       emb.unionByName(more), "vec_id", "embedding", q, 20))
     assert((got & grownTruth).size / 20.0 >= 0.5,
-      "post-heal recall@20 under the gate")
+      "post-rerun recall@20 under the gate")
   }
 }
