@@ -2,12 +2,22 @@ package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, concat_ws, lag, lead, lit, md5, row_number, when}
+import org.apache.spark.sql.types.StructType
 
 /** Table-maintenance operations a long-lived 100 TB deployment needs around
-  * the query engine itself: small-file compaction and schema-evolving reads.
-  * (Cite: the reference rewrites its whole DuckDB file per run —
-  * `run_pipeline.py` load stage — so it never faces these; a Spark
-  * deployment accumulating parquet drops does.)
+  * the query engine itself: manifest-committed mutable stores, small-file
+  * compaction and schema-evolving reads. (Cite: the reference rewrites its
+  * whole DuckDB file per run — `run_pipeline.py` load stage — so it never
+  * faces these; a Spark deployment accumulating parquet drops does.)
+  *
+  * Every mutable store is a manifest store (layout below), and every
+  * mutation — upsert, CDC apply, partition rebuild, rollup refresh, the IVF
+  * index's build, refresh and retraction, and [[compact]] — is one
+  * [[stageFiles]] followed by one [[commitFiles]]; every read resolves the
+  * live files through [[readFiles]]. Compaction is one more commit that
+  * changes files, not rows: it rewrites the live files only, so superseded
+  * and crashed-attempt files never come back, and [[vacuumManifested]]
+  * reclaims the files it replaced.
   */
 object Maintenance {
 
@@ -34,35 +44,49 @@ object Maintenance {
     spark.read.option("mergeSchema", "true").parquet(paths: _*)
   }
 
-  /** Compact a parquet directory's small files toward `targetBytes` output
-    * files (in-place: rewrite then atomically swap is the production
-    * pattern; here rewrite-to-target keeps the operation explicit).
-    * Small-file proliferation is THE silent killer of scan parallelism
-    * economics at scale: a 100 TB table in 10 MB files costs 10M task
-    * launches per scan. Sizing = ceil(inputBytes / targetBytes), from the
-    * files' actual on-disk size (not row counts — rows compress
-    * unpredictably).
+  /** Compact a manifest store's small files toward `targetBytes` per output
+    * file (runbook step 9) — small files are THE silent killer of scan
+    * parallelism at scale (a 100 TB table in 10 MB files costs 10M task
+    * launches per scan). Only live files are read, and each partition is
+    * sized from their on-disk lengths (rows compress unpredictably):
+    * ceil(bytes / targetBytes) files. A partition holding more live files
+    * than that has them dealt round-robin into that many bins, and one
+    * shuffle places each bin in its own task (an exact file count); the
+    * rewrite commits as one version like any mutation. An IVF index is
+    * refused: a version published here would have no paired
+    * `centroids_v*` sidecar.
+    *
+    * @return the store's live-file count after compaction
     */
-  def compact(spark: SparkSession, dir: String, outDir: String,
+  def compact(spark: SparkSession, storeDir: String,
       targetBytes: Long = 128L * 1024 * 1024): Int = {
-    // size via the Hadoop FS abstraction, recursively: java.io.File NPEs on
-    // non-local URIs (s3a://…) and a flat listing misses files nested under
-    // partition dirs — either would silently size the rewrite at 0 bytes
-    // and collapse a large table to repartition(1)
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    var inputBytes = 0L
-    val it = fs.listFiles(path, true)
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.isFile && f.getPath.getName.endsWith(".parquet"))
-        inputBytes += f.getLen
+    val version = manifestVersion(spark, storeDir)
+    require(version > 0L, s"no committed manifest under $storeDir/_manifest")
+    val (fs, root) = fsFor(spark, storeDir)
+    require(!fs.listStatus(root).exists(_.getPath.getName.startsWith("centroids_v")),
+      s"$storeDir is an IVF index: its files pair with a centroids_v* sidecar " +
+        "that a compaction commit would not carry — rebuild it with " +
+        "Ivf.writeClustered instead")
+    val (schema, live) = manifestAt(spark, storeDir, version)
+    val plan = live.groupBy(_.takeWhile(_ != '/')).map { case (dir, files) =>
+      val names = files.toSet
+      val bytes = fs.listStatus(new org.apache.hadoop.fs.Path(s"$storeDir/data/$dir"))
+        .collect { case st if names(s"$dir/${st.getPath.getName}") => st.getLen }.sum
+      dir -> (files, math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt))
     }
-    val nFiles = math.max(1, math.ceil(inputBytes.toDouble / targetBytes).toInt)
-    spark.read.parquet(dir)
-      .repartition(nFiles)
-      .write.mode("overwrite").parquet(outDir)
-    nFiles
+    val rewrite = plan.filter { case (_, (files, n)) => files.size > n }
+    if (rewrite.nonEmpty) {
+      val bins = rewrite.values.toSeq.flatMap { case (files, n) =>
+        files.zipWithIndex.groupBy(_._2 % n).values.map(_.map(_._1))
+      }
+      val rows = bins.zipWithIndex.map { case (b, i) =>
+        readFiles(spark, storeDir, b, schema).withColumn("__bin", lit(i))
+      }.reduce(_ union _)
+        .repartitionById(bins.size, col("__bin")).drop("__bin")
+      commitFiles(spark, storeDir, version, rows.schema,
+        stageFiles(rows, live.head.takeWhile(_ != '='), storeDir), rewrite.keySet)
+    }
+    plan.values.map { case (files, n) => math.min(files.size, n) }.sum
   }
 
   /** Compute catalog statistics so the cost-based optimizer can size joins
@@ -113,8 +137,7 @@ object Maintenance {
       val touched = rollup.select("month").distinct()
         .collect().map(_.get(0)).toSeq
       if (touched.isEmpty) Nil
-      else stageAndCommitPartitions(monthsSlice.sparkSession, rollup, "month",
-        storeDir, touched)
+      else stageAndCommit(rollup, "month", storeDir, touched)
     } finally rollup.unpersist(blocking = false)
   }
 
@@ -150,9 +173,12 @@ object Maintenance {
   // Layout:
   //
   //   store/data/<partCol>=<val>/part-*.parquet   (append-only data files)
-  //   store/_manifest/v00000001.txt               (one live-file path per line)
+  //   store/_manifest/v00000001.txt               (`#schema <ddl>`, then one
+  //                                                live-file path per line)
   //
-  // A committed manifest version lists EXACTLY the live files; the commit
+  // A committed manifest version lists EXACTLY the live files and the
+  // schema every read applies (so a string partition value "007" is not
+  // re-inferred from its directory name as the number 7); the commit
   // point is one atomic rename of the next manifest into place. Writers
   // only ever APPEND data files (never delete or rewrite), so a reader that
   // resolved manifest version N keeps reading version N's files undisturbed
@@ -174,41 +200,48 @@ object Maintenance {
 
   private val manifestRe = "^v(\\d{8})\\.txt$".r
 
-  /** Latest committed manifest version, 0 if none. */
-  private[graft] def latestManifestVersion(
-      fs: org.apache.hadoop.fs.FileSystem,
-      manifestDir: org.apache.hadoop.fs.Path): Long =
-    if (!fs.exists(manifestDir)) 0L
-    else fs.listStatus(manifestDir).iterator.map(_.getPath.getName)
-      .collect { case manifestRe(v) => v.toLong }
-      .foldLeft(0L)(math.max)
-
-  /** Live data files (as `$storeDir/data/…` paths) per the latest committed
-    * manifest.
+  /** Latest committed manifest version of a manifest store (0 = no store
+    * yet) — the bootstrap probe for a manifest store's consumers.
     */
-  private[graft] def liveFiles(spark: SparkSession, storeDir: String): Seq[String] = {
+  def manifestVersion(spark: SparkSession, storeDir: String): Long = {
     val (fs, _) = fsFor(spark, storeDir)
     val mdir = new org.apache.hadoop.fs.Path(s"$storeDir/_manifest")
-    val v = latestManifestVersion(fs, mdir)
-    if (v == 0L) Nil
-    else {
-      val in = fs.open(new org.apache.hadoop.fs.Path(mdir, f"v$v%08d.txt"))
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .filter(_.nonEmpty).map(rel => s"$storeDir/data/$rel").toList
-      finally in.close()
-    }
+    if (!fs.exists(mdir)) 0L
+    else fs.listStatus(mdir).iterator.map(_.getPath.getName)
+      .collect { case manifestRe(v) => v.toLong }
+      .foldLeft(0L)(math.max)
   }
+
+  private val schemaTag = "#schema "
+
+  /** Committed manifest `v` of a store: the schema its commit recorded (None
+    * for a manifest written before schemas were recorded) and its live files,
+    * RELATIVE to the data dir (the manifest's key space).
+    */
+  private def manifestAt(spark: SparkSession, storeDir: String,
+      v: Long): (Option[StructType], Seq[String]) =
+    if (v == 0L) (None, Nil)
+    else {
+      val (fs, _) = fsFor(spark, storeDir)
+      val in = fs.open(new org.apache.hadoop.fs.Path(f"$storeDir/_manifest/v$v%08d.txt"))
+      val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+        .filter(_.nonEmpty).toList
+      finally in.close()
+      (lines.headOption.filter(_.startsWith(schemaTag))
+        .map(l => StructType.fromDDL(l.stripPrefix(schemaTag))),
+        lines.filterNot(_.startsWith("#")))
+    }
 
   /** All committed parquet files currently under the data dir, as paths
     * RELATIVE to it (the manifest's key space).
     */
-  private[graft] def dataFilesOnDisk(spark: SparkSession, storeDir: String): Set[String] = {
+  private def dataFilesOnDisk(spark: SparkSession, storeDir: String): Set[String] = {
     val (fs, _) = fsFor(spark, storeDir)
     val dataPath = new org.apache.hadoop.fs.Path(s"$storeDir/data")
     if (!fs.exists(dataPath)) Set.empty
     else {
       // qualified: listed paths are absolute, so a relative storeDir's
-      // prefix would strip nothing and liveFiles would nest it twice
+      // prefix would strip nothing and every read would nest it twice
       val base = fs.makeQualified(dataPath).toUri.getPath
       val out = Set.newBuilder[String]
       val it = fs.listFiles(dataPath, true)
@@ -223,15 +256,30 @@ object Maintenance {
     }
   }
 
-  /** Read the store as of its latest committed manifest — the fenced read
-    * path. In-flight (staged, uncommitted) files are invisible by
-    * construction: they are on disk but not in any manifest.
+  /** The one read of a store's data files: `files` (relative to the data
+    * dir) under the data dir as base path, so the partition column resolves
+    * from the directory names, typed by the `schema` the commit recorded —
+    * which also spares the footer-inference job an untyped read runs.
     */
-  def readManifested(spark: SparkSession, storeDir: String): DataFrame = {
-    val files = liveFiles(spark, storeDir)
-    require(files.nonEmpty, s"no committed manifest under $storeDir/_manifest")
-    spark.read.option("basePath", s"$storeDir/data").parquet(files: _*)
+  private[graft] def readFiles(spark: SparkSession, storeDir: String,
+      files: Seq[String], schema: Option[StructType]): DataFrame = {
+    val r = spark.read.option("basePath", s"$storeDir/data")
+    schema.fold(r)(r.schema).parquet(files.map(f => s"$storeDir/data/$f"): _*)
   }
+
+  /** The store as of its latest committed manifest — the fenced read path;
+    * None while it lists no file. In-flight (staged, uncommitted) files are
+    * invisible by construction: they are on disk but not in any manifest.
+    */
+  private[graft] def readLive(spark: SparkSession, storeDir: String): Option[DataFrame] = {
+    val (schema, files) = manifestAt(spark, storeDir, manifestVersion(spark, storeDir))
+    if (files.isEmpty) None else Some(readFiles(spark, storeDir, files, schema))
+  }
+
+  /** Read the store as of its latest committed manifest ([[readLive]]). */
+  def readManifested(spark: SparkSession, storeDir: String): DataFrame =
+    readLive(spark, storeDir).getOrElse(throw new IllegalArgumentException(
+      s"no committed manifest under $storeDir/_manifest"))
 
   /** General MERGE-shaped keyed upsert into a manifest-committed store:
     * rows whose `keyCols` appear in `updates` are replaced, other keys in
@@ -271,16 +319,10 @@ object Maintenance {
         .collect().map(_.get(0)).toSeq
       if (touched.isEmpty) Nil
       else {
-        val live = liveFiles(spark, storeDir)
-        val carried =
-          if (live.isEmpty) up.limit(0)
-          else antiJoinKeys(
-            spark.read.option("basePath", s"$storeDir/data")
-              .parquet(live: _*)
-              .where(touchedFilter(partitionCol, touched)),
-            up, keyCols)
-        stageAndCommitPartitions(spark, carried.unionByName(up),
-          partitionCol, storeDir, touched)
+        val carried = readLive(spark, storeDir).fold(up.limit(0))(live =>
+          antiJoinKeys(live.where(touchedFilter(partitionCol, touched)),
+            up, keyCols))
+        stageAndCommit(carried.unionByName(up), partitionCol, storeDir, touched)
       }
     } finally up.unpersist(blocking = false)
   }
@@ -305,12 +347,11 @@ object Maintenance {
   def rebuildPartitionsManifested(rows: DataFrame, partitionCol: String,
       storeDir: String, touched: Seq[Any]): Seq[String] = {
     require(touched.nonEmpty, "touched partition values must be non-empty")
-    val spark = rows.sparkSession
     val r = rows.persist()
     try {
       val present = r.select(partitionCol).distinct().collect().map(_.get(0))
       // compare via the partition-ADDRESSING normalization (the same
-      // partitionDirName stageAndCommitPartitions uses), not universal
+      // partitionDirName stageAndCommit uses), not universal
       // equality on boxed values: a caller passing Seq(1L) for an int
       // partition column must match the partition its rows will land in,
       // not the runtime box (ADVICE r14)
@@ -320,7 +361,7 @@ object Maintenance {
       require(stray.isEmpty,
         s"rebuildPartitionsManifested: rows carry partition values outside " +
           s"the touched set: ${stray.take(5).mkString(", ")}")
-      stageAndCommitPartitions(spark, r, partitionCol, storeDir, touched)
+      stageAndCommit(r, partitionCol, storeDir, touched)
     } finally r.unpersist(blocking = false)
   }
 
@@ -352,50 +393,30 @@ object Maintenance {
         .collect().map(_.get(0)).toSeq
       if (touched.isEmpty) Nil
       else {
-        val live = liveFiles(spark, storeDir)
-        val base =
-          if (live.isEmpty) ch.drop(opCol, seqCol).limit(0)
-          else spark.read.option("basePath", s"$storeDir/data")
-            .parquet(live: _*)
-            .where(touchedFilter(partitionCol, touched))
-        val next = applyCdc(base, ch, keyCols, opCol, seqCol)
-        stageAndCommitPartitions(spark, next, partitionCol, storeDir, touched)
+        val base = readLive(spark, storeDir).fold(ch.drop(opCol, seqCol).limit(0))(
+          _.where(touchedFilter(partitionCol, touched)))
+        stageAndCommit(applyCdc(base, ch, keyCols, opCol, seqCol),
+          partitionCol, storeDir, touched)
       }
     } finally ch.unpersist(blocking = false)
   }
 
-  /** Shared commit tail of every manifest mutation ([[upsertManifested]],
+  /** Shared tail of the partition-replacing mutations ([[upsertManifested]],
     * [[applyCdcManifested]], [[rebuildPartitionsManifested]],
-    * [[refreshMonthlyRollup]]):
-    * stage `content` (the full replacement rows of exactly the `touched`
-    * partitions) as APPEND-only files — the files the current manifest
-    * references are never touched — then publish ONE new manifest where
-    * untouched partitions keep their old file lists and touched partitions
-    * are exactly the staged files. Touched directories are derived from
-    * the partition VALUES (Spark's own path escaping), not from the staged
+    * [[refreshMonthlyRollup]]): stage `content` (the full replacement rows
+    * of exactly the `touched` partitions) and commit it over the version
+    * current at the start. Touched directories are derived from the
+    * partition VALUES (Spark's own path escaping), not from the staged
     * files, so a touched partition whose replacement content is EMPTY
     * (every key deleted) still drops its old files from the manifest.
     */
-  private def stageAndCommitPartitions(spark: SparkSession,
-      content: DataFrame, partitionCol: String, storeDir: String,
-      touched: Seq[Any]): Seq[String] = {
-    val (fs, _) = fsFor(spark, storeDir)
-    val mdir = new org.apache.hadoop.fs.Path(s"$storeDir/_manifest")
-    val version = latestManifestVersion(fs, mdir)
-    val live = liveFiles(spark, storeDir)
-
-    val before = dataFilesOnDisk(spark, storeDir)
-    content.write.mode("append").partitionBy(partitionCol)
-      .parquet(s"$storeDir/data")
-    val staged = (dataFilesOnDisk(spark, storeDir) -- before).toSeq.sorted
-
-    val dataBase = s"$storeDir/data/"
-    val touchedDirs = touched.map(partitionDirName(partitionCol, _)).toSet
-    val kept = live.map(_.stripPrefix(dataBase))
-      .filterNot(f => touchedDirs.contains(f.takeWhile(_ != '/')))
-    val next = (kept ++ staged).sorted
-
-    publishManifest(fs, mdir, version, next, storeDir)
+  private def stageAndCommit(content: DataFrame, partitionCol: String,
+      storeDir: String, touched: Seq[Any]): Seq[String] = {
+    val spark = content.sparkSession
+    val version = manifestVersion(spark, storeDir)
+    commitFiles(spark, storeDir, version, content.schema,
+      stageFiles(content, partitionCol, storeDir),
+      touched.map(partitionDirName(partitionCol, _)).toSet)
     // report in the axis' NATURAL order, not lexicographic on the
     // stringified form (which would order numeric partitions 10 < 2);
     // nulls — the __HIVE_DEFAULT_PARTITION__ rows — sort first
@@ -403,6 +424,49 @@ object Maintenance {
     (nulls ++ vals.sortWith((a, b) =>
       a.asInstanceOf[Comparable[Any]].compareTo(b) < 0))
       .map(String.valueOf)
+  }
+
+  /** Stage step of every mutation: APPEND `content` under the data dir,
+    * partitioned by `partitionCol`, and return the new files (relative to
+    * the data dir). The files a manifest references are never touched, and
+    * the staged ones stay invisible until [[commitFiles]] lists them.
+    */
+  private[graft] def stageFiles(content: DataFrame, partitionCol: String,
+      storeDir: String): Seq[String] = {
+    val spark = content.sparkSession
+    val before = dataFilesOnDisk(spark, storeDir)
+    content.write.mode("append").partitionBy(partitionCol)
+      .parquet(s"$storeDir/data")
+    (dataFilesOnDisk(spark, storeDir) -- before).toSeq.sorted
+  }
+
+  /** Commit step of every mutation: publish version `version + 1`, which
+    * lists `version`'s live files outside the `dropDirs` partitions plus
+    * `staged`, and records `schema` for every later read. The manifest is
+    * written aside, then ONE atomic claim of the version slot publishes it;
+    * a lost claim is a loud concurrent-writer failure, never a corrupted
+    * store.
+    */
+  private[graft] def commitFiles(spark: SparkSession, storeDir: String,
+      version: Long, schema: StructType, staged: Seq[String],
+      dropDirs: Set[String]): Unit = {
+    val kept = manifestAt(spark, storeDir, version)._2
+      .filterNot(f => dropDirs.contains(f.takeWhile(_ != '/')))
+    val lines = (schemaTag + schema.toDDL) +: (kept ++ staged).sorted
+    val (fs, _) = fsFor(spark, storeDir)
+    val mdir = new org.apache.hadoop.fs.Path(s"$storeDir/_manifest")
+    fs.mkdirs(mdir)
+    val tmp = new org.apache.hadoop.fs.Path(mdir,
+      s".tmp-${java.util.UUID.randomUUID()}")
+    val os = fs.create(tmp, false)
+    try os.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
+    finally os.close()
+    val target = new org.apache.hadoop.fs.Path(mdir, f"v${version + 1}%08d.txt")
+    if (!claimVersionSlot(fs, tmp, target)) {
+      fs.delete(tmp, false)
+      throw new IllegalStateException(
+        s"manifest commit v${version + 1} lost a race — concurrent writer on $storeDir")
+    }
   }
 
   /** The directory name Spark's partitioned writer produces for a value of
@@ -456,10 +520,9 @@ object Maintenance {
   def vacuumManifested(spark: SparkSession, storeDir: String): Int = {
     val (fs, _) = fsFor(spark, storeDir)
     val mdir = new org.apache.hadoop.fs.Path(s"$storeDir/_manifest")
-    val v = latestManifestVersion(fs, mdir)
+    val v = manifestVersion(spark, storeDir)
     require(v > 0L, s"no committed manifest under $storeDir/_manifest")
-    val keep = liveFiles(spark, storeDir)
-      .map(_.stripPrefix(s"$storeDir/data/")).toSet
+    val keep = manifestAt(spark, storeDir, v)._2.toSet
     val orphans = (dataFilesOnDisk(spark, storeDir) -- keep).toSeq.sorted
     orphans.foreach { rel =>
       fs.delete(new org.apache.hadoop.fs.Path(s"$storeDir/data/$rel"), false)
@@ -489,35 +552,6 @@ object Maintenance {
       }
     }
     orphans.size
-  }
-
-  /** Latest committed manifest version of a manifest store (0 = no store
-    * yet) — the bootstrap probe for a manifest store's consumers.
-    */
-  def manifestVersion(spark: SparkSession, storeDir: String): Long = {
-    val (fs, _) = fsFor(spark, storeDir)
-    latestManifestVersion(fs, new org.apache.hadoop.fs.Path(s"$storeDir/_manifest"))
-  }
-
-  /** Shared commit point: write the next manifest aside, then ONE atomic
-    * claim of the version slot (a lost claim = loud concurrent-writer
-    * failure, never a corrupted store).
-    */
-  private[graft] def publishManifest(fs: org.apache.hadoop.fs.FileSystem,
-      mdir: org.apache.hadoop.fs.Path, version: Long, lines: Seq[String],
-      storeDir: String): Unit = {
-    fs.mkdirs(mdir)
-    val tmp = new org.apache.hadoop.fs.Path(mdir,
-      s".tmp-${java.util.UUID.randomUUID()}")
-    val os = fs.create(tmp, false)
-    try os.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally os.close()
-    val target = new org.apache.hadoop.fs.Path(mdir, f"v${version + 1}%08d.txt")
-    if (!claimVersionSlot(fs, tmp, target)) {
-      fs.delete(tmp, false)
-      throw new IllegalStateException(
-        s"manifest commit v${version + 1} lost a race — concurrent writer on $storeDir")
-    }
   }
 
   /** Keyed diff between two corpus snapshots: per key, is the row `added`,

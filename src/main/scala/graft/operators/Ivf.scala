@@ -193,74 +193,63 @@ object Ivf {
     */
   def writeClustered(corpus: DataFrame, idCol: String, vecCol: String,
       model: Model, path: String): Unit = {
-    assign(corpus, vecCol, model)
-      .where(col("cluster").isNotNull)
-      .write.mode("overwrite").partitionBy("cluster").parquet(s"$path/data")
     val spark = corpus.sparkSession
-    // The overwrite deleted every file an earlier manifest listed: drop it
-    // and every sidecar, then publish the new build as v1. A kill before
-    // the publish leaves NO committed version, so readers fail loudly
-    // instead of serving half a corpus; a full rebuild is not crash-atomic
-    // — rerunning writeClustered is its recovery, as with any
-    // mode("overwrite") write.
+    // A rebuild starts over: drop the old data, manifest and every sidecar,
+    // then publish the new build as v1. A kill before the publish leaves NO
+    // committed version, so readers fail loudly instead of serving half a
+    // corpus; a full rebuild is not crash-atomic — rerunning writeClustered
+    // is its recovery, as with any mode("overwrite") write.
     val (fs, root) = Maintenance.fsFor(spark, path)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/_manifest"), true)
-    fs.listStatus(root).foreach { st =>
-      if (st.getPath.getName.startsWith("centroids")) fs.delete(st.getPath, true)
+    if (fs.exists(root)) fs.listStatus(root).foreach { st =>
+      val n = st.getPath.getName
+      if (n == "data" || n == "_manifest" || n.startsWith("centroids"))
+        fs.delete(st.getPath, true)
     }
-    val files = Maintenance.dataFilesOnDisk(spark, path).toSeq.sorted
-    require(files.nonEmpty, s"no IVF data written at $path/data")
-    // member counts for the sidecar ([[refresh]]'s incremental-mean weights):
-    // read back ONLY the partition column — a footer-metadata count, zero
-    // data columns scanned
+    val assigned = assign(corpus, vecCol, model).where(col("cluster").isNotNull)
+    val staged = Maintenance.stageFiles(assigned, "cluster", path)
+    require(staged.nonEmpty, s"no IVF data written at $path/data")
+    // member counts for the sidecar ([[refreshKeyed]]'s incremental-mean
+    // weights): read back ONLY the partition column — a footer-metadata
+    // count, zero data columns scanned
     val counts = new Array[Long](model.k)
-    spark.read.option("basePath", s"$path/data")
-      .parquet(files.map(f => s"$path/data/$f"): _*)
+    Maintenance.readFiles(spark, path, staged, Some(assigned.schema))
       .groupBy(col("cluster")).count().collect()
       .foreach(r => counts(r.getInt(0)) = r.getLong(1))
-    commitVersion(spark, path, model.centroids, counts, files, Set.empty)
+    commitVersion(spark, path, 0L, assigned.schema, model.centroids, counts,
+      staged, Set.empty)
   }
 
   // ---- manifest-committed layout (r15, VERDICT r14 #1) -----------------
   //
-  // An index store uses the same manifest [[Maintenance]]'s stores use:
-  // `$path/_manifest/vNNNNNNNN.txt` lists the live data files, readers
-  // resolve through it, and every mutation — build, refresh, retraction —
-  // commits with ONE atomic manifest rename. Retraction REWRITES the
-  // touched cluster partitions, and a rewrite on a bare directory has an
-  // unavoidable crash window; staged files that no manifest lists have
-  // none. The centroid sidecar is VERSION-PAIRED (`centroids_vNNNNNNNN`,
-  // written BEFORE the manifest rename), so data view and sidecar always
-  // advance together: a kill anywhere inside a mutation leaves the
-  // previous version fully consistent — both halves — and a
+  // An index store is a [[Maintenance]] manifest store: every mutation —
+  // build, refresh, retraction — is one [[Maintenance.stageFiles]] and one
+  // [[Maintenance.commitFiles]], and every read resolves through the
+  // manifest. The centroid sidecar is VERSION-PAIRED
+  // (`centroids_vNNNNNNNN`, written BETWEEN the two steps), so data view and
+  // sidecar always advance together: a kill anywhere inside a mutation
+  // leaves the previous version fully consistent — both halves — and a
   // replay-from-the-top recomputes identical content with no heal logic.
 
   private def sidecarPath(path: String, version: Long): String =
     f"$path/centroids_v$version%08d"
 
-  /** Sidecar of the latest committed version. */
-  private def currentSidecar(spark: SparkSession, path: String): String = {
-    val v = Maintenance.manifestVersion(spark, path)
-    require(v > 0L, s"no IVF index committed at $path — build it with writeClustered")
-    sidecarPath(path, v)
-  }
-
   /** Read the index corpus as of its latest committed manifest. Every probe
     * and maintenance read resolves through this, so staged-but-uncommitted
     * files (a crashed mutation's orphans) are invisible by construction.
     */
-  def readData(spark: SparkSession, path: String): DataFrame = {
-    val files = Maintenance.liveFiles(spark, path)
-    require(files.nonEmpty,
+  def readData(spark: SparkSession, path: String): DataFrame =
+    Maintenance.readLive(spark, path).getOrElse(throw new IllegalArgumentException(
       s"IVF index at $path lists no live files — not built, or every " +
-        "vector was retracted; rebuild with writeClustered")
-    spark.read.option("basePath", s"$path/data").parquet(files: _*)
-  }
+        "vector was retracted; rebuild with writeClustered"))
 
-  /** Current sidecar as (centroids, member counts), version-resolved. */
+  /** Current sidecar as (centroids, member counts): the latest committed
+    * version's.
+    */
   private def readSidecar(spark: SparkSession,
       path: String): (Array[Array[Float]], Array[Long]) = {
-    val sp = currentSidecar(spark, path)
+    val v = Maintenance.manifestVersion(spark, path)
+    require(v > 0L, s"no IVF index committed at $path — build it with writeClustered")
+    val sp = sidecarPath(path, v)
     val side = spark.read.parquet(sp)
       .select(col("cluster"), col("centroid"), col("n_members")).collect()
     require(side.nonEmpty, s"no centroids at $sp")
@@ -274,12 +263,10 @@ object Ivf {
     (cents, counts)
   }
 
-  /** Commit a mutation as the store's next version: write the
-    * version-paired sidecar first, then publish the manifest whose rename
-    * makes sidecar + data view visible atomically together. `staged`
-    * are newly-written data files (relative paths) to add; partitions named
-    * in `dropDirs` drop their previous files (their replacement content, if
-    * any, is in `staged`).
+  /** Commit a mutation's `staged` files over version `v`: write the
+    * version-paired sidecar, then [[Maintenance.commitFiles]] publishes the
+    * manifest (dropping the `dropDirs` partitions' previous files) whose
+    * rename makes sidecar + data view visible atomically together.
     *
     * The sidecar lands via write-to-unique-temp + one rename into the
     * versioned slot (r16, ADVICE r15): a racing writer that finds the slot
@@ -293,21 +280,17 @@ object Ivf {
     * orphan-check-to-rename instant can still interleave; the
     * single-maintainer contract is what actually excludes that.
     */
-  private def commitVersion(spark: SparkSession, path: String,
+  private def commitVersion(spark: SparkSession, path: String, v: Long,
+      schema: org.apache.spark.sql.types.StructType,
       cents: Array[Array[Float]], counts: Array[Long],
       staged: Seq[String], dropDirs: Set[String]): Unit = {
     val (fs, _) = Maintenance.fsFor(spark, path)
-    val mdir = new org.apache.hadoop.fs.Path(s"$path/_manifest")
-    val v = Maintenance.latestManifestVersion(fs, mdir)
-    val dataBase = s"$path/data/"
-    val kept = Maintenance.liveFiles(spark, path).map(_.stripPrefix(dataBase))
-      .filterNot(f => dropDirs.contains(f.takeWhile(_ != '/')))
     val tmpSide = s"$path/centroids_.tmp-${java.util.UUID.randomUUID()}"
     writeCentroidsTo(spark, cents, counts, tmpSide)
     val tmpP = new org.apache.hadoop.fs.Path(tmpSide)
     val target = new org.apache.hadoop.fs.Path(sidecarPath(path, v + 1))
     if (fs.exists(target)) {
-      if (Maintenance.latestManifestVersion(fs, mdir) > v) {
+      if (Maintenance.manifestVersion(spark, path) > v) {
         fs.delete(tmpP, true)
         throw new IllegalStateException(
           s"sidecar commit v${v + 1} lost a race — concurrent writer on $path")
@@ -315,11 +298,11 @@ object Ivf {
       fs.delete(target, true) // crashed-attempt orphan; replay rewrites it
     }
     require(fs.rename(tmpP, target), s"sidecar rename failed: $tmpSide -> $target")
-    Maintenance.publishManifest(fs, mdir, v, (kept ++ staged).sorted, path)
+    Maintenance.commitFiles(spark, path, v, schema, staged, dropDirs)
   }
 
   /** Centroid sidecar: one tiny file of (cluster, centroid, n_members) —
-    * n_members carries the weights [[refresh]] needs to fold new vectors
+    * n_members carries the weights [[refreshKeyed]] needs to fold new vectors
     * into a centroid as an exact incremental mean.
     */
   private def writeCentroidsTo(spark: SparkSession, cents: Array[Array[Float]],
@@ -337,89 +320,65 @@ object Ivf {
   }
 
   /** Incremental index maintenance — fold `newDocs` into a [[writeClustered]]
-    * layout WITHOUT retraining or rewriting the existing corpus:
+    * layout WITHOUT retraining or rewriting the existing corpus, keyed on
+    * `idCol` so a rerun is convergent:
     *
-    *   1. assign each new vector to its nearest existing centroid (map-only,
-    *      codegen'd) and APPEND it into the partition-pruned data layout —
-    *      dynamic partition append touches only the clusters that actually
-    *      received vectors; every pre-existing file stays byte-identical;
-    *   2. recompute ONLY the touched centroids as the exact incremental mean
-    *      `(n_old·c + Σ new members) / (n_old + n_new)` from one aggregation
-    *      over the new rows (per-cluster count + per-dim sums — O(k×dims)
-    *      to the driver, like train), and commit the tiny sidecar with them.
+    *   1. anti-join the batch against the ids ALREADY IN the committed index
+    *      (an id-only scan), so a replayed batch never double-appends;
+    *   2. assign each surviving vector to its nearest existing centroid
+    *      (map-only, codegen'd) and stage it into the touched cluster
+    *      partitions; every pre-existing file stays byte-identical;
+    *   3. recompute ONLY the touched centroids as the exact incremental mean
+    *      `(n_old·c + Σ new members) / (n_old + n_new)` from one O(k×dims)
+    *      aggregation over the new rows, and commit the sidecar with them.
     *
-    * The appended files stay invisible until the one manifest rename that
-    * also publishes the new sidecar, so a kill before it leaves the
-    * previous version intact; [[refreshKeyed]] is the replay-safe form to
-    * rerun. Centroid drift is bounded by construction (each refresh moves a
-    * centroid toward the true mean of its members), but old rows keep
-    * their original partition assignment — after MANY refreshes on a
-    * drifting corpus the assignment/centroid gap grows and recall decays
-    * toward the rebuild threshold; RecallSpec gates recall@20 after a 20%
-    * append, and a full [[train]]+[[writeClustered]] remains the reset.
+    * A batch that assigns no row — nothing fresh, or only malformed vectors
+    * (NULL cluster) — commits no version. A killed refresh leaves nothing
+    * visible, so the rerun commits the whole batch once. Centroid drift is
+    * bounded by construction (each refresh moves a centroid toward the true
+    * mean of its members), but old rows keep their original partition
+    * assignment — after MANY refreshes on a drifting corpus the
+    * assignment/centroid gap grows and recall decays toward the rebuild
+    * threshold; RecallSpec gates recall@20 after a 20% append, and a full
+    * [[train]]+[[writeClustered]] remains the reset.
     *
     * Returns the updated model.
     */
-  def refresh(spark: SparkSession, path: String, vecCol: String,
-      newDocs: DataFrame): Model = {
+  def refreshKeyed(spark: SparkSession, path: String, idCol: String,
+      vecCol: String, newDocs: DataFrame): Model = {
+    val v = Maintenance.manifestVersion(spark, path)
     val (cents, counts) = readSidecar(spark, path)
-    val model = Model(cents)
     val dims = cents.head.length
-
-    // the new slice is small relative to the index — cache it so the append
-    // and the stats aggregation don't each re-read/re-assign the source
-    val assigned = assign(newDocs, vecCol, model)
+    // the new slice is small relative to the index — cache it so the
+    // emptiness probe, the append and the stats aggregation share one
+    // anti-join and assignment instead of each re-running it
+    val assigned = assign(
+      newDocs.join(readData(spark, path).select(col(idCol)), Seq(idCol), "left_anti"),
+      vecCol, Model(cents))
       .where(col("cluster").isNotNull)
       .select(newDocs.columns.toIndexedSeq.map(col) :+ col("cluster"): _*)
       .persist()
     try {
-      val before = Maintenance.dataFilesOnDisk(spark, path)
-      assigned.write.mode("append").partitionBy("cluster").parquet(s"$path/data")
-      val aggs = count(lit(1)).as("n_new") +:
-        (0 until dims).map(j =>
-          sum(try_element_at(col(vecCol), lit(j + 1))).as(s"s$j"))
-      val stats = assigned.groupBy(col("cluster")).agg(aggs.head, aggs.tail: _*)
-        .collect()
-      stats.foreach { r =>
-        val c = r.getInt(0)
-        val nNew = r.getLong(1)
-        val tot = counts(c) + nNew
-        cents(c) = Array.tabulate(dims) { j =>
-          val s = if (r.isNullAt(j + 2)) 0.0 else r.getDouble(j + 2)
-          ((cents(c)(j).toDouble * counts(c) + s) / tot).toFloat
-        }
-        counts(c) = tot
+      if (!assigned.isEmpty) {
+        val staged = Maintenance.stageFiles(assigned, "cluster", path)
+        val aggs = count(lit(1)).as("n_new") +:
+          (0 until dims).map(j =>
+            sum(try_element_at(col(vecCol), lit(j + 1))).as(s"s$j"))
+        assigned.groupBy(col("cluster")).agg(aggs.head, aggs.tail: _*)
+          .collect().foreach { r =>
+            val c = r.getInt(0)
+            val tot = counts(c) + r.getLong(1)
+            cents(c) = Array.tabulate(dims) { j =>
+              val s = if (r.isNullAt(j + 2)) 0.0 else r.getDouble(j + 2)
+              ((cents(c)(j).toDouble * counts(c) + s) / tot).toFloat
+            }
+            counts(c) = tot
+          }
+        commitVersion(spark, path, v, assigned.schema, cents, counts, staged,
+          Set.empty)
       }
-      val staged = (Maintenance.dataFilesOnDisk(spark, path) -- before)
-        .toSeq.sorted
-      commitVersion(spark, path, cents, counts, staged, Set.empty)
       Model(cents)
     } finally assigned.unpersist()
-  }
-
-  /** Replay-safe [[refresh]] (r11, the OPERATIONS.md step-6 idempotency
-    * gap): plain `refresh` appends the whole batch, so re-running a
-    * committed day's batch would double-append every vector. This variant
-    * keys the batch on `idCol` and anti-joins it against the ids ALREADY
-    * IN the committed index (an id-column-only scan — column pruning keeps
-    * vectors out of it); surviving rows take the normal append +
-    * incremental-mean path, and a batch with nothing fresh is a no-op.
-    *
-    * A killed refresh leaves only staged files that no manifest lists, so
-    * the rerun sees the whole batch as fresh and commits it once. Rerunning
-    * the same batch any number of times converges to exactly one copy of
-    * each vector and the single-run sidecar. Cost over plain refresh: one
-    * id-only index scan per refresh.
-    */
-  def refreshKeyed(spark: SparkSession, path: String, idCol: String,
-      vecCol: String, newDocs: DataFrame): Model = {
-    // eager localCheckpoint: the emptiness probe and the refresh share one
-    // anti-join instead of each re-running it
-    val fresh = newDocs
-      .join(readData(spark, path).select(col(idCol)), Seq(idCol), "left_anti")
-      .localCheckpoint(true)
-    if (fresh.isEmpty) loadModel(spark, path)
-    else refresh(spark, path, vecCol, fresh)
   }
 
   /** RETRACT vectors from a written index by id (r15, VERDICT r14 #1 — the
@@ -458,6 +417,7 @@ object Ivf {
     // the touched set comes from an (id, cluster)-only probe BEFORE any
     // write, so a batch with zero matching ids is a pure no-op that
     // commits no new version (r16, ADVICE r15)
+    val v = Maintenance.manifestVersion(spark, path)
     val data = readData(spark, path)
     val ids = removals.select(col(idCol)).distinct()
     val touched = data.select(col(idCol), col("cluster"))
@@ -474,11 +434,7 @@ object Ivf {
         .join(ids, Seq(idCol), "left_anti")
         .persist()
       try {
-        val before = Maintenance.dataFilesOnDisk(spark, path)
-        kept.write.mode("append").partitionBy("cluster")
-          .parquet(s"$path/data")
-        val staged = (Maintenance.dataFilesOnDisk(spark, path) -- before)
-          .toSeq.sorted
+        val staged = Maintenance.stageFiles(kept, "cluster", path)
         val aggs = count(lit(1)).as("n") +:
           (0 until dims).map(j =>
             avg(try_element_at(col(vecCol), lit(j + 1))).as(s"m$j"))
@@ -491,7 +447,7 @@ object Ivf {
           cents(c) = Array.tabulate(dims)(j =>
             if (r.isNullAt(j + 2)) cents(c)(j) else r.getDouble(j + 2).toFloat)
         }
-        commitVersion(spark, path, cents, counts, staged,
+        commitVersion(spark, path, v, kept.schema, cents, counts, staged,
           touched.map(c => Maintenance.partitionDirName("cluster", c)).toSet)
         Model(cents)
       } finally kept.unpersist()
@@ -501,13 +457,8 @@ object Ivf {
   /** Load the trained coarse quantizer back from a [[writeClustered]] layout
     * (tiny driver-side read: k rows of dims floats).
     */
-  def loadModel(spark: SparkSession, path: String): Model = {
-    val sp = currentSidecar(spark, path)
-    val rows = spark.read.parquet(sp)
-      .orderBy(col("cluster")).select(col("centroid")).collect()
-    require(rows.nonEmpty, s"no centroids at $sp")
-    Model(rows.map(_.getSeq[Float](0).toArray))
-  }
+  def loadModel(spark: SparkSession, path: String): Model =
+    Model(readSidecar(spark, path)._1)
 
   /** Probe a written index: partition-pruned scan of the `nProbe` clusters
     * nearest the query — train cost paid once at [[writeClustered]] time,

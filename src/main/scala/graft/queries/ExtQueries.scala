@@ -5907,9 +5907,10 @@ object ExtQueries {
       val src = new java.io.File(dir, "embeddings.parquet")
       // :q8 — the layout also carries per-vector int8 quantized columns
       // (scale, q8) since r9, the 4×-smaller scan the quantized probe reads;
-      // :m1 — the layout is manifest-committed from its first write, so a
-      // plain-directory index an older build left behind is never reused
-      val key = s"${src.getAbsolutePath}:${src.length}:${src.lastModified}:k$K:i2:q8:m1"
+      // :m2 — the layout is manifest-committed from its first write and
+      // each manifest records its schema, so an index an older layout left
+      // behind is never reused
+      val key = s"${src.getAbsolutePath}:${src.length}:${src.lastModified}:k$K:i2:q8:m2"
       val path = new java.io.File(
         sys.props.getOrElse("java.io.tmpdir", "/tmp"),
         "graft_ivf_" + java.lang.Long.toHexString(

@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,4 +24,17 @@ object SparkSpec {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** One root per test JVM for every spec's scratch directories, deleted
+    * when that JVM exits (`Test / fork := true`, so the hook runs in the
+    * forked JVM) — a test run leaves nothing behind in `java.io.tmpdir`.
+    */
+  private lazy val tempRoot: Path = {
+    val root = Files.createTempDirectory("graft-spec-")
+    sys.addShutdownHook(FileUtils.deleteQuietly(root.toFile))
+    root
+  }
+
+  /** A fresh scratch directory under the per-JVM root. */
+  def tempDir(prefix: String): Path = Files.createTempDirectory(tempRoot, prefix)
 }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -21,7 +19,7 @@ class StatsQuerySpec extends SparkSpec {
     * dir and return its path.
     */
   private def fixture(rows: Seq[(Long, String, Long)]): String = {
-    val dir = Files.createTempDirectory("graft_stats_").toString
+    val dir = SparkSpec.tempDir("graft_stats_").toString
     rows.toDF("doc_id", "text", "n_chars")
       .select($"doc_id", $"text", lit("en").as("lang"),
         lit("src0").as("source"), $"n_chars")

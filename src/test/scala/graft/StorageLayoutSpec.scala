@@ -28,7 +28,7 @@ class StorageLayoutSpec extends SparkSpec {
     // into the fact scan so non-matching rows die before the exchange —
     // at 100 TB this is the difference between shuffling the whole fact and
     // shuffling the ~matching slice
-    val dir = java.nio.file.Files.createTempDirectory("graft_bloom_").toString
+    val dir = SparkSpec.tempDir("graft_bloom_").toString
     Tables.load(spark, sf, "orders")
       .select("o_orderkey", "o_custkey", "o_totalprice")
       .write.parquet(s"$dir/orders")

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
@@ -22,8 +21,7 @@ class TablesSpec extends SparkSpec {
   private val usTruncated = Timestamp.from(java.time.Instant.ofEpochSecond(1709251201L, 234567000L))
 
   private def writeFixture(writer: String => Unit): String = {
-    val dir = Files.createTempDirectory("tables-fixture").toFile
-    dir.deleteOnExit()
+    val dir = SparkSpec.tempDir("tables-fixture").toFile
     writer(dir.getAbsolutePath)
     dir.getAbsolutePath
   }

@@ -21,13 +21,16 @@ import org.apache.spark.sql.functions._
   *     partitions);
   *   - the incremental rollup refresh equals a from-scratch rebuild;
   *   - the day-2 churn gate (snapshotDiff) sees exactly the expected
-  *     added/changed/removed counts.
+  *     added/changed/removed counts;
+  *   - compacting the meter store after day 2, killed before its commit
+  *     and rerun, then vacuumed, keeps it equal to the single-shot truth
+  *     at every point and leaves fewer live files.
   *
   * Steps exercised: 1 ingest (extractRuns on real zips), 2 observe, 3
   * validate (star schema on the day's slice), 4 upsert (manifested zones
   * and meters) and rollup refresh, 5 incremental dedup, 6 IVF refresh
-  * (refreshKeyed), 7 publish (writeJsonl), 8 gates (snapshotDiff). Step 9
-  * (compaction) is off-critical-path and spec'd elsewhere.
+  * (refreshKeyed), 7 publish (writeJsonl), 8 gates (snapshotDiff), 9
+  * compaction (compact, then vacuumManifested).
   */
 class DailyJobSpec extends SparkSpec {
 
@@ -126,13 +129,13 @@ class DailyJobSpec extends SparkSpec {
   }
 
   /** One daily run, OPERATIONS.md order; `crashBeforeRollup` kills the job
-    * right after the warehouse commit (the judge's scenario). Returns the
-    * day's validated zones slice for the gate assertions.
+    * right after the warehouse commit. Returns the day's validated zones and
+    * meters slices for the gate assertions.
     */
   private def dailyJob(arrivalDir: Path, zonesStore: String,
       metersStore: String, rollupDir: String, publishDir: String,
       indexedDocs: Option[DataFrame], crashBeforeRollup: Boolean,
-      indexDir: Option[String] = None): DataFrame = {
+      indexDir: Option[String] = None): (DataFrame, DataFrame) = {
     // step 1: ingest
     val runs = Extract.extractRuns(spark, arrivalDir.toString)
     val zonesRaw = runs.map(_.zones).reduce(_ unionByName _)
@@ -164,9 +167,9 @@ class DailyJobSpec extends SparkSpec {
     val metrics = obs.get
     assert(metrics("rows").asInstanceOf[Long] > 0 &&
       metrics("null_temp").asInstanceOf[Long] == 0L)
+    val metersDay = withMonth(metersRaw)
     val touchedMonths =
-      Maintenance.upsertManifested(withMonth(metersRaw), meterKeys, "month",
-        metersStore)
+      Maintenance.upsertManifested(metersDay, meterKeys, "month", metersStore)
     // step 5: dedup maintenance on the day's slice
     indexedDocs.foreach { idx =>
       val newDocs = asDocs(zonesRaw)
@@ -189,7 +192,7 @@ class DailyJobSpec extends SparkSpec {
         embed(asDocs(zonesRaw)))
       if (crashBeforeRollup) unpublishLatest(idx)
     }
-    if (crashBeforeRollup) return zonesDay // ---- CRASH (kill -9 stand-in)
+    if (crashBeforeRollup) return (zonesDay, metersDay) // ---- CRASH (kill -9 stand-in)
     // step 4b: rollup refresh — COMPLETE current data for touched months,
     // read back from the store (the refresh contract), never the delta
     val monthsSlice = melt(Maintenance.readManifested(spark, metersStore)
@@ -197,13 +200,13 @@ class DailyJobSpec extends SparkSpec {
     Maintenance.refreshMonthlyRollup(monthsSlice, rollupDir)
     // step 7: publish the day's artifacts
     Export.writeJsonl(Maintenance.readManifested(spark, rollupDir), publishDir)
-    zonesDay
+    (zonesDay, metersDay)
   }
 
-  test("OPERATIONS.md steps 1-8 as a two-day run with a kill between " +
+  test("OPERATIONS.md steps 1-9 as a two-day run with a kill between " +
     "store commit and rollup refresh: rerun converges to the single-shot " +
     "batch truth and untouched partition files stay byte-identical") {
-    val root = Files.createTempDirectory("graft_daily_")
+    val root = SparkSpec.tempDir("graft_daily_")
     val zonesStore = s"$root/zones_store"
     val metersStore = s"$root/meters_store"
     val rollupDir = s"$root/rollup"
@@ -211,7 +214,7 @@ class DailyJobSpec extends SparkSpec {
     val publish2 = s"$root/publish_day2"
 
     // ---- day 1: bootstrap
-    val day1Zones = dailyJob(day1Dir, zonesStore, metersStore, rollupDir,
+    val (day1Zones, day1Meters) = dailyJob(day1Dir, zonesStore, metersStore, rollupDir,
       publish1, indexedDocs = None, crashBeforeRollup = false)
     val day1Snapshot = Maintenance.readManifested(spark, zonesStore)
       .persist()
@@ -257,7 +260,7 @@ class DailyJobSpec extends SparkSpec {
       "crash window: the sidecar must still be the day-1 state")
 
     // ---- day 2, rerun from the top (the idempotency contract)
-    val day2Zones = dailyJob(day2Dir, zonesStore, metersStore, rollupDir,
+    val (day2Zones, day2Meters) = dailyJob(day2Dir, zonesStore, metersStore, rollupDir,
       publish2, indexedDocs = Some(indexed), crashBeforeRollup = false,
       indexDir = Some(idxDir))
 
@@ -355,6 +358,35 @@ class DailyJobSpec extends SparkSpec {
     // step-7 artifact really published and re-readable
     assert(spark.read.json(publish2).count() ===
       Maintenance.readManifested(spark, rollupDir).count())
+
+    // ---- step 9 after day 2: compaction is one more commit that changes
+    // files, not rows. Killed before its commit (un-published, like the
+    // step-6 crash), rerun, then vacuumed: the meter store equals the
+    // single-shot truth at every point and ends with fewer live files
+    val metersTruth = day1Meters
+      .join(day2Meters.select(meterKeys.map(col): _*).distinct(), meterKeys,
+        "left_anti")
+      .unionByName(day2Meters)
+    def assertMeters(point: String): Unit = {
+      val m = Maintenance.readManifested(spark, metersStore)
+        .select(metersTruth.columns.toIndexedSeq.map(col): _*)
+      assert(m.exceptAll(metersTruth).isEmpty && metersTruth.exceptAll(m).isEmpty,
+        s"meter store diverged from the single-shot truth $point")
+    }
+    val liveBefore = Maintenance.readManifested(spark, metersStore).inputFiles.length
+    assertMeters("before compaction")
+    Maintenance.compact(spark, metersStore)
+    assertMeters("after compaction")
+    unpublishLatest(metersStore)
+    assertMeters("inside the compaction's crash window")
+    val planned = Maintenance.compact(spark, metersStore)
+    assertMeters("after the compaction rerun")
+    assert(Maintenance.vacuumManifested(spark, metersStore) > 0,
+      "vacuum found none of the files compaction replaced")
+    assertMeters("after vacuum")
+    val liveAfter = Maintenance.readManifested(spark, metersStore).inputFiles.length
+    assert(liveAfter === planned && liveAfter < liveBefore,
+      s"live files $liveBefore -> $liveAfter (planned $planned)")
     day1Snapshot.unpersist(blocking = false)
   }
 }

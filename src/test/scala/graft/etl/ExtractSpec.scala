@@ -25,7 +25,7 @@ class ExtractSpec extends SparkSpec {
     intercept[java.io.FileNotFoundException] {
       Extract.extractSimulationData(spark, "/nonexistent/run_x.zip")
     }
-    val junk = Files.createTempFile("graft_bad_", ".zip")
+    val junk = SparkSpec.tempDir("graft_bad_").resolve("bad.zip")
     Files.writeString(junk, "not a zip at all")
     intercept[IllegalArgumentException] {
       Extract.extractSimulationData(spark, junk.toString)
@@ -101,7 +101,7 @@ class ExtractSpec extends SparkSpec {
   test("quarantine CSV reader: clean rows parse under the schema, mangled " +
     "rows land verbatim in the quarantine lane, nothing lost or doubled") {
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("graft_quarantine_")
+    val dir = SparkSpec.tempDir("graft_quarantine_")
     Files.writeString(dir.resolve("data.csv"),
       """id,name,score
         |1,alice,0.5

@@ -13,7 +13,7 @@ class LoadExportSpec extends SparkSpec {
   }
 
   test("parquet round-trip preserves row counts and schema") {
-    val out = Files.createTempDirectory("graft_load_").toString
+    val out = SparkSpec.tempDir("graft_load_").toString
     Load.loadToParquet(schema, out)
     val names = Load.loadParquetDir(spark, out)
     assert(names.toSet == schema.keySet)
@@ -25,7 +25,7 @@ class LoadExportSpec extends SparkSpec {
   }
 
   test("loadParquetDir rejects hostile table names") {
-    val out = Files.createTempDirectory("graft_guard_").toString
+    val out = SparkSpec.tempDir("graft_guard_").toString
     Load.loadToParquet(Map("good_name" -> schema("dim_building")), out)
     // a name the ^[a-zA-Z0-9_]+$ guard must refuse
     val bad = new java.io.File(out, "bad-name;drop.parquet")
@@ -84,7 +84,7 @@ class LoadExportSpec extends SparkSpec {
   test("JSON export: honestly computed, schema-valid document") {
     Load.registerAll(spark, schema)
     val summary = Export.buildSummary(spark, schema)
-    val out = Files.createTempDirectory("graft_export_").resolve("summary.json")
+    val out = SparkSpec.tempDir("graft_export_").resolve("summary.json")
     Export.writeSummaryJson(summary, out.toString)
     val errors = Export.validateSummaryJson(out.toString)
     assert(errors.isEmpty, errors.mkString("; "))
@@ -99,7 +99,7 @@ class LoadExportSpec extends SparkSpec {
   }
 
   test("S12 fallback tier 1: parquet/ glob prefers meter-named files") {
-    val dir = Files.createTempDirectory("graft_s12a_")
+    val dir = SparkSpec.tempDir("graft_s12a_")
     val pq = dir.resolve("parquet")
     schema("fact_meters").write.parquet(pq.resolve("fact_meters.parquet").toString)
     schema("dim_building").write.parquet(pq.resolve("dim_building.parquet").toString)
@@ -117,7 +117,7 @@ class LoadExportSpec extends SparkSpec {
   }
 
   test("S12 tier 1 reads schema-aligned multi-file candidates in ONE scan") {
-    val dir = Files.createTempDirectory("graft_s12e_")
+    val dir = SparkSpec.tempDir("graft_s12e_")
     val pq = dir.resolve("parquet")
     // two meter-preferred files, identical schema → one multi-path FileScan
     val firstB = schema("fact_meters").select("building_id").head().getString(0)
@@ -133,7 +133,7 @@ class LoadExportSpec extends SparkSpec {
     assert(src.count() == schema("fact_meters").count(), "no rows lost in the packed read")
 
     // ragged schemas still union by name via the fallback loop
-    val dir2 = Files.createTempDirectory("graft_s12f_")
+    val dir2 = SparkSpec.tempDir("graft_s12f_")
     val pq2 = dir2.resolve("parquet")
     schema("fact_meters").drop("cooling_kwh").write
       .parquet(pq2.resolve("meters_a.parquet").toString)
@@ -146,7 +146,7 @@ class LoadExportSpec extends SparkSpec {
   }
 
   test("S12 fallback tier 2: catalog views win when parquet/ is absent or empty") {
-    val dir = Files.createTempDirectory("graft_s12b_")
+    val dir = SparkSpec.tempDir("graft_s12b_")
     // an EMPTY parquet tier must fall through (reference's df.empty check)
     schema("fact_meters").limit(0).write
       .parquet(dir.resolve("parquet").resolve("meters_empty.parquet").toString)
@@ -166,14 +166,14 @@ class LoadExportSpec extends SparkSpec {
     val s = spark.newSession()
     s.catalog.listTables().collect().filter(!_.isTemporary)
       .foreach(t => s.sql(s"DROP TABLE IF EXISTS `${t.name}`"))
-    val dir = Files.createTempDirectory("graft_s12c_")
+    val dir = SparkSpec.tempDir("graft_s12c_")
     Files.writeString(dir.resolve("meters.csv"),
       "electric_kwh,heating_kwh\n1.5,2.5\n2.5,3.5\n")
     val doc = Export.summaryFromDir(s, dir.toString)
     assert(doc.select("annual.electric_kwh").head().getDouble(0) == 4.0)
     assert(doc.select("annual.total_kwh").head().getDouble(0) == 10.0)
     // no source at all: loud failure, never the reference's fabricated sample
-    val empty = Files.createTempDirectory("graft_s12d_")
+    val empty = SparkSpec.tempDir("graft_s12d_")
     val err = intercept[IllegalArgumentException] {
       Export.summaryFromDir(s, empty.toString)
     }
@@ -181,7 +181,7 @@ class LoadExportSpec extends SparkSpec {
   }
 
   test("export validator rejects a broken document") {
-    val p = Files.createTempDirectory("graft_badjson_").resolve("bad.json")
+    val p = SparkSpec.tempDir("graft_badjson_").resolve("bad.json")
     Files.writeString(p, """{"pipeline": "x", "annual": {"total_kwh": "oops"}}""")
     val errs = Export.validateSummaryJson(p.toString)
     assert(errs.nonEmpty)
@@ -201,7 +201,7 @@ class LoadExportSpec extends SparkSpec {
         lit("x").as("tag")))
     val schema = df.schema
     for (gz <- Seq(false, true)) {
-      val out = Files.createTempDirectory(s"graft_jsonl_$gz").toString
+      val out = SparkSpec.tempDir(s"graft_jsonl_$gz").toString
       Export.writeJsonl(df, out, gzip = gz)
       if (gz) {
         val files = new java.io.File(out).listFiles()
@@ -214,7 +214,7 @@ class LoadExportSpec extends SparkSpec {
     }
     // absent fields -> NULL; extra fields ignored (the schema-on-read
     // contract stated in the scaladoc)
-    val loose = Files.createTempDirectory("graft_jsonl_loose")
+    val loose = SparkSpec.tempDir("graft_jsonl_loose")
     Files.writeString(loose.resolve("part-0.json"),
       """{"id": 7, "unexpected": true}""" + "\n")
     val readBack = Export.readJsonl(spark, loose.toString, schema).collect()

@@ -1,14 +1,20 @@
 package graft.etl
 
-import java.nio.file.Files
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 class MaintenanceSpec extends SparkSpec {
 
+  /** A store's live data files, per its latest committed manifest. */
+  private def liveFiles(store: String): Seq[String] =
+    Maintenance.readManifested(spark, store).inputFiles.toSeq
+
+  private def partitionDir(file: String): String =
+    new org.apache.hadoop.fs.Path(file).getParent.getName
+
   test("readEvolved merges evolving schemas; old files yield NULL for new columns") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_evolve_").toString
+    val dir = SparkSpec.tempDir("graft_evolve_").toString
     // generation 1: (id, a) — generation 2 adds column b
     Seq((1L, "x"), (2L, "y")).toDF("id", "a")
       .coalesce(1).write.parquet(s"$dir/g=1")
@@ -27,39 +33,100 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("compact collapses a many-small-file table to the computed target count") {
-    val dir = Files.createTempDirectory("graft_compact_in_").toString
-    val out = Files.createTempDirectory("graft_compact_out_").toString
+    val store = SparkSpec.tempDir("graft_compact_").toString
     val df = graft.Tables.load(spark, "/root/testdata/sf0.001", "lineitem")
-    df.repartition(40).write.mode("overwrite").parquet(dir)
-    val before = new java.io.File(dir).listFiles()
-      .count(f => f.getName.endsWith(".parquet"))
+    Maintenance.upsertManifested(df.repartition(40),
+      Seq("l_orderkey", "l_linenumber", "l_returnflag"), "l_returnflag", store)
+    val before = liveFiles(store).size
     assert(before >= 30, s"fixture should start fragmented, had $before files")
+    val nParts = df.select("l_returnflag").distinct().count().toInt
 
-    // target sized so everything fits one file
-    val planned = Maintenance.compact(spark, dir, out, targetBytes = 1L << 30)
-    val after = new java.io.File(out).listFiles()
-      .count(f => f.getName.endsWith(".parquet"))
-    assert(planned == 1 && after == 1, s"expected 1 output file, got $after")
+    // target sized so every partition fits one file
+    val planned = Maintenance.compact(spark, store, targetBytes = 1L << 30)
+    val after = liveFiles(store)
+    assert(planned == nParts && after.size == nParts,
+      s"expected one file per partition ($nParts), planned $planned, got ${after.size}")
+    assert(after.map(partitionDir).distinct.size == nParts)
     // content preserved exactly
-    val a = spark.read.parquet(dir); val b = spark.read.parquet(out)
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+    val b = Maintenance.readManifested(spark, store)
+      .select(df.columns.toIndexedSeq.map(col): _*)
+    assert(df.exceptAll(b).isEmpty && b.exceptAll(df).isEmpty)
   }
 
-  test("compact sizes from files under PARTITION subdirs (recursive listing)") {
-    val dir = Files.createTempDirectory("graft_compact_part_").toString
-    val out = Files.createTempDirectory("graft_compact_part_out_").toString
+  test("compact sizes each partition from its live files' lengths and " +
+    "writes exactly the planned file count") {
+    val store = SparkSpec.tempDir("graft_compact_part_").toString
     val df = graft.Tables.load(spark, "/root/testdata/sf0.001", "orders")
-    df.withColumn("pri", substring(col("o_orderpriority"), 1, 1))
-      .repartition(8).write.partitionBy("pri").mode("overwrite").parquet(dir)
-    // a flat (non-recursive) listing would see 0 bytes here and plan 1 file
-    // from an EMPTY size estimate — the recursive walk must find the real
-    // bytes and the rewrite must preserve every row
-    val planned = Maintenance.compact(spark, dir, out, targetBytes = 8L * 1024)
-    assert(planned > 1,
-      "planned=1 means the recursive listing found zero bytes under the partition dirs")
-    val a = spark.read.parquet(dir); val b = spark.read.parquet(out)
-    assert(a.count() == b.count())
-    assert(a.drop("pri").exceptAll(b.drop("pri")).isEmpty)
+      .withColumn("pri", substring(col("o_orderpriority"), 1, 1))
+    Maintenance.upsertManifested(df.repartition(8), Seq("o_orderkey", "pri"),
+      "pri", store)
+    val before = liveFiles(store).size
+    val nParts = df.select("pri").distinct().count().toInt
+    // a small target splits every partition, but into fewer files than the
+    // 8 each one starts with
+    val planned = Maintenance.compact(spark, store, targetBytes = 8L * 1024)
+    val after = liveFiles(store).size
+    assert(planned > nParts, s"planned $planned files for $nParts partitions")
+    assert(after == planned && after < before,
+      s"planned $planned, live files $before -> $after")
+    val b = Maintenance.readManifested(spark, store)
+      .select(df.columns.toIndexedSeq.map(col): _*)
+    assert(df.exceptAll(b).isEmpty && b.exceptAll(df).isEmpty)
+  }
+
+  test("compact reads only the live files: a key upserted twice compacts " +
+    "to its latest row, never resurrecting the superseded one") {
+    import spark.implicits._
+    val store = SparkSpec.tempDir("graft_compact_live_").toString
+    Maintenance.upsertManifested((1 to 40).map(k => (1, k, 0L)).toDF("p", "k", "v")
+      .repartition(4), Seq("p", "k"), "p", store)
+    Maintenance.upsertManifested(Seq((1, 7, 1L)).toDF("p", "k", "v"),
+      Seq("p", "k"), "p", store)
+    Maintenance.upsertManifested(Seq((1, 7, 2L)).toDF("p", "k", "v"),
+      Seq("p", "k"), "p", store)
+    val expected = (1 to 40).map(k => (1, k, if (k == 7) 2L else 0L)).toSet
+    def rows(): Seq[(Int, Int, Long)] = Maintenance.readManifested(spark, store)
+      .select("p", "k", "v").as[(Int, Int, Long)].collect().toSeq
+    assert(rows().toSet == expected && rows().size == 40)
+    val before = liveFiles(store).size
+    assert(before > 1, "fixture must leave several live files to compact")
+
+    assert(Maintenance.compact(spark, store) == 1)
+    assert(liveFiles(store).size == 1)
+    val got = rows()
+    assert(got.size == 40 && got.toSet == expected,
+      s"compaction changed the rows: ${got.filter(_._2 == 7)}")
+    // the replaced files are orphans now; vacuum reclaims them
+    assert(Maintenance.vacuumManifested(spark, store) >= before)
+    assert(rows().toSet == expected)
+  }
+
+  test("a string partition column keeps its values and type through upsert " +
+    "and compaction: \"007\", an escaped path value, and NULL") {
+    import spark.implicits._
+    val store = SparkSpec.tempDir("graft_string_part_").toString
+    // day 1 holds only a numeric-looking value and NULL, so directory-name
+    // inference would read the column back as a number
+    val day1 = for (p <- Seq(Some("007"), None); k <- 1 to 20) yield (p, k, 0L)
+    Maintenance.upsertManifested(day1.toDF("p", "k", "v").repartition(4),
+      Seq("p", "k"), "p", store)
+    // day 2 carries both partitions through a read and adds a value that
+    // needs path escaping
+    val day2 = Seq((Option("007"), 7, 1L), (Option.empty[String], 7, 1L),
+      (Option("a/b=c d"), 1, 5L))
+    Maintenance.upsertManifested(day2.toDF("p", "k", "v"), Seq("p", "k"), "p", store)
+    val expected = day1.map { case (p, k, _) => (p, k, if (k == 7) 1L else 0L) }
+      .toSet + ((Some("a/b=c d"), 1, 5L))
+    def check(stage: String): Unit = {
+      val got = Maintenance.readManifested(spark, store)
+      assert(got.schema("p").dataType == org.apache.spark.sql.types.StringType,
+        s"$stage: p read back as ${got.schema("p").dataType}")
+      assert(got.select("p", "k", "v").as[(Option[String], Int, Long)]
+        .collect().toSet == expected, s"$stage: rows changed")
+    }
+    check("after upsert")
+    assert(Maintenance.compact(spark, store) == 3)
+    check("after compaction")
   }
 
   test("ANALYZE TABLE feeds the CBO measured stats (rowCount visible in catalog)") {
@@ -94,7 +161,7 @@ class MaintenanceSpec extends SparkSpec {
   test("general keyed upsert: replaces matched keys, carries the rest, " +
     "leaves untouched partitions byte-identical, and replays idempotently") {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft_upsert_").toString
+    val out = SparkSpec.tempDir("graft_upsert_").toString
     // an int partition axis + a composite row key — deliberately NOT the
     // month/event_type shape, to prove the axis generalizes
     val day1 = Seq(
@@ -106,8 +173,7 @@ class MaintenanceSpec extends SparkSpec {
       "scenario", out) == Seq("1", "2", "3"))
 
     def partFiles(): Map[String, Set[String]] =
-      Maintenance.liveFiles(spark, out).toSet
-        .groupBy((f: String) => f.stripPrefix(s"$out/data/").takeWhile(_ != '/'))
+      liveFiles(out).toSet.groupBy(partitionDir)
     val before = partFiles()
 
     // day 2: replace (2, a), add (2, c); (2, b) must carry, 1 and 3 untouched
@@ -138,7 +204,7 @@ class MaintenanceSpec extends SparkSpec {
   test("upsert rejects a partition axis outside the key (silent-duplicate " +
     "guard) and reports touched partitions in natural order") {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft_upsert_guard_").toString
+    val out = SparkSpec.tempDir("graft_upsert_guard_").toString
     val rows = Seq((2, "a", 1L), (10, "a", 2L)).toDF("scenario", "metric", "v")
     // partitionCol ∉ keyCols: a moved key's old row would survive unseen
     val e = intercept[IllegalArgumentException] {
@@ -153,7 +219,7 @@ class MaintenanceSpec extends SparkSpec {
   test("manifest-committed upsert: a reader mid-upsert sees the old or the " +
     "new content in full, never a mix; vacuum reclaims orphans") {
     import spark.implicits._
-    val store = Files.createTempDirectory("graft_manifest_").toString
+    val store = SparkSpec.tempDir("graft_manifest_").toString
     val day1 = Seq(
       (1, "a", 10L), (2, "a", 20L), (2, "b", 21L), (3, "a", 30L))
       .toDF("scenario", "metric", "v")
@@ -220,7 +286,7 @@ class MaintenanceSpec extends SparkSpec {
         .map(r => (if (r.isNullAt(0)) None else Some(r.getInt(0)),
           r.getString(1), r.getLong(2))).toSet
 
-    val store = Files.createTempDirectory("graft_manifest_null_").toString
+    val store = SparkSpec.tempDir("graft_manifest_null_").toString
     assert(Maintenance.upsertManifested(day1, Seq("scenario", "metric"),
       "scenario", store) == Seq("null", "1"))
     Maintenance.upsertManifested(day2, Seq("scenario", "metric"), "scenario", store)
@@ -248,7 +314,7 @@ class MaintenanceSpec extends SparkSpec {
 
   test("manifest version slot can be claimed exactly once on the local FS " +
     "(concurrent-writer guard; POSIX rename would silently overwrite)") {
-    val dir = Files.createTempDirectory("graft_claim_").toString
+    val dir = SparkSpec.tempDir("graft_claim_").toString
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
     def stage(name: String, content: String) = {
@@ -276,7 +342,7 @@ class MaintenanceSpec extends SparkSpec {
       .select($"ts", $"event_type", $"value")
     val m2 = m1.withColumn("ts", expr("timestampadd(MONTH, 1, ts)"))
     val all = m1.unionByName(m2)
-    val out = Files.createTempDirectory("graft_rollup_").toString
+    val out = SparkSpec.tempDir("graft_rollup_").toString
 
     // day 1: month 1 complete, month 2 only half-arrived — the first
     // refresh of the empty store is the full build
@@ -284,8 +350,7 @@ class MaintenanceSpec extends SparkSpec {
       m1.unionByName(m2.where(hash($"ts") % 2 === 0)), out)
 
     def partFiles(): Map[String, Set[String]] =
-      Maintenance.liveFiles(spark, out).toSet
-        .groupBy((f: String) => f.stripPrefix(s"$out/data/").takeWhile(_ != '/'))
+      liveFiles(out).toSet.groupBy(partitionDir)
     val before = partFiles()
     assert(before.size == 2, s"fixture must build 2 month partitions: $before")
 
@@ -380,7 +445,7 @@ class MaintenanceSpec extends SparkSpec {
     "keys AND fully-emptied partitions, replay is a no-op, untouched " +
     "partition files stay byte-identical") {
     import spark.implicits._
-    val store = Files.createTempDirectory("graft_cdc_store_").toString
+    val store = SparkSpec.tempDir("graft_cdc_store_").toString
     def read(): Set[(Long, Int, String)] =
       Maintenance.readManifested(spark, store)
         .select("k", "p", "v").collect()
@@ -490,7 +555,7 @@ class MaintenanceSpec extends SparkSpec {
     "ADDRESS, not runtime box — Seq(1L) vs an int column commits; a true " +
     "stray still rejects") {
     import spark.implicits._
-    val store = Files.createTempDirectory("graft_rebuild_box_").toString
+    val store = SparkSpec.tempDir("graft_rebuild_box_").toString
     val rows = Seq((1, "a"), (1, "b")).toDF("p", "v")
     // int column, Long touched values: dir names match (p=1), so this must
     // commit instead of rejecting every row as stray (ADVICE r14)

@@ -41,7 +41,7 @@ class ObserveSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val (inst, obs) = Observe.corpusMetrics(df, "text", "stage0")
     inst.write.mode("overwrite")
-      .parquet(java.nio.file.Files.createTempDirectory("graft_obs")
+      .parquet(SparkSpec.tempDir("graft_obs")
         .toFile.getAbsolutePath + "/out")
     val m = obs.get
     assert(m("rows") == 4L, m.toString)

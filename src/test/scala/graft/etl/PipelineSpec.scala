@@ -1,6 +1,5 @@
 package graft.etl
 
-import java.nio.file.Files
 import graft.SparkSpec
 
 class PipelineSpec extends SparkSpec {
@@ -8,7 +7,7 @@ class PipelineSpec extends SparkSpec {
   test("end-to-end pipeline: extract -> transform -> validate -> load -> export") {
     val simDir = SyntheticRuns.tempDir()
     SyntheticRuns.writeFixtureDir(simDir)
-    val outDir = Files.createTempDirectory("graft_pipe_").toString
+    val outDir = SparkSpec.tempDir("graft_pipe_").toString
     // a second run into the same outDir must replace the first run's files,
     // not add to them (a daily job re-runs into one output directory)
     for (pass <- 1 to 2) {
@@ -30,7 +29,7 @@ class PipelineSpec extends SparkSpec {
     val simDir = SyntheticRuns.tempDir()
     SyntheticRuns.writeRunZip(simDir,
       SyntheticRuns.Spec("B1", "BASE", corrupt = Map("air_temp_C" -> 50.0)))
-    val outDir = Files.createTempDirectory("graft_pipe_bad_").toString
+    val outDir = SparkSpec.tempDir("graft_pipe_bad_").toString
     val code = Pipeline.run(spark, Pipeline.Config(
       simulationsDir = simDir.toString, outputDir = outDir))
     assert(code == 2)
@@ -46,7 +45,7 @@ class PipelineSpec extends SparkSpec {
     val simDir = SyntheticRuns.tempDir()
     SyntheticRuns.writeRunZip(simDir,
       SyntheticRuns.Spec("B1", "BASE", corrupt = Map("power_kw" -> -5.0)))
-    val outDir = Files.createTempDirectory("graft_pipe_skip_").toString
+    val outDir = SparkSpec.tempDir("graft_pipe_skip_").toString
     val code = Pipeline.run(spark, Pipeline.Config(
       simulationsDir = simDir.toString, outputDir = outDir, skipValidation = true))
     assert(code == 0)

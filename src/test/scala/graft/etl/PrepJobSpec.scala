@@ -274,7 +274,7 @@ class PrepJobSpec extends SparkSpec {
     "vector-retraction, and pack windows: rerun converges to the " +
     "single-shot truth, untouched shards stay byte-identical, checksums " +
     "match, retracted vectors unprobeable") {
-    val root = Files.createTempDirectory("graft_prep_")
+    val root = SparkSpec.tempDir("graft_prep_")
     val docStore = s"$root/docs"
     val indexDir = s"$root/index"
     val prepStore = s"$root/prep"

@@ -10,7 +10,7 @@ class StorageExtSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft_storage_ext")
+    SparkSpec.tempDir("graft_storage_ext")
       .toFile.getAbsolutePath
 
   test("readEvolved (multi-path) unions generations; plain read can drop the " +

@@ -2,8 +2,10 @@ package graft.etl
 
 import java.io.{ByteArrayOutputStream, FileOutputStream}
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 import java.util.zip.{ZipEntry, ZipOutputStream}
+
+import graft.SparkSpec
 
 /** Deterministic synthetic run-bundle generator for tests — the engine-side
   * equivalent of the reference's fixture generator
@@ -115,9 +117,5 @@ object SyntheticRuns {
       sc <- Seq("BASE", "ECO")
     } yield writeRunZip(dir, Spec(b, sc))
 
-  def tempDir(): Path = {
-    val d = Files.createTempDirectory("graft_fixture_")
-    d.toFile.deleteOnExit()
-    d
-  }
+  def tempDir(): Path = SparkSpec.tempDir("graft_fixture_")
 }

@@ -82,7 +82,7 @@ class IvfRetractSpec extends SparkSpec {
   test("removeKeyed: retracted ids vanish from probes, survivors keep " +
     "exact top-k, sidecar matches at-rest truth, untouched cluster files " +
     "stay byte-identical, unknown ids are a no-op") {
-    val path = Files.createTempDirectory("graft_ivf_rm_").toString
+    val path = SparkSpec.tempDir("graft_ivf_rm_").toString
     val model = Ivf.train(emb, "vec_id", "embedding", k = 8, iters = 2)
     Ivf.writeClustered(emb, "vec_id", "embedding", model, path)
     val q = Similarity.vectorOf(spark, emb, "vec_id", "embedding", 1L)
@@ -137,7 +137,7 @@ class IvfRetractSpec extends SparkSpec {
   test("a kill INSIDE the removal window leaves the previous version fully " +
     "consistent (data view AND sidecar), and a replay-from-the-top " +
     "converges to the single-shot truth; vacuum reclaims the orphans") {
-    val path = Files.createTempDirectory("graft_ivf_rm_crash_").toString
+    val path = SparkSpec.tempDir("graft_ivf_rm_crash_").toString
     val model = Ivf.train(emb, "vec_id", "embedding", k = 8, iters = 2)
     Ivf.writeClustered(emb, "vec_id", "embedding", model, path)
     val q = Similarity.vectorOf(spark, emb, "vec_id", "embedding", 1L)
@@ -189,7 +189,7 @@ class IvfRetractSpec extends SparkSpec {
   test("a removal batch with ZERO matching ids is a pure no-op: no new " +
     "version, no staged sidecar, data view unchanged (r16, ADVICE r15)") {
     import spark.implicits._
-    val path = Files.createTempDirectory("graft_ivf_rm_noop_").toString
+    val path = SparkSpec.tempDir("graft_ivf_rm_noop_").toString
     val model = Ivf.train(emb, "vec_id", "embedding", k = 8, iters = 2)
     Ivf.writeClustered(emb, "vec_id", "embedding", model, path)
     assert(Maintenance.manifestVersion(spark, path) === 1L,
@@ -205,10 +205,38 @@ class IvfRetractSpec extends SparkSpec {
     assert(Ivf.readData(spark, path).count() === emb.count())
   }
 
+  test("a refresh that assigns no row — only wrong-dimension vectors — " +
+    "commits no version and no sidecar") {
+    val path = SparkSpec.tempDir("graft_ivf_noop_refresh_").toString
+    val model = Ivf.train(emb, "vec_id", "embedding", k = 4, iters = 1)
+    Ivf.writeClustered(emb, "vec_id", "embedding", model, path)
+    val before = liveFileNames(path)
+    // fresh ids, so the id anti-join keeps every row; 3-dim vectors, so
+    // every row assigns to a NULL cluster
+    val malformed = emb.limit(5)
+      .withColumn("vec_id", col("vec_id") + 7000000L)
+      .withColumn("embedding", slice(col("embedding"), 1, 3))
+    Ivf.refreshKeyed(spark, path, "vec_id", "embedding", malformed)
+    assert(Maintenance.manifestVersion(spark, path) === 1L,
+      "a refresh that assigned no row committed a version")
+    assert(!Files.exists(Paths.get(f"$path/centroids_v${2L}%08d")),
+      "a refresh that assigned no row staged a next-version sidecar")
+    assert(liveFileNames(path) === before)
+  }
+
+  test("compact refuses an IVF index, naming its rebuild") {
+    val path = SparkSpec.tempDir("graft_ivf_compact_").toString
+    val model = Ivf.train(emb, "vec_id", "embedding", k = 4, iters = 1)
+    Ivf.writeClustered(emb, "vec_id", "embedding", model, path)
+    val e = intercept[IllegalArgumentException](Maintenance.compact(spark, path))
+    assert(e.getMessage.contains("Ivf.writeClustered"), e.getMessage)
+    assert(Maintenance.manifestVersion(spark, path) === 1L)
+  }
+
   test("vacuumManifested reclaims superseded versioned sidecars — only the " +
     "latest manifest's pair survives, and the store still serves (r16, " +
     "ADVICE r15)") {
-    val path = Files.createTempDirectory("graft_ivf_rm_vac_").toString
+    val path = SparkSpec.tempDir("graft_ivf_rm_vac_").toString
     val model = Ivf.train(emb, "vec_id", "embedding", k = 8, iters = 2)
     Ivf.writeClustered(emb, "vec_id", "embedding", model, path)
     // three versions: the build (v1), removal (v2), removal (v3)
@@ -240,7 +268,7 @@ class IvfRetractSpec extends SparkSpec {
   test("retracting every member of a cluster keeps probe routing total " +
     "(empty cluster: n_members=0, centroid retained) and the fenced store " +
     "still serves atomic refreshes and partition-pruned probes") {
-    val path = Files.createTempDirectory("graft_ivf_rm_empty_").toString
+    val path = SparkSpec.tempDir("graft_ivf_rm_empty_").toString
     val model = Ivf.train(emb, "vec_id", "embedding", k = 8, iters = 2)
     Ivf.writeClustered(emb, "vec_id", "embedding", model, path)
     val q = Similarity.vectorOf(spark, emb, "vec_id", "embedding", 1L)

@@ -110,8 +110,7 @@ class RecallSpec extends SparkSpec {
     // explicit probe at the sidecar-derived knob (fixture corpus: n=500
     // members, k=8 cells -> nProbe=6), so serving never ships a fixture
     // knob to an index three decades bigger
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_sized_")
-      .toString
+    val path = SparkSpec.tempDir("graft_ivf_sized_").toString
     val model = Ivf.train(emb, "vec_id", "embedding", k = 8, iters = 2)
     Ivf.writeClustered(emb, "vec_id", "embedding", model, path)
     val sized = ids(Ivf.probeClusteredSized(spark, path, "vec_id",
@@ -187,7 +186,7 @@ class RecallSpec extends SparkSpec {
     "probe at the declared config, exact at full width + full rerank, and " +
     "both phases stay partition-pruned") {
     import graft.functions.VectorFunctions
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_q8_").toString
+    val path = SparkSpec.tempDir("graft_ivf_q8_").toString
     // the r9 at-rest layout: data partitions carry the int8 twin columns
     val withQ = emb
       .withColumn("scale", VectorFunctions.int8Scale(col("embedding")))
@@ -230,7 +229,7 @@ class RecallSpec extends SparkSpec {
   test("IVF refresh folds a 20% corpus append without rebuild and holds " +
     "recall@20") {
     import java.nio.file.{Files, Paths}
-    val path = Files.createTempDirectory("graft_ivf_refresh_").toString
+    val path = SparkSpec.tempDir("graft_ivf_refresh_").toString
     // 80/20 split on vec_id: the index is built before the late 20% exists.
     // NOTE vec_id 0 — the recall query's own vector — is in the LATE slice,
     // so pre-refresh the index cannot contain the query doc itself.
@@ -247,7 +246,7 @@ class RecallSpec extends SparkSpec {
     }
     val before = dataFiles()
 
-    val refreshed = Ivf.refresh(spark, path, "embedding", late)
+    val refreshed = Ivf.refreshKeyed(spark, path, "vec_id", "embedding", late)
 
     // no rebuild: every pre-existing data file survives byte-name-identical;
     // the append only ADDED files into touched cluster partitions
@@ -284,7 +283,7 @@ class RecallSpec extends SparkSpec {
     import org.apache.spark.sql.functions.{col => c}
     val more = emb.where(c("vec_id") % 10 === 3)
       .withColumn("vec_id", c("vec_id") + 1000000L)
-    Ivf.refresh(spark, path, "embedding", more)
+    Ivf.refreshKeyed(spark, path, "vec_id", "embedding", more)
     val got2 = ids(Ivf.probeClustered(spark, path, "vec_id", "embedding", q,
       nProbe = 2, k = 20))
     // duplicate vectors under new ids may legitimately displace old top-k
@@ -302,7 +301,7 @@ class RecallSpec extends SparkSpec {
     "adds them once") {
     import java.nio.file.{Files, Paths}
     import graft.etl.Maintenance
-    val path = Files.createTempDirectory("graft_ivf_keyed_").toString
+    val path = SparkSpec.tempDir("graft_ivf_keyed_").toString
     val base = emb.where(col("vec_id") % 5 =!= 0)
     val late = emb.where(col("vec_id") % 5 === 0)
     val model = Ivf.train(base, "vec_id", "embedding", k = 8, iters = 2)
@@ -312,7 +311,7 @@ class RecallSpec extends SparkSpec {
       f"$path/centroids_v${Maintenance.manifestVersion(spark, path)}%08d")
       .agg(sum("n_members")).head().getLong(0)
 
-    // normal keyed refresh behaves like refresh
+    // a fresh batch folds in: every vector once, sidecar totals the corpus
     Ivf.refreshKeyed(spark, path, "vec_id", "embedding", late)
     val n1 = dataCount()
     assert(n1 === emb.count() && sidecarTotal() === n1)
@@ -330,7 +329,7 @@ class RecallSpec extends SparkSpec {
     // of a job killed after staging its files, before the manifest rename
     val more = emb.where(col("vec_id") % 10 === 3)
       .withColumn("vec_id", col("vec_id") + 1000000L)
-    Ivf.refresh(spark, path, "embedding", more)
+    Ivf.refreshKeyed(spark, path, "vec_id", "embedding", more)
     val v2 = Maintenance.manifestVersion(spark, path)
     assert(v2 === v1 + 1)
     Files.delete(Paths.get(f"$path/_manifest/v$v2%08d.txt"))

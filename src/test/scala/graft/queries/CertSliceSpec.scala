@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import scala.collection.mutable
 
 import graft.{SparkEntry, SparkSpec}
@@ -48,7 +46,7 @@ class CertSliceSpec extends SparkSpec {
   }
 
   private def writeFixture(n: Long): String = {
-    val d = Files.createTempDirectory("graft_certslice_").toString
+    val d = SparkSpec.tempDir("graft_certslice_").toString
     (0L until n).map(i => (i, vecOf(i).toSeq, (i % nLabels).toInt))
       .toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$d/embeddings.parquet")

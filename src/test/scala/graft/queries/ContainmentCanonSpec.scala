@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import graft.{SparkEntry, SparkSpec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -23,7 +21,7 @@ class ContainmentCanonSpec extends SparkSpec {
   import spark.implicits._
 
   private def fixture(rows: Seq[(Long, String)]): String = {
-    val dir = Files.createTempDirectory("graft_contain_").toString
+    val dir = SparkSpec.tempDir("graft_contain_").toString
     rows.toDF("doc_id", "text")
       .select($"doc_id", $"text", lit("en").as("lang"),
         lit("src0").as("source"), length($"text").cast("long").as("n_chars"))

@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import graft.{SparkEntry, SparkSpec}
 
 /** Over-threshold gate for the `mediaTruthSlice` branch of the three
@@ -76,7 +74,7 @@ class MediaSliceSpec extends SparkSpec {
   }
 
   private def writeFixture(n: Long): String = {
-    val d = Files.createTempDirectory("graft_mediaslice_").toString
+    val d = SparkSpec.tempDir("graft_mediaslice_").toString
     (0L until n).map(i => (i, 40L + i % 60))
       .toDF("doc_id", "n_chars")
       .write.mode("overwrite").parquet(s"$d/documents.parquet")

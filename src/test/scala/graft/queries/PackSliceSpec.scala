@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 import java.security.MessageDigest
 
 import scala.collection.mutable
@@ -42,7 +41,7 @@ class PackSliceSpec extends SparkSpec {
       .mkString(" ")
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft_packslice_").toString
+    val d = SparkSpec.tempDir("graft_packslice_").toString
     (0L until nDocs).map(i => (i, textOf(i)))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$d/documents.parquet")

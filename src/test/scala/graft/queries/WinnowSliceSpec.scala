@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import graft.{SparkEntry, SparkSpec}
 import org.apache.spark.sql.functions._
 
@@ -34,7 +32,7 @@ class WinnowSliceSpec extends SparkSpec {
   // pairs are designed between ids 4g and 4g+2 (both even → the pair
   // structure survives the slice); odd ids are unique filler.
   private lazy val corpusDir: String = {
-    val dir = Files.createTempDirectory("graft_winnow_slice_").toString
+    val dir = SparkSpec.tempDir("graft_winnow_slice_").toString
     val docs = (0L until 6000L).map { id =>
       val text =
         if (id % 4 == 0 || id % 4 == 2)

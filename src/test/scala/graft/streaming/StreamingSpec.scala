@@ -117,8 +117,7 @@ class StreamingSpec extends SparkSpec {
 
     val parsed = Streaming.parseEventStream(frames)
     assert(parsed.where(!col("is_corrupt")).count() == 0)
-    val quarantine = java.nio.file.Files
-      .createTempDirectory("graft_dlq_").toString + "/dlq"
+    val quarantine = SparkSpec.tempDir("graft_dlq_").toString + "/dlq"
     parsed.where(col("is_corrupt"))
       .select($"kafka_key", $"ingest_ts", $"raw_value")
       .write.parquet(quarantine)
