@@ -1,7 +1,8 @@
 package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, concat_ws, lag, lead, lit, md5, row_number, when}
+import org.apache.spark.sql.functions.{coalesce, col, concat_ws, element_at, lag,
+  lead, lit, md5, row_number, substring_index, typedLit, when}
 import org.apache.spark.sql.types.StructType
 
 /** Table-maintenance operations a long-lived 100 TB deployment needs around
@@ -50,11 +51,11 @@ object Maintenance {
     * launches per scan). Only live files are read, and each partition is
     * sized from their on-disk lengths (rows compress unpredictably):
     * ceil(bytes / targetBytes) files. A partition holding more live files
-    * than that has them dealt round-robin into that many bins, and one
-    * shuffle places each bin in its own task (an exact file count); the
-    * rewrite commits as one version like any mutation. An IVF index is
-    * refused: a version published here would have no paired
-    * `centroids_v*` sidecar.
+    * than that has them dealt round-robin into that many bins; one scan
+    * reads every rewritten file, and one shuffle places each bin in its
+    * own task (an exact file count); the rewrite commits as one version
+    * like any mutation. An IVF index is refused: a version published here
+    * would have no paired `centroids_v*` sidecar.
     *
     * @return the store's live-file count after compaction
     */
@@ -79,9 +80,13 @@ object Maintenance {
       val bins = rewrite.values.toSeq.flatMap { case (files, n) =>
         files.zipWithIndex.groupBy(_._2 % n).values.map(_.map(_._1))
       }
-      val rows = bins.zipWithIndex.map { case (b, i) =>
-        readFiles(spark, storeDir, b, schema).withColumn("__bin", lit(i))
-      }.reduce(_ union _)
+      // one scan of every rewritten file; a row's bin comes from its file,
+      // keyed by `<partDir>/<file>` URI-encoded, as the scan reports it
+      val binOf = bins.zipWithIndex.flatMap { case (b, i) =>
+        b.map(f => new java.net.URI(null, null, f, null).getRawPath -> i) }.toMap
+      val rows = readFiles(spark, storeDir, bins.flatten, schema)
+        .withColumn("__bin", element_at(typedLit(binOf),
+          substring_index(col("_metadata.file_path"), "/", -2)))
         .repartitionById(bins.size, col("__bin")).drop("__bin")
       commitFiles(spark, storeDir, version, rows.schema,
         stageFiles(rows, live.head.takeWhile(_ != '='), storeDir), rewrite.keySet)
@@ -214,22 +219,25 @@ object Maintenance {
 
   private val schemaTag = "#schema "
 
-  /** Committed manifest `v` of a store: the schema its commit recorded (None
-    * for a manifest written before schemas were recorded) and its live files,
-    * RELATIVE to the data dir (the manifest's key space).
+  /** Committed manifest `v` of a store: the schema its commit recorded and
+    * its live files, RELATIVE to the data dir (the manifest's key space). A
+    * manifest without the `#schema` line is refused: typing its files from
+    * their directory names would turn a string value "007" into the number 7.
     */
   private def manifestAt(spark: SparkSession, storeDir: String,
-      v: Long): (Option[StructType], Seq[String]) =
-    if (v == 0L) (None, Nil)
+      v: Long): (StructType, Seq[String]) =
+    if (v == 0L) (new StructType(), Nil)
     else {
       val (fs, _) = fsFor(spark, storeDir)
       val in = fs.open(new org.apache.hadoop.fs.Path(f"$storeDir/_manifest/v$v%08d.txt"))
       val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
         .filter(_.nonEmpty).toList
       finally in.close()
-      (lines.headOption.filter(_.startsWith(schemaTag))
-        .map(l => StructType.fromDDL(l.stripPrefix(schemaTag))),
-        lines.filterNot(_.startsWith("#")))
+      require(lines.headOption.exists(_.startsWith(schemaTag)),
+        f"$storeDir/_manifest/v$v%08d.txt records no schema (no first " +
+          s"'$schemaTag<ddl>' line) — rewrite the store: rebuild it from its " +
+          "source rows into a fresh store directory")
+      (StructType.fromDDL(lines.head.stripPrefix(schemaTag)), lines.tail)
     }
 
   /** All committed parquet files currently under the data dir, as paths
@@ -262,10 +270,9 @@ object Maintenance {
     * which also spares the footer-inference job an untyped read runs.
     */
   private[graft] def readFiles(spark: SparkSession, storeDir: String,
-      files: Seq[String], schema: Option[StructType]): DataFrame = {
-    val r = spark.read.option("basePath", s"$storeDir/data")
-    schema.fold(r)(r.schema).parquet(files.map(f => s"$storeDir/data/$f"): _*)
-  }
+      files: Seq[String], schema: StructType): DataFrame =
+    spark.read.option("basePath", s"$storeDir/data").schema(schema)
+      .parquet(files.map(f => s"$storeDir/data/$f"): _*)
 
   /** The store as of its latest committed manifest — the fenced read path;
     * None while it lists no file. In-flight (staged, uncommitted) files are

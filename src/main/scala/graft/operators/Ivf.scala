@@ -212,7 +212,7 @@ object Ivf {
     // weights): read back ONLY the partition column — a footer-metadata
     // count, zero data columns scanned
     val counts = new Array[Long](model.k)
-    Maintenance.readFiles(spark, path, staged, Some(assigned.schema))
+    Maintenance.readFiles(spark, path, staged, assigned.schema)
       .groupBy(col("cluster")).count().collect()
       .foreach(r => counts(r.getInt(0)) = r.getLong(1))
     commitVersion(spark, path, 0L, assigned.schema, model.centroids, counts,

@@ -111,12 +111,14 @@ class MaintenanceSpec extends SparkSpec {
     Maintenance.upsertManifested(day1.toDF("p", "k", "v").repartition(4),
       Seq("p", "k"), "p", store)
     // day 2 carries both partitions through a read and adds a value that
-    // needs path escaping
-    val day2 = Seq((Option("007"), 7, 1L), (Option.empty[String], 7, 1L),
-      (Option("a/b=c d"), 1, 5L))
-    Maintenance.upsertManifested(day2.toDF("p", "k", "v"), Seq("p", "k"), "p", store)
+    // needs path escaping, spread over several files so compaction
+    // rewrites that partition too
+    val escaped = (1 to 4).map(k => (Option("a/b=c d"), k, 5L))
+    val day2 = Seq((Option("007"), 7, 1L), (Option.empty[String], 7, 1L)) ++ escaped
+    Maintenance.upsertManifested(day2.toDF("p", "k", "v").repartition(4),
+      Seq("p", "k"), "p", store)
     val expected = day1.map { case (p, k, _) => (p, k, if (k == 7) 1L else 0L) }
-      .toSet + ((Some("a/b=c d"), 1, 5L))
+      .toSet ++ escaped
     def check(stage: String): Unit = {
       val got = Maintenance.readManifested(spark, store)
       assert(got.schema("p").dataType == org.apache.spark.sql.types.StringType,
@@ -125,8 +127,34 @@ class MaintenanceSpec extends SparkSpec {
         .collect().toSet == expected, s"$stage: rows changed")
     }
     check("after upsert")
+    assert(Maintenance.readManifested(spark, store).where($"p" === "a/b=c d")
+      .select("_metadata.file_path").distinct().count() > 1,
+      "fixture must leave the escaped partition several live files")
     assert(Maintenance.compact(spark, store) == 3)
+    assert(liveFiles(store).size == 3)
     check("after compaction")
+  }
+
+  test("a manifest without a #schema line is refused, naming a rewrite") {
+    import spark.implicits._
+    val store = SparkSpec.tempDir("graft_noschema_").toString
+    Maintenance.upsertManifested(Seq((1, 1, 0L)).toDF("p", "k", "v"),
+      Seq("p", "k"), "p", store)
+    // strip the schema line, as a manifest written before schemas were
+    // recorded would read
+    val m = java.nio.file.Paths.get(s"$store/_manifest/v00000001.txt")
+    val lines = java.nio.file.Files.readAllLines(m)
+    java.nio.file.Files.write(m, lines.subList(1, lines.size))
+    for (op <- Seq[() => Any](
+        () => Maintenance.readManifested(spark, store),
+        () => Maintenance.upsertManifested(Seq((1, 1, 1L)).toDF("p", "k", "v"),
+          Seq("p", "k"), "p", store),
+        () => Maintenance.compact(spark, store))) {
+      val e = intercept[IllegalArgumentException](op())
+      assert(e.getMessage.contains("records no schema") &&
+        e.getMessage.contains("rewrite the store"), e.getMessage)
+    }
+    assert(Maintenance.manifestVersion(spark, store) == 1L)
   }
 
   test("ANALYZE TABLE feeds the CBO measured stats (rowCount visible in catalog)") {
