@@ -2,7 +2,7 @@ package graft.etl
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Canonical nested-JSON summary export (SURVEY §3.3; reference
@@ -11,14 +11,57 @@ import org.apache.spark.sql.functions._
   * (export_json.py:167-168) and peak demand (:188); here both are computed
   * honestly from the data (monthly GROUP BY, max hourly electric draw),
   * per SURVEY §2.6's fidelity note.
+  *
+  * Like the reference, the summary is computed ONE way, whatever the
+  * source: [[buildSummary]] (star schema) and [[summaryFromDir]] (S12
+  * fallback) only pick the meter rows and their month, then share one
+  * grouped pass over them and one KPI block.
   */
 object Export {
 
-  /** Column-synonym resolution for the meter-like table
-    * (reference: export_json.py:129-137).
+  /** Column-synonym table for a meter-like source (reference:
+    * export_json.py:124-137): first column whose lowercased name contains
+    * one of the words.
     */
-  private def resolve(df: DataFrame, wanted: Seq[String]): Option[String] =
-    df.columns.find(c => wanted.exists(w => c.toLowerCase.contains(w)))
+  private val synonyms = Seq(
+    Seq("electric", "elec", "power"), Seq("heating", "heat"),
+    Seq("cooling", "cool"), Seq("total"))
+
+  /** The summary's figures; `monthly` = (month, heating, cooling, total). */
+  private final case class Figures(electric: Double, heating: Double, cooling: Double,
+      total: Double, peak: Double, rows: Long, hours: Long,
+      monthly: Seq[(Int, Double, Double, Double)])
+
+  /** Every summary figure from ONE `groupBy(month)` aggregate, folded on the
+    * driver over at most 13 groups (12 months + the NULL month of a row
+    * with no month). Annual sums, row and hour counts add up over all
+    * groups — each `hourKey` falls in exactly one month group, so summed
+    * per-month distinct counts are exact; the peak (max hourly electric,
+    * kW ≈ kWh/h) is the max of the group maxima; the monthly breakdown
+    * (A9) is the non-NULL groups in month order. A measure column that is
+    * absent or all NULL sums to 0, never NPEs (the dirty-data class
+    * Validate's plausibility check tolerates). When electric + heating +
+    * cooling is 0, the total falls back to a `total`-like column
+    * (reference export_json.py:144-146).
+    */
+  private def figures(df: DataFrame, month: Column, hourKey: Column): Figures = {
+    val Seq(e, h, c, t) = synonyms.map(words =>
+      df.columns.find(n => words.exists(n.toLowerCase.contains)))
+    def measure(n: Option[String]) = n.fold(lit(0.0))(col(_).cast("double"))
+    def sumOf(n: Option[String]) = coalesce(sum(measure(n)), lit(0.0))
+    val groups = df.groupBy(month.as("month"))
+      .agg(sumOf(e), sumOf(h), sumOf(c), sumOf(t), max(measure(e)),
+        count(lit(1)), countDistinct(hourKey))
+      .collect().toSeq
+    def total(i: Int) = groups.map(_.getDouble(i)).sum
+    val ehc = total(1) + total(2) + total(3)
+    Figures(total(1), total(2), total(3), if (ehc == 0.0) total(4) else ehc,
+      peak = groups.filterNot(_.isNullAt(5)).map(_.getDouble(5)).maxOption.getOrElse(0.0),
+      rows = groups.map(_.getLong(6)).sum, hours = groups.map(_.getLong(7)).sum,
+      monthly = groups.filterNot(_.isNullAt(0)).sortBy(_.getInt(0)).map(r =>
+        (r.getInt(0), r.getDouble(2), r.getDouble(3),
+          r.getDouble(1) + r.getDouble(2) + r.getDouble(3))))
+  }
 
   /** Builds the summary document as a one-row nested DataFrame from a
     * registered star schema; serialize with [[writeSummaryJson]].
@@ -36,7 +79,6 @@ object Export {
       buildingId: Option[String] = None,
       scenarioId: Option[String] = None): DataFrame = {
     import spark.implicits._
-    val dimTime = schema("dim_time").select($"time_key", $"timestamp", $"month")
 
     def one(df: DataFrame, keyCol: String, want: Option[String], what: String) = {
       val picked = want.map(v => df.where(col(keyCol) === v)).getOrElse(df)
@@ -50,48 +92,13 @@ object Export {
     val bId = bRow.getString(bRow.fieldIndex("building_id"))
     val sId = sRow.getString(sRow.fieldIndex("scenario_id"))
 
+    // a meters row whose time_key missed dim_time lands in the NULL month:
+    // counted in the annual figures, absent from the monthly breakdown
     val meters = schema("fact_meters")
       .where($"building_id" === bId && $"scenario_id" === sId)
-
-    // column synonyms (reference S12/A3): tolerate renamed meter columns
-    val eCol = resolve(meters, Seq("electric", "elec")).getOrElse("electric_kwh")
-    val hCol = resolve(meters, Seq("heating", "heat")).getOrElse("heating_kwh")
-    val cCol = resolve(meters, Seq("cooling", "cool")).getOrElse("cooling_kwh")
-
-    val withMonth = meters.join(broadcast(dimTime), Seq("time_key"), "left")
-
-    // annual totals (A3) + honestly-computed peak (max hourly electric,
-    // kW ≈ kWh/h) + covered hours, one pass over the scoped fact
-    val annualRow = withMonth.agg(
-      sum(col(eCol)).as("electric"),
-      sum(col(hCol)).as("heating"),
-      sum(col(cCol)).as("cooling"),
-      max(col(eCol)).as("peak"),
-      count(lit(1)).as("n_rows"),
-      countDistinct(col("time_key")).as("hours")).head()
-    require(annualRow.getLong(4) > 0,
-      s"cannot export: fact_meters has no rows for ($bId, $sId)")
-    // an all-NULL measure column sums to NULL — report 0, don't NPE
-    // (same dirty-data class Validate's plausibility check tolerates)
-    def d(i: Int): Double = if (annualRow.isNullAt(i)) 0.0 else annualRow.getDouble(i)
-    val (e, h, c, peak) = (d(0), d(1), d(2), d(3))
-    val total = e + h + c
-    val hours = annualRow.getLong(5)
-
-    // honestly-computed monthly breakdown (A9); sorted on the driver —
-    // collect_list order after a shuffle is not guaranteed
-    // coalesce each sum: a month whose measure column is all-NULL must export
-    // as 0.0, not NPE in getDouble below (same dirty-data class as `d` above)
-    val monthly = withMonth
-      .groupBy(col("month"))
-      .agg(
-        coalesce(sum(col(hCol)), lit(0.0)).as("heating_kwh"),
-        coalesce(sum(col(cCol)), lit(0.0)).as("cooling_kwh"),
-        (coalesce(sum(col(eCol)), lit(0.0)) + coalesce(sum(col(hCol)), lit(0.0))
-          + coalesce(sum(col(cCol)), lit(0.0))).as("total_kwh"))
-      // a NULL month group (meters row whose time_key missed dim_time) has
-      // no place in a month-indexed breakdown; drop it rather than NPE
-      .collect().filter(!_.isNullAt(0)).sortBy(_.getInt(0)).toSeq
+      .join(broadcast(schema("dim_time").select($"time_key", $"month")), Seq("time_key"), "left")
+    val f = figures(meters, $"month", $"time_key")
+    require(f.rows > 0, s"cannot export: fact_meters has no rows for ($bId, $sId)")
 
     // comfort hours from this building's zones under this scenario (A5)
     val comfort = (schema.get("fact_zone_conditions"), schema.get("dim_zone")) match {
@@ -107,35 +114,31 @@ object Export {
       case _ => 0.0
     }
 
-    val floorArea = bRow.getLong(bRow.fieldIndex("floor_area_m2")).toDouble
     renderSummaryDoc(spark,
-      scenario = (sId, bRow.getString(bRow.fieldIndex("building_name")),
-        bRow.getString(bRow.fieldIndex("location")), floorArea, s"$hours hours"),
-      annual = (total, h, c, e),
-      monthly = monthly.map(m => (m.getInt(0), m.getDouble(1), m.getDouble(2), m.getDouble(3))),
-      kpis = (if (floorArea > 0) total / floorArea else 0.0,
-        if (floorArea > 0) h / floorArea else 0.0,
-        if (floorArea > 0) c / floorArea else 0.0,
-        total * co2FactorKgPerKwh / 1000.0,
-        if (floorArea > 0) total * co2FactorKgPerKwh / floorArea else 0.0,
-        peak,
-        comfort))
+      (sId, bRow.getString(bRow.fieldIndex("building_name")),
+        bRow.getString(bRow.fieldIndex("location")),
+        bRow.getLong(bRow.fieldIndex("floor_area_m2")).toDouble, s"${f.hours} hours"),
+      f, comfort, co2FactorKgPerKwh)
   }
 
   /** Shared document assembly: one-row nested frame in the canonical export
-    * schema, used by [[buildSummary]] (star-schema path) and
-    * [[summaryFromDir]] (S12 fallback path).
+    * schema, with the KPIs (per floor area when the area is known) derived
+    * once from the figures — used by [[buildSummary]] (star-schema path)
+    * and [[summaryFromDir]] (S12 fallback path).
     */
   private def renderSummaryDoc(spark: SparkSession,
       scenario: (String, String, String, Double, String),
-      annual: (Double, Double, Double, Double),
-      monthly: Seq[(Int, Double, Double, Double)],
-      kpis: (Double, Double, Double, Double, Double, Double, Double)): DataFrame = {
+      f: Figures, comfortPercent: Double, co2FactorKgPerKwh: Double): DataFrame = {
     import spark.implicits._
+    val area = scenario._4
+    def perArea(v: Double) = if (area > 0) v / area else 0.0
+    val co2Kg = f.total * co2FactorKgPerKwh
     val doc = Seq((
       "graft-spark",
       java.time.Instant.now().toString,
-      scenario, annual, monthly, kpis))
+      scenario, (f.total, f.heating, f.cooling, f.electric), f.monthly,
+      (perArea(f.total), perArea(f.heating), perArea(f.cooling), co2Kg / 1000.0,
+        perArea(co2Kg), f.peak, comfortPercent)))
       .toDF("pipeline", "generated_at", "scenario", "annual", "monthly_breakdown", "kpis")
 
     doc.select(
@@ -168,7 +171,11 @@ object Export {
     * source wins:
     *
     *   1. `*.parquet` under `dir/parquet/`, preferring file names containing
-    *      `meter`/`energy` (all preferred files unioned by name);
+    *      `meter`/`energy` — all picked files in ONE `mergeSchema` scan, so
+    *      files with ragged columns union by name (a column missing from a
+    *      file reads as NULL there); files that disagree on a column's TYPE
+    *      cannot merge, and fall through to tier 2 like an unreadable
+    *      candidate;
     *   2. the session catalog — `vw_energy_summary`, then `fact_meters`,
     *      then the first listed table (the Spark analogue of the
     *      reference's DuckDB-file tier);
@@ -202,30 +209,9 @@ object Export {
         val n = p.getName.toLowerCase
         n.contains("meter") || n.contains("energy")
       }
-      val pick = if (preferred.nonEmpty) preferred else all
-      if (pick.isEmpty) None
-      else {
-        val paths = pick.map(_.toString)
-        // ONE multi-path scan when every footer agrees on the schema (one
-        // FileScan node — partition planning packs all files together,
-        // exactly how a 100-file artifact dir should read). The per-file
-        // unionByName loop survives only as the ragged-schema fallback: a
-        // multi-path read resolves its schema from one footer and would
-        // silently NULL-fill or drop columns unique to the other files.
-        val alignedSchema = if (paths.lengthCompare(1) > 0) scala.util.Try {
-          val schemas = paths.map(p => spark.read.parquet(p).schema)
-          Option.when(schemas.forall(_ == schemas.head))(schemas.head)
-        }.toOption.flatten
-        else None
-        val single =
-          if (paths.lengthCompare(1) == 0) tryRead(spark.read.parquet(paths.head))
-          // hand the probe's verified schema to the packed read so it
-          // doesn't re-infer from the same footers a second time
-          else alignedSchema.flatMap(sch =>
-            tryRead(spark.read.schema(sch).parquet(paths: _*)))
-        single.orElse(tryRead(paths.map(p => spark.read.parquet(p))
-          .reduce(_.unionByName(_, allowMissingColumns = true))))
-      }
+      val picks = (if (preferred.nonEmpty) preferred else all).map(_.toString)
+      if (picks.isEmpty) None
+      else tryRead(spark.read.option("mergeSchema", "true").parquet(picks: _*))
     }
     lazy val tier2 = Seq("vw_energy_summary", "fact_meters")
       .collectFirst { case t if spark.catalog.tableExists(t) => spark.table(t) }
@@ -241,18 +227,10 @@ object Export {
     tier1.orElse(tier2).orElse(tier3)
   }
 
-  /** Reference's column-synonym lists (export_json.py:124-127). */
-  private val heatingSyn = Seq("heating", "heat")
-  private val coolingSyn = Seq("cooling", "cool")
-  private val electricSyn = Seq("electric", "elec", "power")
-  private val totalSyn = Seq("total")
-
   /** S12 — summary export over whatever [[resolveMeterSource]] found: a flat
-    * meter-like table rather than a registered star schema. Aggregates via
-    * the same column-synonym resolution as [[buildSummary]]; when heating +
-    * cooling + electric all resolve to zero, falls back to a `total`-like
-    * column (reference export_json.py:144-146). The monthly breakdown is
-    * derived honestly when the source carries a `month` column or any
+    * meter-like table rather than a registered star schema, summarized by
+    * the same pass and KPI block as [[buildSummary]]. The monthly breakdown
+    * is derived honestly when the source carries a `month` column or any
     * timestamp column — and is otherwise EMPTY, never the reference's
     * hardcoded seasonal pattern; likewise no data at all throws instead of
     * fabricating the sample document (export_json.py:192-227) — the same
@@ -276,49 +254,17 @@ object Export {
       s"cannot export: no non-empty meter-like source under $dir " +
         "(parquet/ glob, catalog views/tables, or loose parquet/csv)"))
 
-    val eCol = resolve(df, electricSyn)
-    val hCol = resolve(df, heatingSyn)
-    val cCol = resolve(df, coolingSyn)
-    def sumOf(c: Option[String]) =
-      c.map(n => coalesce(sum(col(n).cast("double")), lit(0.0))).getOrElse(sum(lit(0.0)))
-
-    val a = df.agg(
-      sumOf(eCol).as("e"), sumOf(hCol).as("h"), sumOf(cCol).as("c"),
-      eCol.map(n => coalesce(max(col(n).cast("double")), lit(0.0)))
-        .getOrElse(max(lit(0.0))).as("peak"),
-      sumOf(resolve(df, totalSyn)).as("t")).head()
-    val (e, h, c, peak) = (a.getDouble(0), a.getDouble(1), a.getDouble(2), a.getDouble(3))
-    val total = if (e + h + c > 0.0) e + h + c else a.getDouble(4)
-
     // honest monthly: a month column, else any timestamp column, else none
     val monthExpr = df.columns.find(_.equalsIgnoreCase("month"))
       .map(n => col(n).cast("int"))
       .orElse(df.schema.fields
         .find(_.dataType == org.apache.spark.sql.types.TimestampType)
         .map(f => month(col(f.name))))
-    val monthly = monthExpr match {
-      case Some(m) =>
-        df.groupBy(m.as("month"))
-          .agg(sumOf(hCol).as("h"), sumOf(cCol).as("c"),
-            (sumOf(hCol) + sumOf(cCol) + sumOf(eCol)).as("t"))
-          .collect().filter(!_.isNullAt(0)).sortBy(_.getInt(0))
-          .map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2), r.getDouble(3))).toSeq
-      case None => Seq.empty
-    }
-
-    val area = scenario.floorAreaM2
+      .getOrElse(lit(null).cast("int"))
     renderSummaryDoc(spark,
-      scenario = (scenario.name, scenario.buildingType, scenario.location,
-        area, scenario.simulationPeriod),
-      annual = (total, h, c, e),
-      monthly = monthly,
-      kpis = (if (area > 0) total / area else 0.0,
-        if (area > 0) h / area else 0.0,
-        if (area > 0) c / area else 0.0,
-        total * co2FactorKgPerKwh / 1000.0,
-        if (area > 0) total * co2FactorKgPerKwh / area else 0.0,
-        peak,
-        0.0))
+      (scenario.name, scenario.buildingType, scenario.location,
+        scenario.floorAreaM2, scenario.simulationPeriod),
+      figures(df, monthExpr, lit(null)), 0.0, co2FactorKgPerKwh)
   }
 
   /** Serializes the one-row summary to a pretty JSON document

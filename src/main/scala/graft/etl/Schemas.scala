@@ -126,7 +126,8 @@ object Schemas {
     StructField("ghi_W_m2", DoubleType, nullable = false)))
 
   /** table name → expected schema, the validation contract
-    * (reference: validate/__init__.py:248-258).
+    * (reference: validate/__init__.py:248-258): a `nullable = false` field
+    * is one the schema check counts nulls in.
     */
   val starSchema: Map[String, StructType] = Map(
     "dim_building" -> dimBuilding,
@@ -138,9 +139,4 @@ object Schemas {
     "fact_hvac" -> factHvac,
     "fact_meters" -> factMeters,
     "fact_weather" -> factWeather)
-
-  /** (table, column) pairs allowed to contain NULLs
-    * (reference: validate/__init__.py:31-34).
-    */
-  val nullableAllowList: Set[(String, String)] = Set(("fact_hvac", "cop_proxy"))
 }

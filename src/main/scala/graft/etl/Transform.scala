@@ -32,12 +32,9 @@ object Transform {
   def transformAll(spark: SparkSession, runs: Seq[RunData]): Map[String, DataFrame] = {
     require(runs.nonEmpty, "no runs to transform")
     import spark.implicits._
-    // __ord = position in the (sorted-zip) run list, so "first-seen" dedup
-    // below is the reference's file-order semantics, not partition luck
-    val meta = runs.map(_.metadata).zipWithIndex.toDF("m", "__ord")
-      .select($"m.*", $"__ord")
-    // zones carry __ord too: dim_zone's name dedup is first-seen BY RUN
-    // (reference keeps the first run's zone_name for a renamed zone)
+    // zones carry __ord = position in the (sorted-zip) run list: dim_zone's
+    // name dedup is first-seen BY RUN (reference keeps the first run's
+    // zone_name for a renamed zone), not partition luck
     val zonesAll = runs.map(_.zones).zipWithIndex
       .map { case (df, i) => df.withColumn("__ord", lit(i)) }
       .reduce(_ unionByName _)
@@ -46,20 +43,15 @@ object Transform {
     // weather identical across runs → read once (reference :373-382)
     val weatherOne = runs.head.weather
 
-    // ---- dims from metadata (first-seen dedup per key; reference :29-41,
-    // :61-71). min_by on the explicit __ord, NOT first(): Spark's first()
-    // picks whichever partition is consumed first and flips across runs.
-    val dimBuilding = meta
-      .groupBy($"building_id")
-      .agg(min_by(
-        struct($"building_name", $"location", $"floor_area_m2"), $"__ord").as("m"))
-      .select($"building_id", $"m.*")
-      .orderBy($"building_id")
-    val dimScenario = meta
-      .groupBy($"scenario_id")
-      .agg(min_by(struct($"description"), $"__ord").as("m"))
-      .select($"scenario_id", $"m.*")
-      .orderBy($"scenario_id")
+    // ---- dims from the run metadata the driver already holds (first-seen
+    // dedup per key in run-list order; reference :29-41, :61-71)
+    val metas = runs.map(_.metadata)
+    val dimBuilding = metas.distinctBy(_.building_id).sortBy(_.building_id)
+      .map(m => (m.building_id, m.building_name, m.location, m.floor_area_m2))
+      .toDF("building_id", "building_name", "location", "floor_area_m2")
+    val dimScenario = metas.distinctBy(_.scenario_id).sortBy(_.scenario_id)
+      .map(m => (m.scenario_id, m.description))
+      .toDF("scenario_id", "description")
 
     // ---- dim_zone / dim_ahu: distinct ids, sorted, keyed (reference :75-145)
     // min(struct(__ord, name)), not dropDuplicates: dropDuplicates keeps a

@@ -45,8 +45,9 @@ object Validate {
     ("fact_meters", "heating_kwh", 0.0, Double.PositiveInfinity),
     ("fact_meters", "cooling_kwh", 0.0, Double.PositiveInfinity))
 
-  /** Check 1 — schema: table presence, column presence, nulls outside the
-    * allow-list (reference: validate/__init__.py:18-57). All column null
+  /** Check 1 — schema: table presence, column presence, nulls in every
+    * column [[Schemas.starSchema]] declares `nullable = false` (reference:
+    * validate/__init__.py:18-57, allow-list at :31-34). All column null
     * counts for a table come from ONE aggregate pass.
     */
   def checkSchema(schema: Map[String, DataFrame]): CheckResult = {
@@ -57,8 +58,8 @@ object Validate {
           val actualCols = df.columns.toSet
           val missingCols = expected.fieldNames.filterNot(actualCols.contains)
           val colErrors = missingCols.map(c => s"$name: missing column $c")
-          val checkable = expected.fieldNames.filter(actualCols.contains)
-            .filterNot(c => Schemas.nullableAllowList.contains((name, c)))
+          val checkable = expected.fields.filter(f => !f.nullable && actualCols(f.name))
+            .map(_.name)
           val nullErrors = if (checkable.isEmpty) Seq.empty else {
             val counts = df.agg(
               count(lit(1)).as("__n"),

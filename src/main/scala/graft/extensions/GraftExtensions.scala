@@ -1,7 +1,7 @@
 package graft.extensions
 
 import graft.functions.expr.{GraftCosine, GraftDeflateLen, GraftDot, GraftLshBucket, GraftNfc, GraftNorm2, GraftWinnow}
-import org.apache.spark.sql.{GraftSqlBridge, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.IntegerType
@@ -16,9 +16,8 @@ import org.apache.spark.sql.types.IntegerType
   * }}}
   *
   * after which `spark.sql("SELECT graft_cosine(a.embedding, b.embedding)...")`
-  * works anywhere SQL does. [[GraftExtensions.register]] does the same on an
-  * already-built session (Verify and Bench call it right after building
-  * theirs, so the SQL surface is live in both driver harnesses).
+  * works anywhere SQL does. Bench, Verify and Inspect build their sessions
+  * with the config form.
   *
   * Registered functions:
   *   - `graft_dot(array<float>, array<float>) -> double`
@@ -53,7 +52,7 @@ object GraftExtensions {
   private def arity(name: String, args: Seq[Expression], n: Int): Unit =
     require(args.length == n, s"$name expects $n arguments, got ${args.length}")
 
-  /** (name, info, builder) triples — shared by the injector and [[register]]. */
+  /** (name, info, builder) triples the injector registers. */
   val functions: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     ("graft_dot",
       info("graft_dot", "graft_dot(a, b) - dot product of two float vectors."),
@@ -93,10 +92,4 @@ object GraftExtensions {
           "ratio quality filter primitive)."),
       (args: Seq[Expression]) => {
         arity("graft_deflate_len", args, 1); GraftDeflateLen(args.head) }))
-
-  /** Imperative registration on an already-built session. */
-  def register(spark: SparkSession): Unit =
-    functions.foreach { case (name, i, builder) =>
-      GraftSqlBridge.registerFunction(spark, name, i, builder)
-    }
 }

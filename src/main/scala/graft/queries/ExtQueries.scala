@@ -5911,14 +5911,21 @@ object ExtQueries {
       // each manifest records its schema, so an index an older layout left
       // behind is never reused
       val key = s"${src.getAbsolutePath}:${src.length}:${src.lastModified}:k$K:i2:q8:m2"
+      // ONE cache directory per source path; the marker records the key it
+      // was built under, so a changed source or layout rebuilds in place
+      // instead of stranding the old build beside a new one
       val path = new java.io.File(
         sys.props.getOrElse("java.io.tmpdir", "/tmp"),
         "graft_ivf_" + java.lang.Long.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(key).toLong & 0xffffffffL)
+          scala.util.hashing.MurmurHash3.stringHash(src.getAbsolutePath).toLong & 0xffffffffL)
       ).getAbsolutePath
-      if (!built.contains(path)) {
-        val marker = new java.io.File(path, "_GRAFT_OK")
-        if (!marker.exists()) {
+      if (!built.contains(key)) {
+        val marker = java.nio.file.Paths.get(path, "_GRAFT_OK")
+        if (!(java.nio.file.Files.isRegularFile(marker) &&
+            java.nio.file.Files.readString(marker) == key)) {
+          // drop the stale marker FIRST: a rebuild killed midway must not
+          // leave a marker vouching for a half-rewritten layout
+          java.nio.file.Files.deleteIfExists(marker)
           val e = emb(s, dir)
           val model = Ivf.train(e, "vec_id", "embedding", k = K, iters = 2)
           // enrich the at-rest rows with the int8 twin BEFORE clustering:
@@ -5930,9 +5937,9 @@ object ExtQueries {
             .withColumn("q8",
               VectorFunctions.quantizeInt8(col("embedding"), col("scale")))
           Ivf.writeClustered(withQ, "vec_id", "embedding", model, path)
-          marker.createNewFile()
+          java.nio.file.Files.writeString(marker, key)
         }
-        built += path
+        built += key
       }
       path
     }

@@ -1,7 +1,6 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Bridge into Spark's `private[sql]` Column↔Expression conversions.
@@ -61,14 +60,4 @@ object GraftSqlBridge {
         src.outputOrdering, isStreaming = false, None)(
         spark, Some(qe.optimizedPlan.stats), None))
   }
-
-  /** Register an expression builder in the session's function registry so
-    * the function is callable from `spark.sql` (the imperative analogue of
-    * `SparkSessionExtensions.injectFunction`, usable on an already-built
-    * session).
-    */
-  def registerFunction(spark: SparkSession, name: String, info: ExpressionInfo,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier(name), info, builder)
 }

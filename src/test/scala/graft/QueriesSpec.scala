@@ -48,4 +48,24 @@ class QueriesSpec extends SparkSpec {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
     assert(SparkEntry.queries.size == defs.size)
   }
+
+  test("the IVF index cache rebuilds in place when its source changes") {
+    val dir = SparkSpec.tempDir("graft_ivf_src_")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(sf, "embeddings.parquet"),
+      dir.resolve("embeddings.parquet"))
+    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
+    def caches = tmp.listFiles().filter(_.getName.startsWith("graft_ivf_")).toSet
+    val before = caches
+    def build() = SparkEntry.queries("q_sim_ivf_build")(spark, dir.toString).head()
+    try {
+      val first = build()
+      val src = dir.resolve("embeddings.parquet").toFile
+      assert(src.setLastModified(src.lastModified - 60000L))
+      assert(build() == first, "the rebuilt index must cover the same corpus")
+      val fresh = caches -- before
+      assert(fresh.size == 1,
+        s"one cache directory per source, not one per build: ${fresh.map(_.getName)}")
+    } finally (caches -- before).foreach(d =>
+      org.apache.commons.io.FileUtils.deleteQuietly(d))
+  }
 }

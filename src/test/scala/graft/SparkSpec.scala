@@ -20,6 +20,9 @@ object SparkSpec {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir", "target/spark-warehouse")
+      // the production SQL wiring (Bench, Verify, Inspect): graft_*
+      // functions plus the SimplifySelfCosine optimizer rule
+      .config("spark.sql.extensions", "graft.extensions.GraftExtensions")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -17,10 +17,7 @@ class SqlDocSpec extends SparkSpec {
     java.nio.file.Files.readAllBytes(java.nio.file.Paths.get("docs/SQL.md")),
     "UTF-8")
 
-  private lazy val ready: Unit = {
-    Tables.registerAll(spark, "/root/testdata/sf0.001")
-    GraftExtensions.register(spark)
-  }
+  private lazy val ready: Unit = Tables.registerAll(spark, "/root/testdata/sf0.001")
 
   test("every SQL example in docs/SQL.md runs and returns rows") {
     ready

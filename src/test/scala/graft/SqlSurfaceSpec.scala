@@ -1,6 +1,5 @@
 package graft
 
-import graft.extensions.GraftExtensions
 import org.apache.spark.sql.functions._
 
 /** The engine must be fully drivable through `spark.sql` — the parity
@@ -13,10 +12,7 @@ class SqlSurfaceSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private lazy val ready: Unit = {
-    Tables.registerAll(spark, sf)
-    GraftExtensions.register(spark)
-  }
+  private lazy val ready: Unit = Tables.registerAll(spark, sf)
 
   test("star-join aggregation in pure SQL matches the DataFrame builder") {
     ready
@@ -74,15 +70,14 @@ class SqlSurfaceSpec extends SparkSpec {
     // Reproduce Spark's applyExtensions mechanics exactly: load the class
     // named by spark.sql.extensions reflectively, instantiate its no-arg
     // constructor, apply it to the builder's SparkSessionExtensions. (The
-    // literal config string is only consulted when a SparkContext is first
-    // created, which Verify/Bench do — this suite shares one context, so it
-    // drives the same code through withExtensions.)
+    // suite's shared context already carries the config string, as
+    // Verify/Bench do, so every session on it applies that too; this test
+    // drives the same reflective construction through withExtensions.)
     val injector = Class.forName("graft.extensions.GraftExtensions")
       .getDeclaredConstructor().newInstance()
       .asInstanceOf[SparkSessionExtensions => Unit]
     // getOrCreate returns the existing default session unchanged, so clear
-    // both slots to force a genuinely new session (same SparkContext) whose
-    // graft functions come ONLY from the injector
+    // both slots to force a genuinely new session (same SparkContext)
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {

@@ -98,6 +98,27 @@ class LoadExportSpec extends SparkSpec {
     assert(doc.get("kpis").get("comfort_hours_percent").asDouble() >= 0)
   }
 
+  test("summaryFromDir over the default scope's meters agrees with buildSummary") {
+    val star = Export.buildSummary(spark, schema).head()
+    val dir = SparkSpec.tempDir("graft_s12_agree_")
+    schema("fact_meters")
+      .where(col("building_id") === "B1" && col("scenario_id") === "BASE")
+      .join(schema("dim_time").select("time_key", "month"), Seq("time_key"), "left")
+      .write.parquet(dir.resolve("parquet").resolve("meters.parquet").toString)
+    val flat = Export.summaryFromDir(spark, dir.toString).head()
+    def close(a: Double, b: Double) = math.abs(a - b) <= 1e-9 * math.max(math.abs(a), math.abs(b))
+    def figures(r: org.apache.spark.sql.Row) = {
+      val a = r.getStruct(r.fieldIndex("annual"))
+      (0 until 4).map(a.getDouble) ++
+        r.getSeq[org.apache.spark.sql.Row](r.fieldIndex("monthly_breakdown"))
+          .flatMap(m => Seq(m.getInt(0).toDouble, m.getDouble(1), m.getDouble(2), m.getDouble(3))) :+
+        r.getStruct(r.fieldIndex("kpis")).getAs[Double]("peak_demand_kw")
+    }
+    val (s, f) = (figures(star), figures(flat))
+    assert(s.length == f.length && s.length > 5 && s.zip(f).forall { case (a, b) => close(a, b) },
+      s"star $s != flat $f")
+  }
+
   test("S12 fallback tier 1: parquet/ glob prefers meter-named files") {
     val dir = SparkSpec.tempDir("graft_s12a_")
     val pq = dir.resolve("parquet")
@@ -143,6 +164,21 @@ class LoadExportSpec extends SparkSpec {
     assert(ragged.count() == 2 * schema("fact_meters").count())
     assert(ragged.columns.contains("cooling_kwh") && ragged.columns.contains("heating_kwh"),
       "ragged fallback must keep the union of columns, not one footer's subset")
+  }
+
+  test("S12 tier 1: files that disagree on a column's type fall through to the next tier") {
+    val s = spark.newSession()
+    s.catalog.listTables().collect().filter(!_.isTemporary)
+      .foreach(t => s.sql(s"DROP TABLE IF EXISTS `${t.name}`"))
+    val dir = SparkSpec.tempDir("graft_s12g_")
+    val pq = dir.resolve("parquet")
+    schema("fact_meters").write.parquet(pq.resolve("meters_a.parquet").toString)
+    schema("fact_meters").withColumn("electric_kwh", col("electric_kwh").cast("string"))
+      .write.parquet(pq.resolve("meters_b.parquet").toString)
+    Files.writeString(dir.resolve("meters.csv"), "electric_kwh\n1.5\n")
+    val src = Export.resolveMeterSource(s, dir.toString).get
+    assert(src.columns.toSeq == Seq("electric_kwh") && src.count() == 1,
+      "the type conflict must skip tier 1 and land on the loose csv")
   }
 
   test("S12 fallback tier 2: catalog views win when parquet/ is absent or empty") {

@@ -73,6 +73,20 @@ class ValidateSpec extends SparkSpec {
     assert(!tc.valid && tc.errors.exists(_.contains("gap")))
   }
 
+  test("temporal gaps count consecutive timestamps not 1 h apart: half-hour " +
+    "steps give 2, one dropped interior hour gives 1") {
+    import spark.implicits._
+    def gapErrors(ts: String*) = {
+      val dimTime = ts.zipWithIndex
+        .map { case (t, i) => (i + 1L, java.sql.Timestamp.valueOf(s"2024-01-01 $t:00")) }
+        .toDF("time_key", "timestamp")
+      Validate.checkTemporalCoverage(Map("dim_time" -> dimTime)).errors
+    }
+    def msg(n: Int) = s"dim_time: $n non-hourly gaps between consecutive timestamps"
+    assert(gapErrors("00:00", "00:30", "01:00") == Seq(msg(2)))
+    assert(gapErrors("00:00", "01:00", "03:00", "04:00") == Seq(msg(1)))
+  }
+
   test("implausible energy ratio is flagged") {
     import org.apache.spark.sql.functions._
     val schema = buildSchema()

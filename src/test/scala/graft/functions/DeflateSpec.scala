@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.SparkSpec
-import graft.extensions.GraftExtensions
 import org.apache.spark.sql.functions._
 
 /** graft_deflate_len / compressRatio — the compression-ratio quality
@@ -41,7 +40,6 @@ class DeflateSpec extends SparkSpec {
 
   test("graft_deflate_len compiles inside whole-stage codegen under " +
     "fallback=false") {
-    GraftExtensions.register(spark)
     val prev = spark.conf.getOption("spark.sql.codegen.fallback")
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try {

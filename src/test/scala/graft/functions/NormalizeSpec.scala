@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.SparkSpec
-import graft.extensions.GraftExtensions
 import org.apache.spark.sql.functions._
 
 /** Unicode normalization gates: NFC composition (incl. canonical
@@ -50,7 +49,6 @@ class NormalizeSpec extends SparkSpec {
   }
 
   test("graft_nfc compiles inside whole-stage codegen under fallback=false") {
-    GraftExtensions.register(spark)
     val prev = spark.conf.getOption("spark.sql.codegen.fallback")
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try {

@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.SparkSpec
-import graft.extensions.GraftExtensions
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -129,7 +128,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("SQL registration: graft_* callable from spark.sql") {
-    GraftExtensions.register(spark)
     vecs.createOrReplaceTempView("vexprs_vecs")
     val rows = spark.sql(
       """SELECT id,

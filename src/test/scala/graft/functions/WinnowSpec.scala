@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.SparkSpec
-import graft.extensions.GraftExtensions
 import graft.functions.expr.Winnow
 import graft.operators.Dedup
 import org.apache.spark.sql.functions._
@@ -73,7 +72,6 @@ class WinnowSpec extends SparkSpec {
 
   test("column + SQL surfaces agree with the direct computation") {
     import spark.implicits._
-    GraftExtensions.register(spark)
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
     df.createOrReplaceTempView("winnow_docs")
     val viaCol = df.select($"id", TextFunctions.winnowFingerprints($"text", 8, 4).as("fp"))
