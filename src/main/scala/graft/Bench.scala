@@ -217,53 +217,21 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // UTC parity with Verify/SparkSpec: Tables.load's TIMESTAMP_NTZ cast is
-      // timezone-dependent, so a non-UTC host would bench (and plan-hash)
-      // subtly different plans than the correctness sessions
-      .config("spark.sql.session.timeZone", "UTC")
-      // the PRODUCTION extension wiring: this is the first session of the
-      // JVM, so the config string drives Spark's reflective applyExtensions
-      // -> GraftExtensions.apply(injectFunction) — the injector path itself,
-      // not the imperative register() fallback for pre-built sessions
-      .config("spark.sql.extensions", "graft.extensions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session("graft-bench")
     // Untimed warmup: absorb one-time JVM/codegen/parquet-reader init so the
     // first timed query measures the query, not session bring-up.
     Tables.load(spark, sfDir, "lineitem").limit(1000)
       .groupBy("l_returnflag").count().count()
 
     def runOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        name: String): Double = {
-      // Release the previous query's leftover storage blocks BEFORE the
-      // timer starts: queries that localCheckpoint internally (CC loops,
-      // pagerank, the exact-rank cuts) leave blocks pinned until the driver
-      // GCs the RDD handles, and ContextCleaner's periodic GC defaults to
-      // 30 min — across a 195-query sweep at large SF the accumulation
-      // squeezes execution memory and can kill the executor outright (an
-      // r13 sf10 ladder died mid-query exactly this way). Cleanup is
-      // untimed; every query is measured from a clean block manager, which
-      // also stops one query's leftovers from distorting the next one's
-      // timing.
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      val t0 = System.nanoTime()
-      // noop sink, not count(): count() lets Catalyst prune projection-only
-      // work, timing a select-heavy query as a bare row count
-      try { fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9 }
+        name: String): Double =
+      try SparkEntry.timeNoop(spark, sfDir, fn)
       catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
           // a failed query must not masquerade as a fast one
           -1.0
       }
-    }
     def sweep(): Seq[(String, Double)] =
       // declaration order, not Map hash order: build-then-probe pairs
       // (q_sim_ivf_build → q_sim_ivf) must run build first, and per-round
@@ -365,14 +333,10 @@ object Bench {
       } ++ subRuns.map { case (name, ts) => name -> (ts.min, ts.max) }).toMap
     val remeasured: Map[String, Double] = rawRegressions.take(16)
       .map { case (name, _, _) =>
-        val fn =
-          if (name.endsWith("_operator"))
-            graft.queries.ExtQueries.operatorOnly
-              .get(name.stripSuffix("_operator"))
-          else SparkEntry.queries.get(name)
         // -2.0 = builder missing (never ran); runOne's own -1.0 = ran and
         // FAILED — flagStatus reports the two differently
-        name -> fn.map(f => runOne(f, s"$name re-measure")).getOrElse(-2.0)
+        name -> SparkEntry.resolve(name)
+          .map(f => runOne(f, s"$name re-measure")).getOrElse(-2.0)
       }.toMap
     val regressions = annotateFlags(rawRegressions, sweepMinMax, remeasured,
       validity)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,19 +9,7 @@ object Verify {
     // large SF — mirrors tools/crosscheck.py's `only` filter); the driver
     // always passes exactly two args, so its contract is unchanged
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the PRODUCTION extension wiring: this is the first session of the
-      // JVM, so the config string drives Spark's reflective applyExtensions
-      // -> GraftExtensions.apply(injectFunction) — the injector path itself,
-      // not the imperative register() fallback for pre-built sessions
-      .config("spark.sql.extensions", "graft.extensions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session("graft-verify")
     new java.io.File(outDir).mkdirs()
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries
@@ -37,12 +24,7 @@ object Verify {
           .forEach(p => Files.deleteIfExists(p))
         finally walk.close()
       }
-      // Release the previous query's leftover storage blocks (the Bench
-      // discipline, r13): internally-checkpointed queries pin blocks until
-      // driver GC, and a 195-query session at large SF accumulates enough
-      // to exhaust execution memory (an sf10 ladder died exactly this way).
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      SparkEntry.release(spark)
       // repartition(1), not coalesce(1): coalesce would propagate
       // single-partition parallelism back through the whole query
       try fn(spark, sfDir).repartition(1).write.mode("overwrite")

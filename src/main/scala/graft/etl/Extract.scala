@@ -6,6 +6,7 @@ import java.util.zip.ZipInputStream
 import scala.collection.mutable
 import scala.util.{Failure, Success, Try}
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -40,27 +41,14 @@ final case class RunData(
   */
 object Extract {
 
-  /** Staged run dirs, removed recursively at JVM exit. (deleteOnExit on a
-    * non-empty directory silently fails — the staged CSV copies would leak;
-    * the CSVs must live until exit because Spark reads them lazily.)
+  /** One staging root per JVM, deleted at exit; each run's directory is
+    * created under it. The staged CSVs must live until exit because Spark
+    * reads them lazily.
     */
-  private val stagingDirs = java.util.Collections.synchronizedList(
-    new java.util.ArrayList[Path]())
-  private lazy val cleanupHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      stagingDirs.forEach { dir =>
-        Try {
-          val walk = Files.walk(dir)
-          try walk.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => Files.deleteIfExists(p))
-          finally walk.close()
-        }
-        ()
-      }))
-  private def registerStagingCleanup(dir: Path): Unit = {
-    cleanupHook
-    stagingDirs.add(dir)
-    ()
+  private lazy val stagingRoot: Path = {
+    val root = Files.createTempDirectory("graft_runs_")
+    sys.addShutdownHook(FileUtils.deleteQuietly(root.toFile))
+    root
   }
 
   /** Required members of a run bundle under its single root directory
@@ -141,8 +129,7 @@ object Extract {
       case Failure(_) => throw new IllegalArgumentException(s"not a valid zip archive: $zipPath")
     }
     val (root, byBase) = validateLayout(f, members)
-    val staging: Path = Files.createTempDirectory("graft_run_")
-    registerStagingCleanup(staging)
+    val staging: Path = Files.createTempDirectory(stagingRoot, "graft_run_")
     // stage only the five members we read — a bundle may carry extra nested
     // files (logs/ etc.) whose parent dirs don't exist in the staging root
     byBase.view.filterKeys(requiredMembers).foreach { case (name, bytes) =>

@@ -9,8 +9,10 @@ import org.apache.spark.sql.SparkSession
   * runMain graft.etl.Pipeline --simulations-dir D --output-dir O [--skip-validation] [--force]
   * }}}
   *
-  * Master and shuffle partitions follow `SPARK_GRAFT_CPUS` (default 4), as
-  * in [[graft.Verify]]; `SPARK_MASTER` overrides the master for a cluster.
+  * `main` runs on the session every entry point shares
+  * ([[graft.SparkEntry.session]]): the master is `spark.master` when
+  * spark-submit `--master` or `-Dspark.master` set it, else
+  * `local[$SPARK_GRAFT_CPUS]` (default 4).
   *
   * The reference's interactive y/n gate on validation failure
   * (run_pipeline.py:111-120) is a flag here (`--force`), never stdin —
@@ -85,15 +87,7 @@ object Pipeline {
 
   def main(args: Array[String]): Unit = {
     val cfg = parseArgs(args)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.session("graft-pipeline")
     val code = try Pipeline.run(spark, cfg) finally spark.stop()
     if (code != 0) sys.exit(code)
   }

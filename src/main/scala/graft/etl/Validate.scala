@@ -6,7 +6,9 @@ import org.apache.spark.sql.expressions.Window
 
 /** Data-quality suite (SURVEY §2.9; reference src/etl/validate/__init__.py).
   * Errors are collected into a structured report, never thrown — validation
-  * is an analysis surface, not an exception path.
+  * is an analysis surface, not an exception path. A rule or table whose
+  * columns are absent is skipped by checks 2–4: [[checkSchema]] reports
+  * those columns as missing.
   *
   * Each check fuses its per-column/per-rule counts into one aggregate pass
   * per table (checkSchema: all null counts in one agg; checkValueRanges:
@@ -44,6 +46,11 @@ object Validate {
     ("fact_meters", "electric_kwh", 0.0, Double.PositiveInfinity),
     ("fact_meters", "heating_kwh", 0.0, Double.PositiveInfinity),
     ("fact_meters", "cooling_kwh", 0.0, Double.PositiveInfinity))
+
+  /** `table` when it is present with every one of `columns`. */
+  private def present(schema: Map[String, DataFrame], table: String,
+      columns: String*): Option[DataFrame] =
+    schema.get(table).filter(df => columns.forall(df.columns.contains))
 
   /** Check 1 — schema: table presence, column presence, nulls in every
     * column [[Schemas.starSchema]] declares `nullable = false` (reference:
@@ -92,11 +99,15 @@ object Validate {
       .groupBy { case ((table, _, _, _), _) => table }
       .flatMap { case (table, rules) =>
         schema.get(table).toSeq.flatMap { df =>
-          val aggs = rules.map { case ((_, column, lo, hi), idx) =>
+          val live = rules.filter { case ((_, column, _, _), _) =>
+            df.columns.contains(column) }
+          val aggs = live.map { case ((_, column, lo, hi), idx) =>
             count(when(violation(column, lo, hi), 1)).as(s"v$idx")
           }
-          val row = df.agg(aggs.head, aggs.tail: _*).head()
-          rules.map(_._2).zipWithIndex.map { case (idx, i) => idx -> row.getLong(i) }
+          if (aggs.isEmpty) Nil else {
+            val row = df.agg(aggs.head, aggs.tail: _*).head()
+            live.map(_._2).zipWithIndex.map { case (idx, i) => idx -> row.getLong(i) }
+          }
         }
       }
 
@@ -116,16 +127,17 @@ object Validate {
     */
   def checkTemporalCoverage(schema: Map[String, DataFrame]): CheckResult = {
     val errors = scala.collection.mutable.Buffer[String]()
-    schema.get("dim_time").foreach { dimTime =>
+    present(schema, "dim_time", "timestamp").foreach { dimTime =>
       val gaps = dimTime
         .withColumn("prev_ts", lag(col("timestamp"), 1).over(Window.orderBy("timestamp")))
         .where(col("prev_ts").isNotNull &&
           col("timestamp").cast("long") - col("prev_ts").cast("long") =!= 3600L)
         .count()
       if (gaps > 0) errors += s"dim_time: $gaps non-hourly gaps between consecutive timestamps"
-
+    }
+    present(schema, "dim_time", "time_key").foreach { dimTime =>
       Seq("fact_zone_conditions", "fact_hvac", "fact_meters", "fact_weather").foreach { fact =>
-        schema.get(fact).foreach { df =>
+        present(schema, fact, "time_key").foreach { df =>
           val missing = dimTime.select("time_key")
             .join(df.select("time_key"), Seq("time_key"), "left_anti")
             .count()
@@ -141,7 +153,8 @@ object Validate {
     * (reference: validate/__init__.py:185-229, rule at :222).
     */
   def checkEnergyPlausibility(schema: Map[String, DataFrame]): CheckResult = {
-    val errors = schema.get("fact_meters").toSeq.flatMap { meters =>
+    val errors = present(schema, "fact_meters", "building_id", "scenario_id",
+        "electric_kwh", "heating_kwh", "cooling_kwh").toSeq.flatMap { meters =>
       // both business rules run INSIDE the aggregation plan as when()
       // predicates, so the check is fully distributed and only VIOLATING
       // groups ever reach the driver — bounded by the violation count, not

@@ -16,8 +16,8 @@ import org.apache.spark.sql.types.IntegerType
   * }}}
   *
   * after which `spark.sql("SELECT graft_cosine(a.embedding, b.embedding)...")`
-  * works anywhere SQL does. Bench, Verify and Inspect build their sessions
-  * with the config form.
+  * works anywhere SQL does. [[graft.SparkEntry.session]], the session of
+  * every entry point, uses the config form.
   *
   * Registered functions:
   *   - `graft_dot(array<float>, array<float>) -> double`

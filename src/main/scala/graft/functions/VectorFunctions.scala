@@ -3,33 +3,14 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Embedding-vector math over `array<float>` columns using higher-order
-  * functions (`zip_with` + `aggregate`), per SURVEY.md §7.3: codegen-friendly
-  * built-ins first; a custom Catalyst Expression only if bench demands it.
+/** Int8-quantized embedding math over `array<float>` columns using
+  * higher-order functions (`transform`, `zip_with` + `aggregate`). The
+  * float vector math is [[VectorNative]].
   *
-  * All accumulation happens in double, in fixed array-index order, so results
-  * are bit-deterministic regardless of partitioning.
+  * All accumulation happens in fixed array-index order, so results are
+  * bit-deterministic regardless of partitioning.
   */
 object VectorFunctions {
-
-  /** Σ aᵢ·bᵢ in double. */
-  def dot(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
-
-  def norm2(a: Column): Column =
-    sqrt(aggregate(a, lit(0.0),
-      (acc, x) => acc + x.cast("double") * x.cast("double")))
-
-  /** Cosine similarity; NULL-safe on zero-norm vectors (emits NULL rather
-    * than NaN, matching the engine's NULL-not-NaN convention).
-    */
-  def cosine(a: Column, b: Column): Column = {
-    val d  = dot(a, b)
-    val nn = norm2(a) * norm2(b)
-    when(nn > 0.0, d / nn).otherwise(lit(null))
-  }
 
   /** Symmetric per-vector int8 scale: max|xᵢ|/127 in double. Zero vectors
     * get scale 0 (and quantize to all-zeros) — NULL-free by construction.
@@ -65,30 +46,5 @@ object VectorFunctions {
   def cosineInt(a: Column, b: Column): Column = {
     val nn = sqrt(dotInt(a, a).cast("double")) * sqrt(dotInt(b, b).cast("double"))
     when(nn > 0.0, dotInt(a, b).cast("double") / nn).otherwise(lit(null))
-  }
-
-  /** Random-hyperplane (sign) LSH bucket id over `dims`-dim vectors.
-    *
-    * The `nPlanes` hyperplanes are pseudo-random but fully deterministic:
-    * component j of plane p of family `family` is derived from
-    * xxhash64((family·nPlanes + p)·dims + j) mapped into [-1, 1] — the
-    * family index is scaled by nPlanes INSIDE, so families 0, 1, 2, …
-    * (the natural multi-table usage) draw from disjoint plane-index ranges
-    * and never share a hyperplane. (An unscaled offset would make adjacent
-    * families share nPlanes−1 planes and collapse multi-table recall to
-    * single-table.) Vectors with the same sign pattern against all planes
-    * share a bucket — at 100 TB this turns an O(n²) similarity scan into a
-    * shuffle-by-bucket plus small within-bucket scans.
-    */
-  def lshBucket(v: Column, dims: Int, nPlanes: Int, family: Int = 0): Column = {
-    val bits = (0 until nPlanes).map { p =>
-      val plane = array((0 until dims).map { j =>
-        // deterministic pseudo-random weight in [-1, 1]
-        (xxhash64(lit((family * nPlanes + p) * dims + j)) % 1000001L)
-          .cast("double") / 1000000.0
-      }: _*)
-      when(dot(v, plane) >= 0.0, shiftleft(lit(1L), p)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _).as("lsh_bucket")
   }
 }

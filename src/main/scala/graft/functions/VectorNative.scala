@@ -4,11 +4,11 @@ import graft.functions.expr.{GraftCosine, GraftDot, GraftLshBucket, GraftNorm2}
 import org.apache.spark.sql.{Column, GraftSqlBridge => B}
 
 /** Column-API surface for the native codegen vector expressions
-  * ([[graft.functions.expr.VectorExprs]]) — drop-in replacements for the
-  * HOF forms in [[VectorFunctions]] with identical arithmetic (same
-  * element order, double accumulation, NULL-not-NaN), but compiled to a
-  * primitive loop inside whole-stage codegen instead of an interpreted
-  * lambda tree per element.
+  * ([[graft.functions.expr.VectorExprs]]) — the one production spelling of
+  * the float vector math. The specs' `VectorTruth` holds the HOF forms
+  * with identical arithmetic (same element order, double accumulation,
+  * NULL-not-NaN); these compile to a primitive loop inside whole-stage
+  * codegen instead of an interpreted lambda tree per element.
   */
 object VectorNative {
 

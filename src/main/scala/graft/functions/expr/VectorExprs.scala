@@ -35,7 +35,7 @@ private[expr] trait FloatArrayInputs extends Expression {
 
 /** Native Catalyst expressions for the embedding-vector hot path.
   *
-  * The HOF forms in [[graft.functions.VectorFunctions]] (`zip_with` +
+  * The HOF forms in the specs' `VectorTruth` (`zip_with` +
   * `aggregate`) are correct but interpret their lambda per element; these
   * expressions generate a tight primitive `for` loop inside whole-stage
   * codegen instead — the preference order mandated by SURVEY.md §7.3
@@ -219,7 +219,7 @@ case class GraftCosine(left: Expression, right: Expression)
 }
 
 /** Sign-LSH bucket id — the native form of
-  * [[graft.functions.VectorFunctions.lshBucket]], byte-identical output.
+  * the specs' `VectorTruth.lshBucket`, byte-identical output.
   *
   * The `nPlanes × dims` hyperplane weights are the same deterministic
   * pseudo-random sequence the HOF form folds into its plan
@@ -240,7 +240,7 @@ case class GraftLshBucket(child: Expression, dims: Int, nPlanes: Int,
   override def nullable: Boolean = true
   override def prettyName: String = "graft_lsh_bucket"
 
-  /** weights(p)(j) — must match VectorFunctions.lshBucket exactly. The
+  /** weights(p)(j) — must match `VectorTruth.lshBucket` exactly. The
     * family index scales by nPlanes HERE so families 0,1,2,… use disjoint
     * plane-index ranges (never share a hyperplane).
     */

@@ -87,14 +87,6 @@ object Multimodal {
     }
   }
 
-  /** Attach a media-type column from a filename/source hint. */
-  def withMediaType(df: DataFrame, hintCol: String): DataFrame =
-    df.withColumn("media_type",
-      when(col(hintCol).rlike("(?i)\\.(jpe?g|png|bmp)$"), "image")
-        .when(col(hintCol).rlike("(?i)\\.(wav|mp3|flac)$"), "audio")
-        .when(col(hintCol).rlike("(?i)\\.(mp4|mkv|webm)$"), "video")
-        .otherwise("binary"))
-
   /** Batched metadata extraction over (id, type, payload) — one pass, no
     * shuffle; the Dataset boundary keeps the payload bytes off the driver.
     */

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import graft.functions.{TextFunctions, VectorFunctions}
+import graft.functions.{TextFunctions, VectorFunctions, VectorNative}
 import graft.operators.{Bpe, Components, Corpus, Dedup, Ivf, Lm, Rank, Similarity}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -3239,7 +3239,7 @@ object ExtQueries {
         emb(s, dir)
           .select($"label",
             size($"embedding").as("dims"),
-            VectorFunctions.norm2($"embedding").as("nrm"))
+            VectorNative.norm2($"embedding").as("nrm"))
           .groupBy($"label")
           .agg(count(lit(1)).as("n_vecs"),
             min($"dims").as("min_dims"), max($"dims").as("max_dims"),

