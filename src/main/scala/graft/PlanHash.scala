@@ -13,11 +13,14 @@ import org.apache.spark.sql.DataFrame
   *
   * Canonical form: one line per physical operator, keeping ONLY the operator
   * name plus the strategy-bearing tokens (partitioning kind, join type,
-  * build side, scan format). Everything volatile — expression ids, literals,
-  * paths, statistics, partition counts, codegen stage ids — is dropped, so
-  * the fingerprint is stable across scale factors, temp directories, and
-  * re-trained literal models (IVF centroids are plan literals!) while still
-  * changing whenever the plan SHAPE or a physical strategy changes.
+  * build side, scan format) and the sorted distinct `graft_*` functions it
+  * calls, so a native expression that falls back to its higher-order-function
+  * spelling changes the fingerprint too. Everything volatile — expression
+  * ids, literals, paths, statistics, partition counts, codegen stage ids —
+  * is dropped, so the fingerprint is stable across scale factors, temp
+  * directories, and re-trained literal models (IVF centroids are plan
+  * literals!) while still changing whenever the plan SHAPE, a physical
+  * strategy or a `graft_*` call changes.
   */
 object PlanHash {
 
@@ -43,6 +46,9 @@ object PlanHash {
       .mkString("\n")
   }
 
+  /** A `graft_*` function call; a path such as `graft_ivf_<hash>/` is no call. */
+  private val graftCall = "graft_[a-z0-9_]+(?=\\()".r
+
   private def canonLine(line: String): String = {
     // strip tree-drawing prefix (spaces, +- :- marks) and the whole-stage
     // codegen stage id marker *(N)
@@ -50,7 +56,8 @@ object PlanHash {
     val op = s.takeWhile(c => c.isLetterOrDigit)
     if (op.isEmpty) ""
     else {
-      val present = tokens.filter(s.contains)
+      val present = tokens.filter(s.contains) ++
+        graftCall.findAllIn(s).toSeq.distinct.sorted
       if (present.isEmpty) op else op + " " + present.mkString(",")
     }
   }

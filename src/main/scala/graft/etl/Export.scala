@@ -211,7 +211,7 @@ object Export {
       }
       val picks = (if (preferred.nonEmpty) preferred else all).map(_.toString)
       if (picks.isEmpty) None
-      else tryRead(spark.read.option("mergeSchema", "true").parquet(picks: _*))
+      else tryRead(Maintenance.readEvolved(spark, picks))
     }
     lazy val tier2 = Seq("vw_energy_summary", "fact_meters")
       .collectFirst { case t if spark.catalog.tableExists(t) => spark.table(t) }

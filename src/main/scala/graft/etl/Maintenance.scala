@@ -22,23 +22,16 @@ import org.apache.spark.sql.types.StructType
   */
 object Maintenance {
 
-  /** Read a parquet directory whose files were written under EVOLVING
-    * schemas (columns added over time): `mergeSchema` unions the per-file
-    * footers, and files missing a column yield NULL for it — the append-only
-    * ingestion contract. Schema merging lists every footer (a driver-side
-    * O(files) step), so keep it an explicit opt-in for evolved dirs, not a
-    * default on every read.
-    */
-  def readEvolved(spark: SparkSession, dir: String): DataFrame =
-    readEvolved(spark, Seq(dir))
-
-  /** Multi-path form (r9): one merged frame across SEPARATE snapshot
-    * directories (month partitions, versioned drops) — the same footer
-    * union, so a corpus that grew a `lang` column in month 3 reads as one
-    * table across all months without rewriting history; incompatible
-    * evolutions (same column, different type) still fail loudly at read
-    * time (StorageExtSpec pins NULL surfacing, common-column pushdown,
-    * and the loud conflict).
+  /** Read parquet files or directories written under EVOLVING schemas
+    * (columns added over time) as one frame: `mergeSchema` unions the
+    * per-file footers, and files missing a column yield NULL for it — the
+    * append-only ingestion contract. So a corpus that grew a `lang` column
+    * in month 3 reads as one table across all months without rewriting
+    * history; incompatible evolutions (same column, different type) still
+    * fail loudly at read time (StorageExtSpec pins NULL surfacing,
+    * common-column pushdown, and the loud conflict). Schema merging lists
+    * every footer (a driver-side O(files) step), so keep it an explicit
+    * opt-in for evolved inputs, not a default on every read.
     */
   def readEvolved(spark: SparkSession, paths: Seq[String]): DataFrame = {
     require(paths.nonEmpty, "readEvolved needs at least one path")

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -10,10 +10,13 @@ import org.apache.spark.sql.expressions.Window
   * columns are absent is skipped by checks 2–4: [[checkSchema]] reports
   * those columns as missing.
   *
-  * Each check fuses its per-column/per-rule counts into one aggregate pass
-  * per table (checkSchema: all null counts in one agg; checkValueRanges:
-  * all of a table's range rules in one agg) — at 100 TB the whole suite
-  * costs one scan per (check, table), never one per rule.
+  * Checks 1–3 count violations one way: `count(when(rule, 1))` columns
+  * evaluated in ONE aggregate action per relation. [[validateAll]] counts a
+  * table's null and range rules in the same aggregate, so the suite scans
+  * each table once, and check 3 is one action over all facts. Its gap count
+  * keeps the `lag` window over `dim_time` (one row per hour): a window-free
+  * formula misses pairs 1 h apart with a timestamp between them (00:00,
+  * 00:30, 01:00 has 2 gaps, not 1).
   */
 object Validate {
 
@@ -52,100 +55,95 @@ object Validate {
       columns: String*): Option[DataFrame] =
     schema.get(table).filter(df => columns.forall(df.columns.contains))
 
-  /** Check 1 — schema: table presence, column presence, nulls in every
-    * column [[Schemas.starSchema]] declares `nullable = false` (reference:
-    * validate/__init__.py:18-57, allow-list at :31-34). All column null
-    * counts for a table come from ONE aggregate pass.
+  /** Rows where `predicate` holds violate the rule; n > 0 of them report `message(n)`. */
+  private final case class Rule(predicate: Column, message: Long => String)
+
+  /** Each rule's error, if any, from ONE aggregate action over `df`. A NULL
+    * predicate is no violation: a NULL is not out of range (check 1's job).
     */
-  def checkSchema(schema: Map[String, DataFrame]): CheckResult = {
-    val errors = Schemas.starSchema.toSeq.sortBy(_._1).flatMap { case (name, expected) =>
+  private def violations(df: DataFrame, rules: Seq[Rule]): Seq[Option[String]] =
+    if (rules.isEmpty) Nil else {
+      val counts = rules.map(r => count(when(r.predicate, 1)))
+      val row = df.agg(counts.head, counts.tail: _*).head()
+      rules.indices.map(i => Some(row.getLong(i)).filter(_ > 0).map(rules(i).message))
+    }
+
+  /** Check 1's rules: no NULL in a present `nullable = false` column. */
+  private def nullRules(table: String, df: DataFrame): Seq[Rule] =
+    Schemas.starSchema.get(table).toSeq.flatMap(_.fields)
+      .filter(f => !f.nullable && df.columns.contains(f.name))
+      .map(f => Rule(col(f.name).isNull, n => s"$table.${f.name}: $n null values"))
+
+  /** Check 2's rules for `table`, in declared [[rangeRules]] order. */
+  private def rangeRulesOf(table: String, df: DataFrame): Seq[Rule] =
+    rangeRules.collect { case (`table`, column, lo, hi) if df.columns.contains(column) =>
+      val (predicate, bound) =
+        if (hi.isPosInfinity) (col(column) < lo, s">= $lo")
+        else (col(column) < lo || col(column) > hi, s"in [$lo, $hi]")
+      Rule(predicate, n => s"$table.$column: $n values not $bound")
+    }
+
+  /** Checks 1 and 2: a table's null rules (if `nulls`) and range rules (if
+    * `ranges`) in ONE aggregate action; missing tables and columns on the driver.
+    */
+  private def nullsAndRanges(schema: Map[String, DataFrame], nulls: Boolean,
+      ranges: Boolean): (CheckResult, CheckResult) = {
+    val counted = schema.map { case (table, df) =>
+      val nr = if (nulls) nullRules(table, df) else Nil
+      val rr = if (ranges) rangeRulesOf(table, df) else Nil
+      val (n, r) = violations(df, nr ++ rr).splitAt(nr.size)
+      table -> (n.flatten, r.flatten)
+    }
+    val schemaErrors = Schemas.starSchema.toSeq.sortBy(_._1).flatMap { case (name, expected) =>
       schema.get(name) match {
         case None => Seq(s"missing table: $name")
-        case Some(df) =>
-          val actualCols = df.columns.toSet
-          val missingCols = expected.fieldNames.filterNot(actualCols.contains)
-          val colErrors = missingCols.map(c => s"$name: missing column $c")
-          val checkable = expected.fields.filter(f => !f.nullable && actualCols(f.name))
-            .map(_.name)
-          val nullErrors = if (checkable.isEmpty) Seq.empty else {
-            val counts = df.agg(
-              count(lit(1)).as("__n"),
-              checkable.toIndexedSeq.map(c => count(when(col(c).isNull, 1)).as(c)): _*).head()
-            checkable.zipWithIndex.collect {
-              case (c, i) if counts.getLong(i + 1) > 0 =>
-                s"$name.$c: ${counts.getLong(i + 1)} null values"
-            }.toSeq
-          }
-          colErrors ++ nullErrors
+        case Some(df) => expected.fieldNames.toSeq.filterNot(df.columns.contains)
+          .map(c => s"$name: missing column $c") ++ counted(name)._1
       }
     }
-    CheckResult(errors.isEmpty, errors)
+    val rangeErrors = rangeRules.map(_._1).distinct.flatMap(t => counted.get(t).toSeq.flatMap(_._2))
+    (result(schemaErrors), result(rangeErrors))
   }
 
-  /** Check 2 — value ranges (reference: validate/__init__.py:60-139).
-    * All of a table's rules are counted in ONE aggregate pass (the
-    * [[checkSchema]] pattern): 11 rules cost 3 table scans, not 11.
-    * `count(when(pred,1))` skips NULLs exactly like the per-rule
-    * `filter(pred).count()` it replaces (NULL comparisons are not
-    * violations — nulls are check 1's job).
+  private def result(errors: Seq[String]): CheckResult = CheckResult(errors.isEmpty, errors)
+
+  /** Check 1 — schema: table presence, column presence, nulls in every
+    * column [[Schemas.starSchema]] declares `nullable = false` (reference:
+    * validate/__init__.py:18-57, allow-list at :31-34).
     */
-  def checkValueRanges(schema: Map[String, DataFrame]): CheckResult = {
-    def violation(column: String, lo: Double, hi: Double) =
-      if (hi.isPosInfinity) col(column) < lo
-      else col(column) < lo || col(column) > hi
+  def checkSchema(schema: Map[String, DataFrame]): CheckResult =
+    nullsAndRanges(schema, nulls = true, ranges = false)._1
 
-    // one fused aggregate per table → rule-index → violation count
-    val counted: Map[Int, Long] = rangeRules.zipWithIndex
-      .groupBy { case ((table, _, _, _), _) => table }
-      .flatMap { case (table, rules) =>
-        schema.get(table).toSeq.flatMap { df =>
-          val live = rules.filter { case ((_, column, _, _), _) =>
-            df.columns.contains(column) }
-          val aggs = live.map { case ((_, column, lo, hi), idx) =>
-            count(when(violation(column, lo, hi), 1)).as(s"v$idx")
-          }
-          if (aggs.isEmpty) Nil else {
-            val row = df.agg(aggs.head, aggs.tail: _*).head()
-            live.map(_._2).zipWithIndex.map { case (idx, i) => idx -> row.getLong(i) }
-          }
-        }
-      }
+  /** Check 2 — value ranges (reference: validate/__init__.py:60-139). */
+  def checkValueRanges(schema: Map[String, DataFrame]): CheckResult =
+    nullsAndRanges(schema, nulls = false, ranges = true)._2
 
-    // report in declared rule order, independent of the groupBy's ordering
-    val errors = rangeRules.zipWithIndex.flatMap { case ((table, column, lo, hi), idx) =>
-      counted.get(idx).filter(_ > 0).map { n =>
-        val bound = if (hi.isPosInfinity) s">= $lo" else s"in [$lo, $hi]"
-        s"$table.$column: $n values not $bound"
-      }
-    }
-    CheckResult(errors.isEmpty, errors)
-  }
-
-  /** Check 3 — temporal coverage: hourly-gap detection on dim_time (lag
-    * diff ≠ 1h) + per-fact time_key coverage via anti-join
-    * (reference: validate/__init__.py:142-182).
+  /** Check 3 — temporal coverage (reference: validate/__init__.py:142-182):
+    * non-hourly gaps between consecutive `dim_time` timestamps, and per fact
+    * the `dim_time` rows whose `time_key` it lacks. `dim_time`'s keys × the
+    * fact tags are anti-joined once against the distinct tagged fact keys,
+    * so a NULL key, and each row of a duplicated missing key, counts as
+    * missing. Gap rows tagged `dim_time` ride in the same aggregate.
     */
   def checkTemporalCoverage(schema: Map[String, DataFrame]): CheckResult = {
-    val errors = scala.collection.mutable.Buffer[String]()
-    present(schema, "dim_time", "timestamp").foreach { dimTime =>
-      val gaps = dimTime
-        .withColumn("prev_ts", lag(col("timestamp"), 1).over(Window.orderBy("timestamp")))
-        .where(col("prev_ts").isNotNull &&
-          col("timestamp").cast("long") - col("prev_ts").cast("long") =!= 3600L)
-        .count()
-      if (gaps > 0) errors += s"dim_time: $gaps non-hourly gaps between consecutive timestamps"
-    }
-    present(schema, "dim_time", "time_key").foreach { dimTime =>
-      Seq("fact_zone_conditions", "fact_hvac", "fact_meters", "fact_weather").foreach { fact =>
-        present(schema, fact, "time_key").foreach { df =>
-          val missing = dimTime.select("time_key")
-            .join(df.select("time_key"), Seq("time_key"), "left_anti")
-            .count()
-          if (missing > 0) errors += s"$fact: ${missing} time keys with no rows"
-        }
-      }
-    }
-    CheckResult(errors.isEmpty, errors.toSeq)
+    val gaps = present(schema, "dim_time", "timestamp").map(_
+      .withColumn("prev_ts", lag(col("timestamp"), 1).over(Window.orderBy("timestamp")))
+      .where(col("prev_ts").isNotNull &&
+        col("timestamp").cast("long") - col("prev_ts").cast("long") =!= 3600L)
+      .select(lit("dim_time").as("tag")))
+    val facts = Seq("fact_zone_conditions", "fact_hvac", "fact_meters", "fact_weather")
+      .filter(present(schema, _, "time_key").nonEmpty)
+    val missing = for {
+      dimTime <- present(schema, "dim_time", "time_key")
+      covered <- facts.map(f => schema(f).select(col("time_key"), lit(f).as("tag")))
+        .reduceOption(_ union _)
+    } yield dimTime.select(col("time_key"), explode(array(facts.map(lit): _*)).as("tag"))
+      .join(covered.distinct(), Seq("time_key", "tag"), "left_anti").select("tag")
+    val rules = Rule(col("tag") === "dim_time",
+      n => s"dim_time: $n non-hourly gaps between consecutive timestamps") +:
+      facts.map(f => Rule(col("tag") === f, n => s"$f: $n time keys with no rows"))
+    result((gaps.toSeq ++ missing).reduceOption(_ union _).toSeq
+      .flatMap(violations(_, rules).flatten))
   }
 
   /** Check 4 — energy plausibility: per (building, scenario) totals must be
@@ -183,7 +181,7 @@ object Validate {
         totalErr.toSeq ++ ratioErr.toSeq
       }
     }
-    CheckResult(errors.isEmpty, errors)
+    result(errors)
   }
 
   /** Per-column table profile — the "dataset card" a pipeline publishes
@@ -221,9 +219,10 @@ object Validate {
 
   /** All four checks → report (reference: validate/__init__.py:232-296). */
   def validateAll(spark: SparkSession, schema: Map[String, DataFrame]): ValidationReport = {
+    val (schemaCheck, rangeCheck) = nullsAndRanges(schema, nulls = true, ranges = true)
     val checks = Map(
-      "schema" -> checkSchema(schema),
-      "value_ranges" -> checkValueRanges(schema),
+      "schema" -> schemaCheck,
+      "value_ranges" -> rangeCheck,
       "temporal_coverage" -> checkTemporalCoverage(schema),
       "energy_plausibility" -> checkEnergyPlausibility(schema))
     ValidationReport(checks.values.forall(_.valid), checks)

@@ -551,20 +551,4 @@ object Ivf {
     probeClustered(spark, path, idCol, vecCol, query,
       derivedNProbe(counts.sum, cents.length), k)
   }
-
-  /** IVF top-k: cosine-rank only the `nProbe` clusters nearest the query.
-    * Recall < 1 by construction (like every IVF); nProbe/k is the knob.
-    * The final orderBy+limit plans as TakeOrderedAndProject (per-partition
-    * heap + driver merge of k rows), not a global sort.
-    */
-  def topK(corpus: DataFrame, idCol: String, vecCol: String, model: Model,
-      query: Seq[Float], nProbe: Int, k: Int): DataFrame = {
-    val probes = model.nearestClusters(query, nProbe)
-    assign(corpus, vecCol, model)
-      .where(col("cluster").isin(probes: _*))
-      .select(col(idCol), col("cluster"),
-        cosine(col(vecCol), vecLit(query)).as("cosine_sim"))
-      .orderBy(col("cosine_sim").desc, col(idCol))
-      .limit(k)
-  }
 }

@@ -57,6 +57,16 @@ class PlanHashSpec extends SparkSpec {
     }
   }
 
+  test("fingerprint sees an expression change: the native graft_norm2 and " +
+    "its higher-order-function spelling hash differently") {
+    val df = spark.range(4).select(array(col("id").cast("float"), lit(1f)).as("v"))
+    val native = df.select(graft.functions.VectorNative.norm2(col("v")).as("n"))
+    val truth = df.select(graft.functions.VectorTruth.norm2(col("v")).as("n"))
+    assert(PlanHash.canonical(native).contains("graft_norm2"), PlanHash.canonical(native))
+    assert(PlanHash.hash(native) != PlanHash.hash(truth),
+      "canonicalization erased a native-to-HOF expression swap")
+  }
+
   test("tripwire catches an intentional strategy break (broadcast join " +
     "degraded to shuffle join)") {
     val fact = Tables.load(spark, "/root/testdata/sf0.001", "orders")

@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.IvfTruth
 import graft.operators.Similarity
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -85,7 +86,7 @@ class StorageLayoutSpec extends SparkSpec {
     // probing the written layout ≡ probing the in-memory model: the
     // round-tripped centroids pick the same clusters and the pruned scan
     // ranks the same vectors
-    val direct = Ivf.topK(emb, "vec_id", "embedding", model, q, nProbe = 2, k = 10)
+    val direct = IvfTruth.topK(emb, "vec_id", "embedding", model, q, nProbe = 2, k = 10)
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     val pruned = probe.select("vec_id").collect().map(_.getLong(0)).toSeq
     assert(pruned === direct)

@@ -21,7 +21,7 @@ class MaintenanceSpec extends SparkSpec {
     Seq((3L, "z", 30L), (4L, "w", 40L)).toDF("id", "a", "b")
       .coalesce(1).write.parquet(s"$dir/g=2")
 
-    val merged = Maintenance.readEvolved(spark, dir)
+    val merged = Maintenance.readEvolved(spark, Seq(dir))
     assert(merged.columns.toSet == Set("id", "a", "b", "g"))
     assert(merged.count() == 4)
     // old generation's missing column is NULL, not an error, not garbage

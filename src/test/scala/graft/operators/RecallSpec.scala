@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{SparkSpec, Tables}
+import graft.functions.IvfTruth
 import graft.functions.VectorNative.cosine
 import org.apache.spark.sql.functions._
 
@@ -48,7 +49,7 @@ class RecallSpec extends SparkSpec {
     "full probe width") {
     val model = Ivf.train(emb, "vec_id", "embedding", k = 8, iters = 2)
     def ivfAt(np: Int): Set[Long] =
-      ids(Ivf.topK(emb, "vec_id", "embedding", model, q, nProbe = np, k = 20))
+      ids(IvfTruth.topK(emb, "vec_id", "embedding", model, q, nProbe = np, k = 20))
     def recallAt(np: Int): Double = (ivfAt(np) & bruteTop20).size / 20.0
     // the declared-query configuration (nProbe=4 since r8; measured 0.70
     // sf0.01 / 0.85 sf0.1 — the 0.5 gate holds a broken centroid
@@ -86,7 +87,7 @@ class RecallSpec extends SparkSpec {
     // floor binds, so the model is the k=8 shape RecallSpec gates above
     val model = Ivf.trainSized(emb, "vec_id", "embedding", iters = 2)
     assert(model.k === 8)
-    val got = ids(Ivf.topK(emb, "vec_id", "embedding", model, q,
+    val got = ids(IvfTruth.topK(emb, "vec_id", "embedding", model, q,
       nProbe = 4, k = 20))
     assert((got & bruteTop20).size / 20.0 >= 0.5,
       "trainSized recall@20 under the declared-query gate")
