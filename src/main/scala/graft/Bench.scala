@@ -11,15 +11,11 @@ object Bench {
     * (q_sim_clusters' scale form is the ×1 twin). The headline reports both
     * totals: `value` = the declared inventory as the driver gate runs it,
     * `value_operator_graded` = the same sum with these twins substituted —
-    * the number that reflects the 100 TB-relevant surface.
+    * the number that reflects the 100 TB-relevant surface. Each pair is
+    * declared with its twin in [[graft.queries.ExtQueries]].
     */
-  private[graft] val operatorSubs: Map[String, String] = Map(
-    "q_sim_neardup" -> "q_sim_neardup_operator",
-    "q_sim_clusters" -> "q_sim_clusters_x1_operator",
-    "q_sim_lsh" -> "q_sim_lsh_operator",
-    "q_dedup_minhash" -> "q_dedup_minhash_operator",
-    "q_dedup_simhash" -> "q_dedup_simhash_operator",
-    "q_dedup_incremental" -> "q_dedup_incremental_operator")
+  private[graft] val operatorSubs: Map[String, String] =
+    graft.queries.ExtQueries.operatorSubs
 
   /** Declared total with each [[operatorSubs]] twin substituted (failures
     * excluded on either side, like the plain total). A FAILED declared

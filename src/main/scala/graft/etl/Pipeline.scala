@@ -51,7 +51,7 @@ object Pipeline {
     println(s"[pipeline] extracted ${runs.length} runs")
     // [2/4] transform
     val built = Transform.transformAll(spark, runs)
-    // validate issues ~20 counting actions and load+export re-consume every
+    // validate issues 11 counting actions and load+export re-consume every
     // table: cache the star schema once instead of re-deriving the whole
     // extract→transform DAG per action (the reference holds it in memory)
     val schema = built.view.mapValues(_.cache()).toMap

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.multimodal.{Codecs, MediaSynth, Multimodal, Phash}
+import graft.operators.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -69,9 +70,9 @@ object MediaQueries {
   /** Above this `documents` count the three perceptual dedup queries
     * (q_media_dedup / q_media_audio_dedup / q_media_video_dedup) certify
     * `n_near` on a deterministic doc slice instead of the full corpus — the
-    * packTruthSlice convention (r13, VERDICT r12 #1) applied to the one
+    * packTruthSlice convention applied to the one
     * remaining cap-free surface: their EXACT neighbour-count oracles forbid
-    * bucket capping (the ADVICE r10 #3 contract), so cap-free
+    * bucket capping, so cap-free
     * `hammingPairs` pair work grows ~4·n²/2¹⁶ and the oracle's correlated
     * neighbour count is O(n²) outright — invisible at 50k docs, melting
     * past ~10⁷. Every tested SF (500 / 5000 / 50000 docs) sits at or under
@@ -91,7 +92,7 @@ object MediaQueries {
 
   /** Sliced fingerprint-set size the certification aims at above the
     * cutoff: the modulus `ceil(n/20000)` DERIVES from the corpus count
-    * (the r12 absolute-cap convention), so the sliced set is
+    * (the absolute-cap convention), so the sliced set is
     * ~20000 docs at ANY n — cap-free pair work stays ~4·20000²/2¹⁶ ≈ 24k
     * candidate pairs and the DuckDB correlated count stays at the
     * already-measured sf1-fraction scale forever.
@@ -124,6 +125,63 @@ object MediaQueries {
        |     OR (doc_id // 4) % (SELECT CAST(ceil(count(*) / ${mediaSliceTarget}e0) AS BIGINT)
        |                         FROM documents) = 0""".stripMargin
 
+  /** Oracle of the three perceptual dedup queries: each doc's [[dedupKey]]
+    * as column `fp` over the sliced `k(media_id, fp)`, then its exact
+    * Hamming-≤2 neighbour count `n_near`; `extra` adds output columns
+    * between the two.
+    */
+  private def nearOracle(fp: String, extra: String = ""): String =
+    s"""WITH k AS (
+       |  SELECT doc_id AS media_id,
+       |    xor(((doc_id // 4) * $keyP1) % 2147483648
+       |          + (((doc_id // 4) * $keyP2) % 2147483648) * 2147483648,
+       |        CASE CAST(doc_id % 4 AS INT)
+       |          WHEN 0 THEN 0
+       |          WHEN 1 THEN $noise1
+       |          WHEN 2 THEN $noise2
+       |          ELSE $noise3 END) AS $fp
+       |  FROM documents
+       |$mediaCertGuard)
+       |SELECT a.media_id, a.$fp,$extra
+       |  CAST((SELECT count(*) FROM k b WHERE b.media_id != a.media_id
+       |        AND bit_count(xor(a.$fp, b.$fp)) <= 2) AS BIGINT) AS n_near
+       |FROM k a""".stripMargin
+
+  /** `hashed` plus each row's count `n_near` of Hamming-≤2 neighbours on
+    * `fp`. The banding is cap-free: the oracle counts ALL neighbours
+    * exactly, so the certified path cannot drop oversized 16-bit-chunk
+    * buckets the way the production default (maxBucket=1000) does. Safe at
+    * any corpus size, because [[mediaTruthSlice]] bounds the fingerprint
+    * set at ~20k docs above the cutoff. One explode of the 2-array
+    * symmetrizes the pairs from ONE execution (a unionAll spelling runs the
+    * hammingPairs pipeline once per branch).
+    */
+  private def withNearCount(hashed: DataFrame, fp: String): DataFrame = {
+    val pairs = Dedup.hammingPairs(hashed.select(col("media_id"), col(fp)),
+      "media_id", fp, maxHamming = 2, maxBucket = Int.MaxValue)
+    val neigh = pairs
+      .select(explode(array(col("doc_a"), col("doc_b"))).as("media_id"))
+      .groupBy(col("media_id")).agg(count(lit(1)).as("n_near"))
+    hashed.join(neigh, Seq("media_id"), "left")
+      .select(hashed.columns.toIndexedSeq.map(col) :+
+        coalesce(col("n_near"), lit(0L)).as("n_near"): _*)
+  }
+
+  /** Synthesizes one payload per doc with `synth(doc_id, n_chars) →
+    * (media_id, media_type, payload)` and runs the REAL metadata
+    * extraction over them — q_media_meta and q_media_video_meta.
+    */
+  private def extractMetaOf(s: SparkSession, dir: String)(
+      synth: ((Long, Long)) => (Long, String, Array[Byte])): DataFrame = {
+    import s.implicits._
+    val payloads = docs(s, dir)
+      .select($"doc_id", $"n_chars").as[(Long, Long)]
+      .mapPartitions(_.map(synth))
+      .toDF("media_id", "media_type", "payload")
+    Multimodal.extractMeta(payloads, "media_id", "media_type", "payload")
+      .toDF()
+  }
+
   val defs: Seq[QueryDef] = Seq(
 
     // ------------------------------------------------------------------
@@ -148,20 +206,12 @@ object MediaQueries {
              |  CAST(CASE WHEN doc_id % 2 = 0 THEN 0 ELSE 8000 + 1000 * (doc_id % 8) END AS INT) AS sample_rate,
              |  CAST(CASE WHEN doc_id % 2 = 0 THEN 0 ELSE 1 + (doc_id // 2) % 2 END AS INT) AS channels
              |FROM documents""".stripMargin),
-      (s, dir) => {
-        import s.implicits._
-        val payloads = docs(s, dir)
-          .select($"doc_id", $"n_chars").as[(Long, Long)]
-          .mapPartitions(_.map { case (id, nc) =>
-            if (id % 2 == 0)
-              (id, "image", MediaSynth.bmp(bmpW(nc), bmpH(id), 100, 150, 200))
-            else
-              (id, "audio",
-                MediaSynth.wav(wavRate(id), wavChannels(id), wavFrames(nc)))
-          })
-          .toDF("media_id", "media_type", "payload")
-        Multimodal.extractMeta(payloads, "media_id", "media_type", "payload")
-          .toDF()
+      extractMetaOf(_, _) { case (id, nc) =>
+        if (id % 2 == 0)
+          (id, "image", MediaSynth.bmp(bmpW(nc), bmpH(id), 100, 150, 200))
+        else
+          (id, "audio",
+            MediaSynth.wav(wavRate(id), wavChannels(id), wavFrames(nc)))
       }),
 
     // ------------------------------------------------------------------
@@ -243,21 +293,7 @@ object MediaQueries {
     // text near-dup scale shape applied to media.
     QueryDef(
       "q_media_dedup",
-      Some(s"""WITH k AS (
-             |  SELECT doc_id AS media_id,
-             |    xor(((doc_id // 4) * $keyP1) % 2147483648
-             |          + (((doc_id // 4) * $keyP2) % 2147483648) * 2147483648,
-             |        CASE CAST(doc_id % 4 AS INT)
-             |          WHEN 0 THEN 0
-             |          WHEN 1 THEN $noise1
-             |          WHEN 2 THEN $noise2
-             |          ELSE $noise3 END) AS phash
-             |  FROM documents
-             |$mediaCertGuard)
-             |SELECT a.media_id, a.phash,
-             |  CAST((SELECT count(*) FROM k b WHERE b.media_id != a.media_id
-             |        AND bit_count(xor(a.phash, b.phash)) <= 2) AS BIGINT) AS n_near
-             |FROM k a""".stripMargin),
+      Some(nearOracle("phash")),
       (s, dir) => {
         import s.implicits._
         val hashed = mediaTruthSlice(s, dir)
@@ -271,25 +307,7 @@ object MediaQueries {
               sys.error(s"q_media_dedup: BMP decode failed for doc $id")))
           })
           .toDF("media_id", "phash")
-        // cap-free banding (ADVICE r10 #3): this query's SQL counts ALL
-        // hamming<=2 neighbours exactly, so the oracle-gated path cannot
-        // drop oversized 16-bit-chunk buckets the way the production
-        // default (maxBucket=1000) does. Safe at ANY corpus size since
-        // r13: mediaTruthSlice bounds the fingerprint set at ~20k docs
-        // above the cutoff, so cap-free pair work no longer grows with n.
-        val pairs = graft.operators.Dedup
-          .hammingPairs(hashed, "media_id", "phash", maxHamming = 2,
-            maxBucket = Int.MaxValue)
-        // single-pass symmetrization (r17): the unionAll spelling executed
-        // the hammingPairs pipeline once per branch (column pruning
-        // de-canonicalizes the two copies); one explode of the 2-array
-        // emits the same endpoint multiset from one execution
-        val neigh = pairs
-          .select(explode(array(col("doc_a"), col("doc_b"))).as("media_id"))
-          .groupBy(col("media_id")).agg(count(lit(1)).as("n_near"))
-        hashed.join(neigh, Seq("media_id"), "left")
-          .select($"media_id", $"phash",
-            coalesce($"n_near", lit(0L)).as("n_near"))
+        withNearCount(hashed, "phash")
       }),
 
     // ------------------------------------------------------------------
@@ -354,21 +372,7 @@ object MediaQueries {
     // different byte format and signal path.
     QueryDef(
       "q_media_audio_dedup",
-      Some(s"""WITH k AS (
-             |  SELECT doc_id AS media_id,
-             |    xor(((doc_id // 4) * $keyP1) % 2147483648
-             |          + (((doc_id // 4) * $keyP2) % 2147483648) * 2147483648,
-             |        CASE CAST(doc_id % 4 AS INT)
-             |          WHEN 0 THEN 0
-             |          WHEN 1 THEN $noise1
-             |          WHEN 2 THEN $noise2
-             |          ELSE $noise3 END) AS audio_fp
-             |  FROM documents
-             |$mediaCertGuard)
-             |SELECT a.media_id, a.audio_fp,
-             |  CAST((SELECT count(*) FROM k b WHERE b.media_id != a.media_id
-             |        AND bit_count(xor(a.audio_fp, b.audio_fp)) <= 2) AS BIGINT) AS n_near
-             |FROM k a""".stripMargin),
+      Some(nearOracle("audio_fp")),
       (s, dir) => {
         import s.implicits._
         val hashed = mediaTruthSlice(s, dir)
@@ -386,28 +390,13 @@ object MediaQueries {
               sys.error(s"q_media_audio_dedup: WAV fp failed for doc $id")))
           })
           .toDF("media_id", "audio_fp")
-        // cap-free for the same reason as q_media_dedup: the exact
-        // neighbour-count SQL admits no bucket capping (ADVICE r10 #3);
-        // bounded at any n by mediaTruthSlice (r13)
-        val pairs = graft.operators.Dedup
-          .hammingPairs(hashed, "media_id", "audio_fp", maxHamming = 2,
-            maxBucket = Int.MaxValue)
-        // single-pass symmetrization (r17): the unionAll spelling executed
-        // the hammingPairs pipeline once per branch (column pruning
-        // de-canonicalizes the two copies); one explode of the 2-array
-        // emits the same endpoint multiset from one execution
-        val neigh = pairs
-          .select(explode(array(col("doc_a"), col("doc_b"))).as("media_id"))
-          .groupBy(col("media_id")).agg(count(lit(1)).as("n_near"))
-        hashed.join(neigh, Seq("media_id"), "left")
-          .select($"media_id", $"audio_fp",
-            coalesce($"n_near", lit(0L)).as("n_near"))
+        withNearCount(hashed, "audio_fp")
       }),
 
     // ------------------------------------------------------------------
-    // VIDEO container metadata — the last uncovered modality (VERDICT r10
-    // #6): each doc forward-writes a minimal ISO-BMFF/MP4 skeleton
-    // (MediaSynth.mp4 — ftyp + moov/mvhd v0 + one tkhd v0 per track) whose
+    // VIDEO container metadata: each doc forward-writes a minimal
+    // ISO-BMFF/MP4 skeleton (MediaSynth.mp4 — ftyp + moov/mvhd v0 + one
+    // tkhd v0 per track) whose
     // every parameter is doc arithmetic, and the REAL box-tree walk
     // (Codecs.mp4Meta: ftyp brand, mvhd timescale/duration, first video
     // tkhd 16.16 dims, trak count) re-derives them through
@@ -430,27 +419,19 @@ object MediaQueries {
              |  CAST(600 * (1 + doc_id % 4) AS INT) AS sample_rate,
              |  CAST(1 + doc_id % 2 AS INT) AS channels
              |FROM documents""".stripMargin),
-      (s, dir) => {
-        import s.implicits._
-        val payloads = docs(s, dir)
-          .select($"doc_id", $"n_chars").as[(Long, Long)]
-          .mapPartitions(_.map { case (id, nc) =>
-            val timescale = 600 * (1 + (id % 4).toInt)
-            val duration = timescale + (nc % 5000).toInt
-            val dim = 1 + (id % 8).toInt
-            val tracks = (160 * dim, 90 * dim) ::
-              (if (id % 2 == 1) List((0, 0)) else Nil) // odd: + audio track
-            (id, "video", MediaSynth.mp4(timescale, duration, tracks))
-          })
-          .toDF("media_id", "media_type", "payload")
-        Multimodal.extractMeta(payloads, "media_id", "media_type", "payload")
-          .toDF()
+      extractMetaOf(_, _) { case (id, nc) =>
+        val timescale = 600 * (1 + (id % 4).toInt)
+        val duration = timescale + (nc % 5000).toInt
+        val dim = 1 + (id % 8).toInt
+        val tracks = (160 * dim, 90 * dim) ::
+          (if (id % 2 == 1) List((0, 0)) else Nil) // odd: + audio track
+        (id, "video", MediaSynth.mp4(timescale, duration, tracks))
       }),
 
     // ------------------------------------------------------------------
-    // Perceptual VIDEO dedup — completes the modality symmetry (VERDICT
-    // r11 #7): images and audio each had exact + perceptual tiers, video
-    // had metadata only. Each doc now synthesizes an MP4 whose mdat
+    // Perceptual VIDEO dedup — completes the modality symmetry: images and
+    // audio each have exact + perceptual tiers. Each doc synthesizes an MP4
+    // whose mdat
     // carries two DECODABLE keyframes (MediaSynth.mp4WithFrames — BMP
     // samples, self-delimiting via their own declared size, the honest
     // stand-in for stsz/stco the skeleton never wrote): frame 0 is the
@@ -467,21 +448,7 @@ object MediaQueries {
     // mapPartitions pass + the one banding shuffle.
     QueryDef(
       "q_media_video_dedup",
-      Some(s"""WITH k AS (
-             |  SELECT doc_id AS media_id,
-             |    xor(((doc_id // 4) * $keyP1) % 2147483648
-             |          + (((doc_id // 4) * $keyP2) % 2147483648) * 2147483648,
-             |        CASE CAST(doc_id % 4 AS INT)
-             |          WHEN 0 THEN 0
-             |          WHEN 1 THEN $noise1
-             |          WHEN 2 THEN $noise2
-             |          ELSE $noise3 END) AS video_fp
-             |  FROM documents
-             |$mediaCertGuard)
-             |SELECT a.media_id, a.video_fp, CAST(2 AS INT) AS n_frames_decoded,
-             |  CAST((SELECT count(*) FROM k b WHERE b.media_id != a.media_id
-             |        AND bit_count(xor(a.video_fp, b.video_fp)) <= 2) AS BIGINT) AS n_near
-             |FROM k a""".stripMargin),
+      Some(nearOracle("video_fp", " CAST(2 AS INT) AS n_frames_decoded,")),
       (s, dir) => {
         import s.implicits._
         val hashed = mediaTruthSlice(s, dir)
@@ -503,22 +470,7 @@ object MediaQueries {
               frames.size)
           })
           .toDF("media_id", "video_fp", "n_frames_decoded")
-        // cap-free banding: the exact neighbour-count SQL admits no bucket
-        // capping (the q_media_dedup / ADVICE r10 #3 contract); bounded at
-        // any n by mediaTruthSlice (r13)
-        val pairs = graft.operators.Dedup
-          .hammingPairs(hashed.select($"media_id", $"video_fp"),
-            "media_id", "video_fp", maxHamming = 2, maxBucket = Int.MaxValue)
-        // single-pass symmetrization (r17): the unionAll spelling executed
-        // the hammingPairs pipeline once per branch (column pruning
-        // de-canonicalizes the two copies); one explode of the 2-array
-        // emits the same endpoint multiset from one execution
-        val neigh = pairs
-          .select(explode(array(col("doc_a"), col("doc_b"))).as("media_id"))
-          .groupBy(col("media_id")).agg(count(lit(1)).as("n_near"))
-        hashed.join(neigh, Seq("media_id"), "left")
-          .select($"media_id", $"video_fp", $"n_frames_decoded",
-            coalesce($"n_near", lit(0L)).as("n_near"))
+        withNearCount(hashed, "video_fp")
       })
   )
 }

@@ -216,13 +216,13 @@ class PlanSpec extends SparkSpec {
 
   test("surrogate-key windows only ever consume post-distinct inputs " +
     "(row_number over a raw fact would single-partition the corpus)") {
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate, LogicalPlan, Window => LWindow}
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate, GlobalLimit, LogicalPlan, Window => LWindow}
     // the deliberate no-partition windows are justified ONLY because their
-    // input is a distinct/aggregated key domain (tiny even at 100 TB of
-    // facts); this guard fails the build if anyone ever moves row_number
-    // onto an unaggregated scan
+    // input is a distinct/aggregated key domain or a top-k cut (tiny even
+    // at 100 TB of facts); this guard fails the build if anyone ever moves
+    // row_number onto an unaggregated scan
     def guarded(p: LogicalPlan): Boolean = p match {
-      case _: Aggregate | _: Deduplicate => true
+      case _: Aggregate | _: Deduplicate | _: GlobalLimit => true
       case l if l.children.isEmpty => false
       case o => o.children.forall(guarded)
     }
@@ -240,6 +240,19 @@ class PlanSpec extends SparkSpec {
       assertGuarded(schema(d), d)
     assertGuarded(SparkEntry.queries("q_surrogate_rownum")(spark, sf),
       "q_surrogate_rownum")
+    // and every GLOBAL window (empty partition spec) anywhere in the
+    // inventory: each declared query and each `_operator` twin
+    val builds = SparkEntry.orderedQueryNames.map(n => n -> SparkEntry.queries(n)) ++
+      graft.queries.ExtQueries.operatorOnly.toSeq.sortBy(_._1)
+        .map { case (n, f) => s"${n}_operator" -> f }
+    val unbounded = builds.flatMap { case (name, build) =>
+      build(spark, sf).queryExecution.optimizedPlan.collect {
+        case w: LWindow if w.partitionSpec.isEmpty && !guarded(w.child) =>
+          s"$name:\n${w.child}"
+      }
+    }
+    assert(unbounded.isEmpty, "a global window consumes an input with no " +
+      s"aggregate, distinct or limit on some path:\n${unbounded.mkString("\n")}")
   }
 
   test("q_prep_e2e funnel composition: the whole clean→chunk→pack chain " +

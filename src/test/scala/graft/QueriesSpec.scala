@@ -38,6 +38,23 @@ class QueriesSpec extends SparkSpec {
     }
   }
 
+  test("the recall-gated queries emit exactly their shared exact truths") {
+    def rows(name: String, cols: String*) =
+      SparkEntry.queries(name)(spark, sf)
+        .select(cols.map(org.apache.spark.sql.functions.col): _*)
+        .collect().toSet
+    val top = rows("q_sim_bruteforce", "vec_id", "cosine_sim")
+    assert(top.size == 20)
+    for (q <- Seq("q_sim_lsh", "q_sim_ivf", "q_sim_ivf_quantized"))
+      assert(rows(q, "vec_id", "cosine_sim") == top,
+        s"$q's truth rows differ from q_sim_bruteforce")
+    val pairs = rows("q_dedup_jaccard", "doc_a", "doc_b", "jaccard")
+    assert(pairs.nonEmpty)
+    for (q <- Seq("q_dedup_minhash", "q_dedup_simhash"))
+      assert(rows(q, "doc_a", "doc_b", "jaccard") == pairs,
+        s"$q's truth rows differ from q_dedup_jaccard")
+  }
+
   test("entry (flagship) is non-empty and covers all nations") {
     val df = SparkEntry.entry(spark)
     assert(df.count() == 25)
