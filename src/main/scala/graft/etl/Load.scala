@@ -1,5 +1,6 @@
 package graft.etl
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Load stage (SURVEY §2.1 S7-S10): parquet sink, view registration, the
@@ -7,16 +8,67 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * The reference materializes into an embedded DuckDB file
   * (load/__init__.py:36-64); here the "database" is the Spark catalog: each
-  * table a temp view over either in-memory plans or re-loaded parquet, and
-  * `query()` = `spark.sql`. View SQL preserves the reference's inner-join
-  * semantics (the left-in-transform / inner-in-view asymmetry, SURVEY §4.2).
+  * table a temp view, and `query()` = `spark.sql`. View SQL preserves the
+  * reference's inner-join semantics (the left-in-transform / inner-in-view
+  * asymmetry, SURVEY §4.2).
+  *
+  * The sink has one write path: [[stage]] writes each table once under
+  * [[stagingDir]], and [[publish]] renames each staged table into
+  * `<out>/<table>.parquet`. A failed write publishes nothing. The publish
+  * is per table, not one atomic step: a reader between two renames sees
+  * some tables of each run, and a crash inside the rename loop leaves
+  * them so (an all-tables commit needs a manifest or a version pointer).
   */
 object Load {
 
-  /** Parquet sink, one directory per table (reference: load/__init__.py:15-33). */
+  /** Where a run stages its tables: `<outputDir>/_staging`, a name that is
+    * not `*.parquet`, so [[loadParquetDir]] and Export's S12 tier 3 never
+    * read it.
+    */
+  def stagingDir(outputDir: String): String = s"$outputDir/_staging"
+
+  /** Deletes `dir` and everything under it, if it exists. */
+  def sweep(spark: SparkSession, dir: String): Unit = {
+    val p = new Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+  }
+
+  /** Writes each table once, to `<dir>/<table>.parquet`, and returns it
+    * read back from those files under the schema it was written with, so
+    * no footer-inference job runs.
+    */
+  def stage(tables: Map[String, DataFrame], dir: String): Map[String, DataFrame] =
+    tables.map { case (name, df) =>
+      val path = s"$dir/$name.parquet"
+      df.write.parquet(path)
+      name -> df.sparkSession.read.schema(df.schema).parquet(path)
+    }
+
+  /** Renames each table [[stage]] wrote under `stagingDir` into
+    * `<outputDir>/<table>.parquet`, replacing the previous one, and returns
+    * the published tables read back under the same schemas.
+    */
+  def publish(staged: Map[String, DataFrame], stagingDir: String,
+      outputDir: String): Map[String, DataFrame] =
+    staged.map { case (name, df) =>
+      val spark = df.sparkSession
+      val (from, to) = (new Path(s"$stagingDir/$name.parquet"), new Path(s"$outputDir/$name.parquet"))
+      val fs = to.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.delete(to, true)
+      if (!fs.rename(from, to)) throw new java.io.IOException(s"cannot publish $from as $to")
+      name -> spark.read.schema(df.schema).parquet(to.toString)
+    }
+
+  /** Parquet sink, one directory per table (reference: load/__init__.py:15-33):
+    * [[stage]] every table, then [[publish]] them, sweeping the staging
+    * directory before and after.
+    */
   def loadToParquet(schema: Map[String, DataFrame], outputDir: String): Unit =
-    schema.foreach { case (name, df) =>
-      df.write.mode("overwrite").parquet(s"$outputDir/$name.parquet")
+    if (schema.nonEmpty) {
+      val (spark, staging) = (schema.values.head.sparkSession, stagingDir(outputDir))
+      sweep(spark, staging)
+      try publish(stage(schema, staging), staging, outputDir)
+      finally sweep(spark, staging)
     }
 
   /** Registers all star tables as temp views + the 3 analytical views

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** End-to-end runner mirroring the reference's 4-stage pipeline
   * (run_pipeline.py:25-157): extract → transform → validate → load (+ export).
@@ -17,6 +17,16 @@ import org.apache.spark.sql.SparkSession
   * The reference's interactive y/n gate on validation failure
   * (run_pipeline.py:111-120) is a flag here (`--force`), never stdin —
   * batch Spark jobs must not block on a console.
+  *
+  * Each star table is computed once, straight into Parquet under
+  * [[Load.stagingDir]]: the dims first, then the facts keyed against the
+  * staged dims. Checks 1–2 are counted on those writes
+  * ([[Validate.observeRules]]), checks 3–4 read the staged files, and on a
+  * pass (or `--force`, or `--skip-validation`) [[Load.publish]] renames
+  * each table into `<output-dir>/<table>.parquet`; the views and the
+  * summary export read the published files. A failed validation or write
+  * publishes nothing, and the staging directory is swept at the start of
+  * a run and at its end.
   *
   * Exit codes: 0 ok; 2 validation failed (and not forced); 1 other error —
   * matching the reference's abort semantics in --non-interactive mode.
@@ -49,17 +59,24 @@ object Pipeline {
     // [1/4] extract
     val runs = Extract.extractRuns(spark, cfg.simulationsDir)
     println(s"[pipeline] extracted ${runs.length} runs")
-    // [2/4] transform
-    val built = Transform.transformAll(spark, runs)
-    // validate issues 11 counting actions and load+export re-consume every
-    // table: cache the star schema once instead of re-deriving the whole
-    // extract→transform DAG per action (the reference holds it in memory)
-    val schema = built.view.mapValues(_.cache()).toMap
+    val staging = Load.stagingDir(cfg.outputDir)
+    Load.sweep(spark, staging)
     try {
+      // [2/4] transform: each table computed once, straight into staging;
+      // its write counts checks 1-2, and the facts key against the staged dims
+      def stageChecked(tables: Map[String, DataFrame]) = {
+        val observed = tables.map { case (t, df) => t -> Validate.observeRules(t, df) }
+        (Load.stage(observed.map { case (t, (df, _)) => t -> df }, staging),
+          observed.map { case (t, (_, counts)) => t -> counts })
+      }
+      val (dims, dimCounts) = stageChecked(Transform.dims(spark, runs))
+      val (facts, factCounts) = stageChecked(Transform.facts(spark, runs, dims))
+      val staged = dims ++ facts
 
-      // [3/4] validate (skippable, reference run_pipeline.py:95-125)
+      // [3/4] validate (skippable, reference run_pipeline.py:95-125):
+      // checks 3-4 read the staged files
       if (!cfg.skipValidation) {
-        val report = Validate.validateAll(spark, schema)
+        val report = Validate.report(staged, dimCounts ++ factCounts)
         println(report.render)
         if (!report.isValid && !cfg.force) {
           System.err.println("[pipeline] validation failed; rerun with --force to load anyway")
@@ -67,8 +84,8 @@ object Pipeline {
         }
       }
 
-      // [4/4] load
-      Load.loadToParquet(schema, cfg.outputDir)
+      // [4/4] load: publish, then the views and the export read the published files
+      val schema = Load.publish(staged, staging, cfg.outputDir)
       Load.registerAll(spark, schema)
       println(s"[pipeline] loaded ${schema.size} tables to ${cfg.outputDir}")
 
@@ -82,7 +99,7 @@ object Pipeline {
       }
       println(s"[pipeline] exported summary to $out")
       0
-    } finally schema.values.foreach(_.unpersist())
+    } finally Load.sweep(spark, staging)
   }
 
   def main(args: Array[String]): Unit = {

@@ -11,9 +11,12 @@ import org.apache.spark.sql.expressions.Window
   * those columns as missing.
   *
   * Checks 1–3 count violations one way: `count(when(rule, 1))` columns
-  * evaluated in ONE aggregate action per relation. [[validateAll]] counts a
-  * table's null and range rules in the same aggregate, so the suite scans
-  * each table once, and check 3 is one action over all facts. Its gap count
+  * observed ([[Observe.instrument]]) on the ONE action that consumes the
+  * relation. In `Pipeline.run` that action is each table's staging write,
+  * so checks 1 and 2 cost no job of their own ([[observeRules]], then
+  * [[report]]); [[validateAll]], [[checkSchema]] and [[checkValueRanges]]
+  * run one noop-sink write per table, counting its null and range rules
+  * together, and check 3 is one such write over all facts. Its gap count
   * keeps the `lag` window over `dim_time` (one row per hour): a window-free
   * formula misses pairs 1 h apart with a timestamp between them (00:00,
   * 00:30, 01:00 has 2 gaps, not 1).
@@ -58,15 +61,30 @@ object Validate {
   /** Rows where `predicate` holds violate the rule; n > 0 of them report `message(n)`. */
   private final case class Rule(predicate: Column, message: Long => String)
 
-  /** Each rule's error, if any, from ONE aggregate action over `df`. A NULL
-    * predicate is no violation: a NULL is not out of range (check 1's job).
+  /** `df` with one observed count per rule, or `None` when there are no
+    * rules, and each rule's error, if any. The counts ride the action
+    * that consumes the observed frame — a staging write, or [[consume]]
+    * when the caller runs none — and reading the errors blocks until it
+    * has run. A NULL predicate is no violation: a NULL is not out of
+    * range (check 1's job).
     */
-  private def violations(df: DataFrame, rules: Seq[Rule]): Seq[Option[String]] =
-    if (rules.isEmpty) Nil else {
-      val counts = rules.map(r => count(when(r.predicate, 1)))
-      val row = df.agg(counts.head, counts.tail: _*).head()
-      rules.indices.map(i => Some(row.getLong(i)).filter(_ > 0).map(rules(i).message))
+  private def violations(df: DataFrame, name: String,
+      rules: Seq[Rule]): (Option[DataFrame], () => Seq[Option[String]]) =
+    if (rules.isEmpty) (None, () => Nil) else {
+      val (observed, obs) = Observe.instrument(df, name,
+        rules.indices.map(i => s"r$i" -> count(when(rules(i).predicate, 1))): _*)
+      (Some(observed), () => {
+        val counts = obs.get
+        rules.indices.map(i => Some(counts(s"r$i").asInstanceOf[Long]).filter(_ > 0)
+          .map(rules(i).message))
+      })
     }
+
+  /** The one action that counts an observed frame when nothing else
+    * consumes it: the noop sink runs 1 job, where an aggregate's `head()`
+    * runs 2.
+    */
+  private def consume(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
 
   /** Check 1's rules: no NULL in a present `nullable = false` column. */
   private def nullRules(table: String, df: DataFrame): Seq[Rule] =
@@ -83,25 +101,61 @@ object Validate {
       Rule(predicate, n => s"$table.$column: $n values not $bound")
     }
 
-  /** Checks 1 and 2: a table's null rules (if `nulls`) and range rules (if
-    * `ranges`) in ONE aggregate action; missing tables and columns on the driver.
+  /** Checks 1 and 2 of one table, counted on the action that consumes the
+    * frame [[observeRules]] returned with them; reading them blocks until
+    * that action has run.
     */
-  private def nullsAndRanges(schema: Map[String, DataFrame], nulls: Boolean,
-      ranges: Boolean): (CheckResult, CheckResult) = {
-    val counted = schema.map { case (table, df) =>
-      val nr = if (nulls) nullRules(table, df) else Nil
-      val rr = if (ranges) rangeRulesOf(table, df) else Nil
-      val (n, r) = violations(df, nr ++ rr).splitAt(nr.size)
-      table -> (n.flatten, r.flatten)
+  final class RuleCounts private[Validate] (read: () => (Seq[String], Seq[String])) {
+    private[Validate] lazy val (nullErrors, rangeErrors) = read()
+  }
+
+  /** `df` with checks 1 and 2 of `table` attached as observed metrics: the
+    * action that consumes the returned frame counts them, at no extra job.
+    */
+  def observeRules(table: String, df: DataFrame): (DataFrame, RuleCounts) = {
+    val (observed, counts) = rulesOn(table, df, nulls = true, ranges = true)
+    (observed.getOrElse(df), counts)
+  }
+
+  /** A table's null rules (if `nulls`) and range rules (if `ranges`) as
+    * observed counts; `None` when the table has none of them.
+    */
+  private def rulesOn(table: String, df: DataFrame, nulls: Boolean,
+      ranges: Boolean): (Option[DataFrame], RuleCounts) = {
+    val nr = if (nulls) nullRules(table, df) else Nil
+    val rr = if (ranges) rangeRulesOf(table, df) else Nil
+    val (observed, errors) = violations(df, s"checks_1_2.$table", nr ++ rr)
+    (observed, new RuleCounts(() => {
+      val (n, r) = errors().splitAt(nr.size)
+      (n.flatten, r.flatten)
+    }))
+  }
+
+  /** Checks 1 and 2 with no action of the caller's: each table that has
+    * rules runs ONE noop-sink action that counts them all.
+    */
+  private def counted(schema: Map[String, DataFrame], nulls: Boolean,
+      ranges: Boolean): Map[String, RuleCounts] =
+    schema.map { case (table, df) =>
+      val (observed, counts) = rulesOn(table, df, nulls, ranges)
+      observed.foreach(consume)
+      table -> counts
     }
+
+  /** Checks 1 and 2 from each table's counts; missing tables and columns
+    * on the driver.
+    */
+  private def nullsAndRanges(schema: Map[String, DataFrame],
+      counted: Map[String, RuleCounts]): (CheckResult, CheckResult) = {
     val schemaErrors = Schemas.starSchema.toSeq.sortBy(_._1).flatMap { case (name, expected) =>
       schema.get(name) match {
         case None => Seq(s"missing table: $name")
         case Some(df) => expected.fieldNames.toSeq.filterNot(df.columns.contains)
-          .map(c => s"$name: missing column $c") ++ counted(name)._1
+          .map(c => s"$name: missing column $c") ++ counted(name).nullErrors
       }
     }
-    val rangeErrors = rangeRules.map(_._1).distinct.flatMap(t => counted.get(t).toSeq.flatMap(_._2))
+    val rangeErrors = rangeRules.map(_._1).distinct
+      .flatMap(t => counted.get(t).toSeq.flatMap(_.rangeErrors))
     (result(schemaErrors), result(rangeErrors))
   }
 
@@ -112,11 +166,11 @@ object Validate {
     * validate/__init__.py:18-57, allow-list at :31-34).
     */
   def checkSchema(schema: Map[String, DataFrame]): CheckResult =
-    nullsAndRanges(schema, nulls = true, ranges = false)._1
+    nullsAndRanges(schema, counted(schema, nulls = true, ranges = false))._1
 
   /** Check 2 — value ranges (reference: validate/__init__.py:60-139). */
   def checkValueRanges(schema: Map[String, DataFrame]): CheckResult =
-    nullsAndRanges(schema, nulls = false, ranges = true)._2
+    nullsAndRanges(schema, counted(schema, nulls = false, ranges = true))._2
 
   /** Check 3 — temporal coverage (reference: validate/__init__.py:142-182):
     * non-hourly gaps between consecutive `dim_time` timestamps, and per fact
@@ -142,8 +196,11 @@ object Validate {
     val rules = Rule(col("tag") === "dim_time",
       n => s"dim_time: $n non-hourly gaps between consecutive timestamps") +:
       facts.map(f => Rule(col("tag") === f, n => s"$f: $n time keys with no rows"))
-    result((gaps.toSeq ++ missing).reduceOption(_ union _).toSeq
-      .flatMap(violations(_, rules).flatten))
+    result((gaps.toSeq ++ missing).reduceOption(_ union _).toSeq.flatMap { rel =>
+      val (observed, errors) = violations(rel, "temporal_coverage", rules)
+      observed.foreach(consume)
+      errors().flatten
+    })
   }
 
   /** Check 4 — energy plausibility: per (building, scenario) totals must be
@@ -218,8 +275,15 @@ object Validate {
   }
 
   /** All four checks → report (reference: validate/__init__.py:232-296). */
-  def validateAll(spark: SparkSession, schema: Map[String, DataFrame]): ValidationReport = {
-    val (schemaCheck, rangeCheck) = nullsAndRanges(schema, nulls = true, ranges = true)
+  def validateAll(spark: SparkSession, schema: Map[String, DataFrame]): ValidationReport =
+    report(schema, counted(schema, nulls = true, ranges = true))
+
+  /** The report over `schema` whose checks 1 and 2 were already counted:
+    * by [[observeRules]] on the action that consumed each table, or by
+    * [[validateAll]]. Checks 3 and 4 run here.
+    */
+  def report(schema: Map[String, DataFrame], counted: Map[String, RuleCounts]): ValidationReport = {
+    val (schemaCheck, rangeCheck) = nullsAndRanges(schema, counted)
     val checks = Map(
       "schema" -> schemaCheck,
       "value_ranges" -> rangeCheck,

@@ -905,16 +905,14 @@ object ExtQueries {
   private def simhashPairs(d: DataFrame): DataFrame =
     Dedup.simhashPairs(d, "doc_id", "text")
 
-  /** A "new batch" (doc_id % 5 = 0) probed against the already-indexed
-    * rest. Loads `documents` itself: the declared q_dedup_incremental runs
-    * this exact build next to its truth.
+  /** A "new batch" (doc_id % 5 = 0) of the loaded `documents` probed
+    * against the already-indexed rest: the declared q_dedup_incremental
+    * runs this exact build next to its truth, over the same load.
     */
-  private def incrementalPairs(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir)
+  private def incrementalPairs(d: DataFrame): DataFrame =
     Dedup.minhashPairsIncremental(
       d.where(col("doc_id") % 5 =!= 0), d.where(col("doc_id") % 5 === 0),
       "doc_id", "text")
-  }
 
   /** q_quality_vs_dup's builder, shared by the declared form
     * (`approxCuts = false` — EXACT decile cuts by deterministic rank
@@ -1042,7 +1040,7 @@ object ExtQueries {
     twin("q_sim_neardup", replaces = Some("q_sim_neardup"))((s, dir) =>
       nearDupPairs(emb(s, dir))),
     twin("q_dedup_incremental", replaces = Some("q_dedup_incremental"))(
-      incrementalPairs),
+      (s, dir) => incrementalPairs(docs(s, dir))),
     twin("q_dedup_minhash", replaces = Some("q_dedup_minhash"))((s, dir) =>
       minhashPairs(docs(s, dir))),
     twin("q_dedup_simhash", replaces = Some("q_dedup_simhash"))((s, dir) =>
@@ -1269,11 +1267,11 @@ object ExtQueries {
 
   /** Spark twin of [[centroidDistCte]]: (vec_id, label, c_label, dist). */
   private def centroidDistances(s: SparkSession, dir: String): DataFrame = {
-    val cents = Similarity.labelCentroids(
-        emb(s, dir), "label", "embedding", SimParams.dims)
+    val e = emb(s, dir)
+    val cents = Similarity.labelCentroids(e, "label", "embedding", SimParams.dims)
       .select(col("label").as("c_label"), col("dim"),
         snap6(col("centroid")).as("c"))
-    perDim(emb(s, dir), "vec_id", "label")
+    perDim(e, "vec_id", "label")
       .join(broadcast(cents), Seq("dim"))
       .groupBy(col("vec_id"), col("label"), col("c_label"))
       .agg(snap6(sum((col("x") - col("c")) * (col("x") - col("c"))))
@@ -2806,9 +2804,10 @@ object ExtQueries {
     certified("q_dedup_incremental",
         jaccardTruthSql("\n  AND (doc_a % 5 = 0 OR doc_b % 5 = 0)"),
         Seq("doc_a", "doc_b"), gate = 0.7) { (s, dir) =>
-      val truth = jaccardTruth(docs(s, dir))
+      val d = docs(s, dir)
+      val truth = jaccardTruth(d)
         .where(col("doc_a") % 5 === 0 || col("doc_b") % 5 === 0)
-      (truth, incrementalPairs(s, dir))
+      (truth, incrementalPairs(d))
     },
 
     // ------------------------------------------------------------------
@@ -3203,7 +3202,7 @@ object ExtQueries {
              |JOIN m mb ON mb.dim = b.dim
              |GROUP BY a.dim, b.dim""".stripMargin),
       (s, dir) => {
-        def xRel = perDim(emb(s, dir), "vec_id")
+        val xRel = perDim(emb(s, dir), "vec_id")
         val m = xRel.groupBy(col("dim")).agg(snap6(avg(col("x"))).as("mu"))
         val a = xRel.select(col("vec_id"), col("dim").as("dim_i"), col("x").as("xa"))
         val b = xRel.select(col("vec_id"), col("dim").as("dim_j"), col("x").as("xb"))
